@@ -159,10 +159,10 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
     comparisons are same-order. Ordering matters beyond load: Spark's
     CacheManager substitutes matching canonical subplans from any persisted
     DataFrame (CLAUDE.md gotcha), so a query sharing a subplan with an earlier
-    query's tracked persist (e.g. the similarity family's exploded-signature /
-    norms tables) reads that cache in its timed pass. That reuse is part of
-    the measured steady-state — but it means a wall here is NOT a cold
-    isolated wall; use a fresh session (tools/ scripts) for those."""
+    query's tracked persist (e.g. ann_ivf's `ivf_emb` corpus) reads that
+    cache in its timed pass. That reuse is part of the measured
+    steady-state — but it means a wall here is NOT a cold isolated wall;
+    use a fresh session (tools/ scripts) for those."""
     from log_anomaly_detector_spark.operators import all_queries
     from log_anomaly_detector_spark.operators.caching import release_all
 

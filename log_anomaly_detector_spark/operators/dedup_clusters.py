@@ -76,7 +76,16 @@ def connected_components(
     # is two full executions of the (expensive) pair-generation plan inside
     # the edge checkpoint; cache it for the one action that builds edges,
     # then drop it (rounds only ever touch the checkpointed edge table)
-    pairs_c = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d")).persist()
+    pairs_c = (
+        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        # a pair with a NULL endpoint is no edge: NULL is never a node
+        .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
+        .persist()
+    )
+    # symmetrized edges; the union types nodes as the wider endpoint type
+    sym = pairs_c.unionByName(
+        pairs_c.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    )
     if collect_budget and pairs_c.count() <= collect_budget:
         rows = pairs_c.collect()
         pairs_c.unpersist(blocking=False)
@@ -102,17 +111,11 @@ def connected_components(
                     ra, rb = rb, ra
                 parent[rb] = ra
         out = [(n, find(n)) for n in parent]
-        node_t = pairs.schema[src].dataType.simpleString()
+        node_t = sym.schema["s"].dataType.simpleString()
         return pairs.sparkSession.createDataFrame(
             out, f"node {node_t}, component_id {node_t}"
         )
-    edges = (
-        pairs_c.unionByName(
-            pairs_c.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        )
-        .distinct()
-        .localCheckpoint()  # eager: materializes here so pairs_c can release
-    )
+    edges = sym.distinct().localCheckpoint()  # eager: pairs_c can release
     pairs_c.unpersist(blocking=False)
     labels = edges.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")

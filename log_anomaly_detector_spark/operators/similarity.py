@@ -43,16 +43,27 @@ def _dot(a, b):
     )
 
 
-def _vq_col(v: Column) -> Column:
-    """array<int> of floor(x·1e6) — the shared quantization, computed
-    JVM-SIDE so the Arrow kernels receive 4-byte ints instead of 8-byte
-    doubles (halves the Python-worker transfer, which profiling showed is
-    the binding cost of the corpus-sized kernel passes: ~1 GB of float64
-    per 2M×64 pass before this). floor(double·1e6) is the identical IEEE
-    multiply+floor numpy applies, so kernel outputs are unchanged
-    bit-for-bit; int32 is safe for any |component| < ~2147 (embedding
-    components are O(1))."""
-    return F.transform(v, lambda x: F.floor(x * 1e6).cast("int"))
+def _vq_col(name: str) -> Column:
+    """array<int> of floor(x·1e6) over the array<double> column ``name`` —
+    the shared quantization, computed JVM-SIDE so the Arrow kernels receive
+    4-byte ints instead of 8-byte doubles (halves the Python-worker
+    transfer, which profiling showed is the binding cost of the
+    corpus-sized kernel passes: ~1 GB of float64 per 2M×64 pass before
+    this). floor(double·1e6) is the identical IEEE multiply+floor numpy
+    applies, so kernel outputs are unchanged bit-for-bit. A component past
+    int32 (|x| ≳ 2147; embedding components are O(1)) raises an error
+    naming the column and the limit, not an opaque ANSI CAST_OVERFLOW."""
+    msg = (
+        f"embedding column '{name}' has a component outside the quantization "
+        "range: floor(x*1e6) must fit int32, i.e. -2147.483648 <= x < 2147.483648"
+    )
+
+    def q(x: Column) -> Column:
+        fx = F.floor(x * 1e6)
+        bad = (fx < -(2**31)) | (fx > 2**31 - 1)
+        return F.when(bad, F.raise_error(F.lit(msg))).otherwise(fx.cast("int"))
+
+    return F.transform(F.col(name), q)
 
 
 def _cos(a, b):
@@ -67,43 +78,6 @@ def _seq_fold(mat: "np.ndarray") -> "np.ndarray":
     np.dot), so cumsum[…, -1] reproduces ((0+p0)+p1)+… exactly; 0.0+p0 == p0
     in IEEE, so omitting the explicit zero seed changes nothing."""
     return np.cumsum(mat, axis=1)[:, -1]
-
-
-def _norm_udf():
-    """Arrow kernel for the corpus-sized norm pass: sqrt of the sequential
-    sum of squares, bit-identical to Catalyst's `sqrt(_dot(v, v))` (same
-    `_seq_fold` argument). The inline fold is interpreted
-    per element — a full-corpus pass at 2M×64 is 128M interpreted ops for
-    what numpy does in one vectorized sweep. Factory (not module-level
-    decoration): pandas_udf return-type strings parse at call time against a
-    live session (CLAUDE.md gotcha)."""
-
-    @F.pandas_udf("double")
-    def norm(v: pd.Series) -> pd.Series:
-        if len(v) == 0:  # np.stack raises on empty — guard the batch shape
-            return pd.Series([], dtype="float64")
-        C = np.stack(v.to_numpy())
-        return pd.Series(np.sqrt(_seq_fold(C * C)))
-
-    return norm
-
-
-def _pair_dot_udf():
-    """Arrow kernel for candidate-pair dot products (near-dup verify):
-    sequential float64 fold of elementwise products, bit-identical to
-    Catalyst's `_dot(va, vb)` — both vectors ship per pair (pair-bounded
-    stream, never corpus²). Factory for the same call-time-parse reason as
-    `_norm_udf`."""
-
-    @F.pandas_udf("double")
-    def pdot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:  # np.stack raises on empty — guard the batch shape
-            return pd.Series([], dtype="float64")
-        A = np.stack(va.to_numpy())
-        B = np.stack(vb.to_numpy())
-        return pd.Series(_seq_fold(A * B))
-
-    return pdot
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,7 +201,7 @@ def _bucket_udf(dim: int, n_tables: int, planes: int):
 
     Input is the PRE-QUANTIZED `_vq_col` array<int> (the floor happens
     JVM-side), so each corpus pass ships half the Arrow bytes of the former
-    float64 feed; callers pass ``_vq_col(F.col("v"))``."""
+    float64 feed; callers pass ``_vq_col("v")``."""
     signs = (
         np.array(_plane_signs(n_tables, planes, dim), dtype=np.int64)
         .reshape(n_tables * planes, dim)
@@ -254,7 +228,7 @@ def _lsh_buckets(
     row blowup."""
     udf = _bucket_udf(dim, n_tables, planes)
     return emb.select(
-        "vec_id", F.posexplode(udf(_vq_col(F.col("v")))).alias("tbl", "bucket")
+        "vec_id", F.posexplode(udf(_vq_col("v"))).alias("tbl", "bucket")
     )
 
 
@@ -422,15 +396,14 @@ GROUP BY 1, 2
 # threshold, vanishing above it — ND_TABLES=24 is what that exponent assumes).
 # Verified exactly within buckets; the DuckDB oracle is the brute-force cross
 # join, so exactness of the bucketed plan is checked at every sf the driver
-# runs. The Spark plan never theta-joins two unbounded sides and NEVER
-# broadcasts the corpus:
-#   * the bucket self-join ships only SKINNY (id, packed/array signature)
-#     rows — vector payloads stay out of the wide candidate stream;
-#   * pair dedup is MAP-SIDE: a colliding pair is emitted only from the FIRST
+# runs. The Spark plan never theta-joins two unbounded sides, NEVER
+# broadcasts the corpus, and never builds a candidate-pair stream:
+#   * ONE membership shuffle keyed by (tbl, bucket) folds each bucket into a
+#     kernel group; Arrow traffic is O(corpus·tables) in, O(result) out;
+#   * pair dedup is IN-KERNEL: a colliding pair is emitted only by the FIRST
 #     table where its signatures agree, so no dropDuplicates shuffle exists;
-#   * exact cosine runs after hint-free KEYED vector-fetch joins (AQE may
-#     broadcast the dim-sized side at bench scale; at 10^12 vectors the same
-#     plan shuffles instead of OOMing).
+#   * kernel groups are bounded by MEASURED bucket sizes (`_bucket_groups`):
+#     a bucket past the budget is verified as bounded block pairs.
 # Bucket selectivity is corpus-dependent: this synthetic far-neighbor corpus
 # (bulk cosine ~0.3 vs τ=0.45) makes most pairs candidates — a real embedding
 # corpus with separated clusters prunes far harder at the same guarantees. ----
@@ -439,25 +412,11 @@ ND_TABLES = 24
 ND_PLANES = 2
 
 
-# buckets/table = 2^planes: at ≥ 8 planes (≥ 256 buckets) the per-bucket
-# membership is a bounded slice of the corpus and the GROUPED verify (one
-# kernel pass over memberships, O(corpus·tables) Arrow bytes) beats the
-# pair-stream verify (O(candidate-pairs) bytes — measured 15 GB / 117 s for
-# the 14.6M pairs the production regime emits at 100k vectors, vs 0.5 GB
-# grouped). Below that threshold the dispatch is by estimated BUCKET MEMORY
-# (round 7): a low-plane config makes buckets corpus/2^planes-sized, which
-# is only a problem when one bucket's flattened vectors outgrow a task
-# (collect_list row + kernel scratch) — measured at sf1.0 (20k vectors, the
-# contract 24×2 regime ⇒ ~5k-row buckets, 2.6 MB each) the grouped kernel
-# verifies in seconds what the pair stream took 111 s to do, because the
-# candidate-pair stream is ~corpus²/2 rows shipping BOTH 64-dim vectors per
-# pair. The pair stream remains the fallback when buckets exceed the cap
-# (then the config is quadratic-by-design and distribution is what's left).
-_GROUPED_VERIFY_MIN_PLANES = 8
-# per-bucket flattened-vector budget for the grouped kernel (rows·dim·8B):
-# bounds the collect_list row and the kernel's per-group scratch. 256 MB ⇒
-# ~500k 64-dim vectors per bucket — far past any bench scale, conservative
-# for a 16 GB driver-sized task.
+# per-kernel-group flattened-vector budget (rows·dim·8B): bounds the
+# collect_list row and the kernel's per-group scratch. 256 MB ⇒ ~500k
+# 64-dim vectors per group. Buckets are sized against it by measurement, not
+# by the corpus/2^planes average: near-dup corpora put duplicate-heavy
+# clusters into ONE bucket by construction.
 _GROUPED_MAX_BUCKET_BYTES = 1 << 28
 # in-kernel pair-block budget: bounds eq/prod scratch to ~128 MB worst-case
 _PAIR_BLOCK = 1 << 18
@@ -466,30 +425,30 @@ _PAIR_BLOCK = 1 << 18
 def _grouped_verify_udf(
     dim: int, n_tables: int, threshold: float, pair_block: int = _PAIR_BLOCK
 ):
-    """mapInPandas kernel over (tbl, ids, vflat, sigflat) bucket-group rows:
-    emits every first-hit candidate pair of the group with its RAW cosine.
+    """mapInPandas kernel over (tbl, ids, vflat, sigflat, nleft) kernel-group
+    rows (`_bucket_groups`): emits every first-hit candidate pair of the
+    group with its RAW cosine. ``nleft == 0`` marks a whole bucket (every
+    i<j pair); ``nleft > 0`` marks a block pair of a split bucket, whose
+    first ``nleft`` members (the left block) pair with the rest.
 
-    Two phases per bucket. (1) PREFILTER: every i<j pair is scored by ONE
-    int64 matmul per row block over the floor(x·1e6) quantization — the same
-    exact-integer trick as the IVF kernels (products ≤ dim·(1e6·‖x‖∞)² stay
-    under 2^53 for ‖x‖∞ ≲ 11; corpora outside that envelope skip the
-    prefilter for that bucket and degrade to the all-pairs flow below). A
+    Two phases per group. (1) PREFILTER: every candidate pair is scored by
+    ONE int64 matmul per row block over the floor(x·1e6) quantization — the
+    same exact-integer trick as the IVF kernels (products ≤ dim·(1e6·‖x‖∞)²
+    stay under 2^53 for ‖x‖∞ ≲ 11; corpora outside that envelope skip the
+    prefilter for that group and degrade to the all-pairs flow below). A
     pair survives iff its quantized cosine COULD reach threshold−1e−6 under
     a rigorous error bound: |raw_dot − dq·1e−12| ≤ (Σ|vqa|+Σ|vqb|+dim)·1e−12
     (components are (vq+f)/1e6 with f∈[0,1)), plus a 4·dim·eps margin for
     the float rounding of the dot-space comparison itself — so no pair the
     exact path would emit is ever dropped, and false survivors are killed by
-    phase 2. Replaces the former all-pairs fancy-indexed dedup+fold (~1.7
-    µs/pair — ~370M pair checks ≈ 360 core-seconds at 500k vectors) with
-    ~1 Gmul/s integer matmuls. (2) EXACT on the survivor set (result-sized,
-    not pair-sized): first-collision dedup — group (tbl, bucket) emits
-    (i, j) iff tbl is the FIRST table where their full signatures agree,
-    exactly-once across groups, no distinct shuffle — then the sequential-
-    fold cosine (same `_seq_fold` argument as `_norm_udf`/`_pair_dot_udf`:
-    norms are sqrt(cumsum(C·C)), dots the sequential fold of the elementwise
-    product, cosine dot/(na·nb) — the identical IEEE ops the pair-stream
-    path evaluates), so both strategies produce byte-equal rows (pinned by
-    tests/test_similarity.py grouped-vs-pairs equivalence).
+    phase 2. (2) EXACT on the survivor set (result-sized, not pair-sized):
+    first-collision dedup — group (tbl, bucket) emits (i, j) iff tbl is the
+    FIRST table where their full signatures agree, exactly-once across
+    groups, no distinct shuffle — then the sequential-fold cosine: norms
+    are sqrt(cumsum(C·C)), dots the sequential fold of the elementwise
+    product, cosine dot/(na·nb) — the identical IEEE ops as Catalyst's
+    `_cos` fold and the DuckDB oracle, so rows are byte-equal to the
+    brute-force reference (pinned by tests/test_similarity.py).
 
     The final filter is raw cosine ≥ threshold−1e−6 (any value that could
     round up to the 6dp threshold survives; the exact half-up round +
@@ -505,8 +464,8 @@ def _grouped_verify_udf(
             out_a: list[np.ndarray] = []
             out_b: list[np.ndarray] = []
             out_c: list[np.ndarray] = []
-            for tbl, ids, vflat, sigflat in zip(
-                pdf["tbl"], pdf["ids"], pdf["vflat"], pdf["sigflat"]
+            for tbl, ids, vflat, sigflat, nleft in zip(
+                pdf["tbl"], pdf["ids"], pdf["vflat"], pdf["sigflat"], pdf["nleft"]
             ):
                 g = len(ids)
                 if g < 2:
@@ -526,29 +485,35 @@ def _grouped_verify_udf(
                     # float64 at any accumulation order (verified
                     # array_equal vs the int64 matmul)
                     VQf = VQ.astype(np.float64)
+                # rows [0, row_end) pair with the columns from c0 on: a whole
+                # bucket pairs each row with every later row, a block pair
+                # pairs the left block's rows with the right block's rows
+                row_end = nleft if nleft else g - 1
                 # row blocks of b rows × ≤g cols bound scratch to ~pair_block
                 b = max(1, pair_block // g)
-                for r0 in range(0, g - 1, b):
-                    r1 = min(r0 + b, g - 1)
-                    rl = np.arange(r1 - r0, dtype=np.int64)  # block-local row
-                    cl = np.arange(g - r0 - 1, dtype=np.int64)  # cols r0+1..
-                    tri = cl[None, :] >= rl[:, None]  # ⟺ j > i globally
+                for r0 in range(0, row_end, b):
+                    r1 = min(r0 + b, row_end)
+                    c0 = nleft if nleft else r0 + 1
                     if prefilter:
-                        dq = VQf[r0:r1] @ VQf[r0 + 1 :].T  # exact (see above)
+                        dq = VQf[r0:r1] @ VQf[c0:].T  # exact (see above)
                         lhs = dq * 1e-12
-                        err = (sa[r0:r1, None] + sa[None, r0 + 1 :] + dim) * 1e-12
-                        rhs = slack * (norms[r0:r1, None] * norms[None, r0 + 1 :])
+                        err = (sa[r0:r1, None] + sa[None, c0:] + dim) * 1e-12
+                        rhs = slack * (norms[r0:r1, None] * norms[None, c0:])
                         keep = (
                             lhs + err + 4.0 * dim * eps * (np.abs(lhs) + np.abs(rhs))
                             >= rhs
-                        ) & tri
+                        )
                     else:
-                        keep = tri
+                        keep = np.ones((r1 - r0, g - c0), dtype=bool)
+                    if not nleft:
+                        rl = np.arange(r1 - r0, dtype=np.int64)  # block-local row
+                        cl = np.arange(g - c0, dtype=np.int64)  # cols r0+1..
+                        keep &= cl[None, :] >= rl[:, None]  # ⟺ j > i globally
                     ri, ci = np.nonzero(keep)
                     if ri.size == 0:
                         continue
                     ii = ri + r0
-                    jj = ci + r0 + 1
+                    jj = ci + c0
                     # first table where the signatures agree == this group's
                     # table ⟺ this group owns the pair (argmax finds the
                     # first True; membership guarantees S[·, tbl] matches)
@@ -560,10 +525,10 @@ def _grouped_verify_udf(
                     dots = _seq_fold(C[ia] * C[ja])
                     with np.errstate(invalid="ignore"):  # 0/0 → NaN is handled
                         cos = dots / (norms[ia] * norms[ja])
-                    # NaN parity with the pair-stream path: Spark (and the
-                    # DuckDB oracle) order NaN ABOVE every double, so a
-                    # zero-norm pair's 0/0 cosine passes `cosine >= τ` there;
-                    # numpy's comparison would silently drop it (ADVICE r6)
+                    # NaN parity with the oracle: Spark (and DuckDB) order NaN
+                    # ABOVE every double, so a zero-norm pair's 0/0 cosine
+                    # passes `cosine >= τ` there; numpy's comparison would
+                    # silently drop it (ADVICE r6)
                     keep2 = (cos >= slack) | np.isnan(cos)
                     if not keep2.any():
                         continue
@@ -583,47 +548,78 @@ def _grouped_verify_udf(
     return kernel
 
 
-def _grouped_near_dup(
-    emb: DataFrame, threshold: float, n_tables: int, planes: int, dim: int
+def _flat_members(m: Column) -> list[Column]:
+    """(ids, vflat, sigflat) kernel columns from a collected member array."""
+    return [
+        F.transform(m, lambda s: s["vec_id"]).alias("ids"),
+        F.flatten(F.transform(m, lambda s: s["v"])).alias("vflat"),
+        F.flatten(F.transform(m, lambda s: s["sig"])).alias("sigflat"),
+    ]
+
+
+def _bucket_groups(
+    emb: DataFrame, n_tables: int, planes: int, dim: int, n_rows: int | None = None
 ) -> DataFrame:
-    """Grouped-bucket near-dup verify (the ≥ `_GROUPED_VERIFY_MIN_PLANES`
-    pruning-regime strategy): ONE membership shuffle keyed by (tbl, bucket),
-    group members folded into parallel flat arrays JVM-side, then a single
-    Arrow kernel computes norms, first-hit dedup, and sequential-fold cosines
-    per bucket. No pair-sized stream ever exists — Arrow traffic is
-    O(corpus·tables) for the memberships plus O(result) back, and the plan
-    needs no persists (every table is read once)."""
+    """(tbl, ids, vflat, sigflat, nleft) kernel groups for
+    `_grouped_verify_udf`, each holding at most `_GROUPED_MAX_BUCKET_BYTES`
+    of flattened vectors.
+
+    A bucket within the budget is ONE group (nleft = 0): one membership
+    shuffle keyed by (tbl, bucket), members folded into parallel flat
+    arrays JVM-side. Buckets are sized by one grouped count over the
+    signatures; a corpus of at most one budget of rows (``n_rows``) cannot
+    hold an oversized bucket, so then the count is skipped.
+
+    An oversized bucket is cut into blocks of half the budget by vec_id
+    rank, and each block pair (lo ≤ hi) is a group, left block first, so
+    every pair of rows is examined by exactly one group. First-hit dedup
+    still holds: the kernel decides ownership from the signatures
+    (`first == tbl`), not from the group. Repartitioning by the full group
+    key spreads one skewed bucket's block pairs over tasks."""
     udf = _bucket_udf(dim, n_tables, planes)
-    memb = emb.select(
-        "vec_id", "v", udf(_vq_col(F.col("v"))).alias("sig")
-    ).select("vec_id", "v", "sig", F.posexplode("sig").alias("tbl", "bucket"))
-    grouped = (
-        memb.groupBy("tbl", "bucket")
-        .agg(F.collect_list(F.struct("vec_id", "v", "sig")).alias("m"))
+    memb = emb.select("vec_id", "v", udf(_vq_col("v")).alias("sig")).select(
+        "vec_id", "v", "sig", F.posexplode("sig").alias("tbl", "bucket")
+    )
+    cap = max(2, _GROUPED_MAX_BUCKET_BYTES // (dim * 8))  # rows per group
+    block = cap // 2
+    big = []
+    if n_rows is None or n_rows > cap:
+        counts = memb.groupBy("tbl", "bucket").count()
+        big = [
+            (r["tbl"], r["bucket"], -(-r["count"] // block))
+            for r in counts.filter(F.col("count") > cap).collect()
+        ]
+    if not big:
+        return (
+            memb.groupBy("tbl", "bucket")
+            .agg(F.collect_list(F.struct("vec_id", "v", "sig")).alias("m"))
+            .select("tbl", *_flat_members(F.col("m")), F.lit(0).alias("nleft"))
+        )
+    sizes = emb.sparkSession.createDataFrame(big, "tbl int, bucket long, nblk int")
+    rank = F.row_number().over(Window.partitionBy("tbl", "bucket").orderBy("vec_id"))
+    # buckets within the budget (no sizes row) stay whole: one block, 0
+    blk = F.when(F.col("nblk").isNotNull(), ((rank - 1) / block).cast("int"))
+    nblk = F.coalesce("nblk", F.lit(1))
+    keyed = (
+        memb.join(F.broadcast(sizes), ["tbl", "bucket"], "left")
+        .withColumn("blk", blk.otherwise(0))
+        # a row of block p joins the groups (min(p, q), max(p, q)) for all q
+        .withColumn("q", F.explode(F.sequence(F.lit(0), nblk - 1)))
+        .withColumns({"lo": F.least("blk", "q"), "hi": F.greatest("blk", "q")})
+        .repartition("tbl", "bucket", "lo", "hi")
+    )
+    # (blk, vec_id) is unique, so the sort never compares payloads
+    members = F.array_sort(F.collect_list(F.struct("blk", "vec_id", "v", "sig")))
+    left = F.size(F.filter("m", lambda s: s["blk"] == F.col("lo")))
+    return (
+        keyed.groupBy("tbl", "bucket", "lo", "hi")
+        .agg(members.alias("m"))
         .select(
             "tbl",
-            F.transform("m", lambda s: s["vec_id"]).alias("ids"),
-            F.flatten(F.transform("m", lambda s: s["v"])).alias("vflat"),
-            F.flatten(F.transform("m", lambda s: s["sig"])).alias("sigflat"),
+            *_flat_members(F.col("m")),
+            F.when(F.col("lo") < F.col("hi"), left).otherwise(0).alias("nleft"),
         )
     )
-    raw = grouped.mapInPandas(
-        _grouped_verify_udf(dim, n_tables, threshold),
-        schema="id_a long, id_b long, cosine double",
-    )
-    # identical 6dp half-up round + compare as the pair-stream verify. The
-    # coalesce restores zero-norm NaNs: pandas→Arrow treats NaN as the
-    # missing-value sentinel, so the kernel's 0/0 cosines arrive as NULL —
-    # and NULL is the ONLY way the kernel's float64 column loses a value, so
-    # mapping it back to NaN is exact (Spark orders NaN above every double,
-    # keeping the pair exactly like the pair-stream path and the oracle).
-    return raw.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.coalesce(F.col("cosine"), F.lit(float("nan"))), 6
-        ).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
 
 
 def embedding_near_dup_pairs(
@@ -632,7 +628,6 @@ def embedding_near_dup_pairs(
     n_tables: int = ND_TABLES,
     planes: int = ND_PLANES,
     dim: int | None = None,
-    verify: str = "auto",
     n_rows: int | None = None,
 ) -> DataFrame:
     """All (id_a < id_b, cosine) pairs with cosine ≥ threshold over
@@ -647,30 +642,18 @@ def embedding_near_dup_pairs(
     modest (miss/table = 1-(1-θ/π)^p, tables chosen so miss^L is
     negligible).
 
-    Verify strategy (``verify``: "auto" | "grouped" | "pairs"): "auto" picks
-    the GROUPED kernel — one membership shuffle, norms + first-hit dedup +
-    sequential-fold cosines computed per bucket in a single Arrow pass,
-    O(corpus·tables) kernel traffic instead of the pair-stream's
-    O(candidate-pairs) (measured 15 GB / 117 s vs 0.5 GB for the production
-    regime's 14.6M candidates at 100k vectors; at sf1.0 the contract regime's
-    pair stream was 111 s vs seconds grouped) — whenever per-bucket memory is
-    bounded: planes ≥ `_GROUPED_VERIFY_MIN_PLANES`, or a caller-supplied
-    ``n_rows`` whose corpus/2^planes estimated bucket stays under
-    `_GROUPED_MAX_BUCKET_BYTES`. Low-plane configs withOUT a row count (or
-    past the cap) keep the distributed pair stream — there a bucket group
-    would be one giant task. Both strategies emit byte-identical rows
-    (equivalence-tested, including the zero-norm NaN edge).
-
-    Pair-stream dedup is map-side via first-colliding-table signatures,
-    picked by config width: ≤62 signature bits → ONE packed long + SWAR
-    group check; wider configs carry the bucket array and walk it with
-    zip_with — same exactly-once semantics, no dropDuplicates shuffle in
-    either path. Vector fetch is hint-free keyed joins (AQE may broadcast at
-    small scale; shuffles, never OOMs, at 10^12 vectors).
+    Verify is the grouped bucket kernel (`_grouped_verify_udf`) over
+    size-bounded bucket groups (`_bucket_groups`). Kernel traffic is
+    O(corpus·tables), never O(candidate-pairs): a pair-stream verify moved
+    15 GB in 117 s for the production regime's 14.6M candidates at 100k
+    vectors (0.5 GB grouped), and took 111 s vs ~10 s for the contract
+    regime at sf1.0.
 
     Pass ``dim`` when ``emb`` sits behind a repartition/shuffle — the
     fallback one-row probe would otherwise run the whole shuffle-map stage
-    just to read a vector length."""
+    just to read a vector length. Pass ``n_rows`` (the corpus row count, or
+    any upper bound) when it is known: a corpus within one group budget
+    skips the bucket sizing job."""
     dim = dim if dim is not None else _emb_dim(emb)
     if dim is None:
         raise ValueError(
@@ -678,163 +661,31 @@ def embedding_near_dup_pairs(
             "known dim, or short-circuit empty corpora upstream (the "
             "contract query does)"
         )
-    if verify not in ("auto", "grouped", "pairs"):
-        raise ValueError(f"unknown verify strategy {verify!r}")
-    if verify == "auto":
-        bucket_ok = (
-            n_rows is not None
-            and (n_rows / float(2**planes)) * dim * 8 <= _GROUPED_MAX_BUCKET_BYTES
-        )
-        verify = (
-            "grouped"
-            if planes >= _GROUPED_VERIFY_MIN_PLANES or bucket_ok
-            else "pairs"
-        )
-    if verify == "grouped":
-        return _grouped_near_dup(emb, threshold, n_tables, planes, dim)
-    from log_anomaly_detector_spark.operators.caching import tracked_persist
-
-    udf = _bucket_udf(dim, n_tables, planes)
-    sigs = emb.select("vec_id", udf(_vq_col(F.col("v"))).alias("sig"))
-    if n_tables * planes <= 62:
-        # SKINNY candidate stream: only (id, PACKED signature) rides the
-        # bucket self-join — the whole signature is ONE long (planes bits per
-        # bucket × n_tables groups), so the per-pair dedup check is a couple
-        # of integer ops instead of a per-table array walk.
-        gbits = planes
-        group_pows = [2 ** (gbits * i) for i in range(n_tables)]
-        packed = F.aggregate(
-            F.zip_with(F.col("sig"), F.lit(group_pows), lambda bkt, p: bkt * p),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        # persist the exploded signature table: BOTH sides of the bucket
-        # self-join read it, so without the cache the Arrow signature
-        # kernel (and the corpus scan under it) runs twice per action —
-        # the r4 verdict's one remaining wall lever on this query. Narrow
-        # payload only (id + packed long + table + bucket), never vectors.
-        # Keyed BY REGIME: the contract (24×2) and production (8×12)
-        # parameterizations produce different plans, and a shared key would
-        # thrash the slot on every alternation, silently reintroducing the
-        # double-computed kernel. (The norms persist below shares one key on
-        # purpose — its plan is regime-independent, so sameSemantics reuses
-        # the warm handle across regimes.)
-        skinny = tracked_persist(
-            f"embnd_skinny_{n_tables}x{planes}",
-            sigs.select(
-                "vec_id",
-                packed.alias("psig"),
-                F.posexplode("sig").alias("tbl", "bucket"),
-            ),
-        )
-        a = skinny.select(
-            F.col("vec_id").alias("id_a"), F.col("psig").alias("psig_a"), "tbl", "bucket"
-        )
-        b = skinny.select(
-            F.col("vec_id").alias("id_b"), F.col("psig").alias("psig_b"), "tbl", "bucket"
-        )
-        # first-collision dedup: emit the pair only from the FIRST table
-        # whose buckets agree — exactly-once per pair, no distinct shuffle.
-        # SWAR: x = psig_a XOR psig_b; y gathers each group's OR-of-bits at
-        # the group's low bit; "tbl is the first match" ⟺ every group BELOW
-        # tbl is nonzero in y (the group AT tbl matches by join construction).
-        low_mask = sum(1 << (gbits * i) for i in range(n_tables))
-        x = F.col("psig_a").bitwiseXOR(F.col("psig_b"))
-        y = x
-        for k in range(1, gbits):
-            y = y.bitwiseOR(F.shiftrightunsigned(x, k))
-        y = y.bitwiseAND(F.lit(low_mask))
-        below = F.element_at(  # low-bit pattern covering groups < tbl
-            F.lit([(2 ** (gbits * t) - 1) & low_mask for t in range(n_tables)]),
-            F.col("tbl") + 1,
-        )
-        first_hit = y.bitwiseAND(below) == below
-    else:
-        # wide config: carry the bucket array, first match via zip_with walk
-        # (same double-read shape as the packed path → same regime-keyed
-        # persist)
-        skinny = tracked_persist(
-            f"embnd_skinny_{n_tables}x{planes}",
-            sigs.select(
-                "vec_id", "sig", F.posexplode("sig").alias("tbl", "bucket")
-            ),
-        )
-        a = skinny.select(
-            F.col("vec_id").alias("id_a"), F.col("sig").alias("sig_a"), "tbl", "bucket"
-        )
-        b = skinny.select(
-            F.col("vec_id").alias("id_b"), F.col("sig").alias("sig_b"), "tbl", "bucket"
-        )
-        first_hit = (
-            F.col("tbl")
-            == F.array_position(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda s, t: s == t),
-                F.lit(True),
-            )
-            - 1
-        )
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(first_hit)
-        .select("id_a", "id_b")
+    raw = _bucket_groups(emb, n_tables, planes, dim, n_rows).mapInPandas(
+        _grouped_verify_udf(dim, n_tables, threshold),
+        schema="id_a long, id_b long, cosine double",
     )
-    # verify: vectors + norms arrive via plain KEYED joins with NO broadcast
-    # hint — at bench scale AQE converts the dim-sized side to a runtime
-    # broadcast; at 10^12 vectors the same plan shuffles instead of OOMing
-    # (the round-2 forced F.broadcast(corpus) is exactly what this removes).
-    # Norms are computed ONCE per vector on the fetch side — dot/(na*nb)
-    # evaluates the identical IEEE ops as the inline cosine, so the 6dp round
-    # stays bit-exact vs the DuckDB oracle.
-    # the verify stage fetches vectors TWICE (id_a and id_b keyed joins) —
-    # persist the norms table so the corpus scan + norm reduction run once
-    # per action instead of twice (MEMORY_AND_DISK: spills, never OOMs)
-    withn = tracked_persist(
-        "embnd_norms",
-        # Arrow norm kernel: bit-identical to sqrt(_dot(v, v)) (see
-        # _norm_udf) but vectorized — the inline fold interpreted a full
-        # corpus-sized pass per action before this
-        emb.select("vec_id", "v", _norm_udf()(F.col("v")).alias("n")),
-    )
-    paired = pairs.join(
-        withn.select(
-            F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")
-        ),
-        "id_a",
-    ).join(
-        withn.select(
-            F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-        ),
-        "id_b",
-    )
-    # pair dot via the INLINE JVM fold (round 7): the r6 Arrow `_pair_dot_udf`
-    # here was the CLAUDE.md pair-stream trap — a pandas_udf over the
-    # candidate-PAIR stream ships both vectors per pair to Python workers,
-    # exactly the transfer co-tenant load crushes (r6 verdict: 2.2 s → 5.9 s
-    # on the contract regime). The fold evaluates the identical IEEE ops
-    # (dot/(na·nb), sequential accumulation), so the 6dp round stays
-    # bit-exact vs the DuckDB oracle AND vs the grouped kernel; the Arrow
-    # kernels stay where they won — corpus-sized passes (`_norm_udf`) and
-    # group-local verifies, never pair streams.
-    # zero-norm guard (ADVICE r6): ANSI Spark RAISES on x/0 where numpy and
-    # DuckDB produce 0/0 = NaN — and both engines order NaN above every
-    # double, so the `cosine >= τ` filter must KEEP such pairs. The explicit
-    # NaN branch makes the pair stream byte-equal to the grouped kernel and
-    # the oracle on all-zero embeddings instead of crashing.
-    denom = F.col("na") * F.col("nb")
-    cos = F.round(
-        F.when(denom != 0, _dot(F.col("va"), F.col("vb")) / denom).otherwise(
-            F.lit(float("nan"))
-        ),
-        6,
-    )
-    return (
-        paired.select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+    # 6dp half-up round + compare, as the oracle. The coalesce restores
+    # zero-norm NaNs: pandas→Arrow treats NaN as the missing-value sentinel,
+    # so the kernel's 0/0 cosines arrive as NULL — and NULL is the ONLY way
+    # the kernel's float64 column loses a value, so mapping it back to NaN
+    # is exact (Spark orders NaN above every double, keeping the pair
+    # exactly like the oracle).
+    cos = F.round(F.coalesce(F.col("cosine"), F.lit(float("nan"))), 6)
+    return raw.select("id_a", "id_b", cos.alias("cosine")).filter(
+        F.col("cosine") >= threshold
     )
 
 
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _near_dup_corpus(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int, int] | None:
+    """(emb, dim, n_rows) for the near-dup queries, or None for an empty
+    corpus. testdata parquet arrives as ONE split; the cheap id repartition
+    parallelizes the signature kernel. The dim and the row count (which
+    lets `_bucket_groups` skip bucket sizing) come from ONE cheap aggregate
+    over the raw scan (pre-repartition — probing the shuffled side would
+    run the whole shuffle-map stage for one row)."""
     raw = (
         t(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -843,30 +694,25 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # seed collect nor the Arrow kernels ever see None
         .filter(F.col("v").isNotNull())
     )
-    # testdata parquet arrives as ONE split; the cheap id repartition
-    # parallelizes the signature kernel and the norm computation. The dim
-    # probe and the ROW COUNT (which sizes the verify dispatch — grouped
-    # kernel iff buckets stay memory-bounded) come from ONE cheap aggregate
-    # over the raw scan (pre-repartition — probing the shuffled side would
-    # run the whole shuffle-map stage for one row).
     probe = raw.agg(
         F.count(F.lit(1)).alias("n"),
         F.first(F.size("v"), ignorenulls=True).alias("d"),
     ).first()
-    if probe is None or probe["d"] is None:  # empty corpus → contract schema
-        return spark.createDataFrame([], _PAIRS_SCHEMA)
+    if probe is None or probe["d"] is None:
+        return None
     emb = raw.repartition(spark.sparkContext.defaultParallelism, "vec_id")
-    return embedding_near_dup_pairs(emb, dim=probe["d"], n_rows=probe["n"])
+    return emb, probe["d"], probe["n"]
 
 
-# production-regime parameterization: high threshold, enough planes per
-# table that a random pair collides with prob ~2^-12 — the regime the
-# embedding_near_dup_pairs docstring names for real near-dup dedup. NOT a
-# contract query (the oracle-verified contract fixture runs the low-τ
-# no-pruning regime); this is the shape per-query SCALING evidence runs,
-# because the contract parameters are quadratic-by-design on a large corpus
-# (τ=0.45 with 2 planes ⇒ 4 buckets/table ⇒ bucket self-joins explode) —
-# measuring those at 500k vectors would benchmark a misconfiguration.
+def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    corpus = _near_dup_corpus(spark, sf_dir)
+    if corpus is None:  # empty corpus → contract schema
+        return spark.createDataFrame([], _PAIRS_SCHEMA)
+    emb, dim, n_rows = corpus
+    return embedding_near_dup_pairs(emb, dim=dim, n_rows=n_rows)
+
+
+# production-regime parameterization (see q_embedding_near_dup_production)
 PROD_ND_THRESHOLD = 0.85
 PROD_ND_TABLES = 8
 PROD_ND_PLANES = 12
@@ -881,25 +727,23 @@ def q_embedding_near_dup_production(spark: SparkSession, sf_dir: str) -> DataFra
     same plan against the brute-force oracle at low τ. This entry exists for
     per-query SCALING evidence and as the parameterization real near-dup
     dedup should copy — the contract regime is quadratic by design at
-    corpus scale (2 planes ⇒ 4 buckets/table ⇒ bucket self-joins explode).
+    corpus scale (2 planes ⇒ 4 buckets/table ⇒ every bucket holds a
+    quarter of the corpus), so measuring it at 500k vectors would benchmark
+    a misconfiguration.
     Planted-duplicate recall 1.0 pinned by
     tests/test_similarity.py::test_embedding_near_dup_production_regime.
     Reference near-dup semantics citation as for q_embedding_near_dup."""
-    raw = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .filter(F.col("v").isNotNull())
-    )
-    dim = _emb_dim(raw)
-    if dim is None:
+    corpus = _near_dup_corpus(spark, sf_dir)
+    if corpus is None:
         return spark.createDataFrame([], _PAIRS_SCHEMA)
-    emb = raw.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb, dim, n_rows = corpus
     return embedding_near_dup_pairs(
         emb,
         threshold=PROD_ND_THRESHOLD,
         n_tables=PROD_ND_TABLES,
         planes=PROD_ND_PLANES,
         dim=dim,
+        n_rows=n_rows,
     )
 
 
@@ -1285,7 +1129,7 @@ def _with_vq(emb: DataFrame) -> DataFrame:
     """Attach the quantized `vq` column once if absent — callers that persist
     the corpus add it BEFORE the persist so the int32 arrays are cached and
     every kernel pass reads them without recomputing the floor."""
-    return emb if "vq" in emb.columns else emb.withColumn("vq", _vq_col(F.col("v")))
+    return emb if "vq" in emb.columns else emb.withColumn("vq", _vq_col("v"))
 
 
 def build_ivf(

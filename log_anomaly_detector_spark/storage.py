@@ -1,12 +1,8 @@
 """Storage layer: partitioned parquet tables + a JSONL checkpoint manifest.
 
-The engine is storage-agnostic by design: on a cluster with an Iceberg
-catalog, ``overwrite_partitions`` becomes ``MERGE INTO`` / ``overwritePartitions``
-and the manifest becomes a snapshot-tagged metadata table. This sandbox has
-no Iceberg runtime jar, so the same semantics are provided over hive-style
-partition directories with explicit delete+insert — exactly the reference's
-idempotency primitive (per-block DELETE then batch INSERT,
-``database/upsert_log_line.py:27-52``).
+Idempotent writes are explicit delete+insert over hive-style partition
+directories — exactly the reference's idempotency primitive (per-block
+DELETE then batch INSERT, ``database/upsert_log_line.py:27-52``).
 """
 
 from __future__ import annotations
@@ -16,54 +12,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-class IcebergStore:
-    """Iceberg-backed sink/lineage (used when an Iceberg catalog is on the
-    classpath — not in this sandbox, so instantiation requires an explicit
-    catalog and every method is a thin wrapper over the public Iceberg SQL /
-    DataFrame API; `HiveParquetStore` below provides identical semantics over
-    plain directories and is what runs here).
-
-    Semantics parity with the reference's sinks:
-    * ``merge_upsert``  ≙ INSERT ... ON CONFLICT DO UPDATE
-      (``database/upsert_log_block.py:47-103``)
-    * ``overwrite_partitions`` ≙ per-block DELETE + batch INSERT
-      (``database/upsert_log_line.py:1-92``)
-    * ``snapshot_id`` feeds the manifest's lineage records.
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str):
-        self.spark = spark
-        self.catalog = catalog
-        try:
-            spark.sql(f"SHOW NAMESPACES IN {catalog}")
-        except Exception as e:  # no Iceberg runtime on the classpath
-            raise RuntimeError(
-                f"Iceberg catalog '{catalog}' unavailable: {e}"
-            ) from e
-
-    def overwrite_partitions(self, df: DataFrame, table: str, part_ids) -> None:
-        df.writeTo(f"{self.catalog}.{table}").overwritePartitions()
-
-    def merge_upsert(self, updates: DataFrame, table: str, key: str) -> None:
-        updates.createOrReplaceTempView("_updates")
-        cols = updates.columns
-        sets = ", ".join(f"t.{c} = u.{c}" for c in cols if c != key)
-        vals = ", ".join(f"u.{c}" for c in cols)
-        self.spark.sql(
-            f"MERGE INTO {self.catalog}.{table} t USING _updates u "
-            f"ON t.{key} = u.{key} "
-            f"WHEN MATCHED THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED THEN INSERT ({', '.join(cols)}) VALUES ({vals})"
-        )
-
-    def snapshot_id(self, table: str) -> int:
-        row = self.spark.sql(
-            f"SELECT snapshot_id FROM {self.catalog}.{table}.snapshots "
-            f"ORDER BY committed_at DESC LIMIT 1"
-        ).first()
-        return row["snapshot_id"]
 
 
 def overwrite_partitions(df: DataFrame, path: str, part_ids: list[int]) -> None:

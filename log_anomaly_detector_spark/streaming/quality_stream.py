@@ -184,7 +184,9 @@ def run_quality_gate_once(
     partition written with dynamic partition overwrite, so a batch retried
     after a mid-write failure REPLACES its own partition instead of
     double-appending — the returned kept rows are exact counts, not
-    at-least-once counts."""
+    at-least-once counts. The dynamic mode is a per-write option, so the
+    contract holds under a session whose ``partitionOverwriteMode`` is
+    ``static`` (which would wipe every earlier batch's partition)."""
     eval_grams = eval_grams.persist()
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
@@ -194,12 +196,13 @@ def run_quality_gate_once(
             .persist()
         )
         try:
-            gated.filter(F.col("keep")).drop("keep").write.mode(
-                "overwrite"
-            ).partitionBy("_batch_id").parquet(kept_dir)
-            gated.filter(~F.col("keep")).write.mode("overwrite").partitionBy(
-                "_batch_id"
-            ).parquet(quarantine_dir)
+            for rows, path in (
+                (gated.filter(F.col("keep")).drop("keep"), kept_dir),
+                (gated.filter(~F.col("keep")), quarantine_dir),
+            ):
+                rows.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("_batch_id").parquet(path)
         finally:
             gated.unpersist()
 

@@ -67,3 +67,19 @@ def test_components_driver_fast_path_matches_iterative(spark):
     }
     assert fast == iterative
     assert (300, 300) in fast and (302, 300) in fast
+
+
+def test_components_driver_path_null_endpoint_and_mixed_types(spark):
+    """A pair with a NULL endpoint is no edge on either path, and the driver
+    path types its output from the wider of the endpoint types (int src,
+    bigint dst → bigint), as the iterative path's union does."""
+    edges = [(1, 2), (2, 3), (10, 11), (20, None), (None, 21), (11, 3_000_000_000)]
+    pairs = spark.createDataFrame(edges, "doc_a int, doc_b bigint")
+    fast_df = connected_components(pairs)
+    iter_df = connected_components(pairs, collect_budget=0)
+    assert fast_df.schema == iter_df.schema
+    assert fast_df.schema["node"].dataType.simpleString() == "bigint"
+    fast = {(r["node"], r["component_id"]) for r in fast_df.collect()}
+    iterative = {(r["node"], r["component_id"]) for r in iter_df.collect()}
+    assert fast == iterative
+    assert fast == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (3_000_000_000, 10)}

@@ -226,3 +226,33 @@ def test_rep_keep_flag_exact_at_floored_ppm_boundary(spark):
     assert got[3] == (300000, True)
     assert got[4] == (400000, False)
     assert got[5] == (None, None)
+
+
+def test_quality_stream_batches_survive_static_overwrite_mode(spark, tmp_path):
+    """Per-batch idempotency must not depend on the session conf: with
+    ``partitionOverwriteMode=static`` a plain overwrite of the sink would
+    wipe every earlier batch's ``_batch_id`` partition. Two micro-batches
+    (two drains on one checkpoint) must both survive in both sinks."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "static")
+    try:
+        eval_grams = build_eval_grams(
+            spark, spark.createDataFrame([], "doc_id long, text string")
+        )
+        clean = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
+        dirs = [str(tmp_path / d) for d in ("ckpt", "kept", "quarantine")]
+        for rows, sub in (
+            ([(1, clean), (2, "a b a b a b")], "b0"),
+            ([(3, clean), (4, "c d c d c d")], "b1"),
+        ):
+            _stream_input(spark, rows, tmp_path / "in" / sub)
+            kept = run_quality_gate_once(
+                spark, str(tmp_path / "in" / "*"), eval_grams, *dirs
+            )
+        assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
+        for path, ids in ((dirs[1], [(1, 0), (3, 1)]), (dirs[2], [(2, 0), (4, 1)])):
+            got = spark.read.parquet(path).select("doc_id", "_batch_id").collect()
+            assert sorted((r["doc_id"], r["_batch_id"]) for r in got) == ids
+    finally:
+        spark.conf.set(conf, prev)

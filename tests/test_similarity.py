@@ -103,7 +103,7 @@ def test_bucket_kernel_matches_catalyst_reference(spark):
             r["vec_id"]: list(r["sig"])
             for r in emb.select(
                 "vec_id",
-                _bucket_udf(64, n_tables, planes)(_vq_col(F.col("v"))).alias("sig"),
+                _bucket_udf(64, n_tables, planes)(_vq_col("v")).alias("sig"),
             ).collect()
         }
         assert got == ref, (n_tables, planes)
@@ -270,42 +270,6 @@ def test_lloyd_partials_match_exploded_agg_bitwise(spark):
     assert got == ref
 
 
-def test_norm_and_pairdot_kernels_match_catalyst_fold_bitwise(spark):
-    """_norm_udf == sqrt(_dot(v,v)) and _pair_dot_udf == _dot(va,vb) with
-    EXACT float equality (sequential-fold argument, same as _score_udf) —
-    the guards for the near-dup verify stage's kernel swap."""
-    from pyspark.sql import functions as F
-
-    from log_anomaly_detector_spark.operators.similarity import (
-        _dot,
-        _norm_udf,
-        _pair_dot_udf,
-    )
-
-    emb = (
-        spark.read.parquet(f"{SF}/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .limit(100)
-    )
-    both = emb.select(
-        "vec_id",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("ref_n"),
-        _norm_udf()(F.col("v")).alias("got_n"),
-    ).collect()
-    assert all(r["ref_n"] == r["got_n"] for r in both)  # exact
-
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).limit(500)
-    dots = pairs.select(
-        _dot(F.col("va"), F.col("vb")).alias("ref_d"),
-        _pair_dot_udf()(F.col("va"), F.col("vb")).alias("got_d"),
-    ).collect()
-    assert len(dots) > 0
-    assert all(r["ref_d"] == r["got_d"] for r in dots)  # exact
-
-
 def test_ivf_assign_kernel_matches_catalyst_reference(spark):
     """The Arrow IVF assignment kernel (_assign_udf, numpy int64 matmul +
     argmax) must be bit-identical to the pure-Catalyst quantized-sim
@@ -342,7 +306,7 @@ def test_ivf_assign_kernel_matches_catalyst_reference(spark):
     got = {
         r["vec_id"]: r["cid"]
         for r in emb.select(
-            "vec_id", _assign_udf(cents)(_vq_col(F.col("v"))).alias("cid")
+            "vec_id", _assign_udf(cents)(_vq_col("v")).alias("cid")
         ).collect()
     }
     assert got == ref
@@ -350,7 +314,7 @@ def test_ivf_assign_kernel_matches_catalyst_reference(spark):
 
 def test_near_dup_high_threshold_regime(spark):
     """embedding_near_dup_pairs in the PRODUCTION regime (τ=0.9, 6 planes ×
-    16 tables — the wide/array dedup path and real bucket pruning): on a
+    16 tables — real bucket pruning): on a
     corpus of random far vectors + planted near-identical pairs, the LSH
     plan must reproduce the brute-force pair set exactly (per-true-pair miss
     at cosine ≥ 0.98 is ~1e-8 with this config)."""
@@ -509,18 +473,11 @@ def test_embedding_near_dup_production_regime(spark, tmp_path):
 
 
 def test_near_dup_regimes_do_not_thrash_persist_slots(spark):
-    """Since round 7 BOTH contract regimes dispatch to the GROUPED verify
-    (bucket memory is bounded at every bench scale), which reads every table
-    exactly once and must register NO persist at all — a grouped-path cache
-    would hold corpus-sized vector payloads hostage for a single-pass plan.
-    The pair-stream fallback (explicit ``verify='pairs'``, or a low-plane
-    corpus too large for bounded buckets) still keys its signature-table
-    persist BY REGIME, so alternating parameterizations never thrash a
-    shared slot."""
+    """Both near-dup regimes run the grouped verify, which reads every table
+    exactly once and must register NO persist at all — a cache would hold
+    corpus-sized vector payloads hostage for a single-pass plan."""
     from log_anomaly_detector_spark.operators.caching import _LIVE, release_all
     from log_anomaly_detector_spark.operators.similarity import (
-        _emb_dim,
-        embedding_near_dup_pairs,
         q_embedding_near_dup,
         q_embedding_near_dup_production,
     )
@@ -530,26 +487,60 @@ def test_near_dup_regimes_do_not_thrash_persist_slots(spark):
     q_embedding_near_dup_production(spark, SF).collect()
     live = set(_LIVE)
     assert not any(k.startswith("embnd_") for k in live), live
-    # explicit pair-stream fallback: regime-keyed slot appears
-    emb = (
-        spark.read.parquet(f"{SF}/embeddings.parquet")
-        .selectExpr("vec_id", "cast(embedding as array<double>) v")
-        .filter("v is not null")
-    )
-    embedding_near_dup_pairs(
-        emb, dim=_emb_dim(emb), verify="pairs"
-    ).collect()
-    assert "embnd_skinny_24x2" in set(_LIVE), set(_LIVE)
     release_all()
 
 
-def test_grouped_verify_matches_pair_stream_bitwise(spark):
-    """The grouped bucket verify and the pair-stream verify are two physical
-    strategies for ONE logical operator: on a corpus with planted duplicate
-    clusters they must emit the SAME rows with byte-equal cosines (the
-    sequential-fold kernels make both sides bit-deterministic, so this is
-    exact tuple equality, never a tolerance). Covers the packed (≤62-bit),
-    wide (>62-bit), and grouped code paths against each other."""
+def _near_dup_reference(df, tau, n_tables, planes):
+    """Brute-force reference for embedding_near_dup_pairs: every i<j pair
+    that shares a bucket in some table (the LSH candidate rule; the
+    signature kernel is pinned to the Catalyst `_bucket_array` by
+    test_bucket_kernel_matches_catalyst_reference), scored with the
+    Catalyst `_cos` fold, rounded to 6dp and filtered like the operator.
+    ANSI Spark raises on x/0, so a zero-norm pair is scored NaN
+    explicitly, as DuckDB does."""
+    from pyspark.sql import functions as F
+
+    from log_anomaly_detector_spark.operators.similarity import (
+        _bucket_udf,
+        _cos,
+        _dot,
+        _vq_col,
+    )
+
+    dim = len(df.first()["v"])
+    sig = _bucket_udf(dim, n_tables, planes)(_vq_col("v"))
+    sigs = df.select("vec_id", "v", sig.alias("sig"))
+    a = sigs.toDF("id_a", "va", "sa")
+    b = sigs.toDF("id_b", "vb", "sb")
+    va, vb = F.col("va"), F.col("vb")
+    denom = F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb))
+    cos = F.round(F.when(denom != 0, _cos(va, vb)).otherwise(F.lit(float("nan"))), 6)
+    rows = (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .filter(F.array_contains(F.zip_with("sa", "sb", lambda x, y: x == y), True))
+        .select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= tau)
+        .collect()
+    )
+    return _sorted_pairs(rows)
+
+
+def _sorted_pairs(rows):
+    import numpy as np
+
+    # NaN != NaN would break tuple equality; map it to a sentinel
+    return sorted(
+        (r["id_a"], r["id_b"], "NaN" if np.isnan(r["cosine"]) else r["cosine"])
+        for r in rows
+    )
+
+
+def test_grouped_verify_matches_brute_force_bitwise(spark):
+    """The grouped bucket verify must emit EXACTLY the brute-force
+    reference's rows on a corpus with planted duplicate clusters, with
+    byte-equal cosines (the sequential-fold kernel evaluates the identical
+    IEEE ops as the Catalyst fold, so this is exact tuple equality, never a
+    tolerance), across three regimes and the zero-norm NaN edge."""
     import numpy as np
 
     from log_anomaly_detector_spark.operators.similarity import (
@@ -566,7 +557,7 @@ def test_grouped_verify_matches_pair_stream_bitwise(spark):
             vecs[100 * rep + k] = w / np.linalg.norm(w)
     # zero-norm vectors (ADVICE r6): cosine is 0/0 = NaN; Spark and DuckDB
     # order NaN above every double so the `cosine >= τ` filter KEEPS such
-    # pairs — both physical strategies must agree on that, byte-for-byte
+    # pairs — the kernel must agree with the reference on that, byte-for-byte
     vecs[900] = np.zeros(64)
     vecs[901] = np.zeros(64)
     df = spark.createDataFrame(
@@ -574,35 +565,83 @@ def test_grouped_verify_matches_pair_stream_bitwise(spark):
         "vec_id long, v array<double>",
     ).repartition(5)
 
-    def norm_rows(rows):
-        # NaN != NaN would break tuple equality; map it to a sentinel
-        return sorted(
-            (r["id_a"], r["id_b"], "NaN" if np.isnan(r["cosine"]) else r["cosine"])
-            for r in rows
-        )
-
-    #          wide+grouped      packed+grouped    many-table grouped
+    #          wide signature   low-τ, many pairs   many tables
     for nt, pl, tau in ((8, 12, 0.85), (4, 8, 0.15), (16, 9, 0.5)):
-        a = norm_rows(
-            embedding_near_dup_pairs(df, tau, nt, pl, verify="pairs").collect()
-        )
-        b = norm_rows(
-            embedding_near_dup_pairs(df, tau, nt, pl, verify="grouped").collect()
-        )
-        assert a == b, (nt, pl, tau, a[:5], b[:5])
+        got = _sorted_pairs(embedding_near_dup_pairs(df, tau, nt, pl).collect())
+        ref = _near_dup_reference(df, tau, nt, pl)
+        assert got == ref, (nt, pl, tau, got[:5], ref[:5])
         # the zero-norm pair collides in every table (all-zero buckets) and
-        # must survive both paths as a NaN row
-        assert (900, 901, "NaN") in a, (nt, pl, tau)
+        # must survive as a NaN row
+        assert (900, 901, "NaN") in got, (nt, pl, tau)
         if tau <= 0.15:  # the low-τ config must actually emit pairs
-            assert len(a) > 20, len(a)
+            assert len(got) > 20, len(got)
+
+
+def test_near_dup_skewed_bucket_is_split_bounded(spark, monkeypatch):
+    """A duplicate-heavy corpus puts one cluster into ONE bucket of every
+    table. With the group budget forced below that bucket's size, the
+    bucket must be verified as bounded block pairs: the output still equals
+    the brute-force reference (every identical pair exactly once), and no
+    kernel group holds more than two blocks' worth of rows. A second,
+    smaller cluster (negated vector: a different bucket in every table)
+    fills a bucket past one block but within the budget, which must stay
+    ONE group in the same plan."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from log_anomaly_detector_spark.operators import similarity
+    from log_anomaly_detector_spark.operators.similarity import (
+        _bucket_groups,
+        embedding_near_dup_pairs,
+    )
+
+    rng = np.random.default_rng(5)
+    same = rng.normal(size=64)
+    rows = [(i, [float(x) for x in same]) for i in range(40)]
+    rows += [(200 + i, [float(-x) for x in same]) for i in range(8)]
+    rows += [(100 + i, [float(x) for x in rng.normal(size=64)]) for i in range(4)]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>").repartition(4)
+
+    cap = 12  # rows per kernel group; blocks are half of it
+    monkeypatch.setattr(similarity, "_GROUPED_MAX_BUCKET_BYTES", cap * 64 * 8)
+    groups = _bucket_groups(df, 24, 2, 64).select(
+        F.size("ids").alias("g"), "nleft"
+    ).collect()
+    assert max(r["g"] for r in groups) <= 2 * (cap // 2)
+    assert any(r["nleft"] > 0 for r in groups)  # the bucket WAS split
+
+    got = _sorted_pairs(embedding_near_dup_pairs(df, 0.45, 24, 2).collect())
+    assert got == _near_dup_reference(df, 0.45, 24, 2)
+    ident = {(a, b) for a, b, _ in got if b < 40 or a >= 200}
+    assert ident == {
+        (a, b) for lo, n in ((0, 40), (200, 8)) for a in range(lo, lo + n)
+        for b in range(a + 1, lo + n)
+    }
+
+
+def test_vq_quantization_out_of_range_raises_named_error(spark):
+    """A component past the int32 quantization range (|x| ≳ 2147) must
+    fail with the named quantization error — naming the column and the
+    limit — not an opaque CAST_OVERFLOW from inside the signature kernel."""
+    from log_anomaly_detector_spark.operators.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    rows = [(i, [0.1 * (i + 1), -0.2, 0.3, 0.4]) for i in range(6)]
+    rows.append((6, [0.1, 2500.0, 0.3, 0.4]))  # the planted bad component
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    with pytest.raises(Exception, match=r"embedding column 'v'.*2147\.483648"):
+        embedding_near_dup_pairs(df, dim=4, n_rows=len(rows)).collect()
 
 
 def test_grouped_verify_kernel_chunking_is_invariant():
     """Pure-Python kernel unit test (no Spark): splitting the i<j pair
     enumeration into tiny blocks must not change a single emitted row —
-    the block loop only bounds scratch memory. Also pins first-hit
-    exactly-once across tables: with every vector sharing one bucket in
-    BOTH tables, table 0 owns every pair and table 1 none."""
+    the block loop only bounds scratch memory. A block-pair group (nleft >
+    0) must emit exactly the left×right subset of the whole-bucket rows.
+    Also pins first-hit exactly-once across tables: with every vector
+    sharing one bucket in BOTH tables, table 0 owns every pair and table 1
+    none."""
     import numpy as np
     import pandas as pd
 
@@ -616,13 +655,14 @@ def test_grouped_verify_kernel_chunking_is_invariant():
     ids = np.arange(1000, 1000 + g, dtype=np.int64)
     sig = np.zeros((g, n_tables), dtype=np.int64)  # all-collide, both tables
 
-    def run(tbl, block):
+    def run(tbl, block, nleft=0):
         pdf = pd.DataFrame(
             {
                 "tbl": [tbl],
                 "ids": [ids],
                 "vflat": [C.reshape(-1)],
                 "sigflat": [sig.reshape(-1)],
+                "nleft": [nleft],
             }
         )
         k = _grouped_verify_udf(dim, n_tables, -2.0, pair_block=block)
@@ -638,6 +678,8 @@ def test_grouped_verify_kernel_chunking_is_invariant():
     assert len(full) == g * (g - 1) // 2
     pd.testing.assert_frame_equal(full, tiny)  # byte-equal, incl. cosines
     assert len(run(1, 1 << 18)) == 0  # table 1 owns no first hits
+    cross = full[(full.id_a < 1015) & (full.id_b >= 1015)].reset_index(drop=True)
+    pd.testing.assert_frame_equal(run(0, 3, nleft=15), cross)
 
 
 def test_grouped_verify_prefilter_fallback_and_boundary():
@@ -670,6 +712,7 @@ def test_grouped_verify_prefilter_fallback_and_boundary():
                 "ids": [np.arange(g, dtype=np.int64)],
                 "vflat": [C.reshape(-1)],
                 "sigflat": [np.zeros(g * n_tables, dtype=np.int64)],
+                "nleft": [0],
             }
         )
         out = list(_grouped_verify_udf(dim, n_tables, threshold)(iter([pdf])))

@@ -2,17 +2,8 @@
 
 from __future__ import annotations
 
-import pytest
-
 from log_anomaly_detector_spark import storage
 from log_anomaly_detector_spark.datagen import GenSpec, gen_sequences
-
-
-def test_iceberg_store_unavailable_is_clean(spark):
-    """Without the Iceberg runtime the store must fail loudly at
-    construction — never silently fall back."""
-    with pytest.raises(RuntimeError, match="unavailable"):
-        storage.IcebergStore(spark, "nonexistent_iceberg_catalog")
 
 
 def test_overwrite_partitions_clears_stale_rows(spark, tmp_path):
@@ -48,41 +39,3 @@ def test_datagen_deterministic_across_parallelism(spark):
         .first()["h"]
     )
     assert h == h2
-
-
-def test_iceberg_merge_sql_contract(spark):
-    """No Iceberg runtime in the sandbox, so the MERGE path can't execute —
-    but its generated SQL is a contract: assert the exact statement for a
-    known schema (semantics ≙ INSERT ... ON CONFLICT DO UPDATE,
-    database/upsert_log_block.py:47-103)."""
-
-    class _CaptureSpark:
-        def __init__(self, inner):
-            self.inner = inner
-            self.sqls = []
-
-        def sql(self, q):
-            self.sqls.append(q)
-
-    store = storage.IcebergStore.__new__(storage.IcebergStore)
-    store.catalog = "ice"
-    cap = _CaptureSpark(spark)
-    store.spark = cap
-    updates = spark.createDataFrame(
-        [("b1", "Anomaly", 0.5)], "block_id string, label string, score double"
-    )
-    store.merge_upsert(updates, "verdicts", key="block_id")
-    assert cap.sqls == [
-        "MERGE INTO ice.verdicts t USING _updates u "
-        "ON t.block_id = u.block_id "
-        "WHEN MATCHED THEN UPDATE SET t.label = u.label, t.score = u.score "
-        "WHEN NOT MATCHED THEN INSERT (block_id, label, score) "
-        "VALUES (u.block_id, u.label, u.score)"
-    ]
-
-
-def test_iceberg_store_fails_fast_without_catalog(spark):
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="unavailable"):
-        storage.IcebergStore(spark, "no_such_catalog")

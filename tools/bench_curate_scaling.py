@@ -17,6 +17,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -105,19 +106,19 @@ def main() -> int:
               / ((n4 / n) * trials[n4][t]["walls"]["curate_full"]), 3)
         for t in range(args.trials)
     ]
-    med = sorted(paired)[len(paired) // 2]
+    med = statistics.median(paired)
     results = {
         "data_dir": args.data_dir,
         "pair": args.pair,
         "trials": trials,
         "queries": {
             "curate_full": {
-                "wall_n_median": sorted(
+                "wall_n_median": statistics.median(
                     r["walls"]["curate_full"] for r in trials[n]
-                )[args.trials // 2],
-                "wall_4n_median": sorted(
+                ),
+                "wall_4n_median": statistics.median(
                     r["walls"]["curate_full"] for r in trials[n4]
-                )[args.trials // 2],
+                ),
                 "efficiency_paired_trials": paired,
                 "efficiency": med,
             }

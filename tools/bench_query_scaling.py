@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -129,14 +130,12 @@ def main() -> int:
             )
             for t in range(args.trials)
         ]
-        med = sorted(paired)[len(paired) // 2]
+        med = statistics.median(paired)
         results["queries"][q] = {
-            "wall_n_median": sorted(r["walls"][q] for r in trials[n])[
-                args.trials // 2
-            ],
-            "wall_4n_median": sorted(r["walls"][q] for r in trials[n4])[
-                args.trials // 2
-            ],
+            "wall_n_median": statistics.median(r["walls"][q] for r in trials[n]),
+            "wall_4n_median": statistics.median(
+                r["walls"][q] for r in trials[n4]
+            ),
             "efficiency_paired_trials": paired,
             "efficiency": med,
         }

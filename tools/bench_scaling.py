@@ -20,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -99,7 +100,7 @@ def main() -> int:
         # headline = MEDIAN paired efficiency: the best pair overstates
         # scaling on a noisy co-tenanted host; per-trial values stay recorded
         # as supporting evidence (with host load, below in "trials").
-        med = sorted(paired)[len(paired) // 2] if paired else None
+        med = statistics.median(paired) if paired else None
         results["pairs"][pair] = {
             "thr_n": best[n]["rows_per_sec"],
             "thr_4n": best[n4]["rows_per_sec"],
