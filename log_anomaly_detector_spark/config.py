@@ -33,19 +33,10 @@ class RuleConfig:
     # --- uniqueness (R4) ------------------------------------------------
     # salt buckets for the two-phase (salted partial -> final) dup count.
     uniqueness_salt_buckets: int = 16
+    # how the run-global duplicate-key job counts (rules/uniqueness.py):
     # 'salted': two-phase agg, safe on any layout/skew; 'direct': single
     # groupBy(doc_id) — zero-shuffle when the input is bucketed by doc_id.
     uniqueness_mode: str = "salted"
-
-    # --- token equality (R7) ----------------------------------------------
-    # 'prefilter': arrays shuffle once, equality decided JVM-side, Arrow UDF
-    #   on mismatches only — fastest when shuffle is local-disk (single node)
-    #   or storage is bucketed by doc_id (no shuffle at all).
-    # 'hash': join 16-byte xxhash64 signatures instead of arrays — trades two
-    #   extra scans for ~10x less shuffle volume; wins when the shuffle
-    #   crosses a network (large clusters, unbucketed storage).
-    # 'arrow': every joined row through the vectorized UDF (reference mode).
-    token_eq_mode: str = "prefilter"
 
     # --- drift (R8) -------------------------------------------------------
     # fixed n_tok histogram bucket edges (pinned; width 16 up to 512).

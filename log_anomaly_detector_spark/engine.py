@@ -8,9 +8,11 @@ per checkpoint batch:
 0. (once per run) duplicate keys over the full table — global PK semantics,
    so duplicates straddling checkpoint batches are caught;
 1. the single stats scan (partial+final hash agg → one tiny row/partition);
-2. the row-rule scan (column exprs + broadcast anti-join + salted-dedup
-   uniqueness + snapshot join with the Arrow equality UDF), written straight
-   to the violations table (no driver round-trip of row data);
+2. the fused row-rule pass (``rules/fused.py``: snapshot join, broadcast
+   referential mark, uniqueness count from job 0's keys or a doc_id window,
+   column exprs, Arrow equality UDF on the candidates) — one plan on every
+   layout, zero Exchange on the doc_id-bucketed one — written straight to
+   the violations table (no driver round-trip of row data);
 3. a tiny aggregate over the *written* violations (distinct violating docs
    per partition);
 4. the verdict/manifest commit (driver-side, O(partitions)).
@@ -37,12 +39,8 @@ from log_anomaly_detector_spark.config import DEFAULT_CONFIG, RuleConfig
 from log_anomaly_detector_spark import storage
 from log_anomaly_detector_spark.rules.column_stats import stats_pass, stats_verdicts
 from log_anomaly_detector_spark.rules.drift import drift_verdicts
-from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
-from log_anomaly_detector_spark.rules.token_equality import token_equality_violations
-from log_anomaly_detector_spark.rules.uniqueness import (
-    duplicate_keys,
-    uniqueness_violations,
-)
+from log_anomaly_detector_spark.rules.fused import fused_row_violations
+from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 VERDICT_SCHEMA = (
     "part_id int, label string, score double, n_rows long, "
@@ -60,29 +58,6 @@ class ValidationResult:
     rule_verdicts: list[dict] = field(default_factory=list)  # per (part, rule)
     metrics: dict = field(default_factory=dict)
     out_dir: str = ""
-
-
-def _row_rule_violations(
-    seqs: DataFrame,
-    snapshot: DataFrame,
-    allowed: DataFrame,
-    cfg: RuleConfig,
-    dups: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """(violations, cache_handle|None). On the co-located layout
-    (uniqueness_mode='direct') ALL row rules fuse into one zero-shuffle pass
-    (rules/fused.py); otherwise the layout-agnostic multi-branch plan.
-    ``dups`` is the run-global duplicate-key set (see run_validation)."""
-    if cfg.uniqueness_mode == "direct":
-        from log_anomaly_detector_spark.rules.fused import fused_row_violations
-
-        return fused_row_violations(seqs, snapshot, allowed, dups)
-    viol = (
-        row_expr_violations(seqs, allowed)  # n_tok consistency + referential, 1 scan
-        .unionByName(uniqueness_violations(seqs, cfg, dups))
-        .unionByName(token_equality_violations(seqs, snapshot, cfg.token_eq_mode))
-    )
-    return viol, None
 
 
 def run_validation(
@@ -147,174 +122,176 @@ def run_validation(
     single_full_batch = (
         len(batches) == 1 and not done and set(batches[0]) == set(all_parts)
     )
-    if batches and not single_full_batch:
-        t_dup = time.time()
-        dups = duplicate_keys(seqs, cfg).persist()
-        n_dup_keys = dups.count()
-        job_secs["dup_keys"] = time.time() - t_dup
+    try:
+        if batches and not single_full_batch:
+            t_dup = time.time()
+            dups = duplicate_keys(seqs, cfg).persist()
+            n_dup_keys = dups.count()
+            job_secs["dup_keys"] = time.time() - t_dup
 
-    for batch in batches:
-        t0 = time.time()
-        # partition pruning: on Iceberg/hive layouts this filter prunes files
-        sub = seqs.filter(F.col("part_id").isin([int(p) for p in batch]))
+        for batch in batches:
+            t0 = time.time()
+            # partition pruning: on Iceberg/hive layouts this filter prunes files
+            sub = seqs.filter(F.col("part_id").isin([int(p) for p in batch]))
 
-        # jobs 1+2 OVERLAPPED (round 7, guide §2.6): the stats scan and the
-        # row-rule violations write are independent passes over the same
-        # input — submitted from two driver threads so the second job's
-        # tasks back-fill the first one's straggler tail instead of waiting
-        # for it (Spark's scheduler runs concurrent jobs FIFO; actions were
-        # only sequential because this loop called them sequentially).
-        # A/B at 2M docs: ~6.4 s → ~5 s batch wall. job_secs still records
-        # each job's own span (they overlap, so their sum exceeds the wall).
-        def _stats_job():
-            t = time.time()
-            rows = [r.asDict() for r in stats_pass(sub, cfg, sources).collect()]
-            job_secs["stats"] += time.time() - t
-            return rows
+            # jobs 1+2 OVERLAPPED (round 7, guide §2.6): the stats scan and the
+            # row-rule violations write are independent passes over the same
+            # input — submitted from two driver threads so the second job's
+            # tasks back-fill the first one's straggler tail instead of waiting
+            # for it (Spark's scheduler runs concurrent jobs FIFO; actions were
+            # only sequential because this loop called them sequentially).
+            # A/B at 2M docs: ~6.4 s → ~5 s batch wall. job_secs still records
+            # each job's own span (they overlap, so their sum exceeds the wall).
+            def _stats_job():
+                t = time.time()
+                rows = [r.asDict() for r in stats_pass(sub, cfg, sources).collect()]
+                job_secs["stats"] += time.time() - t
+                return rows
 
-        def _violations_job():
-            # job 2: row rules → violations table (delete+insert, idempotent)
-            t = time.time()
-            viol, cache_handle = _row_rule_violations(
-                sub, snapshot, allowed, cfg, dups
+            def _violations_job():
+                # job 2: row rules → violations table (delete+insert, idempotent)
+                t = time.time()
+                viol, cache_handle = fused_row_violations(sub, snapshot, allowed, dups)
+                try:
+                    # violations are tiny — coalesce the writers so each partition
+                    # dir gets one file instead of one per upstream task
+                    storage.overwrite_partitions(
+                        viol.repartition("part_id"), viol_path, batch
+                    )
+                finally:
+                    cache_handle.unpersist()
+                job_secs["violations"] += time.time() - t
+
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                f_stats = pool.submit(_stats_job)
+                f_viol = pool.submit(_violations_job)
+                stats_rows = f_stats.result()
+                f_viol.result()
+            stats_by_part = {r["part_id"]: r for r in stats_rows}
+            t2 = time.time()
+
+            # job 3: ONE rollup agg over written violations gives both the
+            # per-(part, rule) doc counts and the per-part "any rule" doc count
+            written = storage.read_table(spark, viol_path)
+            vio_stats = (
+                written.filter(F.col("part_id").isin([int(p) for p in batch]))
+                .rollup("part_id", "rule_id")
+                .agg(
+                    F.countDistinct("doc_id").alias("docs"),
+                    F.count(F.lit(1)).alias("rows"),
+                )
+                .filter(F.col("part_id").isNotNull())
+                .collect()
+                if written is not None
+                else []
             )
-            # violations are tiny — coalesce the writers so each partition
-            # dir gets one file instead of one per upstream task
-            storage.overwrite_partitions(
-                viol.repartition("part_id"), viol_path, batch
-            )
-            if cache_handle is not None:
-                cache_handle.unpersist()
-            job_secs["violations"] += time.time() - t
+            docs_by_part_rule: dict[tuple[int, str], int] = {}
+            any_docs: dict[int, int] = {}
+            null_tokens_rows: dict[int, int] = {}
+            for r in vio_stats:
+                if r["rule_id"] is None:
+                    any_docs[r["part_id"]] = r["docs"]
+                else:
+                    docs_by_part_rule[(r["part_id"], r["rule_id"])] = r["docs"]
+                    if r["rule_id"] == "null_tokens":
+                        null_tokens_rows[r["part_id"]] = r["rows"]
+            job_secs["agg"] += time.time() - t2
 
-        from concurrent.futures import ThreadPoolExecutor
+            # verdict assembly (driver-side, O(partitions))
+            rule_rows = stats_verdicts(stats_rows, cfg, null_tokens_rows)
+            rule_rows += drift_verdicts(stats_rows, baseline, cfg, sources)
+            dp = cfg.score_round_dp
+            for pid in batch:
+                n = stats_by_part[pid]["n_rows"] if pid in stats_by_part else 0
+                for rid in cfg.row_rules:
+                    docs = docs_by_part_rule.get((pid, rid), 0)
+                    ratio = round(docs / n, dp) if n else 0.0
+                    rule_rows.append(
+                        {
+                            "part_id": pid,
+                            "rule_id": rid,
+                            "passed": docs == 0,
+                            "observed_stat": ratio,
+                            "threshold": 0.0,
+                        }
+                    )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_stats = pool.submit(_stats_job)
-            f_viol = pool.submit(_violations_job)
-            stats_rows = f_stats.result()
-            f_viol.result()
-        stats_by_part = {r["part_id"]: r for r in stats_rows}
-        t2 = time.time()
-
-        # job 3: ONE rollup agg over written violations gives both the
-        # per-(part, rule) doc counts and the per-part "any rule" doc count
-        written = storage.read_table(spark, viol_path)
-        vio_stats = (
-            written.filter(F.col("part_id").isin([int(p) for p in batch]))
-            .rollup("part_id", "rule_id")
-            .agg(
-                F.countDistinct("doc_id").alias("docs"),
-                F.count(F.lit(1)).alias("rows"),
-            )
-            .filter(F.col("part_id").isNotNull())
-            .collect()
-            if written is not None
-            else []
-        )
-        docs_by_part_rule: dict[tuple[int, str], int] = {}
-        any_docs: dict[int, int] = {}
-        null_tokens_rows: dict[int, int] = {}
-        for r in vio_stats:
-            if r["rule_id"] is None:
-                any_docs[r["part_id"]] = r["docs"]
-            else:
-                docs_by_part_rule[(r["part_id"], r["rule_id"])] = r["docs"]
-                if r["rule_id"] == "null_tokens":
-                    null_tokens_rows[r["part_id"]] = r["rows"]
-        job_secs["agg"] += time.time() - t2
-
-        # verdict assembly (driver-side, O(partitions))
-        rule_rows = stats_verdicts(stats_rows, cfg, null_tokens_rows)
-        rule_rows += drift_verdicts(stats_rows, baseline, cfg, sources)
-        dp = cfg.score_round_dp
-        for pid in batch:
-            n = stats_by_part[pid]["n_rows"] if pid in stats_by_part else 0
-            for rid in cfg.row_rules:
-                docs = docs_by_part_rule.get((pid, rid), 0)
-                ratio = round(docs / n, dp) if n else 0.0
-                rule_rows.append(
+            batch_rule_rows = [r for r in rule_rows if r["part_id"] in set(batch)]
+            wall = time.time() - t0
+            batch_rows = sum(stats_by_part[p]["n_rows"] for p in batch if p in stats_by_part)
+            total_rows += batch_rows
+            manifest_records = []
+            for pid in batch:
+                n = stats_by_part[pid]["n_rows"] if pid in stats_by_part else 0
+                vdocs = any_docs.get(pid, 0)
+                score = round(vdocs / n, dp) if n else 0.0
+                failed = sorted(
+                    r["rule_id"]
+                    for r in batch_rule_rows
+                    if r["part_id"] == pid
+                    and not r["passed"]
+                    and r["rule_id"] in cfg.partition_rules
+                )
+                label = (
+                    "Anomaly" if (score >= cfg.seq_threshold or failed) else "Normal"
+                )
+                result.verdicts.append(
                     {
                         "part_id": pid,
-                        "rule_id": rid,
-                        "passed": docs == 0,
-                        "observed_stat": ratio,
-                        "threshold": 0.0,
+                        "label": label,
+                        "score": score,
+                        "n_rows": n,
+                        "violating_docs": vdocs,
+                        "failed_rules": failed,
                     }
                 )
-
-        batch_rule_rows = [r for r in rule_rows if r["part_id"] in set(batch)]
-        wall = time.time() - t0
-        batch_rows = sum(stats_by_part[p]["n_rows"] for p in batch if p in stats_by_part)
-        total_rows += batch_rows
-        manifest_records = []
-        for pid in batch:
-            n = stats_by_part[pid]["n_rows"] if pid in stats_by_part else 0
-            vdocs = any_docs.get(pid, 0)
-            score = round(vdocs / n, dp) if n else 0.0
-            failed = sorted(
-                r["rule_id"]
-                for r in batch_rule_rows
-                if r["part_id"] == pid
-                and not r["passed"]
-                and r["rule_id"] in cfg.partition_rules
-            )
-            label = (
-                "Anomaly" if (score >= cfg.seq_threshold or failed) else "Normal"
-            )
-            result.verdicts.append(
-                {
-                    "part_id": pid,
-                    "label": label,
-                    "score": score,
-                    "n_rows": n,
-                    "violating_docs": vdocs,
-                    "failed_rules": failed,
-                }
-            )
-            stats_digest = hashlib.sha256(
-                json.dumps(
-                    {k: str(v) for k, v in sorted(stats_by_part.get(pid, {}).items())},
-                    sort_keys=True,
-                ).encode()
-            ).hexdigest()[:16]
-            manifest_records.append(
-                {
-                    "part_id": pid,
-                    "status": "done",
-                    "label": label,
-                    "score": score,
-                    "n_rows": n,
-                    "input_digest": input_digest,
-                    "rule_versions": RULE_VERSIONS,
-                    "stats_digest": stats_digest,
-                    "batch_wall_sec": round(wall, 3),
-                    "batch_rows_per_sec": round(batch_rows / wall, 1) if wall else None,
-                }
-            )
-        result.rule_verdicts.extend(batch_rule_rows)
-
-        # persist verdicts (partitioned, idempotent like violations)
-        verd_df = spark.createDataFrame(
-            [
-                (
-                    v["part_id"],
-                    v["label"],
-                    v["score"],
-                    v["n_rows"],
-                    v["violating_docs"],
-                    v["failed_rules"],
+                stats_digest = hashlib.sha256(
+                    json.dumps(
+                        {k: str(v) for k, v in sorted(stats_by_part.get(pid, {}).items())},
+                        sort_keys=True,
+                    ).encode()
+                ).hexdigest()[:16]
+                manifest_records.append(
+                    {
+                        "part_id": pid,
+                        "status": "done",
+                        "label": label,
+                        "score": score,
+                        "n_rows": n,
+                        "input_digest": input_digest,
+                        "rule_versions": RULE_VERSIONS,
+                        "stats_digest": stats_digest,
+                        "batch_wall_sec": round(wall, 3),
+                        "batch_rows_per_sec": round(batch_rows / wall, 1) if wall else None,
+                    }
                 )
-                for v in result.verdicts
-                if v["part_id"] in set(batch)
-            ],
-            VERDICT_SCHEMA,
-        )
-        storage.overwrite_partitions(verd_df, verd_path, batch)
-        storage.append_manifest(out_dir, manifest_records)
+            result.rule_verdicts.extend(batch_rule_rows)
 
-    if dups is not None:
-        dups.unpersist()
+            # persist verdicts (partitioned, idempotent like violations)
+            verd_df = spark.createDataFrame(
+                [
+                    (
+                        v["part_id"],
+                        v["label"],
+                        v["score"],
+                        v["n_rows"],
+                        v["violating_docs"],
+                        v["failed_rules"],
+                    )
+                    for v in result.verdicts
+                    if v["part_id"] in set(batch)
+                ],
+                VERDICT_SCHEMA,
+            )
+            storage.overwrite_partitions(verd_df, verd_path, batch)
+            storage.append_manifest(out_dir, manifest_records)
+    finally:
+        # release on failure too: a failed write must not leave the
+        # duplicate-key set pinned in a long-lived session
+        if dups is not None:
+            dups.unpersist()
     wall_all = time.time() - t_all
     result.metrics = {
         "partitions_total": len(all_parts),

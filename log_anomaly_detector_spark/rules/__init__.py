@@ -6,21 +6,20 @@ Scopes (SURVEY.md §2.9):
   column stats (null rate, n_tok min/max/mean, approx distinct) and the
   drift pack (PSI, KS, chi-square vs a pinned baseline profile).
 * **row scope** — violation rows (part_id, doc_id, rule_id, observed,
-  expected): uniqueness, referential integrity, n_tok consistency,
-  token-array equality vs the reference snapshot.
+  expected): uniqueness, referential integrity, n_tok consistency, NULL
+  tokens, token-array equality vs the reference snapshot.
 
 The engine evaluates all partition-scope stats in ONE scan
-(`plans.stats_pass`), all broadcast-side row rules in ONE scan, plus the two
-rules that genuinely shuffle (uniqueness on doc_id; the snapshot join).
+(`column_stats.stats_pass`) and all row-scope rules in ONE fused pass
+(`fused.fused_row_violations`) — the same plan on every layout; only the
+snapshot join and the uniqueness count shuffle, and neither does on the
+doc_id-bucketed layout.
 """
 
 from log_anomaly_detector_spark.rules.column_stats import stats_pass  # noqa: F401
+from log_anomaly_detector_spark.rules.fused import fused_row_violations  # noqa: F401
 from log_anomaly_detector_spark.rules.row_invariants import (  # noqa: F401
     ntok_consistency_violations,
     referential_violations,
-)
-from log_anomaly_detector_spark.rules.uniqueness import uniqueness_violations  # noqa: F401
-from log_anomaly_detector_spark.rules.token_equality import (  # noqa: F401
-    token_equality_violations,
 )
 from log_anomaly_detector_spark.rules.drift import drift_verdicts  # noqa: F401

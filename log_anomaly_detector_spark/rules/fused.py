@@ -1,22 +1,23 @@
-"""Fused single-pass row rules for the co-located (doc_id-bucketed) layout.
+"""The engine's row-rule plan: every row-scope rule in one fused pass.
 
-When sequences AND snapshot are bucketed+sorted by doc_id, the entire
-row-scope rule pack evaluates in ONE pass with ZERO shuffle:
+One projection over ``seqs`` ⟕ snapshot ⟕ allowed-sources evaluates the
+whole row-scope rule pack:
 
-* the snapshot join is a storage-co-located sort-merge (no Exchange);
-* the join output stays partitioned+sorted on doc_id, so the uniqueness
-  count is a `Window.partitionBy(doc_id)` with no Exchange and no extra sort;
+* the snapshot join is a sort-merge on doc_id — storage-co-located (no
+  Exchange) when sequences AND snapshot are bucketed+sorted by doc_id, one
+  doc_id shuffle of each side otherwise;
+* the uniqueness count is either a join against the run-global duplicate-key
+  set (``dups``) or a `Window.partitionBy(doc_id)`; both reuse the snapshot
+  join's doc_id partitioning (no extra Exchange on the row side);
 * n_tok consistency, referential (broadcast), NULL tokens, and the
   token-equality *candidate* flag are column expressions in the same
   projection, exploded into violation rows;
-* only the (tiny) token-equality candidate set is persisted and sent through
-  the Arrow first-mismatch UDF — the cache keeps the single big scan single.
+* the exploded rows (≈ violations only) are persisted, and only the
+  token-equality candidates are sent through the Arrow first-mismatch UDF —
+  the cache keeps the single big scan single.
 
-On a non-co-located layout this plan would shuffle full rows twice (window +
-join), so the engine only selects it when `uniqueness_mode == "direct"`;
-the layout-agnostic multi-branch path (row_invariants + uniqueness +
-token_equality modules) remains the fallback. Both paths are asserted
-equivalent in tests.
+On the doc_id-bucketed layout the whole plan has zero shuffle Exchanges
+(pinned in tests).
 """
 
 from __future__ import annotations
@@ -42,8 +43,9 @@ def fused_row_violations(
     ``dups`` (doc_id, dup_cnt), when given, is the duplicate-key set computed
     over the FULL table (engine job 0) so duplicates spanning checkpoint
     batches are caught; on the doc_id-bucketed layout that join is co-located
-    (no Exchange) just like the snapshot join. Without ``dups`` the count
-    falls back to a window over ``seqs`` itself (standalone single-batch use).
+    (no Exchange) just like the snapshot join. Without ``dups`` the count is
+    a window over ``seqs`` itself — table-global when ``seqs`` is the whole
+    table (the engine's single full batch).
     """
     joined = seqs.join(
         snapshot.select("doc_id", "ref_tokens"), "doc_id", "left"

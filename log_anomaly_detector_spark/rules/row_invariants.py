@@ -1,4 +1,6 @@
-"""Row-scope invariants: n_tok consistency (R6) + referential integrity (R5).
+"""Row-scope invariants: n_tok consistency (R6) + referential integrity (R5)
+as standalone per-rule frames (the streaming gate's shape; the batch engine
+evaluates the same predicates inside ``rules/fused.py``).
 
 Both are shuffle-free: the consistency check is a pure column expression, the
 referential check is a broadcast anti-join against the (tiny) allowed-sources
@@ -10,9 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-VIOLATION_COLS = ["part_id", "doc_id", "rule_id", "observed", "expected"]
-
 
 def ntok_consistency_violations(df: DataFrame) -> DataFrame:
     """Rows where the declared length disagrees with the array (reference:
@@ -28,58 +27,6 @@ def ntok_consistency_violations(df: DataFrame) -> DataFrame:
                 "expected"
             ),
         )
-    )
-
-
-def row_expr_violations(df: DataFrame, allowed: DataFrame) -> DataFrame:
-    """BOTH shuffle-free row rules in ONE scan: a broadcast left join marks
-    dimension membership, then an array-of-optional-structs is exploded into
-    violation rows. At 10^12 rows this halves the scan cost vs evaluating the
-    rules separately; output and semantics are identical to the individual
-    functions (asserted in tests)."""
-    marked = df.join(
-        F.broadcast(allowed.select("source", F.lit(True).alias("_in_dim"))),
-        "source",
-        "left",
-    )
-    ntok_v = F.when(
-        ~(F.col("n_tok") == F.size("tokens")),
-        F.struct(
-            F.lit("n_tok_consistency").alias("rule_id"),
-            F.concat(F.lit("n_tok="), F.col("n_tok").cast("string")).alias("observed"),
-            F.concat(F.lit("size(tokens)="), F.size("tokens").cast("string")).alias(
-                "expected"
-            ),
-        ),
-    )
-    # NULL tokens detected HERE (this scan reads the fat column anyway) so the
-    # stats scan never has to touch it — its null count feeds the null_rate
-    # verdict via the violations aggregate instead.
-    null_tok_v = F.when(
-        F.col("tokens").isNull(),
-        F.struct(
-            F.lit("null_tokens").alias("rule_id"),
-            F.lit("tokens=NULL").alias("observed"),
-            F.lit("non-null tokens").alias("expected"),
-        ),
-    )
-    ref_v = F.when(
-        F.col("source").isNotNull() & F.col("_in_dim").isNull(),
-        F.struct(
-            F.lit("referential").alias("rule_id"),
-            F.col("source").alias("observed"),
-            F.lit("member of allowed_sources").alias("expected"),
-        ),
-    )
-    return (
-        marked.select(
-            "part_id",
-            "doc_id",
-            F.explode(
-                F.filter(F.array(ntok_v, ref_v, null_tok_v), lambda v: v.isNotNull())
-            ).alias("v"),
-        )
-        .select("part_id", "doc_id", "v.rule_id", "v.observed", "v.expected")
     )
 
 

@@ -1,22 +1,19 @@
-"""Token-array equality vs the reference snapshot (R7) — vectorized.
+"""Token-array equality vs the reference snapshot (R7) — the vectorized
+first-mismatch kernel.
 
 Reference analogue: the per-masked-slot top-k membership check of the true
 token (``bert_pytorch/predict_log.py:95-108``); our model-free analogue per
 ``BASELINE.json input_hint`` is exact array equality, reporting the first
 mismatching position as (observed, expected).
 
-The comparison is a scalar **pandas UDF over Arrow batches with zero
-per-row Python**: list columns are flattened to their value/offset buffers
-and the first mismatch per row is found with pure NumPy gather/segment ops.
-(A pure-SQL formulation exists — ``array_position(zip_with(a, b, (x,y) ->
-x <=> y), false)`` — and is kept in tests as a cross-check; the UDF is the
-scale path mandated by the north star and avoids building a boolean array
-per row.)
-
-The snapshot join itself is a big×big equi-join on ``doc_id``: at cluster
-scale both tables should be written bucketed/partitioned by ``doc_id`` so the
-join is storage-co-located; locally Catalyst plans a sort-merge join and AQE
-handles stragglers.
+The fused row pass (``rules/fused.py``) decides equality JVM-side
+(``NOT tokens <=> ref_tokens``) in codegen and sends only the candidate rows
+through ``first_mismatch``: a scalar **pandas UDF over Arrow batches with
+zero per-row Python** — list columns are flattened to their value/offset
+buffers and the first mismatch per row is found with pure NumPy
+gather/segment ops. (A pure-SQL formulation exists —
+``array_position(zip_with(a, b, (x,y) -> x <=> y), false)`` — and is kept in
+tests as a cross-check.)
 """
 
 from __future__ import annotations
@@ -24,8 +21,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -99,62 +94,3 @@ def first_mismatch(a: pd.Series, b: pd.Series) -> pd.DataFrame:
         out_idx[vm], out_obs[vm], out_exp[vm] = idx, obs, exp
     return pd.DataFrame({"idx": out_idx, "obs": out_obs, "exp": out_exp})
 
-
-def token_equality_violations(
-    df: DataFrame, snapshot: DataFrame, mode: str = "hash"
-) -> DataFrame:
-    """Join sequences to the snapshot on doc_id and emit one violation row per
-    matched row whose token array differs (first mismatch index + values).
-
-    Unmatched rows are skipped, mirroring the reference's treatment of
-    unmapped events (``api/detect_anomaly_sequence.py:84-85``).
-
-    Modes (all agree — asserted in tests):
-
-    * ``"hash"`` (default, the 10^12-row shape): the equality decision joins
-      16-byte ``xxhash64(tokens)`` signatures instead of shuffling the token
-      arrays themselves — the doc_id shuffle moves ~24 B/row rather than the
-      full payload. The (normally vanishing) mismatch set is then joined back
-      to both tables (AQE broadcasts it) and the Arrow UDF locates the first
-      differing slot. Signature collisions masking a real mismatch have
-      probability ~2^-64 per row.
-    * ``"prefilter"``: arrays shuffle, equality decided JVM-side
-      (``NOT tokens <=> ref_tokens``) in codegen, UDF on mismatches only.
-    * ``"arrow"``: every joined row goes through the vectorized UDF.
-    """
-    detail_cols = [
-        "part_id",
-        "doc_id",
-        F.lit("token_equality").alias("rule_id"),
-        F.concat(
-            F.lit("tokens["),
-            F.col("m.idx").cast("string"),
-            F.lit("]="),
-            F.col("m.obs").cast("string"),
-        ).alias("observed"),
-        F.concat(F.lit("ref="), F.col("m.exp").cast("string")).alias("expected"),
-    ]
-    if mode == "hash":
-        sig_a = df.select("doc_id", F.xxhash64("tokens").alias("_ha"))
-        sig_b = snapshot.select("doc_id", F.xxhash64("ref_tokens").alias("_hb"))
-        cand = (
-            sig_a.join(sig_b, "doc_id", "inner")
-            .filter(F.col("_ha") != F.col("_hb"))
-            .select("doc_id")
-        )
-        joined = (
-            df.select("part_id", "doc_id", "tokens")
-            .join(cand, "doc_id", "inner")  # tiny build side → AQE broadcast
-            .join(snapshot.select("doc_id", "ref_tokens"), "doc_id", "inner")
-        )
-    else:
-        joined = df.select("part_id", "doc_id", "tokens").join(
-            snapshot.select("doc_id", "ref_tokens"), "doc_id", "inner"
-        )
-        if mode == "prefilter":
-            joined = joined.filter(~F.col("tokens").eqNullSafe(F.col("ref_tokens")))
-    return (
-        joined.withColumn("m", first_mismatch(F.col("tokens"), F.col("ref_tokens")))
-        .filter(F.col("m.idx") >= 0)
-        .select(*detail_cols)
-    )

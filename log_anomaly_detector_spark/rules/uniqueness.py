@@ -14,9 +14,10 @@ reducer, so the check is two-phase:
 2. **final count** — ``groupBy(doc_id)`` over the already-collapsed partials
    (≤ buckets rows per key), then ``filter(cnt > 1)``.
 
-The offending rows are then retrieved with a join against the (normally tiny)
-duplicate-key set; AQE picks a broadcast build side when it is small and a
-skew-split shuffle join when it is not.
+The engine computes this key set once per run over the FULL table, and the
+fused row pass (``rules/fused.py``) joins it back to flag every offending
+row; AQE picks a broadcast build side when it is small and a skew-split
+shuffle join when it is not.
 """
 
 from __future__ import annotations
@@ -53,26 +54,3 @@ def duplicate_keys(df: DataFrame, cfg: RuleConfig) -> DataFrame:
         .filter(F.col("dup_cnt") > 1)
     )
 
-
-def uniqueness_violations(
-    df: DataFrame, cfg: RuleConfig, dups: DataFrame | None = None
-) -> DataFrame:
-    """Violation rows: every physical row of ``df`` whose doc_id is
-    duplicated. ``dups`` may be precomputed over the FULL table (the engine
-    does, once per run) so duplicates straddling checkpoint batches — or a
-    done partition vs a resumed one — are still caught; the reference treats
-    block_id as a global PRIMARY KEY (init_schema.sql:12), not a per-batch
-    one. Without ``dups`` the scope is just ``df`` (standalone use)."""
-    if dups is None:
-        dups = duplicate_keys(df, cfg)
-    return (
-        df.select("part_id", "doc_id")
-        .join(dups, "doc_id", "inner")
-        .select(
-            "part_id",
-            "doc_id",
-            F.lit("uniqueness").alias("rule_id"),
-            F.concat(F.lit("count="), F.col("dup_cnt").cast("string")).alias("observed"),
-            F.lit("count=1").alias("expected"),
-        )
-    )

@@ -7,6 +7,7 @@ DELETE then batch INSERT, ``database/upsert_log_line.py:27-52``).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -136,6 +137,26 @@ def append_manifest(out_dir: str, records: list[dict]) -> None:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())
+
+
+def input_fingerprint(root: str, names: list[str]) -> str:
+    """Resume key for the input tables at ``root``/``names``: a hash of every
+    file's relative path, size and mtime_ns — storage metadata only, no data
+    scan. Rewriting any input file in place changes it, so the next run
+    re-validates instead of resuming stale verdicts; moving the whole dir
+    does not. Missing names contribute nothing."""
+    h = hashlib.sha256()
+    for name in sorted(names):
+        top = os.path.join(root, name)
+        files = [top] if os.path.isfile(top) else []
+        for dirpath, _, fnames in os.walk(top):
+            files += [os.path.join(dirpath, f) for f in fnames]
+        for p in sorted(files):
+            st = os.stat(p)
+            h.update(
+                f"{os.path.relpath(p, root)}\0{st.st_size}\0{st.st_mtime_ns}\n".encode()
+            )
+    return h.hexdigest()[:16]
 
 
 def completed_partitions(out_dir: str, input_digest: str, rule_versions: dict) -> set[int]:

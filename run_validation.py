@@ -105,32 +105,39 @@ def main() -> int:
     part_ids = None
     if args.data_dir:
         d = args.data_dir
+        bucketed = os.path.isdir(os.path.join(d, "sequences_bucketed"))
+        seq_name, snap_name = (
+            ("sequences_bucketed", "snapshot_bucketed")
+            if bucketed
+            else ("sequences", "snapshot")
+        )
         # partition identity from storage metadata (hive dir listing) — no
         # data-scan job just to plan the run
-        part_ids = storage.list_partitions(
-            os.path.join(d, "sequences_bucketed")
-        ) or storage.list_partitions(os.path.join(d, "sequences"))
-        if os.path.isdir(os.path.join(d, "sequences_bucketed")):
+        part_ids = storage.list_partitions(os.path.join(d, seq_name))
+        if bucketed:
             seqs = storage.register_bucketed(
-                spark, "sequences", storage.SEQ_DDL,
-                os.path.join(d, "sequences_bucketed"),
+                spark, "sequences", storage.SEQ_DDL, os.path.join(d, seq_name),
                 n_buckets=args.n_buckets, partition_col="part_id",
             )
             snap = storage.register_bucketed(
-                spark, "snapshot", storage.SNAP_DDL,
-                os.path.join(d, "snapshot_bucketed"), n_buckets=args.n_buckets,
+                spark, "snapshot", storage.SNAP_DDL, os.path.join(d, snap_name),
+                n_buckets=args.n_buckets,
             )
-            # co-partitioned input → the zero-shuffle uniqueness variant
+            # co-partitioned input → the zero-shuffle duplicate-key count
             cfg = RuleConfig(
                 seq_threshold=cfg.seq_threshold, uniqueness_mode="direct"
             )
         else:  # plain parquet layout
-            seqs = spark.read.parquet(os.path.join(d, "sequences"))
-            snap = spark.read.parquet(os.path.join(d, "snapshot"))
+            seqs = spark.read.parquet(os.path.join(d, seq_name))
+            snap = spark.read.parquet(os.path.join(d, snap_name))
         allowed = spark.read.parquet(os.path.join(d, "allowed_sources.parquet"))
         with open(os.path.join(d, "baseline.json")) as f:
             baseline = json.load(f)
-        input_digest = f"dir:{d}:{json.load(open(os.path.join(d, 'spec.json')))}"
+        # keyed on the input files' metadata, not the dir path: an in-place
+        # rewrite re-validates instead of resuming stale verdicts
+        input_digest = "files:" + storage.input_fingerprint(
+            d, [seq_name, snap_name, "allowed_sources.parquet", "baseline.json"]
+        )
     else:
         seqs = gen_sequences(spark, spec)
         snap = gen_reference_snapshot(spark, spec)

@@ -28,6 +28,7 @@ from log_anomaly_detector_spark.datagen import (
     gen_sequences,
 )
 from log_anomaly_detector_spark.engine import run_validation
+from log_anomaly_detector_spark.golden import golden_row_violations
 from log_anomaly_detector_spark.rules.column_stats import stats_verdicts
 
 SPEC = GenSpec(n_docs=2_000, n_parts=4, seed=11)
@@ -54,7 +55,9 @@ def world(spark):
 @pytest.mark.parametrize("mode", ["salted", "direct"])
 def test_cross_batch_duplicate_detected(spark, world, tmp_path, mode):
     """batch_parts=1 → the two copies are validated in DIFFERENT batches;
-    both must still be flagged by the uniqueness rule."""
+    both must still be flagged by the uniqueness rule, and the whole
+    violation set (the fused pass's duplicate-key-join branch) must equal the
+    golden implementation's."""
     seqs, snap, allowed, baseline, victim_id = world
     out = str(tmp_path / f"out_{mode}")
     cfg = RuleConfig(uniqueness_mode=mode)
@@ -70,6 +73,36 @@ def test_cross_batch_duplicate_detected(spark, world, tmp_path, mode):
     }
     assert (0, "uniqueness") in hits, "original copy (batch 0) not flagged"
     assert (SPEC.n_parts - 1, "uniqueness") in hits, "planted copy not flagged"
+
+    gold = golden_row_violations(
+        seqs.toPandas(), snap.toPandas(), {r["source"] for r in allowed.collect()}
+    )
+    eng = {tuple(r) for r in viol.select("part_id", "doc_id", "rule_id").collect()}
+    assert eng == set(map(tuple, gold.values))
+
+
+def test_failed_write_releases_caches(spark, world, tmp_path, monkeypatch):
+    """A violations write that dies mid-batch must not leave the fused pass's
+    cache or the run-global duplicate-key set pinned in the session."""
+    seqs, snap, allowed, baseline, _ = world
+    seqs.count(), snap.count()  # the fixture's own caches are not the run's
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    def failing_write(df, path, part_ids):
+        df.count()  # the fused cache is materialized before the failure
+        raise OSError("disk full")
+
+    before = persisted()
+    monkeypatch.setattr(storage, "overwrite_partitions", failing_write)
+    with pytest.raises(OSError, match="disk full"):
+        run_validation(
+            spark, seqs, snap, allowed, baseline, str(tmp_path / "out"), CFG,
+            input_digest="x", batch_parts=1,
+        )
+    assert persisted() == before
 
 
 def test_cross_batch_duplicate_detected_on_resume(spark, world, tmp_path):

@@ -6,18 +6,39 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
+from log_anomaly_detector_spark.config import RuleConfig
 from log_anomaly_detector_spark.rules.drift import chi2_norm, ks_d, psi
+from log_anomaly_detector_spark.rules.fused import fused_row_violations
 from log_anomaly_detector_spark.rules.row_invariants import (
     ntok_consistency_violations,
     referential_violations,
 )
-from log_anomaly_detector_spark.rules.token_equality import (
-    first_mismatch,
-    token_equality_violations,
-)
-from log_anomaly_detector_spark.rules.uniqueness import uniqueness_violations
+from log_anomaly_detector_spark.rules.token_equality import first_mismatch
+from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
+SNAP_SCHEMA = "doc_id string, ref_tokens array<int>"
+DIM_SCHEMA = "source string, description string"
+
+# the two ways the fused pass counts uniqueness: a doc_id window over its own
+# input (single full batch) or a join against run-global duplicate keys
+DUPS_VARIANTS = ("window", "dups")
+
+
+def _row_rules(spark, df, snap=None, sources=("s",), dups=None):
+    """Collect the fused row pass over ``df`` (empty snapshot and allowed
+    source "s" by default)."""
+    snap = snap if snap is not None else spark.createDataFrame([], SNAP_SCHEMA)
+    dim = spark.createDataFrame([(s, "d") for s in sources], DIM_SCHEMA)
+    viol, handle = fused_row_violations(df, snap, dim, dups)
+    try:
+        return viol.collect()
+    finally:
+        handle.unpersist()
+
+
+def _dups(df, variant):
+    return None if variant == "window" else duplicate_keys(df, CFG)
 
 
 def test_ntok_consistency(spark):
@@ -45,9 +66,14 @@ def test_uniqueness(spark):
         [("a", [1], 1, "s", 0), ("a", [1], 1, "s", 1), ("b", [1], 1, "s", 0)],
         SEQ_SCHEMA,
     )
-    got = uniqueness_violations(df, CFG).collect()
-    assert sorted((r["doc_id"], r["part_id"]) for r in got) == [("a", 0), ("a", 1)]
-    assert all(r["observed"] == "count=2" for r in got)
+    for variant in DUPS_VARIANTS:
+        got = _row_rules(spark, df, dups=_dups(df, variant))
+        assert sorted((r["doc_id"], r["part_id"]) for r in got) == [("a", 0), ("a", 1)]
+        assert all(
+            (r["rule_id"], r["observed"], r["expected"])
+            == ("uniqueness", "count=2", "count=1")
+            for r in got
+        ), variant
 
 
 def test_token_equality_udf_vs_sql(spark):
@@ -70,12 +96,11 @@ def test_token_equality_udf_vs_sql(spark):
         ("not_in_seqs", [7]),
     ]
     df = spark.createDataFrame(rows, SEQ_SCHEMA)
-    snap = spark.createDataFrame(snap_rows, "doc_id string, ref_tokens array<int>")
+    snap = spark.createDataFrame(snap_rows, SNAP_SCHEMA)
 
-    got = {
-        r["doc_id"]: (r["observed"], r["expected"])
-        for r in token_equality_violations(df, snap).collect()
-    }
+    viol = _row_rules(spark, df, snap)
+    assert {r["rule_id"] for r in viol} == {"token_equality"}
+    got = {r["doc_id"]: (r["observed"], r["expected"]) for r in viol}
     assert set(got) == {"val_mismatch", "a_longer", "b_longer", "first_tok", "empty_vs"}
     assert got["val_mismatch"] == ("tokens[1]=9", "ref=2")
     assert got["first_tok"] == ("tokens[0]=9", "ref=1")
@@ -98,62 +123,25 @@ def test_token_equality_udf_vs_sql(spark):
         assert r["sql_neq"] == r["udf_neq"], r
 
 
-def test_row_expr_combined_pass_equivalent(spark):
-    """The single-scan combined pass must equal the two individual rules."""
-    from log_anomaly_detector_spark.datagen import (
-        GenSpec,
-        gen_allowed_sources,
-        gen_sequences,
-    )
-    from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
-
-    spec = GenSpec(n_docs=3_000, n_parts=4, seed=11)
-    seqs = gen_sequences(spark, spec)
-    allowed = gen_allowed_sources(spark)
-    combined = {
-        tuple(r) for r in row_expr_violations(seqs, allowed).collect()
-    }
-    separate = {
-        tuple(r)
-        for r in ntok_consistency_violations(seqs)
-        .unionByName(referential_violations(seqs, allowed))
-        .collect()
-    }
-    assert combined == separate and combined
-
-
-def test_token_equality_prefilter_equivalent(spark):
-    """JVM-prefiltered mode must equal the all-rows-through-Arrow mode."""
-    from log_anomaly_detector_spark.datagen import (
-        GenSpec,
-        gen_reference_snapshot,
-        gen_sequences,
-    )
-
-    spec = GenSpec(n_docs=3_000, n_parts=4, seed=11)
-    seqs = gen_sequences(spark, spec)
-    snap = gen_reference_snapshot(spark, spec)
-    hashm = {tuple(r) for r in token_equality_violations(seqs, snap, "hash").collect()}
-    pre = {tuple(r) for r in token_equality_violations(seqs, snap, "prefilter").collect()}
-    arrow = {tuple(r) for r in token_equality_violations(seqs, snap, "arrow").collect()}
-    assert hashm == pre == arrow and hashm
-
-
 def test_null_tokens_row_rule_and_stats_pruning(spark):
     """NULL tokens are flagged by the row-rule scan, and the stats scan never
     reads the fat tokens column (its ReadSchema must exclude it)."""
     import tempfile
 
     from log_anomaly_detector_spark.rules.column_stats import stats_pass
-    from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
     from log_anomaly_detector_spark.plans import formatted_plan
 
     df = spark.createDataFrame(
         [("a", None, 1, "ok", 0), ("b", [1], 1, "ok", 0)], SEQ_SCHEMA
     )
-    dim = spark.createDataFrame([("ok", "d")], "source string, description string")
-    got = {(r["doc_id"], r["rule_id"]) for r in row_expr_violations(df, dim).collect()}
-    assert got == {("a", "null_tokens")}
+    snap = spark.createDataFrame([("a", [1]), ("b", [1])], SNAP_SCHEMA)
+    got = {
+        (r["doc_id"], r["rule_id"], r["observed"], r["expected"])
+        for r in _row_rules(spark, df, snap, sources=("ok",))
+    }
+    # NULL tokens vs a non-NULL snapshot row is a null_tokens violation, not
+    # also a token_equality one (the mismatch kernel skips NULL arrays)
+    assert got == {("a", "null_tokens", "tokens=NULL", "non-null tokens")}
 
     # pruning must survive a real parquet scan
     d = tempfile.mkdtemp()
@@ -187,15 +175,15 @@ def test_uniqueness_ignores_null_doc_ids(spark):
         [(None, [1], 1, "s", 0), (None, [2], 1, "s", 0), ("a", [1], 1, "s", 0)],
         SEQ_SCHEMA,
     )
-    assert uniqueness_violations(df, CFG).count() == 0
+    for variant in DUPS_VARIANTS:
+        assert _row_rules(spark, df, dups=_dups(df, variant)) == [], variant
 
 
 def test_uniqueness_pathological_skew(spark):
-    """One doc_id duplicated 200k times must not break the salted two-phase
-    check — the partial agg collapses copies before the key-shuffle, so no
-    single reducer sees the raw duplicates."""
-    from pyspark.sql import functions as F
-
+    """One doc_id duplicated 200k times must not break the uniqueness count
+    in either variant: the salted two-phase duplicate-key job collapses
+    copies before the key-shuffle, and the window variant streams the hot
+    key's rows through one spillable window partition."""
     hot = spark.range(200_000).select(
         F.lit("blk_hot").alias("doc_id"),
         F.array(F.lit(1)).alias("tokens"),
@@ -211,19 +199,32 @@ def test_uniqueness_pathological_skew(spark):
         F.lit(0).cast("int").alias("part_id"),
     )
     df = hot.unionByName(cold)
-    viol = uniqueness_violations(df, CFG)
-    assert viol.count() == 200_000
-    assert viol.select("doc_id").distinct().count() == 1
-    one = viol.first()
-    assert one["observed"] == "count=200000"
+    snap = spark.createDataFrame([], SNAP_SCHEMA)
+    dim = spark.createDataFrame([("s", "d")], DIM_SCHEMA)
+    for variant in DUPS_VARIANTS:
+        viol, handle = fused_row_violations(df, snap, dim, _dups(df, variant))
+        try:
+            got = (
+                viol.groupBy("rule_id", "doc_id", "observed")
+                .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("part_id"))
+                .collect()
+            )
+        finally:
+            handle.unpersist()
+        assert [tuple(r) for r in got] == [
+            ("uniqueness", "blk_hot", "count=200000", 200_000, 4)
+        ], variant
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """The engine's key layout claim: doc_id-bucketed tables join with ZERO
-    Exchange (regression guard for the storage-co-located join)."""
+    """The engine's key layout claim: on doc_id-bucketed tables the fused row
+    pass — snapshot join, uniqueness count and the duplicate-key job — has
+    ZERO shuffle Exchanges in every uniqueness variant, while the same plan
+    over the plain parquet copy does shuffle (so the count is not vacuous)."""
     from log_anomaly_detector_spark import storage
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
+        gen_allowed_sources,
         gen_reference_snapshot,
         gen_sequences,
     )
@@ -245,54 +246,38 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     snap = storage.register_bucketed(
         spark, "t_snapb_r", storage.SNAP_DDL, str(tmp_path / "snapb"), n_buckets=4
     )
+    allowed = gen_allowed_sources(spark)
+    plain_seqs = spark.read.parquet(str(tmp_path / "seqb"))
+    plain_snap = spark.read.parquet(str(tmp_path / "snapb"))
+
+    def fused_facts(s, sn, variant):
+        dups = (
+            None if variant == "window"
+            else duplicate_keys(s, RuleConfig(uniqueness_mode=variant))
+        )
+        viol, handle = fused_row_violations(s, sn, allowed, dups)
+        try:
+            facts = plan_facts(handle)
+            assert facts["sort_merge_join"], "snapshot join must not broadcast here"
+            return facts["shuffle_exchanges"], plan_facts(viol)["shuffle_exchanges"], (
+                viol.filter(F.col("rule_id") == "token_equality").count()
+            )
+        finally:
+            handle.unpersist()
+
     # force the big-big join shape (at real scale neither side broadcasts)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = token_equality_violations(seqs, snap, "prefilter")
-        facts = plan_facts(joined)
-        assert facts["sort_merge_join"]
-        assert facts["shuffle_exchanges"] == 0, "bucketed join must not shuffle"
-        assert joined.count() > 0  # planted edits found
-
-        # direct-mode uniqueness on the bucketed table is also shuffle-free
-        from log_anomaly_detector_spark.config import RuleConfig
-        from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
-
-        dk = duplicate_keys(seqs, RuleConfig(uniqueness_mode="direct"))
-        assert plan_facts(dk)["shuffle_exchanges"] == 0
+        # the window count, then the duplicate-key job in both count modes
+        for variant in ("window", "direct", "salted"):
+            pass_x, viol_x, n_tok = fused_facts(seqs, snap, variant)
+            assert (pass_x, viol_x) == (0, 0), f"{variant}: bucketed pass shuffles"
+            assert n_tok > 0  # planted edits found
+            plain_x, _, plain_tok = fused_facts(plain_seqs, plain_snap, variant)
+            assert plain_x > 0 and plain_tok == n_tok, variant
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_fused_pass_equals_multibranch(spark):
-    """The zero-shuffle fused row pass must produce exactly the multi-branch
-    plan's violation set on planted data."""
-    from log_anomaly_detector_spark.datagen import (
-        GenSpec,
-        gen_allowed_sources,
-        gen_reference_snapshot,
-        gen_sequences,
-    )
-    from log_anomaly_detector_spark.rules.fused import fused_row_violations
-    from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
-
-    spec = GenSpec(n_docs=4_000, n_parts=4, seed=13)
-    seqs = gen_sequences(spark, spec).cache()
-    snap = gen_reference_snapshot(spark, spec)
-    allowed = gen_allowed_sources(spark)
-
-    multi = {
-        tuple(r)
-        for r in row_expr_violations(seqs, allowed)
-        .unionByName(uniqueness_violations(seqs, CFG))
-        .unionByName(token_equality_violations(seqs, snap, "prefilter"))
-        .collect()
-    }
-    fused, handle = fused_row_violations(seqs, snap, allowed)
-    got = {tuple(r) for r in fused.collect()}
-    handle.unpersist()
-    assert got == multi and got
 
 
 def test_drift_stats_math():

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from log_anomaly_detector_spark import storage
 from log_anomaly_detector_spark.datagen import GenSpec, gen_sequences
 
@@ -39,3 +41,37 @@ def test_datagen_deterministic_across_parallelism(spark):
         .first()["h"]
     )
     assert h == h2
+
+
+def test_input_fingerprint_tracks_in_place_rewrites(spark, tmp_path):
+    """The ``--data-dir`` resume key comes from file metadata alone (no scan,
+    no ``spec.json``): rewriting one input file in place changes it, while
+    re-reading the same files or moving the whole dir does not."""
+    d = tmp_path / "data"
+    spark.createDataFrame([(1, 0), (2, 1)], "x int, part_id int").write.partitionBy(
+        "part_id"
+    ).parquet(str(d / "sequences"))
+    (d / "baseline.json").write_text('{"hist": []}')
+    names = ["sequences", "snapshot", "baseline.json"]  # no snapshot, no spec.json
+    assert not (d / "spec.json").exists()
+
+    fp = storage.input_fingerprint(str(d), names)
+    assert fp == storage.input_fingerprint(str(d), names)
+
+    moved = tmp_path / "moved"
+    os.rename(d, moved)
+    assert storage.input_fingerprint(str(moved), names) == fp
+
+    # same-size in-place rewrite of one data file, one second later
+    victim = sorted((moved / "sequences").rglob("*.parquet"))[0]
+    st = victim.stat()
+    victim.write_bytes(victim.read_bytes())
+    os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    fp2 = storage.input_fingerprint(str(moved), names)
+    assert fp2 != fp
+
+    # a size change is caught even at an unchanged mtime
+    st = (moved / "baseline.json").stat()
+    (moved / "baseline.json").write_text('{"hist": [1]}')
+    os.utime(moved / "baseline.json", ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert storage.input_fingerprint(str(moved), names) not in (fp, fp2)
