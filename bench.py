@@ -13,8 +13,8 @@ Two parts:
    with a noop write.
 
 Scaling-efficiency evidence (local[N] vs local[4N]) is produced separately by
-``tools/bench_scaling.py`` → BENCH/BASELINE.md (it needs a larger input and
-two JVMs, too heavy to repeat every round).
+``tools/bench_pair.py`` → BENCH/scaling.json and BENCH/BASELINE.md (it needs
+a larger input and a fresh JVM per trial, too heavy to repeat every round).
 """
 
 from __future__ import annotations
@@ -162,7 +162,8 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
     query's tracked persist (e.g. ann_ivf's `ivf_emb` corpus) reads that
     cache in its timed pass. That reuse is part of the measured
     steady-state — but it means a wall here is NOT a cold isolated wall;
-    use a fresh session (tools/ scripts) for those."""
+    use ``tools/bench_pair.py --workload queries --pair 4`` (a fresh session
+    per trial, each query's caches released before its cold pass) for those."""
     from log_anomaly_detector_spark.operators import all_queries
     from log_anomaly_detector_spark.operators.caching import release_all
 
@@ -233,7 +234,7 @@ def main() -> int:
         "config": {
             "engine_docs": ENGINE_DOCS,
             "engine_parts": ENGINE_PARTS,
-            "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            "cpus": spark.sparkContext.defaultParallelism,
         },
     }
     print(json.dumps(result))

@@ -20,7 +20,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` default: ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` default: ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    cores this process may run on, ``os.sched_getaffinity``).
     ``shuffle_partitions`` default: the local core count — the 200 default
     over-parallelizes small local runs and under-parallelizes big ones.
     """
@@ -33,7 +34,7 @@ def get_spark(
     # math doesn't care.)
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

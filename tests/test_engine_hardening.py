@@ -215,3 +215,23 @@ def test_all_null_n_tok_partition_end_to_end(spark, world, tmp_path):
         if r["part_id"] == 0 and not r["passed"]
     }
     assert {"n_tok_stats", "null_rate"} <= failed0
+
+
+def test_default_master_uses_host_cores(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, the session runs on the cores this
+    process may use — not a fixed count that oversubscribes a small host."""
+    from pyspark.sql import SparkSession
+
+    from log_anomaly_detector_spark.session import get_spark
+
+    class Captured(Exception):
+        pass
+
+    def capture_master(self, master):
+        raise Captured(master)
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "master", capture_master)
+    with pytest.raises(Captured) as exc:
+        get_spark()
+    assert exc.value.args == (f"local[{len(os.sched_getaffinity(0))}]",)
