@@ -10,12 +10,16 @@ per checkpoint batch:
 1. the single stats scan (partial+final hash agg → one tiny row/partition);
 2. the fused row-rule pass (``rules/fused.py``: snapshot join, broadcast
    referential mark, uniqueness count from job 0's keys or a doc_id window,
-   column exprs, Arrow equality UDF on the candidates) — one plan on every
-   layout, zero Exchange on the doc_id-bucketed one — written straight to
-   the violations table (no driver round-trip of row data);
+   column exprs, Catalyst first-mismatch on the candidates) — one plan on
+   every layout, zero Exchange on the doc_id-bucketed one — written straight
+   to the violations table (no driver round-trip of row data);
 3. a tiny aggregate over the *written* violations (distinct violating docs
-   per partition);
+   per partition and rule; the uniqueness rows/docs also make the R3
+   distinct doc_id count exact without a distinct aggregate in job 1);
 4. the verdict/manifest commit (driver-side, O(partitions)).
+
+All jobs run sequentially in the caller's thread, so a job group or other
+local property the caller sets covers every job of the run.
 
 Verdict semantics pinned to the reference (config.py): per-partition label is
 ``'Anomaly'`` iff round(score, 6) >= seq_threshold
@@ -134,46 +138,31 @@ def run_validation(
             # partition pruning: on Iceberg/hive layouts this filter prunes files
             sub = seqs.filter(F.col("part_id").isin([int(p) for p in batch]))
 
-            # jobs 1+2 OVERLAPPED (round 7, guide §2.6): the stats scan and the
-            # row-rule violations write are independent passes over the same
-            # input — submitted from two driver threads so the second job's
-            # tasks back-fill the first one's straggler tail instead of waiting
-            # for it (Spark's scheduler runs concurrent jobs FIFO; actions were
-            # only sequential because this loop called them sequentially).
-            # A/B at 2M docs: ~6.4 s → ~5 s batch wall. job_secs still records
-            # each job's own span (they overlap, so their sum exceeds the wall).
-            def _stats_job():
-                t = time.time()
-                rows = [r.asDict() for r in stats_pass(sub, cfg, sources).collect()]
-                job_secs["stats"] += time.time() - t
-                return rows
-
-            def _violations_job():
-                # job 2: row rules → violations table (delete+insert, idempotent)
-                t = time.time()
-                viol, cache_handle = fused_row_violations(sub, snapshot, allowed, dups)
-                try:
-                    # violations are tiny — coalesce the writers so each partition
-                    # dir gets one file instead of one per upstream task
-                    storage.overwrite_partitions(
-                        viol.repartition("part_id"), viol_path, batch
-                    )
-                finally:
-                    cache_handle.unpersist()
-                job_secs["violations"] += time.time() - t
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_stats = pool.submit(_stats_job)
-                f_viol = pool.submit(_violations_job)
-                stats_rows = f_stats.result()
-                f_viol.result()
+            # job 1: the stats scan. Jobs 1 and 2 run one after the other in
+            # the caller's thread, so they keep its job group and local
+            # properties (a thread pool's jobs would lose both).
+            t1 = time.time()
+            stats_rows = [r.asDict() for r in stats_pass(sub, cfg, sources).collect()]
             stats_by_part = {r["part_id"]: r for r in stats_rows}
+            job_secs["stats"] += time.time() - t1
+
+            # job 2: row rules → violations table (delete+insert, idempotent)
+            t1 = time.time()
+            viol, cache_handle = fused_row_violations(sub, snapshot, allowed, dups)
+            try:
+                # violations are tiny — coalesce the writers so each partition
+                # dir gets one file instead of one per upstream task
+                storage.overwrite_partitions(
+                    viol.repartition("part_id"), viol_path, batch
+                )
+            finally:
+                cache_handle.unpersist()
+            job_secs["violations"] += time.time() - t1
             t2 = time.time()
 
-            # job 3: ONE rollup agg over written violations gives both the
-            # per-(part, rule) doc counts and the per-part "any rule" doc count
+            # job 3: ONE rollup agg over written violations gives the
+            # per-(part, rule) doc counts, the per-part "any rule" doc count,
+            # and the uniqueness (rows, docs) the exact distinct rule needs
             written = storage.read_table(spark, viol_path)
             vio_stats = (
                 written.filter(F.col("part_id").isin([int(p) for p in batch]))
@@ -190,6 +179,7 @@ def run_validation(
             docs_by_part_rule: dict[tuple[int, str], int] = {}
             any_docs: dict[int, int] = {}
             null_tokens_rows: dict[int, int] = {}
+            uniq: dict[int, tuple[int, int]] = {}
             for r in vio_stats:
                 if r["rule_id"] is None:
                     any_docs[r["part_id"]] = r["docs"]
@@ -197,10 +187,12 @@ def run_validation(
                     docs_by_part_rule[(r["part_id"], r["rule_id"])] = r["docs"]
                     if r["rule_id"] == "null_tokens":
                         null_tokens_rows[r["part_id"]] = r["rows"]
+                    elif r["rule_id"] == "uniqueness":
+                        uniq[r["part_id"]] = (r["rows"], r["docs"])
             job_secs["agg"] += time.time() - t2
 
             # verdict assembly (driver-side, O(partitions))
-            rule_rows = stats_verdicts(stats_rows, cfg, null_tokens_rows)
+            rule_rows = stats_verdicts(stats_rows, cfg, null_tokens_rows, uniq)
             rule_rows += drift_verdicts(stats_rows, baseline, cfg, sources)
             dp = cfg.score_round_dp
             for pid in batch:

@@ -4,9 +4,7 @@ style (per-row loops are fine here — it runs on small fixtures only); the
 Spark engine must agree 100% per partition.
 
 Semantics pinned identically to config.py: strict ``>`` per rule, ``>=`` at
-the verdict layer, scores rounded to 6dp. The only sanctioned numeric
-difference: the engine's distinct count is HLL++ (rsd 1%) while the golden is
-exact — thresholds sit far enough from the data that pass/fail cannot differ.
+the verdict layer, scores rounded to 6dp.
 """
 
 from __future__ import annotations

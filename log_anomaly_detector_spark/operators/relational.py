@@ -230,7 +230,7 @@ HLL_RSD = 0.01
 
 
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HLL++, rsd=1%) — the scale path for R3.
+    """approx_count_distinct (HLL++, rsd=1%) — approximate distinct at scale.
 
     The sketch internals are engine-specific, so the raw estimate can never
     hash-match another engine; the contract output is therefore the BOUNDED
@@ -241,10 +241,12 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_kmv_distinct.
 
     CONTRACT-ONLY COST: the exact ``countDistinct`` here exists purely as the
-    check's yardstick. The ENGINE's R3 stats path uses only
-    ``approx_count_distinct`` (rules/column_stats.py) — never the exact side
-    (asserted by tests/test_rules.py::test_stats_plan_has_no_exact_distinct),
-    so a 100 TB validation run never pays an exact-distinct shuffle.
+    check's yardstick. The ENGINE's R3 stats scan carries no distinct
+    aggregate at all (asserted by
+    tests/test_rules.py::test_stats_plan_has_no_exact_distinct): its exact
+    count comes from the uniqueness violations the engine already writes
+    (rules/column_stats.py ``stats_verdicts``), so a 100 TB validation run
+    never pays a distinct shuffle.
 
     SPLIT-PASS SHAPE (round 7): combining the exact and the sketch in ONE
     agg makes Spark's distinct-rewrite allocate a partial HLL buffer per

@@ -3,7 +3,7 @@
 Scopes (SURVEY.md §2.9):
 
 * **partition scope** — one verdict row per (part_id, rule_id):
-  column stats (null rate, n_tok min/max/mean, approx distinct) and the
+  column stats (null rate, n_tok min/max/mean, distinct doc_id ratio) and the
   drift pack (PSI, KS, chi-square vs a pinned baseline profile).
 * **row scope** — violation rows (part_id, doc_id, rule_id, observed,
   expected): uniqueness, referential integrity, n_tok consistency, NULL

@@ -6,8 +6,10 @@ Computes, per partition, in a single ``groupBy(part_id).agg(...)``:
   lines silently dropped, ``logparser/Drain.py:518-530``; we surface the rate)
 * min / max / mean of ``n_tok`` (R2 — reference gates ``min_len=10`` at
   ``bert_pytorch/dataset/sample.py:25-26``, caps ``seq_len=512``)
-* ``approx_count_distinct(doc_id)`` — HLL++ built-in (R3 — reference keeps a
-  first-seen block-id registry, ``logparser/Drain.py:386-390``)
+* NOT the distinct doc_id count (R3 — reference keeps a first-seen block-id
+  registry, ``logparser/Drain.py:386-390``): it is exact and comes from the
+  engine's rollup over the written uniqueness violations (``stats_verdicts``'s
+  ``uniq``), so this scan carries no distinct aggregate of any kind
 * the fixed-bucket ``n_tok`` histogram and per-source frequency counts that
   feed the drift pack (R8) — as conditional sums so NO second scan is needed.
 
@@ -55,9 +57,6 @@ def stats_pass(df: DataFrame, cfg: RuleConfig, sources: list[str]) -> DataFrame:
         F.min("n_tok").alias("n_tok_min"),
         F.max("n_tok").alias("n_tok_max"),
         F.avg("n_tok").alias("n_tok_mean"),
-        # rsd pinned to 1% so the pass/fail verdict can't flap vs the exact
-        # golden ratio anywhere near the 0.95 threshold
-        F.approx_count_distinct("doc_id", 0.01).alias("approx_distinct_doc_id"),
     ]
     # n_tok histogram buckets (drift input) — conditional sums, same scan
     aggs += [
@@ -73,7 +72,10 @@ def stats_pass(df: DataFrame, cfg: RuleConfig, sources: list[str]) -> DataFrame:
 
 
 def stats_verdicts(
-    stats_rows: list[dict], cfg: RuleConfig, null_tokens_rows: dict[int, int] | None = None
+    stats_rows: list[dict],
+    cfg: RuleConfig,
+    null_tokens_rows: dict[int, int] | None = None,
+    uniq: dict[int, tuple[int, int]] | None = None,
 ) -> list[dict]:
     """Driver-side: turn collected stats rows (one per partition — tiny) into
     per-(part_id, rule_id) verdicts. Strict ``>`` at the rule layer, stats
@@ -81,10 +83,17 @@ def stats_verdicts(
 
     ``null_tokens_rows``: per-partition count of NULL-tokens rows, sourced
     from the row-rule scan (so this pass never reads the tokens column).
+
+    ``uniq``: per-partition ``(rows, docs)`` of the uniqueness violations —
+    rows whose non-NULL doc_id occurs more than once in the whole table, and
+    their distinct doc_ids. Every repeat of a doc_id within a partition is
+    such a row, so the exact distinct count is
+    ``(n_rows - null_doc_id) - rows + docs`` at any batching.
     """
     out = []
     dp = cfg.score_round_dp
     null_tokens_rows = null_tokens_rows or {}
+    uniq = uniq or {}
     for r in stats_rows:
         pid, n = r["part_id"], r["n_rows"]
         null_rates = [
@@ -122,7 +131,9 @@ def stats_verdicts(
                 "threshold": cfg.n_tok_mean_hi,
             }
         )
-        ratio = round(r["approx_distinct_doc_id"] / n, dp) if n else 1.0
+        dup_rows, dup_docs = uniq.get(pid, (0, 0))
+        distinct = n - r["null_doc_id"] - dup_rows + dup_docs
+        ratio = round(distinct / n, dp) if n else 1.0
         out.append(
             {
                 "part_id": pid,

@@ -13,8 +13,14 @@ whole row-scope rule pack:
   token-equality *candidate* flag are column expressions in the same
   projection, exploded into violation rows;
 * the exploded rows (≈ violations only) are persisted, and only the
-  token-equality candidates are sent through the Arrow first-mismatch UDF —
-  the cache keeps the single big scan single.
+  token-equality candidates get the first-mismatch expression
+  (``first_mismatch``) — the cache keeps the single big scan single.
+
+Token equality (R7) is exact array equality against the reference snapshot,
+the model-free analogue of the reference's per-masked-slot top-k check of the
+true token (``bert_pytorch/predict_log.py:95-108``), reported as the first
+mismatching position with its (observed, expected) values. The whole plan is
+built-in Catalyst expressions: no row crosses into Python.
 
 On the doc_id-bucketed layout the whole plan has zero shuffle Exchanges
 (pinned in tests).
@@ -22,13 +28,39 @@ On the doc_id-bucketed layout the whole plan has zero shuffle Exchanges
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from log_anomaly_detector_spark.rules.token_equality import first_mismatch
-
 _CAND = "_token_eq_candidate"
+
+
+def first_mismatch(a: str, b: str) -> Column:
+    """``struct<idx, obs, exp>`` of the first position where array columns
+    ``a`` and ``b`` differ; ``idx`` is -1 when they are equal or either is
+    NULL.
+
+    Elements compare NULL-safe (NULL = NULL, NULL ≠ any int), and when the
+    lengths differ the first missing slot is a mismatch. ``zip_with`` pads
+    the shorter array with NULL, which a NULL element would match, so only a
+    mismatch inside the common prefix is taken from it. A missing or NULL
+    value reads as -1; ``F.get`` (not ``element_at``) returns NULL for a
+    missing slot instead of raising under ANSI mode.
+    """
+    la, lb = F.size(a), F.size(b)
+    common = F.least(la, lb)
+    pos = F.array_position(F.zip_with(a, b, lambda x, y: x.eqNullSafe(y)), False)
+    idx = (
+        F.when((pos > 0) & (pos <= common), pos - 1)
+        .when(la != lb, common)
+        .otherwise(-1)
+        .cast("int")
+    )
+    return F.struct(
+        idx.alias("idx"),
+        F.coalesce(F.get(a, idx), F.lit(-1)).alias("obs"),
+        F.coalesce(F.get(b, idx), F.lit(-1)).alias("exp"),
+    )
 
 
 def fused_row_violations(

@@ -6,6 +6,7 @@ and 6dp scores."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
 from log_anomaly_detector_spark.datagen import (
@@ -24,20 +25,44 @@ from log_anomaly_detector_spark.golden import (
 
 SPEC = GenSpec(n_docs=8_000, n_parts=8, seed=42)
 SPEC_B = GenSpec(n_docs=6_000, n_parts=6, seed=7)
+# 499 docs per partition puts id 998 (a DUP_MOD duplicate of id 997) in part 2
+# and its original in part 1 — the pair straddles checkpoint batches of two
+SPEC_STRADDLE = GenSpec(n_docs=3_992, n_parts=8, seed=42)
+BATCH_PARTS = 2
 
 
-@pytest.fixture(scope="module", params=[SPEC, SPEC_B], ids=["seed42", "seed7"])
+# (spec, batch_parts): one batch over every partition, or checkpoint batches,
+# whose uniqueness counts come from the run-global duplicate-key job
+@pytest.fixture(
+    scope="module",
+    params=[(SPEC, None), (SPEC_B, None), (SPEC_STRADDLE, BATCH_PARTS)],
+    ids=["seed42", "seed7", "straddle-batch2"],
+)
 def world(spark, tmp_path_factory, request):
-    spec = request.param
+    spec, batch_parts = request.param
     seqs = gen_sequences(spark, spec).cache()
     snap = gen_reference_snapshot(spark, spec).cache()
     allowed = gen_allowed_sources(spark)
     baseline = gen_baseline_profile(spark, spec, CFG)
     out = str(tmp_path_factory.mktemp("engine_out"))
     res = run_validation(
-        spark, seqs, snap, allowed, baseline, out, CFG, input_digest="t1"
+        spark, seqs, snap, allowed, baseline, out, CFG, input_digest="t1",
+        batch_parts=batch_parts,
     )
     return spec, seqs, snap, allowed, baseline, res, out
+
+
+def test_straddle_world_has_cross_batch_duplicate(spark):
+    """The batched world's fixture premise: a duplicated doc_id spans two
+    checkpoint batches."""
+    seqs = gen_sequences(spark, SPEC_STRADDLE)
+    straddling = (
+        seqs.groupBy("doc_id")
+        .agg(F.countDistinct(F.floor(F.col("part_id") / BATCH_PARTS)).alias("batches"))
+        .filter(F.col("batches") > 1)
+        .count()
+    )
+    assert straddling >= 1
 
 
 def test_violation_sets_match_golden(spark, world):
@@ -71,8 +96,7 @@ def test_partition_rule_verdicts_match_golden(spark, world):
     for r in eng:
         g_pass, g_stat = gold_map[(r["part_id"], r["rule_id"])]
         assert r["passed"] == g_pass, (r, g_pass, g_stat)
-        if r["rule_id"] != "approx_distinct":  # HLL vs exact: verdict-only
-            assert abs(r["observed_stat"] - g_stat) < 1e-9, (r, g_stat)
+        assert abs(r["observed_stat"] - g_stat) < 1e-9, (r, g_stat)
 
 
 def test_labels_and_scores_match_golden(spark, world):

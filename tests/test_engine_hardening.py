@@ -6,7 +6,8 @@
 * a crash mid-manifest-append leaves at most a torn trailing line, which
   read_manifest tolerates instead of permanently breaking resume (R10);
 * an all-NULL n_tok partition fails the n_tok_stats rule instead of raising;
-* partition planning comes from storage metadata, not a data scan.
+* partition planning comes from storage metadata, not a data scan;
+* every job of a run carries the caller's job group.
 """
 
 from __future__ import annotations
@@ -127,6 +128,27 @@ def test_cross_batch_duplicate_detected_on_resume(spark, world, tmp_path):
     assert planted_hits == 1
 
 
+@pytest.mark.parametrize("batch_parts", [None, 2], ids=["one_batch", "batch2"])
+def test_run_jobs_keep_callers_job_group(spark, world, tmp_path, batch_parts):
+    """Every job a run starts belongs to the job group its caller set, so a
+    caller can attribute (or cancel) the whole run."""
+    seqs, snap, allowed, baseline, _ = world
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"validation-{batch_parts}"
+    before = set(tracker.getJobIdsForGroup(None))  # jobs without a group
+    sc.setJobGroup(group, "run_validation")
+    try:
+        run_validation(
+            spark, seqs, snap, allowed, baseline, str(tmp_path / "out"), CFG,
+            input_digest="x", batch_parts=batch_parts,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
 def test_manifest_tolerates_torn_tail(tmp_path):
     out = str(tmp_path)
     storage.append_manifest(out, [{"part_id": 0, "status": "done"}])
@@ -154,7 +176,6 @@ def test_all_null_n_tok_fails_rule_not_run():
             "n_tok_min": None,
             "n_tok_max": None,
             "n_tok_mean": None,
-            "approx_distinct_doc_id": 10,
         }
     ]
     verdicts = {r["rule_id"]: r for r in stats_verdicts(rows, CFG)}

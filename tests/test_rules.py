@@ -8,12 +8,11 @@ from pyspark.sql import functions as F
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
 from log_anomaly_detector_spark.config import RuleConfig
 from log_anomaly_detector_spark.rules.drift import chi2_norm, ks_d, psi
-from log_anomaly_detector_spark.rules.fused import fused_row_violations
+from log_anomaly_detector_spark.rules.fused import first_mismatch, fused_row_violations
 from log_anomaly_detector_spark.rules.row_invariants import (
     ntok_consistency_violations,
     referential_violations,
 )
-from log_anomaly_detector_spark.rules.token_equality import first_mismatch
 from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
@@ -76,8 +75,9 @@ def test_uniqueness(spark):
         ), variant
 
 
-def test_token_equality_udf_vs_sql(spark):
-    """The Arrow UDF must agree with the pure-SQL zip_with formulation."""
+def test_token_equality_first_mismatch(spark):
+    """First-mismatch strings for value, length and NULL-element mismatches,
+    and the mismatch index agrees with the JVM's array equality decision."""
     rows = [
         ("eq", [1, 2, 3], 3, "s", 0),
         ("val_mismatch", [1, 9, 3], 3, "s", 0),
@@ -85,6 +85,11 @@ def test_token_equality_udf_vs_sql(spark):
         ("b_longer", [1, 2], 2, "s", 0),
         ("first_tok", [9, 2, 3], 3, "s", 0),
         ("empty_vs", [], 0, "s", 0),
+        ("null_eq_then_val", [1, None, 4], 3, "s", 0),
+        ("null_vs_val", [1, None, 3], 3, "s", 0),
+        ("null_extra_slot", [1], 1, "s", 0),
+        ("null_elems_eq", [None, 2], 2, "s", 0),
+        ("empty_vs_null", [], 0, "s", 0),
     ]
     snap_rows = [
         ("eq", [1, 2, 3]),
@@ -93,6 +98,11 @@ def test_token_equality_udf_vs_sql(spark):
         ("b_longer", [1, 2, 3]),
         ("first_tok", [1, 2, 3]),
         ("empty_vs", [1]),
+        ("null_eq_then_val", [1, None, 5]),
+        ("null_vs_val", [1, 2, 3]),
+        ("null_extra_slot", [1, None]),
+        ("null_elems_eq", [None, 2]),
+        ("empty_vs_null", [None, 1]),
         ("not_in_seqs", [7]),
     ]
     df = spark.createDataFrame(rows, SEQ_SCHEMA)
@@ -101,26 +111,37 @@ def test_token_equality_udf_vs_sql(spark):
     viol = _row_rules(spark, df, snap)
     assert {r["rule_id"] for r in viol} == {"token_equality"}
     got = {r["doc_id"]: (r["observed"], r["expected"]) for r in viol}
-    assert set(got) == {"val_mismatch", "a_longer", "b_longer", "first_tok", "empty_vs"}
+    assert set(got) == {
+        "val_mismatch", "a_longer", "b_longer", "first_tok", "empty_vs",
+        "null_eq_then_val", "null_vs_val", "null_extra_slot", "empty_vs_null",
+    }
     assert got["val_mismatch"] == ("tokens[1]=9", "ref=2")
     assert got["first_tok"] == ("tokens[0]=9", "ref=1")
     assert got["a_longer"] == ("tokens[3]=4", "ref=-1")   # extra slot in observed
     assert got["b_longer"] == ("tokens[2]=-1", "ref=3")   # missing slot
     assert got["empty_vs"] == ("tokens[0]=-1", "ref=1")
+    # NULL elements: NULL = NULL, NULL ≠ int, and a NULL value reads as -1
+    assert got["null_eq_then_val"] == ("tokens[2]=4", "ref=5")
+    assert got["null_vs_val"] == ("tokens[1]=-1", "ref=2")
+    # a length mismatch whose extra slots hold NULL is still a mismatch, at
+    # the first missing slot
+    assert got["null_extra_slot"] == ("tokens[1]=-1", "ref=-1")
+    assert got["empty_vs_null"] == ("tokens[0]=-1", "ref=-1")
 
-    # SQL cross-check of the equality decision itself
-    sql_idx = (
+    # cross-check: the mismatch index is found exactly where the JVM's
+    # NULL-safe array equality says the arrays differ
+    decisions = (
         df.join(snap, "doc_id")
-        .withColumn(
-            "sql_neq",
-            ~(F.col("tokens") == F.col("ref_tokens")),
+        .select(
+            "doc_id",
+            (~F.col("tokens").eqNullSafe(F.col("ref_tokens"))).alias("neq"),
+            (first_mismatch("tokens", "ref_tokens").idx >= 0).alias("found"),
         )
-        .withColumn("m", first_mismatch("tokens", "ref_tokens"))
-        .select("doc_id", "sql_neq", (F.col("m.idx") >= 0).alias("udf_neq"))
         .collect()
     )
-    for r in sql_idx:
-        assert r["sql_neq"] == r["udf_neq"], r
+    assert len(decisions) == len(rows)
+    for r in decisions:
+        assert r["neq"] == r["found"], r
 
 
 def test_null_tokens_row_rule_and_stats_pruning(spark):
@@ -140,7 +161,7 @@ def test_null_tokens_row_rule_and_stats_pruning(spark):
         for r in _row_rules(spark, df, snap, sources=("ok",))
     }
     # NULL tokens vs a non-NULL snapshot row is a null_tokens violation, not
-    # also a token_equality one (the mismatch kernel skips NULL arrays)
+    # also a token_equality one (first_mismatch finds no index in a NULL array)
     assert got == {("a", "null_tokens", "tokens=NULL", "non-null tokens")}
 
     # pruning must survive a real parquet scan
@@ -152,20 +173,41 @@ def test_null_tokens_row_rule_and_stats_pruning(spark):
 
 
 def test_stats_plan_has_no_exact_distinct(spark):
-    """The engine's R3 distinct estimate is HLL-only: the stats plan must
-    carry approx_count_distinct and never an exact count(distinct ...) — the
-    exact side exists solely inside the hll_distinct CONTRACT query as the
-    oracle's yardstick (operators/relational.py q_hll_distinct docstring).
-    An exact distinct is a full shuffle of the key universe at 100 TB."""
+    """The stats scan carries no distinct aggregate of any kind — neither an
+    exact count(distinct ...) (a full shuffle of the key universe at 100 TB)
+    nor an HLL sketch: the engine's R3 distinct count is exact and comes from
+    the rollup over the written uniqueness violations
+    (``stats_verdicts``'s ``uniq``)."""
     from log_anomaly_detector_spark.plans import formatted_plan
     from log_anomaly_detector_spark.rules.column_stats import stats_pass
 
     df = spark.createDataFrame(
         [("a", [1], 1, "ok", 0), ("b", [1], 1, "ok", 0)], SEQ_SCHEMA
     )
-    plan = formatted_plan(stats_pass(df, CFG, ["ok"]))
-    assert "approx_count_distinct" in plan, plan
-    assert "count(distinct" not in plan.lower(), plan
+    plan = formatted_plan(stats_pass(df, CFG, ["ok"])).lower()
+    for agg in ("distinct", "hyperloglog", "approx_count"):
+        assert agg not in plan, (agg, plan)
+
+
+def test_exact_distinct_from_uniqueness_counts():
+    """``distinct = (n_rows - null_doc_id) - rows + docs``; a part with no
+    uniqueness violations defaults to (0, 0)."""
+    from log_anomaly_detector_spark.rules.column_stats import stats_verdicts
+
+    def row(pid, n, null_doc_id):
+        return {
+            "part_id": pid, "n_rows": n, "null_doc_id": null_doc_id,
+            "null_n_tok": 0, "null_source": 0,
+            "n_tok_min": 20, "n_tok_max": 20, "n_tok_mean": 20.0,
+        }
+
+    # part 0: 100 rows, 2 NULL doc_ids, one doc_id 4x and one 3x in this
+    # part, plus 2 rows whose doc_id repeats only in another part →
+    # distinct = 98 - 9 + 4 = 93; part 1 has no uniqueness violations
+    out = stats_verdicts([row(0, 100, 2), row(1, 10, 0)], CFG, None, {0: (9, 4)})
+    got = {r["part_id"]: r for r in out if r["rule_id"] == "approx_distinct"}
+    assert got[0]["observed_stat"] == 0.93 and got[0]["passed"] is False
+    assert got[1]["observed_stat"] == 1.0 and got[1]["passed"] is True
 
 
 def test_uniqueness_ignores_null_doc_ids(spark):
@@ -220,7 +262,8 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """The engine's key layout claim: on doc_id-bucketed tables the fused row
     pass — snapshot join, uniqueness count and the duplicate-key job — has
     ZERO shuffle Exchanges in every uniqueness variant, while the same plan
-    over the plain parquet copy does shuffle (so the count is not vacuous)."""
+    over the plain parquet copy does shuffle (so the count is not vacuous).
+    No row of it crosses into a Python worker."""
     from log_anomaly_detector_spark import storage
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
@@ -228,7 +271,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         gen_reference_snapshot,
         gen_sequences,
     )
-    from log_anomaly_detector_spark.plans import plan_facts
+    from log_anomaly_detector_spark.plans import formatted_plan, plan_facts
 
     spec = GenSpec(n_docs=2_000, n_parts=2, seed=5)
     storage.write_bucketed(
@@ -259,6 +302,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         try:
             facts = plan_facts(handle)
             assert facts["sort_merge_join"], "snapshot join must not broadcast here"
+            assert "EvalPython" not in formatted_plan(viol), "a Python UDF ran"
             return facts["shuffle_exchanges"], plan_facts(viol)["shuffle_exchanges"], (
                 viol.filter(F.col("rule_id") == "token_equality").count()
             )
