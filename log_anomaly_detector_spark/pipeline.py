@@ -19,6 +19,12 @@ v2 itself uses to override the model score when anomalous lines exist
 Every stage returns a DataFrame, so any of them can be written to a table —
 the reference's upserts (S10-S12) become idempotent partition overwrites via
 ``storage.overwrite_partitions``.
+
+``run_induction_pipeline`` is the v2 lifecycle with LEARNED templates: the
+dim comes from ``operators.template_induction`` as a driver-local table, the
+line flags are one broadcast join computed and cached once, and the verdicts
+aggregate that cached table. Every cached table has its own
+``tracked_persist`` slot, so repeated calls in one session hold one copy each.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.operators.caching import tracked_persist
 from log_anomaly_detector_spark.sources.logtext import read_structured_logs
 
 UNMAPPED = -1  # the reference's sentinel for unknown events (data_process.py:84)
@@ -49,7 +56,9 @@ def run_detection_pipeline(
     seq_threshold: float = 0.2,
     logformat: str = "<Date> <Time> <Pid> <Level> <Component>: <Content>",
 ) -> PipelineResult:
-    structured = read_structured_logs(spark, raw_log_path, logformat).cache()
+    structured = tracked_persist(
+        "detection_structured", read_structured_logs(spark, raw_log_path, logformat)
+    )
 
     # [1] template dimension (+ warm start)
     templates = (
@@ -149,7 +158,9 @@ def run_induction_pipeline(
         induce_templates,
     )
 
-    structured = read_structured_logs(spark, raw_log_path, logformat).cache()
+    structured = tracked_persist(
+        "induction_structured", read_structured_logs(spark, raw_log_path, logformat)
+    )
     # reference tokenization: preprocess(Content).strip().split()
     # (Drain.py:301) — EventTemplate IS the preprocessed content here
     lines = structured.filter("_parsed").select(
@@ -167,7 +178,11 @@ def run_induction_pipeline(
         # unmatched lines (no event_id) are anomalous too — they fit nothing
         F.coalesce("is_new", F.lit(True)).alias("is_anomaly"),
     )
-    structured_flagged = structured.join(F.broadcast(flags), "LineId", "left")
+    # computed once: the structured write and the verdict aggregate both
+    # read this copy instead of re-running the broadcast join
+    structured_flagged = tracked_persist(
+        "induction_flagged", structured.join(F.broadcast(flags), "LineId", "left")
+    )
 
     # per-block verdicts from line flags (block ids extracted at parse time)
     per_block = (

@@ -107,3 +107,53 @@ def test_induction_pipeline_end_to_end(spark, tmp_path):
 
     v = {r["block_id"]: r["label"] for r in res.verdicts.collect()}
     assert v == {"blk_100": "Normal", "blk_200": "Anomaly"}
+
+
+def _cached(df) -> bool:
+    lvl = df.storageLevel
+    return lvl.useMemory or lvl.useDisk
+
+
+def test_induction_dim_parquet_keeps_not_null(spark, tmp_path):
+    """The templates and new_templates tables as `tools/parse_logs.py`
+    writes them keep `occurrences` and `is_new` NOT NULL."""
+    import pyarrow.parquet as pq
+
+    from log_anomaly_detector_spark.pipeline import run_induction_pipeline
+
+    log = tmp_path / "raw.log"
+    log.write_text(RAW)
+    res = run_induction_pipeline(spark, str(log))
+    tables = {"templates": res.templates, "new_templates": res.new_templates}
+    for name, df in tables.items():
+        out = tmp_path / name
+        df.drop("tokens").write.parquet(str(out))
+        parts = list(out.glob("*.parquet"))
+        assert parts
+        for part in parts:
+            schema = pq.read_schema(part)
+            assert not schema.field("occurrences").nullable
+            assert not schema.field("is_new").nullable
+
+
+def test_repeated_pipeline_calls_hold_one_cache_handle_each(spark, tmp_path):
+    """Each cached table has one tracked slot: a second call releases the
+    first call's copies instead of leaking one line-sized cache per call."""
+    from log_anomaly_detector_spark.operators import caching
+    from log_anomaly_detector_spark.pipeline import run_induction_pipeline
+
+    logs = []
+    for i, text in enumerate((RAW, RAW + "garbage line two\n")):
+        logs.append(tmp_path / f"raw{i}.log")
+        logs[-1].write_text(text)
+
+    first, second = (run_induction_pipeline(spark, str(p)) for p in logs)
+    second.verdicts.collect()
+    assert not _cached(first.structured)
+    assert caching._LIVE["induction_flagged"] is second.structured
+    assert _cached(second.structured)
+    assert _cached(caching._LIVE["induction_structured"])
+
+    d1, d2 = (run_detection_pipeline(spark, str(p)) for p in logs)
+    assert not _cached(d1.structured)
+    assert caching._LIVE["detection_structured"] is d2.structured
