@@ -82,7 +82,14 @@ def fused_row_violations(
     joined = seqs.join(
         snapshot.select("doc_id", "ref_tokens"), "doc_id", "left"
     ).join(
-        F.broadcast(allowed.select("source", F.lit(True).alias("_in_dim"))),
+        # the dim is a set: a repeated row would fan the join out. Its one
+        # partition needs no Exchange for the distinct.
+        F.broadcast(
+            allowed.select("source")
+            .coalesce(1)
+            .distinct()
+            .select("source", F.lit(True).alias("_in_dim"))
+        ),
         "source",
         "left",
     )

@@ -2,7 +2,11 @@
 
 Idempotent writes are explicit delete+insert over hive-style partition
 directories — exactly the reference's idempotency primitive (per-block
-DELETE then batch INSERT, ``database/upsert_log_line.py:27-52``).
+DELETE then batch INSERT, ``database/upsert_log_line.py:27-52``). A
+row-sized table goes through Spark's writer; a driver-sized one (a few rows
+per partition) is written from the driver, as the reference upserts its
+verdicts from the service process in one batched ``executemany``
+(``database/upsert_anomaly_sequence.py:16-26``).
 """
 
 from __future__ import annotations
@@ -11,8 +15,13 @@ import hashlib
 import json
 import os
 import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def overwrite_partitions(df: DataFrame, path: str, part_ids: list[int]) -> None:
@@ -26,6 +35,39 @@ def overwrite_partitions(df: DataFrame, path: str, part_ids: list[int]) -> None:
     for pid in part_ids:
         shutil.rmtree(os.path.join(path, f"part_id={pid}"), ignore_errors=True)
     df.write.mode("append").partitionBy("part_id").parquet(path)
+
+
+def overwrite_local_partitions(
+    rows: list[dict], ddl: str, path: str, part_ids: list[int]
+) -> None:
+    """``overwrite_partitions`` for driver rows, with no Spark job.
+
+    Same delete+insert contract: each listed partition directory is removed,
+    and one that has rows gets one parquet file whose schema is ``ddl``
+    minus ``part_id`` (which lives only in the directory name, as in Spark's
+    hive layout). ``rows`` must only contain listed partitions. Each file is
+    written under a dot-prefixed name and renamed into place; Spark and
+    pyarrow both skip dot-files, so a crash mid-write leaves nothing
+    readable behind.
+    """
+    schema = to_arrow_schema(
+        StructType([f for f in StructType.fromDDL(ddl).fields if f.name != "part_id"])
+    )
+    by_part: dict[int, list[dict]] = {pid: [] for pid in part_ids}
+    for r in rows:
+        if r["part_id"] not in by_part:
+            raise ValueError(f"row for unlisted partition {r['part_id']}")
+        by_part[r["part_id"]].append(r)
+    for pid, part_rows in by_part.items():
+        pdir = os.path.join(path, f"part_id={pid}")
+        shutil.rmtree(pdir, ignore_errors=True)
+        if not part_rows:
+            continue
+        os.makedirs(pdir)
+        name = f"part-00000-{uuid.uuid4()}.snappy.parquet"
+        tmp = os.path.join(pdir, f".{name}.tmp")
+        pq.write_table(pa.Table.from_pylist(part_rows, schema=schema), tmp)
+        os.replace(tmp, os.path.join(pdir, name))
 
 
 def list_partitions(path: str) -> list[int] | None:
@@ -45,13 +87,19 @@ def list_partitions(path: str) -> list[int] | None:
     return sorted(parts) if parts else None
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a partitioned parquet table; None if nothing written yet."""
+def read_table(
+    spark: SparkSession, path: str, schema: str | None = None
+) -> DataFrame | None:
+    """Read a partitioned parquet table; None if nothing written yet.
+
+    A known ``schema`` (DDL, ``part_id`` included) skips schema inference,
+    which is one footer-reading Spark job per read."""
     if not os.path.isdir(path) or not any(
         e.startswith("part_id=") for e in os.listdir(path)
     ):
         return None
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 # --- bucketed tables (the Iceberg bucket-transform analogue) ---------------

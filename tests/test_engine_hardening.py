@@ -7,7 +7,8 @@
   read_manifest tolerates instead of permanently breaking resume (R10);
 * an all-NULL n_tok partition fails the n_tok_stats rule instead of raising;
 * partition planning comes from storage metadata, not a data scan;
-* every job of a run carries the caller's job group.
+* every job of a run carries the caller's job group;
+* the allowed-sources dim is a set: a NULL or repeated row changes nothing.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from log_anomaly_detector_spark import storage
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
@@ -28,9 +30,14 @@ from log_anomaly_detector_spark.datagen import (
     gen_reference_snapshot,
     gen_sequences,
 )
-from log_anomaly_detector_spark.engine import run_validation
-from log_anomaly_detector_spark.golden import golden_row_violations
+from log_anomaly_detector_spark.engine import VIOLATION_SCHEMA, run_validation
+from log_anomaly_detector_spark.golden import (
+    golden_labels,
+    golden_partition_verdicts,
+    golden_row_violations,
+)
 from log_anomaly_detector_spark.rules.column_stats import stats_verdicts
+from log_anomaly_detector_spark.rules.fused import fused_row_violations
 
 SPEC = GenSpec(n_docs=2_000, n_parts=4, seed=11)
 
@@ -149,6 +156,18 @@ def test_run_jobs_keep_callers_job_group(spark, world, tmp_path, batch_parts):
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
+def test_violation_schema_is_the_fused_output(spark, world):
+    """The rollup reads the violations table with ``VIOLATION_SCHEMA``
+    instead of inferring it, so the DDL must name what the fused pass
+    writes."""
+    seqs, snap, allowed, _, _ = world
+    viol, handle = fused_row_violations(seqs, snap, allowed)
+    handle.unpersist()
+    assert viol.schema.simpleString() == (
+        StructType.fromDDL(VIOLATION_SCHEMA).simpleString()
+    )
+
+
 def test_manifest_tolerates_torn_tail(tmp_path):
     out = str(tmp_path)
     storage.append_manifest(out, [{"part_id": 0, "status": "done"}])
@@ -256,3 +275,50 @@ def test_default_master_uses_host_cores(monkeypatch):
     with pytest.raises(Captured) as exc:
         get_spark()
     assert exc.value.args == (f"local[{len(os.sched_getaffinity(0))}]",)
+
+
+def test_allowed_sources_is_a_set(spark, tmp_path):
+    """A NULL row and a repeated row in the allowed-sources dim change no
+    verdict and no violation row: the same run as over the clean dim, and
+    the golden implementation's sets and labels."""
+    spec = GenSpec(n_docs=2_000, n_parts=2, seed=3)
+    seqs = gen_sequences(spark, spec).cache()
+    snap = gen_reference_snapshot(spark, spec).cache()
+    clean = gen_allowed_sources(spark)
+    first = clean.orderBy("source").limit(1)
+    dirty = clean.unionByName(first).unionByName(
+        spark.createDataFrame([(None, "no source")], clean.schema)
+    )
+    assert dirty.count() == clean.count() + 2
+    baseline = gen_baseline_profile(spark, spec, CFG)
+
+    def run(allowed, name):
+        out = str(tmp_path / name)
+        res = run_validation(
+            spark, seqs, snap, allowed, baseline, out, CFG, input_digest="x"
+        )
+        viol = sorted(
+            tuple(r)
+            for r in spark.read.parquet(f"{out}/violations")
+            .select("part_id", "doc_id", "rule_id", "observed", "expected")
+            .collect()
+        )
+        return res, viol
+
+    res_c, viol_c = run(clean, "clean")
+    res_d, viol_d = run(dirty, "dirty")
+    assert viol_d == viol_c
+    assert res_d.verdicts == res_c.verdicts
+    assert res_d.rule_verdicts == res_c.rule_verdicts
+
+    seq_pdf, snap_pdf = seqs.toPandas(), snap.toPandas()
+    sources = sorted(r["source"] for r in clean.collect())
+    gold_v = golden_row_violations(seq_pdf, snap_pdf, set(sources))
+    assert {(p, d, r) for p, d, r, *_ in viol_d} == set(map(tuple, gold_v.values))
+    gold_pv = golden_partition_verdicts(seq_pdf, baseline, CFG, sources)
+    gold = golden_labels(seq_pdf, gold_v, gold_pv, CFG)
+    assert {v["part_id"]: (v["label"], v["score"]) for v in res_d.verdicts} == {
+        r.part_id: (r.label, r.score) for r in gold.itertuples(index=False)
+    }
+    seqs.unpersist()
+    snap.unpersist()
