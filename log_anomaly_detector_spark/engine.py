@@ -2,9 +2,12 @@
 manifest checkpoint + lineage.
 
 One run executes a fixed number of jobs regardless of row count (the shape
-that survives 10^12 rows): one run-global duplicate-key job, then three
-Spark jobs per checkpoint batch, each over row-sized input, and a driver
-commit:
+that survives 10^12 rows): one run-global duplicate-key pass, then three
+passes per checkpoint batch, each over row-sized input, and a driver
+commit. AQE splits each shuffle into query-stage jobs, so the three passes
+run as about 11 Spark jobs per batch (a job-group probe on the bucketed
+layout, 200k docs, 8 batches, local[4]: stats 2, fused pass + violations
+write 6, rollup 3):
 
 0. (once per run) duplicate keys over the full table — global PK semantics,
    so duplicates straddling checkpoint batches are caught;

@@ -85,15 +85,13 @@ def spell_match(
     lines: DataFrame,
     templates: DataFrame,
     tau: float = TAU,
-    line_id: str = "line_id",
-    line_tokens: str = "tokens",
-    template_id: str = "template_id",
-    template_tokens: str = "template_tokens",
 ) -> DataFrame:
     """For each line, the best template by Spell's LCSMatch (Spell.py:112-133),
     else NULL (= the line would found a new cluster, Spell.py:252-255).
 
-    Output: (line_id, matched_template_id nullable, lcs_len nullable int).
+    Input: ``lines`` (line_id, tokens), ``templates`` (template_id,
+    template_tokens). Output: (line_id, matched_template_id nullable,
+    lcs_len nullable int).
     Candidates: distinct-token overlap ≥ 0.5·|seq| (the reference's set
     prefilter — templates outside it can never win anyway for tau ≥ 0.5,
     since lcs_len ≤ distinct-overlap is false in general with duplicate
@@ -102,14 +100,14 @@ def spell_match(
     asc template_id (pinned; reference: insertion order, Spell.py:124-127).
     """
     l = lines.select(
-        F.col(line_id).alias("_lid"),
-        F.col(line_tokens).alias("_ltok"),
-        F.size(line_tokens).alias("_n"),
+        F.col("line_id").alias("_lid"),
+        F.col("tokens").alias("_ltok"),
+        F.size("tokens").alias("_n"),
     )
     t = templates.select(
-        F.col(template_id).alias("_tid"),
-        F.col(template_tokens).alias("_ttok"),
-        F.size(template_tokens).alias("_m"),
+        F.col("template_id").alias("_tid"),
+        F.col("template_tokens").alias("_ttok"),
+        F.size("template_tokens").alias("_m"),
     )
     # ---- candidate generation: EQUI token join via the prefix principle,
     # never a per-line scan of the dim (a non-equi overlap predicate would
@@ -176,7 +174,7 @@ def spell_match(
     best = best.unionByName(empty_best)
     # every line gets a row; candidate-less lines surface as NULL/NULL
     return l.select("_lid", "_n").join(best, "_lid", "left").select(
-        F.col("_lid").alias(line_id),
+        F.col("_lid").alias("line_id"),
         F.when(F.col("_lcs") >= tau * F.col("_n"), F.col("_tid")).alias(
             "matched_template_id"
         ),

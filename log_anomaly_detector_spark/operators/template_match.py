@@ -40,30 +40,28 @@ def match_templates(
     lines: DataFrame,
     templates: DataFrame,
     st: float = 0.5,
-    line_id: str = "line_id",
-    line_tokens: str = "tokens",
-    template_id: str = "template_id",
-    template_tokens: str = "template_tokens",
 ) -> DataFrame:
     """For each line, the best template with similarity ≥ st, else NULL
     (= new template / anomaly flag, Drain.py:367-377).
 
-    Output: (line_id, template_id nullable, similarity double).
+    Input: ``lines`` (line_id, tokens), ``templates`` (template_id,
+    template_tokens). Output: (line_id, matched_template_id nullable,
+    similarity double).
     Tie-break: highest similarity, then most wildcards (the reference prefers
     the template with more parameters on ties, Drain.py:176-181), then
     template_id asc (pinned).
     """
     l = lines.select(
-        F.col(line_id).alias("_lid"),
-        F.col(line_tokens).alias("_ltok"),
-        F.size(line_tokens).alias("_n"),
-        F.element_at(line_tokens, 1).alias("_first"),
+        F.col("line_id").alias("_lid"),
+        F.col("tokens").alias("_ltok"),
+        F.size("tokens").alias("_n"),
+        F.element_at("tokens", 1).alias("_first"),
     )
     t = templates.select(
-        F.col(template_id).alias("_tid"),
-        F.col(template_tokens).alias("_ttok"),
-        F.size(template_tokens).alias("_n"),
-        F.element_at(template_tokens, 1).alias("_tfirst"),
+        F.col("template_id").alias("_tid"),
+        F.col("template_tokens").alias("_ttok"),
+        F.size("template_tokens").alias("_n"),
+        F.element_at("template_tokens", 1).alias("_tfirst"),
     )
     # prefix-tree analogue: same length AND (first tokens equal OR template
     # starts with a wildcard) — level-1/level-2 of Drain's tree
@@ -87,7 +85,7 @@ def match_templates(
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("_lid").alias(line_id),
+            F.col("_lid").alias("line_id"),
             F.when(F.col("_sim") >= st, F.col("_tid")).alias("matched_template_id"),
             F.col("_sim").alias("similarity"),
         )

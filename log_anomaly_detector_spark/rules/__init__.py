@@ -11,15 +11,11 @@ Scopes (SURVEY.md §2.9):
 
 The engine evaluates all partition-scope stats in ONE scan
 (`column_stats.stats_pass`) and all row-scope rules in ONE fused pass
-(`fused.fused_row_violations`) — the same plan on every layout; only the
-snapshot join and the uniqueness count shuffle, and neither does on the
-doc_id-bucketed layout.
+(`fused.fused_row_violations`), the package's only row-rule pack: the same
+plan on every layout; only the snapshot join and the uniqueness count
+shuffle, and neither does on the doc_id-bucketed layout.
 """
 
 from log_anomaly_detector_spark.rules.column_stats import stats_pass  # noqa: F401
 from log_anomaly_detector_spark.rules.fused import fused_row_violations  # noqa: F401
-from log_anomaly_detector_spark.rules.row_invariants import (  # noqa: F401
-    ntok_consistency_violations,
-    referential_violations,
-)
 from log_anomaly_detector_spark.rules.drift import drift_verdicts  # noqa: F401

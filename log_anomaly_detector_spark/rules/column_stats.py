@@ -47,7 +47,7 @@ def stats_pass(df: DataFrame, cfg: RuleConfig, sources: list[str]) -> DataFrame:
     bucket = _bucket_col(cfg)
     # NOTE: no aggregate here reads `tokens` — the fat column stays out of
     # this scan entirely (ReadSchema: doc_id, n_tok, source, part_id). The
-    # tokens null count comes from the row-rule scan (row_invariants
+    # tokens null count comes from the fused row-rule scan (rules/fused.py
     # 'null_tokens'), which reads tokens regardless.
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM in whole GiB (floor ``1g``): room for the driver
+    heap on any host, with the other half left to the Python workers and the
+    OS page cache."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(ram // 2**31, 1)}g"
+
+
 def get_spark(
     app_name: str = "log_anomaly_detector_spark",
     master: str | None = None,
@@ -24,6 +32,8 @@ def get_spark(
     cores this process may run on, ``os.sched_getaffinity``).
     ``shuffle_partitions`` default: the local core count — the 200 default
     over-parallelizes small local runs and under-parallelizes big ones.
+    ``spark.driver.memory``: ``$SPARK_DRIVER_MEMORY``, else half of physical
+    RAM (it only takes effect when this call starts the JVM).
     """
     # cap BLAS threading in the Python workers BEFORE the JVM (and therefore
     # the workers) inherit this environment: task-level parallelism already
@@ -55,7 +65,10 @@ def get_spark(
         # idempotent per-partition rewrite (the engine's upsert analogue):
         # only partitions present in the written DataFrame are replaced.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -61,7 +61,7 @@ def structure_lines(
     content_rexes: tuple[str, ...] = DEFAULT_CONTENT_REXES,
 ) -> DataFrame:
     """Structure a DataFrame of raw lines (columns: LineId, value) — the
-    shared core of the batch reader and the streaming foreachBatch path."""
+    core of ``read_structured_logs``, callable on lines from any source."""
     headers, pattern = generate_logformat_regex(logformat)
     # non-ASCII scrub BEFORE header extraction — reference replaces runs of
     # non-ASCII bytes with the <NASCII> sentinel on the raw line
@@ -69,8 +69,8 @@ def structure_lines(
     raw = raw.withColumn(
         "value", F.regexp_replace(F.col("value"), r"[^\x00-\x7F]+", "<NASCII>")
     )
-    # strip trailing line terminators (streaming callers can deliver CRLF
-    # payloads; read.text never does): Java's `$` matches BEFORE a final
+    # strip trailing line terminators (a caller's own DataFrame can deliver
+    # CRLF payloads; read.text never does): Java's `$` matches BEFORE a final
     # '\r', so the packing replace below would otherwise leave the '\r'
     # appended to the last field — where a per-group regexp_extract excludes
     # it. Stripping first keeps the two forms exactly equivalent.

@@ -45,3 +45,13 @@ def test_engine_zip_covers_hot_modules():
     assert b"pandas_udf" in sim, "similarity.py lost its Arrow kernels"
     mm = tree["log_anomaly_detector_spark/operators/multimodal.py"]
     assert b"isNotNull" in mm, "multimodal.py lost the NULL-payload guard"
+
+
+def test_every_packaged_module_imports():
+    """Every zip member imports, so a deletion that leaves a dangling import
+    (a stale ``__init__`` re-export) fails here, not at its first caller."""
+    import importlib
+
+    for arcname in sorted(make_pyfiles.tree_members()):
+        name = arcname[: -len(".py")].replace("/", ".").removesuffix(".__init__")
+        importlib.import_module(name)

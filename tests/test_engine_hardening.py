@@ -277,6 +277,38 @@ def test_default_master_uses_host_cores(monkeypatch):
     assert exc.value.args == (f"local[{len(os.sched_getaffinity(0))}]",)
 
 
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """With SPARK_DRIVER_MEMORY unset, the driver heap is half of physical
+    RAM in whole GiB, floored at 1g — not a fixed size beyond a small host."""
+    from pyspark.sql import SparkSession
+
+    from log_anomaly_detector_spark import session
+
+    class Captured(Exception):
+        pass
+
+    config = SparkSession.Builder.config
+
+    def capture_heap(self, key=None, value=None, *args, **kwargs):
+        if key == "spark.driver.memory":
+            raise Captured(value)
+        return config(self, key, value, *args, **kwargs)
+
+    def heap():
+        with pytest.raises(Captured) as exc:
+            session.get_spark()
+        return exc.value.args[0]
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "config", capture_heap)
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert heap() == f"{max(ram // 2**31, 1)}g"
+    monkeypatch.setattr(session.os, "sysconf", lambda name: 1024)
+    assert heap() == "1g"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert heap() == "3g"
+
+
 def test_allowed_sources_is_a_set(spark, tmp_path):
     """A NULL row and a repeated row in the allowed-sources dim change no
     verdict and no violation row: the same run as over the clean dim, and

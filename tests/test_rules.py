@@ -9,10 +9,6 @@ from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
 from log_anomaly_detector_spark.config import RuleConfig
 from log_anomaly_detector_spark.rules.drift import chi2_norm, ks_d, psi
 from log_anomaly_detector_spark.rules.fused import first_mismatch, fused_row_violations
-from log_anomaly_detector_spark.rules.row_invariants import (
-    ntok_consistency_violations,
-    referential_violations,
-)
 from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
@@ -45,7 +41,9 @@ def test_ntok_consistency(spark):
         [("a", [1, 2], 2, "s", 0), ("b", [1, 2, 3], 2, "s", 0), ("c", [], 0, "s", 1)],
         SEQ_SCHEMA,
     )
-    got = {r["doc_id"]: r for r in ntok_consistency_violations(df).collect()}
+    viol = _row_rules(spark, df)
+    assert {r["rule_id"] for r in viol} == {"n_tok_consistency"}
+    got = {r["doc_id"]: r for r in viol}
     assert set(got) == {"b"}
     assert got["b"]["observed"] == "n_tok=2" and got["b"]["expected"] == "size(tokens)=3"
 
@@ -55,9 +53,11 @@ def test_referential(spark):
         [("a", [1], 1, "ok", 0), ("b", [1], 1, "bad", 0), ("c", [1], 1, None, 0)],
         SEQ_SCHEMA,
     )
-    dim = spark.createDataFrame([("ok", "d")], "source string, description string")
-    got = referential_violations(df, dim).collect()
-    assert [(r["doc_id"], r["observed"]) for r in got] == [("b", "bad")]
+    # a NULL source is a null-rate matter (R1), not referential
+    got = _row_rules(spark, df, sources=("ok",))
+    assert [(r["doc_id"], r["rule_id"], r["observed"], r["expected"]) for r in got] == [
+        ("b", "referential", "bad", "member of allowed_sources")
+    ]
 
 
 def test_uniqueness(spark):

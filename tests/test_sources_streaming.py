@@ -1,21 +1,12 @@
-"""Sources (raw-log regex scan, sequence file) + Structured Streaming
-micro-batch validation."""
+"""Sources: raw-log regex scan, sequence file, pinned-schema CSV."""
 
 from __future__ import annotations
 
-import os
-
-from log_anomaly_detector_spark.datagen import (
-    GenSpec,
-    gen_allowed_sources,
-    gen_sequences,
-)
 from log_anomaly_detector_spark.sources import (
     generate_logformat_regex,
     read_sequence_file,
     read_structured_logs,
 )
-from log_anomaly_detector_spark.streaming import validate_stream
 
 LOG_LINES = [
     "081109 203615 148 INFO dfs.DataNode$PacketResponder: "
@@ -107,391 +98,3 @@ def test_csv_pinned_and_sequence_sink_roundtrip(spark, tmp_path):
     write_sequence_text(seqs, out)
     back = read_sequence_file(spark, out)
     assert sorted(tuple(r["tokens"]) for r in back.collect()) == [(1, 2, 3), (9,)]
-
-
-def test_windowed_streaming_counts(spark, tmp_path):
-    from log_anomaly_detector_spark.streaming.windowed import run_windowed_counts_once
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    in_dir = tmp_path / "events_in"
-    in_dir.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", in_dir / "part-0.parquet")
-    res = run_windowed_counts_once(
-        spark, str(in_dir), schema, str(tmp_path / "ckpt")
-    )
-    batch = (
-        spark.read.parquet(str(in_dir))
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .count()
-    )
-    assert res.count() == batch.count()
-    assert res.agg(F.sum("n")).first()[0] == 1000  # all events counted
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Ingest dedup: byte-copies AND whitespace/case variants are admitted
-    once, across micro-batch boundaries, with fingerprint-keyed bounded
-    state; a resumed run (same checkpoint) still drops duplicates of
-    previously-admitted documents."""
-    import datetime as dt
-
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-    )
-
-    in_dir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def land(rows):
-        # file streams don't recurse — each batch lands as new part files
-        # appended to the one watched directory
-        spark.createDataFrame(
-            rows, "doc_id long, ts timestamp, text string"
-        ).coalesce(1).write.mode("append").parquet(str(in_dir))
-
-    land(
-        [
-            (1, t0, "the quick brown fox"),
-            (2, t0, "jumped over the dog"),
-            (3, t0, "the quick brown fox"),        # in-batch byte copy
-            (4, t0, "  The   QUICK brown fox  "),  # normalized variant
-        ],
-    )
-    res1 = run_dedup_stream_once(spark, str(in_dir), ckpt, out)
-    admitted1 = sorted(r["doc_id"] for r in res1.collect())
-    assert len(admitted1) == 2  # one fox, one dog
-    assert 2 in admitted1
-
-    # second run, same checkpoint: a cross-RUN duplicate within the
-    # watermark is dropped; a genuinely new doc is admitted
-    land(
-        [
-            (5, t0 + dt.timedelta(minutes=5), "the quick brown fox"),
-            (6, t0 + dt.timedelta(minutes=5), "a genuinely new document"),
-        ],
-    )
-    res2 = run_dedup_stream_once(spark, str(in_dir), ckpt, out)
-    admitted2 = sorted(r["doc_id"] for r in res2.collect())  # cumulative sink
-    assert 6 in admitted2 and 5 not in admitted2
-    assert len(admitted2) == 3  # run-1's two + the one new doc
-    # every admitted row carries the md5 fingerprint (joinable to the batch
-    # exact-dup sweep)
-    assert all(len(r["fp"]) == 32 for r in res2.collect())
-
-
-def test_streaming_dedup_zero_batch_drain(spark, tmp_path):
-    """A drain that fires no micro-batch (empty landing dir, nothing written
-    yet) returns an empty typed result, not PATH_NOT_FOUND on the sink."""
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    res = run_dedup_stream_once(
-        spark, str(in_dir), str(tmp_path / "ckpt"), str(tmp_path / "out")
-    )
-    assert res.count() == 0
-    assert [f.name for f in res.schema.fields] == ["doc_id", "ts", "fp"]
-
-
-def test_streaming_dedup_zero_row_batch_reads_typed(spark, tmp_path):
-    """A committed ZERO-ROW batch (empty input part file → batch fires,
-    sink logs the batch with no data files) must read back as an empty
-    TYPED result without tripping the mismatched-out_dir guard: the sink's
-    `_spark_metadata` entry lets the read succeed with the written schema,
-    so 'committed batches + read failure' remains a reliable mismatch
-    signal (review finding: the guard must not assume committed ⇒ data
-    FILES, only committed ⇒ sink metadata entry)."""
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-    )
-
-    in_dir = tmp_path / "in"
-    spark.createDataFrame(
-        [], "doc_id long, ts timestamp, text string"
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    res = run_dedup_stream_once(
-        spark, str(in_dir), str(tmp_path / "ckpt"), str(tmp_path / "out")
-    )
-    assert res.count() == 0
-    assert [f.name for f in res.schema.fields] == ["doc_id", "ts", "fp"]
-
-
-def test_sweep_on_fresh_or_missing_sink_is_empty_typed(spark, tmp_path):
-    """A scheduled sweep firing before the stream ever wrote data returns
-    an empty typed result (absent dir AND metadata-only dir), instead of
-    dying on the sink read."""
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-        sweep_sink_stragglers,
-    )
-
-    missing = sweep_sink_stragglers(spark, str(tmp_path / "never_written"))
-    assert missing.count() == 0
-    assert [f.name for f in missing.schema.fields] == [
-        "fp", "n_admitted", "keep_doc_id", "first_ts",
-    ]
-    # metadata-only sink: start a drain with an empty landing dir — the
-    # sink dir gets `_spark_metadata` eagerly but no batch ever fires
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    run_dedup_stream_once(spark, str(in_dir), str(tmp_path / "ckpt"), out)
-    meta_only = sweep_sink_stragglers(spark, out)
-    assert meta_only.count() == 0
-
-
-def test_streaming_dedup_warm_checkpoint_wrong_outdir_raises(spark, tmp_path):
-    """A WARM checkpoint (committed batches) whose sink dir is missing means
-    the caller resumed with a mismatched out_dir — that must raise, not read
-    as an empty corpus (r4 ADVICE: the blanket PATH_NOT_FOUND catch masked
-    the misconfiguration)."""
-    import datetime as dt
-
-    import pytest
-
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-    )
-
-    in_dir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(1, dt.datetime(2026, 1, 1, 12, 0, 0), "a document")],
-        "doc_id long, ts timestamp, text string",
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    res = run_dedup_stream_once(spark, str(in_dir), ckpt, str(tmp_path / "out"))
-    assert res.count() == 1
-    # resume the warm checkpoint against a NEVER-written sink path with no
-    # new input: zero batches fire, the wrong sink stays absent → error
-    with pytest.raises(RuntimeError, match="mismatched out_dir"):
-        run_dedup_stream_once(
-            spark, str(in_dir), ckpt, str(tmp_path / "elsewhere")
-        )
-
-
-def test_streaming_dedup_batch_sweep_catches_late_straggler(spark, tmp_path):
-    """The documented composition: a duplicate arriving LATER than the
-    watermark horizon is re-admitted by the stream (bounded-state trade),
-    and the periodic batch sweep over the sink catches it, keeping the
-    earliest admission."""
-    import datetime as dt
-
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-        sweep_sink_stragglers,
-    )
-
-    in_dir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def land(rows):
-        spark.createDataFrame(
-            rows, "doc_id long, ts timestamp, text string"
-        ).coalesce(1).write.mode("append").parquet(str(in_dir))
-
-    # run 1: the original document (watermark horizon = 1 hour)
-    land([(1, t0, "the quick brown fox"), (2, t0, "some other doc")])
-    run_dedup_stream_once(spark, str(in_dir), ckpt, out)
-    # run 2: advance event time far past t0 + 1h so doc 1's dedup state
-    # EXPIRES at the end of this batch (watermark = max_ts - 1h = t0 + 2h)
-    land([(3, t0 + dt.timedelta(hours=3), "watermark advancer")])
-    run_dedup_stream_once(spark, str(in_dir), ckpt, out)
-    # run 3: the straggler duplicate — state expired, so the stream
-    # re-admits it (the documented trade for bounded state)
-    land([(4, t0 + dt.timedelta(hours=3, minutes=30), "the quick brown fox")])
-    res3 = run_dedup_stream_once(spark, str(in_dir), ckpt, out)
-    admitted = sorted(r["doc_id"] for r in res3.collect())
-    assert admitted == [1, 2, 3, 4], admitted  # straggler got through
-
-    # the batch sweep over the sink catches exactly the straggler pair and
-    # keeps the earliest admission
-    stragglers = sweep_sink_stragglers(spark, out).collect()
-    assert len(stragglers) == 1
-    s = stragglers[0]
-    assert s["n_admitted"] == 2 and s["keep_doc_id"] == 1
-    assert s["first_ts"] == t0
-
-
-def test_streaming_dedup_wide_watermark_leaves_no_stragglers(spark, tmp_path):
-    """Second watermark setting for the straggler composition (r5 verdict
-    optional-hardening): with a horizon WIDE enough to still hold doc 1's
-    state when the duplicate lands (1 day vs the 1-hour test above), the
-    stream itself drops the straggler online — and the batch sweep over the
-    sink must then find NOTHING, i.e. the stream/sweep composition never
-    double-counts a duplicate that was already handled in-state. Together
-    the two tests pin the trade: watermark width buys online recall, the
-    sweep recovers exactly what the chosen width gave up."""
-    import datetime as dt
-
-    from log_anomaly_detector_spark.streaming.dedup_stream import (
-        run_dedup_stream_once,
-        sweep_sink_stragglers,
-    )
-
-    in_dir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def land(rows):
-        spark.createDataFrame(
-            rows, "doc_id long, ts timestamp, text string"
-        ).coalesce(1).write.mode("append").parquet(str(in_dir))
-
-    # identical landing schedule to the 1-hour test above — only the
-    # watermark differs
-    land([(1, t0, "the quick brown fox"), (2, t0, "some other doc")])
-    run_dedup_stream_once(spark, str(in_dir), ckpt, out, watermark="1 day")
-    land([(3, t0 + dt.timedelta(hours=3), "watermark advancer")])
-    run_dedup_stream_once(spark, str(in_dir), ckpt, out, watermark="1 day")
-    # the would-be straggler: watermark = max_ts - 1 day < t0, so doc 1's
-    # state is still live and the stream dedups it online
-    land([(4, t0 + dt.timedelta(hours=3, minutes=30), "the quick brown fox")])
-    res3 = run_dedup_stream_once(
-        spark, str(in_dir), ckpt, out, watermark="1 day"
-    )
-    admitted = sorted(r["doc_id"] for r in res3.collect())
-    assert admitted == [1, 2, 3], admitted  # doc 4 dropped in-state
-
-    # nothing left for the offline sweep — no double-counting
-    assert sweep_sink_stragglers(spark, out).count() == 0
-
-
-def test_stateful_streaming_accumulates_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state persists across micro-batches — feeding
-    the same docs in two batches doubles the accumulated counts."""
-    from log_anomaly_detector_spark.streaming.stateful import run_stateful_once
-
-    rows = [
-        ("d1", [1, 2], 2, "s", 0),
-        ("d1", [3], 1, "s", 0),
-        ("d2", [1, 2, 3], 99, "s", 0),  # n_tok mismatch → violation
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
-    )
-    in_dir = tmp_path / "stream_in"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    df.coalesce(1).write.mode("overwrite").parquet(str(in_dir / "batch1"))
-    # file source treats the dir as the stream; write two separate files
-    import shutil
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    for i, f in enumerate((in_dir / "batch1").glob("*.parquet")):
-        shutil.copy(f, flat / f"b1_{i}.parquet")
-    out = str(tmp_path / "scores_out")
-    res1 = run_stateful_once(spark, str(flat), ckpt, out)
-    r1 = {r["doc_id"]: r for r in res1.collect()}
-    assert r1["d1"]["n_rows"] == 2 and r1["d1"]["n_tok_sum"] == 3
-    assert r1["d2"]["n_bad"] == 1 and r1["d2"]["label"] == "Anomaly"
-    assert r1["d1"]["label"] == "Normal"
-
-    # second batch: same rows land again → state accumulates
-    for i, f in enumerate((in_dir / "batch1").glob("*.parquet")):
-        shutil.copy(f, flat / f"b2_{i}.parquet")
-    res2 = run_stateful_once(spark, str(flat), ckpt, out)
-    r2 = {r["doc_id"]: r for r in res2.collect()}
-    assert r2["d1"]["n_rows"] == 4 and r2["d1"]["n_tok_sum"] == 6
-    assert r2["d2"]["n_rows"] == 2 and r2["d2"]["n_bad"] == 2
-
-
-def test_streaming_validation(spark, tmp_path):
-    spec = GenSpec(n_docs=2_000, n_parts=4, seed=3)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    seqs = gen_sequences(spark, spec)
-    seqs.write.mode("overwrite").parquet(in_dir)
-    allowed = gen_allowed_sources(spark)
-
-    q = validate_stream(spark, in_dir, out_dir, allowed)
-    assert q.lastProgress is not None
-
-    viol = spark.read.parquet(os.path.join(out_dir, "violations_stream"))
-    got = {r["rule_id"] for r in viol.select("rule_id").distinct().collect()}
-    assert got == {"n_tok_consistency", "referential"}
-    # batch output equals the batch-mode rule output
-    from log_anomaly_detector_spark.rules.row_invariants import (
-        ntok_consistency_violations,
-        referential_violations,
-    )
-
-    batch = (
-        ntok_consistency_violations(seqs)
-        .unionByName(referential_violations(seqs, allowed))
-        .count()
-    )
-    assert viol.count() == batch
-
-
-def test_template_match_stream(spark, tmp_path):
-    """Online v2 loop: stream of raw lines vs a warm dim — known-shape lines
-    match, novel lines flag anomalous; a restart consumes only new files."""
-    from log_anomaly_detector_spark.streaming.template_stream import (
-        match_log_stream,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    (in_dir / "a.log").write_text(
-        "081109 203615 143 INFO dfs.DataNode: Receiving block blk_1 src 10.0.0.1\n"
-        "081109 203616 143 WARN dfs.Weird: Completely novel shape here now ok\n"
-    )
-    warm = spark.createDataFrame(
-        [("Receiving block blk_<*> src <*>",)], "template string"
-    )
-    match_log_stream(spark, str(in_dir), warm, out, st=0.5)
-    rows = {r["Content"]: r for r in spark.read.parquet(f"{out}/matched").collect()}
-    assert rows["Receiving block blk_1 src 10.0.0.1"]["is_anomaly"] is False
-    assert rows["Completely novel shape here now ok"]["is_anomaly"] is True
-
-    # restart with one NEW file → only its lines are appended
-    (in_dir / "b.log").write_text(
-        "081109 203617 143 INFO dfs.DataNode: Receiving block blk_2 src 10.0.0.2\n"
-    )
-    match_log_stream(spark, str(in_dir), warm, out, st=0.5)
-    df = spark.read.parquet(f"{out}/matched")
-    assert df.count() == 3
-    assert df.filter("is_anomaly").count() == 1
-
-
-def test_match_log_stream_spell_matcher(spark, tmp_path):
-    """The streaming matcher's Spell (LCS) variant: same lifecycle, LCS
-    acceptance — known-shape lines match with similarity 1.0 (full-length
-    LCS against their own warm template), novel shapes flag anomalous."""
-    from log_anomaly_detector_spark.streaming.template_stream import (
-        match_log_stream,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    (in_dir / "a.log").write_text(
-        "081109 203615 143 INFO dfs.DataNode: Receiving block blk_1 src 10.0.0.1\n"
-        "081109 203616 143 WARN dfs.Weird: Completely novel shape here now ok\n"
-    )
-    warm = spark.createDataFrame(
-        [("Receiving block blk_<*> src <*>",)], "template string"
-    )
-    match_log_stream(spark, str(in_dir), warm, out, st=0.5, matcher="spell")
-    rows = {r["Content"]: r for r in spark.read.parquet(f"{out}/matched").collect()}
-    hit = rows["Receiving block blk_1 src 10.0.0.1"]
-    assert hit["is_anomaly"] is False
-    assert hit["similarity"] == 1.0
-    assert rows["Completely novel shape here now ok"]["is_anomaly"] is True
