@@ -204,7 +204,8 @@ def gen_reference_snapshot(spark: SparkSession, spec: GenSpec) -> DataFrame:
 
 
 def gen_allowed_sources(spark: SparkSession) -> DataFrame:
-    """Referential dimension (F2) — tiny, always broadcast."""
+    """Referential dimension (F2) — tiny; the engine collects it once into a
+    driver set."""
     rows = [(f"source_{i:02d}", f"synthetic component {i}") for i in range(N_SOURCES)]
     return spark.createDataFrame(rows, "source string, description string")
 

@@ -5,18 +5,20 @@ One run executes a fixed number of jobs regardless of row count (the shape
 that survives 10^12 rows): one run-global duplicate-key pass, then three
 passes per checkpoint batch, each over row-sized input, and a driver
 commit. AQE splits each shuffle into query-stage jobs, so the three passes
-run as about 11 Spark jobs per batch (a job-group probe on the bucketed
-layout, 200k docs, 8 batches, local[4]: stats 2, fused pass + violations
-write 6, rollup 3):
+run as 8 Spark jobs per batch (a job-group probe on the bucketed layout,
+200k docs, 8 parts × 32 buckets, ``batch_parts=1``, local[4]: stats 2,
+fused pass + violations write 3, rollup 3; once per run, the sources
+collect 1 and the duplicate keys 3):
 
 0. (once per run) duplicate keys over the full table — global PK semantics,
    so duplicates straddling checkpoint batches are caught;
 1. the single stats scan (partial+final hash agg → one tiny row/partition);
-2. the fused row-rule pass (``rules/fused.py``: snapshot join, broadcast
-   referential mark, uniqueness count from job 0's keys or a doc_id window,
-   column exprs, Catalyst first-mismatch on the candidates) — one plan on
-   every layout, zero Exchange on the doc_id-bucketed one — written straight
-   to the violations table (no driver round-trip of row data);
+2. the fused row-rule pass (``rules/fused.py``: snapshot join, uniqueness
+   count from job 0's keys or a doc_id window, column exprs with referential
+   as a literal ``isin`` over the driver's source set, Catalyst
+   first-mismatch on the candidates) — one plan with no persist on every
+   layout, zero Exchange on the doc_id-bucketed one — written straight to
+   the violations table (no driver round-trip of row data);
 3. a tiny aggregate over the *written* violations, read with their known
    schema (no inference job): distinct violating docs per partition and
    rule; the uniqueness rows/docs also make the R3 distinct doc_id count
@@ -162,15 +164,10 @@ def run_validation(
 
             # job 2: row rules → violations table (delete+insert, idempotent)
             t1 = time.time()
-            viol, cache_handle = fused_row_violations(sub, snapshot, allowed, dups)
-            try:
-                # violations are tiny — coalesce the writers so each partition
-                # dir gets one file instead of one per upstream task
-                storage.overwrite_partitions(
-                    viol.repartition("part_id"), viol_path, batch
-                )
-            finally:
-                cache_handle.unpersist()
+            viol, _ = fused_row_violations(sub, snapshot, sources, dups)
+            # violations are tiny — coalesce the writers so each partition dir
+            # gets one file instead of one per upstream task
+            storage.overwrite_partitions(viol.repartition("part_id"), viol_path, batch)
             job_secs["violations"] += time.time() - t1
             t2 = time.time()
 

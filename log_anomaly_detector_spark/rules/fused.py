@@ -1,7 +1,7 @@
 """The engine's row-rule plan: every row-scope rule in one fused pass.
 
-One projection over ``seqs`` ⟕ snapshot ⟕ allowed-sources evaluates the
-whole row-scope rule pack:
+One plan over ``seqs`` ⟕ snapshot evaluates the whole row-scope rule pack:
+snapshot join → uniqueness count → one exploded projection → one filter.
 
 * the snapshot join is a sort-merge on doc_id — storage-co-located (no
   Exchange) when sequences AND snapshot are bucketed+sorted by doc_id, one
@@ -9,12 +9,15 @@ whole row-scope rule pack:
 * the uniqueness count is either a join against the run-global duplicate-key
   set (``dups``) or a `Window.partitionBy(doc_id)`; both reuse the snapshot
   join's doc_id partitioning (no extra Exchange on the row side);
-* n_tok consistency, referential (broadcast), NULL tokens, and the
-  token-equality *candidate* flag are column expressions in the same
-  projection, exploded into violation rows;
-* the exploded rows (≈ violations only) are persisted, and only the
-  token-equality candidates get the first-mismatch expression
-  (``first_mismatch``) — the cache keeps the single big scan single.
+* n_tok consistency, NULL tokens, the token-equality *candidate* flag and
+  referential are column expressions in the same projection, exploded into
+  violation rows. Referential is a literal ``source IN (…)`` over the
+  driver's allowed-source set: the dim is never re-read, joined or
+  broadcast;
+* after the explode (rows ≈ violations only) the candidate rows, and only
+  they, get the first-mismatch expression (``first_mismatch``), and
+  candidates whose arrays turn out equal are filtered away. Nothing is
+  persisted: the big scan runs once, in the write's own job.
 
 Token equality (R7) is exact array equality against the reference snapshot,
 the model-free analogue of the reference's per-masked-slot top-k check of the
@@ -28,9 +31,10 @@ On the doc_id-bucketed layout the whole plan has zero shuffle Exchanges
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 _CAND = "_token_eq_candidate"
 
@@ -66,33 +70,26 @@ def first_mismatch(a: str, b: str) -> Column:
 def fused_row_violations(
     seqs: DataFrame,
     snapshot: DataFrame,
-    allowed: DataFrame,
+    sources: Iterable[str] | DataFrame,
     dups: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (violations, cache_handle) — caller unpersists the handle
-    after materializing the violations.
+    """Returns (violations, rows): ``rows`` is the exploded projection
+    before the token-equality filter, with the ``_token_eq_candidate`` rows.
 
-    ``dups`` (doc_id, dup_cnt), when given, is the duplicate-key set computed
-    over the FULL table (engine job 0) so duplicates spanning checkpoint
-    batches are caught; on the doc_id-bucketed layout that join is co-located
-    (no Exchange) just like the snapshot join. Without ``dups`` the count is
-    a window over ``seqs`` itself — table-global when ``seqs`` is the whole
-    table (the engine's single full batch).
+    ``sources`` is the allowed-source set; a NULL or repeated entry changes
+    nothing. ``dups`` (doc_id, dup_cnt), when given, is the duplicate-key set
+    computed over the FULL table (engine job 0) so duplicates spanning
+    checkpoint batches are caught; on the doc_id-bucketed layout that join is
+    co-located (no Exchange) just like the snapshot join. Without ``dups``
+    the count is a window over ``seqs`` itself — table-global when ``seqs``
+    is the whole table (the engine's single full batch).
     """
-    joined = seqs.join(
-        snapshot.select("doc_id", "ref_tokens"), "doc_id", "left"
-    ).join(
-        # the dim is a set: a repeated row would fan the join out. Its one
-        # partition needs no Exchange for the distinct.
-        F.broadcast(
-            allowed.select("source")
-            .coalesce(1)
-            .distinct()
-            .select("source", F.lit(True).alias("_in_dim"))
-        ),
-        "source",
-        "left",
-    )
+    if isinstance(sources, DataFrame):
+        # the dim itself, as perfbench's replay passes it; this goes when the
+        # replay reads the engine's own spans (ROADMAP direction 1)
+        sources = [r["source"] for r in sources.select("source").collect()]
+    allowed = sorted(set(sources) - {None})
+    joined = seqs.join(snapshot.select("doc_id", "ref_tokens"), "doc_id", "left")
     if dups is None:
         # window computed as its own projection first — Spark cannot resolve
         # a window expression nested inside the explode/filter lambda below
@@ -125,7 +122,7 @@ def fused_row_violations(
             F.concat(F.lit("size(tokens)="), F.size("tokens").cast("string")),
         ),
         v(
-            F.col("source").isNotNull() & F.col("_in_dim").isNull(),
+            F.col("source").isNotNull() & ~F.col("source").isin(allowed),
             "referential",
             F.col("source"),
             F.lit("member of allowed_sources"),
@@ -150,7 +147,7 @@ def fused_row_violations(
             F.lit(""),
         ),
     )
-    fused = joined.select(
+    rows = joined.select(
         "part_id",
         "doc_id",
         "tokens",
@@ -158,28 +155,31 @@ def fused_row_violations(
         F.explode(F.filter(viols, lambda x: x.isNotNull())).alias("v"),
     ).select("part_id", "doc_id", "tokens", "ref_tokens", "v.*")
 
-    # post-explode rows ≈ violations only — tiny at healthy violation rates;
-    # persist so the two union branches share the single big scan
-    fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-
-    plain = fused.filter(F.col("rule_id") != _CAND).select(
-        "part_id", "doc_id", "rule_id", "observed", "expected"
-    )
-    tok = (
-        fused.filter(F.col("rule_id") == _CAND)
-        .withColumn("m", first_mismatch("tokens", "ref_tokens"))
-        .filter(F.col("m.idx") >= 0)
+    # Catalyst HOFs do not codegen: the guard keeps zip_with off every
+    # non-candidate row. A non-candidate's ``m`` is NULL and is kept.
+    cand = F.col("rule_id") == _CAND
+    m = F.col("m")
+    viol = (
+        rows.withColumn("m", F.when(cand, first_mismatch("tokens", "ref_tokens")))
+        .filter(F.coalesce(m.idx, F.lit(0)) >= 0)
         .select(
             "part_id",
             "doc_id",
-            F.lit("token_equality").alias("rule_id"),
-            F.concat(
-                F.lit("tokens["),
-                F.col("m.idx").cast("string"),
-                F.lit("]="),
-                F.col("m.obs").cast("string"),
-            ).alias("observed"),
-            F.concat(F.lit("ref="), F.col("m.exp").cast("string")).alias("expected"),
+            F.when(cand, F.lit("token_equality"))
+            .otherwise(F.col("rule_id"))
+            .alias("rule_id"),
+            F.when(
+                cand,
+                F.concat(
+                    F.lit("tokens["),
+                    m.idx.cast("string"),
+                    F.lit("]="),
+                    m.obs.cast("string"),
+                ),
+            ).otherwise(F.col("observed")).alias("observed"),
+            F.when(cand, F.concat(F.lit("ref="), m.exp.cast("string")))
+            .otherwise(F.col("expected"))
+            .alias("expected"),
         )
     )
-    return plain.unionByName(tok), fused
+    return viol, rows

@@ -8,7 +8,9 @@
 * an all-NULL n_tok partition fails the n_tok_stats rule instead of raising;
 * partition planning comes from storage metadata, not a data scan;
 * every job of a run carries the caller's job group;
-* the allowed-sources dim is a set: a NULL or repeated row changes nothing.
+* the allowed-sources dim is a set: a NULL or repeated row changes nothing,
+  and an empty one makes every non-NULL source referential;
+* one batch's fused pass + violations write runs a pinned number of jobs.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from log_anomaly_detector_spark.golden import (
 )
 from log_anomaly_detector_spark.rules.column_stats import stats_verdicts
 from log_anomaly_detector_spark.rules.fused import fused_row_violations
+from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 SPEC = GenSpec(n_docs=2_000, n_parts=4, seed=11)
 
@@ -161,11 +164,51 @@ def test_violation_schema_is_the_fused_output(spark, world):
     instead of inferring it, so the DDL must name what the fused pass
     writes."""
     seqs, snap, allowed, _, _ = world
-    viol, handle = fused_row_violations(seqs, snap, allowed)
-    handle.unpersist()
+    # the dim DataFrame, as perfbench's replay passes it, not the driver set
+    viol, _ = fused_row_violations(seqs, snap, allowed)
     assert viol.schema.simpleString() == (
         StructType.fromDDL(VIOLATION_SCHEMA).simpleString()
     )
+
+
+def test_fused_write_job_count(spark, tmp_path):
+    """One batch's fused pass + violations write on the doc_id-bucketed
+    layout runs 4 Spark jobs (counted by job group; the UI is off). A plan
+    that persists the exploded rows, unions two branches of that cache and
+    joins the allowed-sources dim runs 7 here."""
+    spec = GenSpec(n_docs=2_000, n_parts=2, seed=5)
+    storage.write_bucketed(
+        gen_sequences(spark, spec), "j_seqb", str(tmp_path / "seqb"),
+        n_buckets=4, partition_col="part_id",
+    )
+    storage.write_bucketed(
+        gen_reference_snapshot(spark, spec), "j_snapb", str(tmp_path / "snapb"),
+        n_buckets=4,
+    )
+    seqs = storage.register_bucketed(
+        spark, "j_seqb_r", storage.SEQ_DDL, str(tmp_path / "seqb"),
+        n_buckets=4, partition_col="part_id",
+    )
+    snap = storage.register_bucketed(
+        spark, "j_snapb_r", storage.SNAP_DDL, str(tmp_path / "snapb"), n_buckets=4
+    )
+    sources = [r["source"] for r in gen_allowed_sources(spark).collect()]
+    dups = duplicate_keys(seqs, CFG).persist()
+    dups.count()
+    sc = spark.sparkContext
+    group = "fused-write"
+    sc.setJobGroup(group, "fused pass + violations write")
+    try:
+        sub = seqs.filter(F.col("part_id") == 0)
+        viol, _ = fused_row_violations(sub, snap, sources, dups)
+        storage.overwrite_partitions(
+            viol.repartition("part_id"), str(tmp_path / "viol"), [0]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        dups.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert spark.read.parquet(str(tmp_path / "viol")).count() > 0
 
 
 def test_manifest_tolerates_torn_tail(tmp_path):
@@ -354,3 +397,25 @@ def test_allowed_sources_is_a_set(spark, tmp_path):
     }
     seqs.unpersist()
     snap.unpersist()
+
+
+def test_empty_allowed_sources(spark, world, tmp_path):
+    """A zero-row allowed-sources dim makes every non-NULL source a
+    referential violation; violations and labels equal the golden ones."""
+    seqs, snap, allowed, baseline, _ = world
+    out = str(tmp_path / "out")
+    res = run_validation(
+        spark, seqs, snap, allowed.limit(0), baseline, out, CFG, input_digest="x"
+    )
+    seq_pdf, snap_pdf = seqs.toPandas(), snap.toPandas()
+    gold_v = golden_row_violations(seq_pdf, snap_pdf, set())
+    viol = spark.read.parquet(f"{out}/violations")
+    eng = {tuple(r) for r in viol.select("part_id", "doc_id", "rule_id").collect()}
+    assert eng == set(map(tuple, gold_v.values))
+    assert (gold_v["rule_id"] == "referential").any()
+    gold = golden_labels(
+        seq_pdf, gold_v, golden_partition_verdicts(seq_pdf, baseline, CFG, []), CFG
+    )
+    assert {v["part_id"]: (v["label"], v["score"]) for v in res.verdicts} == {
+        r.part_id: (r.label, r.score) for r in gold.itertuples(index=False)
+    }

@@ -13,7 +13,6 @@ from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
 SNAP_SCHEMA = "doc_id string, ref_tokens array<int>"
-DIM_SCHEMA = "source string, description string"
 
 # the two ways the fused pass counts uniqueness: a doc_id window over its own
 # input (single full batch) or a join against run-global duplicate keys
@@ -24,12 +23,8 @@ def _row_rules(spark, df, snap=None, sources=("s",), dups=None):
     """Collect the fused row pass over ``df`` (empty snapshot and allowed
     source "s" by default)."""
     snap = snap if snap is not None else spark.createDataFrame([], SNAP_SCHEMA)
-    dim = spark.createDataFrame([(s, "d") for s in sources], DIM_SCHEMA)
-    viol, handle = fused_row_violations(df, snap, dim, dups)
-    try:
-        return viol.collect()
-    finally:
-        handle.unpersist()
+    viol, _ = fused_row_violations(df, snap, sources, dups)
+    return viol.collect()
 
 
 def _dups(df, variant):
@@ -57,6 +52,12 @@ def test_referential(spark):
     got = _row_rules(spark, df, sources=("ok",))
     assert [(r["doc_id"], r["rule_id"], r["observed"], r["expected"]) for r in got] == [
         ("b", "referential", "bad", "member of allowed_sources")
+    ]
+    # an empty dim: every non-NULL source is referential, a NULL one still not
+    got = _row_rules(spark, df, sources=())
+    assert sorted((r["doc_id"], r["rule_id"], r["observed"]) for r in got) == [
+        ("a", "referential", "ok"),
+        ("b", "referential", "bad"),
     ]
 
 
@@ -242,17 +243,13 @@ def test_uniqueness_pathological_skew(spark):
     )
     df = hot.unionByName(cold)
     snap = spark.createDataFrame([], SNAP_SCHEMA)
-    dim = spark.createDataFrame([("s", "d")], DIM_SCHEMA)
     for variant in DUPS_VARIANTS:
-        viol, handle = fused_row_violations(df, snap, dim, _dups(df, variant))
-        try:
-            got = (
-                viol.groupBy("rule_id", "doc_id", "observed")
-                .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("part_id"))
-                .collect()
-            )
-        finally:
-            handle.unpersist()
+        viol, _ = fused_row_violations(df, snap, ["s"], _dups(df, variant))
+        got = (
+            viol.groupBy("rule_id", "doc_id", "observed")
+            .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("part_id"))
+            .collect()
+        )
         assert [tuple(r) for r in got] == [
             ("uniqueness", "blk_hot", "count=200000", 200_000, 4)
         ], variant
@@ -289,7 +286,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     snap = storage.register_bucketed(
         spark, "t_snapb_r", storage.SNAP_DDL, str(tmp_path / "snapb"), n_buckets=4
     )
-    allowed = gen_allowed_sources(spark)
+    sources = [r["source"] for r in gen_allowed_sources(spark).collect()]
     plain_seqs = spark.read.parquet(str(tmp_path / "seqb"))
     plain_snap = spark.read.parquet(str(tmp_path / "snapb"))
 
@@ -298,16 +295,13 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
             None if variant == "window"
             else duplicate_keys(s, RuleConfig(uniqueness_mode=variant))
         )
-        viol, handle = fused_row_violations(s, sn, allowed, dups)
-        try:
-            facts = plan_facts(handle)
-            assert facts["sort_merge_join"], "snapshot join must not broadcast here"
-            assert "EvalPython" not in formatted_plan(viol), "a Python UDF ran"
-            return facts["shuffle_exchanges"], plan_facts(viol)["shuffle_exchanges"], (
-                viol.filter(F.col("rule_id") == "token_equality").count()
-            )
-        finally:
-            handle.unpersist()
+        viol, rows = fused_row_violations(s, sn, sources, dups)
+        facts = plan_facts(rows)
+        assert facts["sort_merge_join"], "snapshot join must not broadcast here"
+        assert "EvalPython" not in formatted_plan(viol), "a Python UDF ran"
+        return facts["shuffle_exchanges"], plan_facts(viol)["shuffle_exchanges"], (
+            viol.filter(F.col("rule_id") == "token_equality").count()
+        )
 
     # force the big-big join shape (at real scale neither side broadcasts)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
