@@ -1,7 +1,7 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-* brute-force cosine top-k — the exactness baseline: query×candidate join,
-  dot products via zip_with/aggregate (JVM-side, no Python);
+* brute-force cosine top-k — the exactness baseline: every vector is a
+  candidate of every query;
 * LSH-bucketed ANN — the scale path: deterministic random-hyperplane
   signatures, candidates only within matching buckets;
 * IVF ANN — the other scale path: K inverted lists, search probes only the
@@ -9,16 +9,22 @@
 * embedding near-dup — LSH-bucket candidates + exact verify (never an
   all-pairs theta join).
 
+The three top-k queries are ONE search (`_topk_search`): collect the
+N_QUERIES query rows on the driver, one `mapInPandas` scoring pass over the
+corpus (`_topk_scorer`), one per-query top-k window. A query only supplies
+its candidate rule — every row, a shared LSH bucket, or a probed IVF list.
+
 Scale shapes (the parts that must survive 10^12 vectors):
 * LSH bucketing is a SINGLE narrow projection: the hyperplane matrix is a
-  deterministic driver-side constant embedded ONCE as an array literal, and
-  each row computes all of its table-buckets with per-row array expressions
-  — zero extra shuffles, zero row blowup (the previous posexplode(dim) +
-  two-groupBy formulation shuffled dim× the table twice).
-* IVF assignment is the same trick: the K×dim centroid matrix is a broadcast
-  literal and the argmax is computed WITHIN the row, instead of
+  deterministic driver-side constant, and each row computes all of its
+  table-buckets within its Arrow batch — zero extra shuffles, zero row
+  blowup (the previous posexplode(dim) + two-groupBy formulation shuffled
+  dim× the table twice).
+* IVF assignment is the same trick: the K×dim centroid matrix is driver
+  state and the argmax is computed WITHIN the batch, instead of
   crossJoin(K) + a per-vector window (K× row blowup + shuffle).
-* The only shuffles anywhere are keyed joins on bucket/list ids.
+* The only shuffles anywhere are keyed joins on bucket/list ids and the
+  top-k window over the skinny scored stream.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from log_anomaly_detector_spark.operators.relational import t
+from log_anomaly_detector_spark.operators.relational import t, widen
 
 TOP_K = 5
 N_QUERIES = 5
@@ -50,9 +56,10 @@ def _vq_col(name: str) -> Column:
     transfer, which profiling showed is the binding cost of the
     corpus-sized kernel passes: ~1 GB of float64 per 2M×64 pass before
     this). floor(double·1e6) is the identical IEEE multiply+floor numpy
-    applies, so kernel outputs are unchanged bit-for-bit. A component past
-    int32 (|x| ≳ 2147; embedding components are O(1)) raises an error
-    naming the column and the limit, not an opaque ANSI CAST_OVERFLOW."""
+    applies (`_quantize`), so kernel outputs are unchanged bit-for-bit. A
+    component past int32 (|x| ≳ 2147; embedding components are O(1)) raises
+    an error naming the column and the limit, not an opaque ANSI
+    CAST_OVERFLOW."""
     msg = (
         f"embedding column '{name}' has a component outside the quantization "
         "range: floor(x*1e6) must fit int32, i.e. -2147.483648 <= x < 2147.483648"
@@ -64,6 +71,15 @@ def _vq_col(name: str) -> Column:
         return F.when(bad, F.raise_error(F.lit(msg))).otherwise(fx.cast("int"))
 
     return F.transform(F.col(name), q)
+
+
+def _quantize(x) -> np.ndarray:
+    """int64 floor(x·1e6) of float64 rows — the kernel-side quantization,
+    the identical IEEE multiply+floor as `_vq_col` and the DuckDB oracles.
+    The search kernels quantize in-kernel: they need the float64 vectors
+    for the cosine anyway, so shipping a vq column would only add Arrow
+    bytes."""
+    return np.floor(np.asarray(x, dtype=np.float64) * 1e6).astype(np.int64)
 
 
 def _cos(a, b):
@@ -80,29 +96,81 @@ def _seq_fold(mat: "np.ndarray") -> "np.ndarray":
     return np.cumsum(mat, axis=1)[:, -1]
 
 
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k for the first N_QUERIES vectors. All arithmetic
-    on array<double> with a sequential fold — deterministic, oracle-safe.
-    Acceptable at scale only because the query side is bounded (N_QUERIES);
-    the full-corpus paths are q_ann_lsh / q_ann_ivf."""
-    emb = (
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v array<double>) over the non-NULL embedding rows. NULL
+    vectors have no cosine, signature or centroid, so neither a driver-side
+    collect nor an Arrow kernel ever sees None."""
+    return (
         t(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .filter(F.col("v").isNotNull())  # NULL vectors have no cosine
+        .filter(F.col("v").isNotNull())
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    # ONE fused corpus pass scores every query against every vector
-    # (`_allpairs_score_udf`) — queries are a driver-side constant, and the
-    # former inequality nested-loop join shipped each corpus vector
-    # N_QUERIES× through Arrow. Sequential-fold cosine is bit-identical to
-    # the Catalyst formulation (see _seq_fold), oracle untouched.
-    qrows = {r["q_id"]: list(r["qv"]) for r in q.collect()}
+
+
+# contract output schema of the top-k queries / the near-dup pair query —
+# the empty-corpus short-circuit must return exactly these
+_TOPK_SCHEMA = "q_id bigint, c_id bigint, cosine double, rank int"
+_PAIRS_SCHEMA = "id_a bigint, id_b bigint, cosine double"
+
+
+def _topk_scorer(qids: np.ndarray, Q: np.ndarray, rule):
+    """The ONE scoring kernel of the top-k queries: a mapInPandas pass over
+    (vec_id, v) emitting the skinny (q_id, c_id, raw cosine) stream.
+
+    ``qids``/``Q`` are the driver-side query ids and float64 vectors (row j
+    is query j); ``rule(V)`` maps a batch's float64 vectors to a bool
+    candidate mask broadcastable to queries × batch rows. Each candidate
+    pair except the self-pair is scored with the `_seq_fold` sequential
+    cosine — bit-identical to the Catalyst `_cos` fold and the DuckDB
+    oracles. Norms are folded only for rows some query keeps. The corpus
+    ships through Arrow once, never once per query; closure state is
+    nq×dim plus whatever the rule holds."""
+    qn = np.sqrt(_seq_fold(Q * Q))
+
+    def score(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            V = np.stack(pdf["v"].to_numpy())
+            ids = pdf["vec_id"].to_numpy()
+            keep = rule(V) & (ids[None, :] != qids[:, None])
+            rows = keep.any(axis=0)
+            if not rows.any():
+                continue
+            Vr = V[rows]
+            cn = np.zeros(len(ids))
+            cn[rows] = np.sqrt(_seq_fold(Vr * Vr))
+            frames = []
+            for j in np.flatnonzero(keep.any(axis=1)):
+                m = keep[j]
+                cos = _seq_fold(Q[j] * V[m]) / (qn[j] * cn[m])
+                frames.append(
+                    pd.DataFrame({"q_id": qids[j], "c_id": ids[m], "cosine": cos})
+                )
+            yield pd.concat(frames, ignore_index=True)
+
+    return score
+
+
+def _topk_search(
+    emb: DataFrame, rule_for, corpus: DataFrame | None = None
+) -> DataFrame:
+    """The shared top-k query: collect the query rows (vec_id < N_QUERIES)
+    of ``emb`` on the driver, build the candidate rule ``rule_for(Q)``, score
+    ``corpus`` (default ``emb``) in one `_topk_scorer` pass, and keep the
+    TOP_K per query by (cosine desc, c_id). No query-range ids → an empty
+    result in the contract schema."""
+    qrows = {
+        r["vec_id"]: list(r["v"])
+        for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
+    }
     if not qrows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    scored = emb.select("vec_id", "v").mapInPandas(
-        _allpairs_score_udf(qrows), schema="q_id long, c_id long, cosine double"
+        return emb.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    qids = np.array(sorted(qrows), dtype=np.int64)
+    Q = np.array([qrows[q] for q in qids], dtype=np.float64)
+    scored = (emb if corpus is None else corpus).mapInPandas(
+        _topk_scorer(qids, Q, rule_for(Q)),
+        schema="q_id long, c_id long, cosine double",
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
@@ -110,6 +178,13 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
     )
+
+
+def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k for the first N_QUERIES vectors: every
+    vector is a candidate. Acceptable at scale only because the query side
+    is bounded (N_QUERIES); the full-corpus paths are q_ann_lsh / q_ann_ivf."""
+    return _topk_search(_embeddings(spark, sf_dir), lambda Q: lambda V: True)
 
 
 _COSINE_SQL = f"""
@@ -162,7 +237,7 @@ def _bucket_array(v: Column, dim: int, n_tables: int, planes: int) -> Column:
     aggregates).
 
     This is the pure-Catalyst REFERENCE formulation (kept for the equivalence
-    test); the hot path uses `_bucket_udf` — the same integer arithmetic as
+    tests); the hot paths use `_signer` — the same integer arithmetic as
     ONE numpy matmul per Arrow batch, measured ~40× faster than the
     interpreted higher-order-function chain."""
     flat = F.lit(_plane_signs(n_tables, planes, dim))
@@ -190,18 +265,15 @@ def _bucket_array(v: Column, dim: int, n_tables: int, planes: int) -> Column:
     )
 
 
-def _bucket_udf(dim: int, n_tables: int, planes: int):
-    """Vectorized Arrow signature kernel: same quantized-integer projection as
-    `_bucket_array` (floor(x·1e6) int64, exact — |component| ≤ ~1e6, 64-term
-    sums ≤ ~6.4e7, far inside int64), evaluated as one numpy matmul per batch.
-    Integer arithmetic is order-free, so the result is bit-identical to the
-    Catalyst formulation AND to the DuckDB oracle at any parallelism — the
-    sanctioned Pandas-UDF exception: built-ins express this only as an
-    interpreted per-plane fold (measured seconds for thousands of rows).
-
-    Input is the PRE-QUANTIZED `_vq_col` array<int> (the floor happens
-    JVM-side), so each corpus pass ships half the Arrow bytes of the former
-    float64 feed; callers pass ``_vq_col("v")``."""
+def _signer(dim: int, n_tables: int, planes: int):
+    """The hyperplane-signature kernel as a numpy function: batch × dim
+    int64 quantized rows (`_quantize` / `_vq_col`) → batch × n_tables bucket
+    ids, one integer matmul. Same quantized-integer projection as
+    `_bucket_array` (|component| ≤ ~1e6, 64-term sums ≤ ~6.4e7, far inside
+    int64); integer arithmetic is order-free, so the buckets are
+    bit-identical to the Catalyst formulation AND to the DuckDB oracle at
+    any parallelism. The sign matrix is built once per call, not per
+    batch."""
     signs = (
         np.array(_plane_signs(n_tables, planes, dim), dtype=np.int64)
         .reshape(n_tables * planes, dim)
@@ -209,45 +281,41 @@ def _bucket_udf(dim: int, n_tables: int, planes: int):
     )  # dim × (L·P)
     pw = 2 ** np.arange(planes, dtype=np.int64)
 
+    def sign(vq: np.ndarray) -> np.ndarray:
+        return ((vq @ signs > 0).reshape(len(vq), n_tables, planes) * pw).sum(axis=2)
+
+    return sign
+
+
+def _bucket_udf(dim: int, n_tables: int, planes: int):
+    """`_signer` as a pandas UDF column — the sanctioned Pandas-UDF
+    exception: built-ins express this only as an interpreted per-plane fold
+    (measured seconds for thousands of rows).
+
+    Input is the PRE-QUANTIZED `_vq_col` array<int> (the floor happens
+    JVM-side), so each corpus pass ships half the Arrow bytes of the former
+    float64 feed; callers pass ``_vq_col("v")``."""
+    sign = _signer(dim, n_tables, planes)
+
     @F.pandas_udf("array<long>")
     def buckets(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:  # np.stack raises on empty — guard the batch shape
             return pd.Series([], dtype=object)
-        vq = np.stack(vs.to_numpy()).astype(np.int64)  # batch × dim
-        bits = (vq @ signs > 0).reshape(-1, n_tables, planes)
-        return pd.Series(list((bits * pw).sum(axis=2)))
+        return pd.Series(list(sign(np.stack(vs.to_numpy()).astype(np.int64))))
 
     return buckets
-
-
-def _lsh_buckets(
-    emb: DataFrame, dim: int, n_tables: int = N_TABLES, planes: int = PLANES_PER_TABLE
-) -> DataFrame:
-    """(vec_id, tbl, bucket) — one narrow Arrow-batched projection +
-    posexplode over the (short) per-table bucket array; NO shuffle, NO dim×
-    row blowup."""
-    udf = _bucket_udf(dim, n_tables, planes)
-    return emb.select(
-        "vec_id", F.posexplode(udf(_vq_col("v"))).alias("tbl", "bucket")
-    )
 
 
 def _emb_dim(emb: DataFrame) -> int | None:
     # schema-level when available; otherwise one 1-row probe (driver-side,
     # once per query build — never per row). Returns None when NO non-null
     # vector exists: at scale an empty corpus slice is a legitimate input
-    # (a filter that matched nothing), so dim-probing queries short-circuit
-    # to an empty, correctly-typed result instead of a driver TypeError.
+    # (a filter that matched nothing), so `embedding_near_dup_pairs` names
+    # the empty input instead of failing with a driver TypeError.
     # The isNotNull filter matters: probing the RAW first row would read a
     # NULL vector as d=None and silently empty a non-empty corpus.
     row = emb.filter(F.col("v").isNotNull()).select(F.size("v").alias("d")).first()
     return None if row is None else row["d"]
-
-
-# contract output schema of the top-k ANN queries / the near-dup pair query —
-# the empty-corpus short-circuit must return exactly these
-_TOPK_SCHEMA = "q_id bigint, c_id bigint, cosine double, rank int"
-_PAIRS_SCHEMA = "id_a bigint, id_b bigint, cosine double"
 
 
 _ANN_LSH_SQL = f"""
@@ -293,58 +361,26 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank top-k. Approximate vs exact brute force (recall gated in tests),
     but fully DETERMINISTIC (md5 planes + integer-quantized projections), so
     the query itself is DuckDB-oracle-verified end to end. The oracle pins
-    dim=64 (the driver tables); the Spark side reads dim from the data.
+    dim=64 (the driver tables); the Spark side reads dim from the query rows.
 
-    Scale shape (what must survive 10^12 vectors): every broadcast here is of
-    a QUERY-BOUNDED side — the query-bucket table (N_QUERIES × N_TABLES rows)
-    joins map-side against the corpus bucket stream, and the candidate-id set
-    (bounded by queries × bucket sizes) broadcasts into a plain corpus scan to
-    fetch vectors. The full embeddings table is NEVER broadcast and its vector
-    payloads never shuffle — the only wide ops are the candidate-pair distinct
-    and the per-query top-k window, both candidate-sized. The heavy bucket
-    projection runs ONCE over the corpus (queries bucket separately on the
-    filtered rows)."""
-    raw = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # NULL vectors cannot participate in any similarity math (cosine,
-        # signatures, centroids) — excluded here so neither the driver-side
-        # seed collect nor the Arrow kernels ever see None
-        .filter(F.col("v").isNotNull())
-    )
-    dim = _emb_dim(raw)
-    if dim is None:  # empty corpus → empty result, contract schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    # query rows come straight off the scan (the vec_id predicate pushes to
-    # parquet) and become driver/closure state; the corpus gets the
-    # parallelizing repartition only when under-split (single-split testdata)
-    qrows = {
-        r["vec_id"]: list(r["v"])
-        for r in raw.filter(F.col("vec_id") < N_QUERIES).collect()
-    }
-    if not qrows:  # no query-range ids → empty result, contract schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    par = spark.sparkContext.defaultParallelism
-    emb = raw if raw.rdd.getNumPartitions() >= par else raw.repartition(par)
-    # the whole search is ONE fused corpus pass (`_lsh_probe_score_udf`):
-    # per-table buckets via the exact `_bucket_udf` matmul, membership
-    # against the driver-side query buckets, sequential-fold cosine for
-    # matches — emitting the skinny (q_id, c_id, cosine) stream. The former
-    # pipeline (corpus bucket projection → bucket join → candidate
-    # dropDuplicates → vector-fetch join → scoring kernel) shuffled
-    # candidate ids twice and re-shipped candidate vectors; here the only
-    # shuffle left is the top-k window on skinny rows, and the cross-table
-    # dedup is structural (one row per candidate, union computed in-row).
-    scored = emb.select("vec_id", "v").mapInPandas(
-        _lsh_probe_score_udf(qrows, dim, N_TABLES, PLANES_PER_TABLE),
-        schema="q_id long, c_id long, cosine double",
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.select("q_id", "c_id", F.round(F.col("cosine"), 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    Candidate rule: a vector is a candidate of a query iff ANY table's
+    bucket equals the query's bucket in that table. Each corpus vector's
+    buckets are computed once, in the scoring pass, so the cross-table
+    union is structural (one row per candidate, no distinct shuffle); the
+    only shuffle is the top-k window on skinny rows. The query rows come
+    straight off the scan (the vec_id predicate pushes to parquet)."""
+    emb = _embeddings(spark, sf_dir)
+
+    def rule_for(Q: np.ndarray):
+        sign = _signer(Q.shape[1], N_TABLES, PLANES_PER_TABLE)
+        qb = sign(_quantize(Q))  # nq × L
+
+        def rule(V: np.ndarray) -> np.ndarray:
+            return (sign(_quantize(V))[None, :, :] == qb[:, None, :]).any(axis=2)
+
+        return rule
+
+    return _topk_search(emb, rule_for, corpus=widen(emb))
 
 
 # --- A9: per-dimension mean over vectors (hypersphere center = mean of
@@ -682,26 +718,19 @@ def _near_dup_corpus(
 ) -> tuple[DataFrame, int, int] | None:
     """(emb, dim, n_rows) for the near-dup queries, or None for an empty
     corpus. testdata parquet arrives as ONE split; the cheap id repartition
-    parallelizes the signature kernel. The dim and the row count (which
-    lets `_bucket_groups` skip bucket sizing) come from ONE cheap aggregate
-    over the raw scan (pre-repartition — probing the shuffled side would
-    run the whole shuffle-map stage for one row)."""
-    raw = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # NULL vectors cannot participate in any similarity math (cosine,
-        # signatures, centroids) — excluded here so neither the driver-side
-        # seed collect nor the Arrow kernels ever see None
-        .filter(F.col("v").isNotNull())
-    )
+    (`widen`) parallelizes the signature kernel, and a corpus already split
+    across the session's cores keeps its scan. The dim and the row count
+    (which lets `_bucket_groups` skip bucket sizing) come from ONE cheap
+    aggregate over the raw scan (pre-repartition — probing the shuffled
+    side would run the whole shuffle-map stage for one row)."""
+    raw = _embeddings(spark, sf_dir)
     probe = raw.agg(
         F.count(F.lit(1)).alias("n"),
         F.first(F.size("v"), ignorenulls=True).alias("d"),
     ).first()
     if probe is None or probe["d"] is None:
         return None
-    emb = raw.repartition(spark.sparkContext.defaultParallelism, "vec_id")
-    return emb, probe["d"], probe["n"]
+    return widen(raw, "vec_id"), probe["d"], probe["n"]
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,30 +791,20 @@ WHERE round(list_dot_product(a.v, b.v)
 
 # --- IVF ANN: the other scale path for similarity search. Deterministic
 # build: K seed centroids (md5-min-K sample of the corpus) + ONE Lloyd
-# refinement. The
-# centroid matrix lives on the driver (K×dim — tiny by construction) and is
-# embedded as an array literal, so ASSIGNMENT IS A PER-ROW EXPRESSION: sims =
-# transform(seq(K), c -> cos(v, centroid_c)); cid = argmax — no crossJoin row
-# blowup, no per-vector window, zero added shuffle. The Lloyd update is one
-# grouped agg (per-dim sums as K×dim tiny partials). Search probes the nprobe
-# nearest inverted lists only — at 10^12 vectors the exact-scoring join
-# touches ~nprobe/K of the table instead of all of it. ------------------------
+# refinement. The centroid matrix lives on the driver (K×dim — tiny by
+# construction), so ASSIGNMENT IS A PER-BATCH ARGMAX (`_nearest_list`) —
+# no crossJoin row blowup, no per-vector window, zero added shuffle. The
+# Lloyd update is one grouped agg (per-dim sums as K×dim tiny partials).
+# Search probes the nprobe nearest inverted lists only — at 10^12 vectors
+# the exact scoring touches ~nprobe/K of the table instead of all of it. ---
 N_CENTROIDS = 16
 N_PROBE = 4
 
 
-def _quantize_cents(cents: list[list[float]]) -> list[list[int]]:
-    """floor(x·1e6) per component, computed DRIVER-side — the same IEEE
-    double multiply + floor every engine applies (Python, numpy, Catalyst,
-    DuckDB all round-trip identically), so the quantized centroid matrix is
-    one shared constant."""
-    return [[int(math.floor(x * 1e6)) for x in c] for c in cents]
-
-
 def _centroid_sims_q(v: Column, cents: list[list[float]]) -> Column:
     """array<double> of QUANTIZED similarity(v, centroid_c), computed within
-    the row — the pure-Catalyst REFERENCE formulation (the hot path is
-    `_assign_udf`, same arithmetic as one numpy integer matmul per Arrow
+    the row — the pure-Catalyst REFERENCE formulation (the hot paths use
+    `_centroid_sims`, the same arithmetic as one numpy integer matmul per
     batch; equivalence is pinned by test).
 
     sim = idot(vq, cq) / (sqrt(idot(vq, vq)) · sqrt(idot(cq, cq))) over
@@ -797,7 +816,7 @@ def _centroid_sims_q(v: Column, cents: list[list[float]]) -> Column:
     raw-float cosine argmax, whose fold-order-sensitive sums matched the
     oracle only because the fixtures never produced a near-tie."""
     k, dim = len(cents), len(cents[0])
-    cq = _quantize_cents(cents)
+    cq = _quantize(cents).tolist()
     flatq = F.lit([x for c in cq for x in c])
     cnorms = F.lit([math.sqrt(float(sum(x * x for x in c))) for c in cq])
     vq = F.transform(v, lambda x: F.floor(x * 1e6).cast("long"))
@@ -820,279 +839,50 @@ def _centroid_sims_q(v: Column, cents: list[list[float]]) -> Column:
     )
 
 
-def _assign_udf(cents: list[list[float]]):
-    """Vectorized Arrow assignment kernel: the SAME quantized-integer
-    similarity as `_centroid_sims_q`, evaluated as one numpy int64 matmul
-    per batch — the sanctioned Pandas-UDF exception (the Catalyst
-    formulation is an interpreted K×dim fold per row: measured 139 s for
-    ONE pass over 2M×64-dim vectors on 8 cores; the kernel does the same
-    pass in seconds). Exactness argument in `_centroid_sims_q`'s docstring;
-    np.argmax takes the FIRST max, matching the `ties → lowest cid` rule.
-
-    Input is the PRE-QUANTIZED `_vq_col` array<int> — the corpus-sized
-    assignment passes were Arrow-transfer-bound (~1 GB of float64 per 2M×64
-    pass), and shipping the floor(x·1e6) ints as int32 halves that."""
-    C = np.array(_quantize_cents(cents), dtype=np.int64)  # K × dim
-    cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))  # K
-
-    @F.pandas_udf("int")
-    def assign(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:  # np.stack raises on empty — guard the batch shape
-            return pd.Series([], dtype="int32")
-        vq = np.stack(vs.to_numpy()).astype(np.int64)  # batch × dim
-        d = (vq @ C.T).astype(np.float64)  # exact integers, batch × K
-        vn = np.sqrt((vq * vq).sum(axis=1).astype(np.float64))  # batch
-        sims = d / (vn[:, None] * cn[None, :])
-        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
-
-    return assign
+def _centroid_sims(vq: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """rows × K quantized similarities of int64 quantized rows ``vq`` to the
+    int64 quantized centroids ``C`` — the `_centroid_sims_q` arithmetic as
+    one exact int64 matmul (the Catalyst formulation is an interpreted K×dim
+    fold per row: measured 139 s for ONE pass over 2M×64-dim vectors on 8
+    cores; the matmul does the same pass in seconds). Exactness argument in
+    `_centroid_sims_q`'s docstring."""
+    d = (vq @ C.T).astype(np.float64)
+    vn = np.sqrt((vq * vq).sum(axis=1).astype(np.float64))
+    cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))
+    return d / (vn[:, None] * cn[None, :])
 
 
-def _assign(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """(vec_id, v, vq, cid): nearest centroid by quantized similarity, Arrow
-    kernel; ties → lowest cid (np.argmax returns the first max). ``emb`` must
-    carry the pre-quantized ``vq`` column (see `_with_vq`)."""
-    return emb.withColumn("cid", _assign_udf(cents)(F.col("vq")))
+def _nearest_list(vq: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Each row's inverted list: the argmax of `_centroid_sims`; np.argmax
+    takes the FIRST max, matching the `ties → lowest cid` rule."""
+    return np.argmax(_centroid_sims(vq, C), axis=1)
 
 
-def _probe_lists(
-    cents: list[list[float]], qrows: dict[int, list[float]]
-) -> dict[int, list[int]]:
-    """Top-N_PROBE centroid ids per query, computed DRIVER-side with the
-    exact `_centroid_sims_q` arithmetic: integer quantized dots (exact in
-    int64 and double), vnorm = sqrt(float(idot)), sim = float(idot) /
-    (vnorm · cnorm) — single IEEE ops, bit-identical across
-    Python/numpy/JVM/DuckDB — then sort by (−sim, cid) like the Catalyst
-    array_sort(struct(neg, cid)) slice (equivalence test pins parity).
-    Queries and centroids are both driver-side constants, so this is O(nq·K·
-    dim) driver work — no reason to round-trip 5 rows through a plan."""
-    cq = _quantize_cents(cents)
-    cns = [math.sqrt(float(sum(x * x for x in c))) for c in cq]
-    out: dict[int, list[int]] = {}
-    for q_id, qv in qrows.items():
-        vq = [int(math.floor(x * 1e6)) for x in qv]
-        vnorm = math.sqrt(float(sum(a * a for a in vq)))
-        sims = [
-            float(sum(a * b for a, b in zip(vq, cq[c]))) / (vnorm * cns[c])
-            for c in range(len(cq))
-        ]
-        order = sorted(range(len(cq)), key=lambda c: (-sims[c], c))
-        out[q_id] = order[: N_PROBE]
-    return out
-
-
-def _probe_score_udf(cents: list[list[float]], qrows: dict[int, list[float]]):
-    """Fused c1-assignment + probe-membership + exact-cosine scoring: ONE
-    mapInPandas pass over the corpus replaces the former three-stage tail
-    (c1 `_assign` kernel pass → cid join materializing a candidate table
-    with full vector payloads → scoring kernel over ~1.3 GB of re-shipped
-    vectors). Per batch: the `_assign_udf` int64-matmul argmax picks each
-    vector's inverted list; the driver-side probe lists (`_probe_lists`)
-    invert to cid → querying q_ids; rows on a probed list are scored with
-    the `_seq_fold` sequential float64 cosine (bit-identical to the
-    Catalyst `_cos` fold — same guarantee as every `_seq_fold` kernel). Output is the
-    skinny (q_id, c_id, raw cosine) candidate stream — ~24 B/row instead of
-    vector payloads. Self-pairs are excluded in-kernel (q_id == vec_id).
-
-    Scale shape: one pass, corpus-partitioned, no shuffle until the
-    TOP_K-per-query window over the candidate stream; all driver/closure
-    state is K×dim + nq×dim."""
-    C = np.array(_quantize_cents(cents), dtype=np.int64)  # K × dim
-    cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))  # K
-    plists = _probe_lists(cents, qrows)
-    # invert: cid -> [(q_id, float64 query vector, seq-fold query norm)]
-    probers: dict[int, list] = {}
-    for q_id in sorted(plists):
-        Qrow = np.array(qrows[q_id], dtype=np.float64)
-        qn = float(np.sqrt(_seq_fold((Qrow * Qrow)[None, :])[0]))
-        for cid in plists[q_id]:
-            probers.setdefault(cid, []).append((q_id, Qrow, qn))
-
-    def score(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            Vall = np.stack(pdf["v"].to_numpy())
-            # quantize in-kernel (identical IEEE floor — `_vq_col`): the
-            # kernel needs float64 vectors anyway, so shipping a vq column
-            # would only add Arrow bytes
-            vq = np.floor(Vall * 1e6).astype(np.int64)
-            d = (vq @ C.T).astype(np.float64)
-            vn = np.sqrt((vq * vq).sum(axis=1).astype(np.float64))
-            cid = np.argmax(d / (vn[:, None] * cn[None, :]), axis=1)
-            frames = []
-            for k, qs in probers.items():
-                mask = cid == k
-                if not mask.any():
-                    continue
-                V = Vall[mask]
-                ids = pdf["vec_id"][mask].to_numpy()
-                cnv = np.sqrt(_seq_fold(V * V))
-                for q_id, Qrow, qn in qs:
-                    dots = _seq_fold(Qrow[None, :] * V)
-                    cos = dots / (qn * cnv)
-                    keep = ids != q_id  # self-pair exclusion
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "q_id": np.full(int(keep.sum()), q_id, dtype=np.int64),
-                                "c_id": ids[keep],
-                                "cosine": cos[keep],
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return score
-
-
-def _allpairs_score_udf(qrows: dict[int, list[float]]):
-    """Fused brute-force scoring: ONE mapInPandas pass over (vec_id, v)
-    emitting (q_id, c_id, cosine) for EVERY query in the closure — replaces
-    the inequality nested-loop join that shipped each corpus vector once
-    PER QUERY through Arrow (N_QUERIES× the bytes). Same `_seq_fold`
-    bit-exactness as the other `_seq_fold` kernels; self-pairs excluded in-kernel."""
-    qids = sorted(qrows)
-    Q = np.array([qrows[q] for q in qids], dtype=np.float64)  # nq × dim
-    qn = np.sqrt(_seq_fold(Q * Q))
-
-    def score(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy())
-            ids = pdf["vec_id"].to_numpy()
-            cnv = np.sqrt(_seq_fold(V * V))
-            frames = []
-            for j, q_id in enumerate(qids):
-                dots = _seq_fold(Q[j][None, :] * V)
-                cos = dots / (qn[j] * cnv)
-                keep = ids != q_id
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(int(keep.sum()), q_id, dtype=np.int64),
-                            "c_id": ids[keep],
-                            "cosine": cos[keep],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return score
-
-
-def _query_buckets(
-    qrows: dict[int, list[float]], dim: int, n_tables: int, planes: int
-) -> dict[int, list[int]]:
-    """Per-query LSH bucket ids computed DRIVER-side with the exact
-    `_bucket_udf` arithmetic (floor(x·1e6) int64 @ signs > 0 bits packed by
-    powers of two — integer ops, order-free, bit-identical everywhere).
-    Query vectors are driver constants, so there is no reason to round-trip
-    them through a plan; equivalence test pins parity with `_lsh_buckets`."""
-    signs = (
-        np.array(_plane_signs(n_tables, planes, dim), dtype=np.int64)
-        .reshape(n_tables * planes, dim)
-        .T
-    )
-    pw = 2 ** np.arange(planes, dtype=np.int64)
-    out: dict[int, list[int]] = {}
-    for q_id, qv in qrows.items():
-        vq = np.floor(np.array(qv, dtype=np.float64) * 1e6).astype(np.int64)
-        bits = (vq @ signs > 0).reshape(n_tables, planes)
-        out[q_id] = [int(x) for x in (bits * pw).sum(axis=1)]
-    return out
-
-
-def _lsh_probe_score_udf(
-    qrows: dict[int, list[float]], dim: int, n_tables: int, planes: int
-):
-    """Fused LSH search: ONE mapInPandas pass over (vec_id, v) that
-    (a) computes each corpus vector's per-table buckets with the exact
-    `_bucket_udf` matmul, (b) tests membership against the driver-side
-    query buckets (`_query_buckets` — N_QUERIES×L closure state), and
-    (c) scores matching (query, candidate) pairs with the `_seq_fold`
-    sequential-fold cosine, emitting the skinny (q_id, c_id, cosine)
-    stream. Replaces the corpus bucket projection + bucket join + candidate
-    dropDuplicates + vector-fetch join + scoring kernel — and the
-    cross-table DEDUP becomes structural: a candidate's row lives in
-    exactly one batch, so the per-row union over tables (computed with one
-    in-kernel any()) can never produce the same pair twice. Self-pairs
-    excluded in-kernel.
-
-    Scale shape: zero shuffles until the top-k window on skinny rows; the
-    closure holds O(nq·L) ints + nq×dim query floats."""
-    signs = (
-        np.array(_plane_signs(n_tables, planes, dim), dtype=np.int64)
-        .reshape(n_tables * planes, dim)
-        .T
-    )
-    pw = 2 ** np.arange(planes, dtype=np.int64)
-    qb = _query_buckets(qrows, dim, n_tables, planes)
-    qids = sorted(qrows)
-    Q = np.array([qrows[q] for q in qids], dtype=np.float64)
-    qn = np.sqrt(_seq_fold(Q * Q))
-    # per query: L-vector of its table buckets, for vectorized comparison
-    QB = np.array([qb[q] for q in qids], dtype=np.int64)  # nq × L
-
-    def score(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy())
-            # quantize in-kernel: np.floor(x·1e6) is the identical IEEE
-            # multiply+floor the JVM applies (`_vq_col`), and the kernel
-            # needs the float64 vectors anyway — shipping a vq column would
-            # add 256 B/row of Arrow transfer plus an interpreted JVM floor
-            vq = np.floor(V * 1e6).astype(np.int64)
-            bits = (vq @ signs > 0).reshape(-1, n_tables, planes)
-            B = (bits * pw).sum(axis=2)  # batch × L corpus buckets
-            ids = pdf["vec_id"].to_numpy()
-            cnv = None  # computed lazily — many batches have no candidates
-            frames = []
-            for j, q_id in enumerate(qids):
-                # candidate ⟺ any table's bucket matches (union over tables)
-                mask = (B == QB[j][None, :]).any(axis=1) & (ids != q_id)
-                if not mask.any():
-                    continue
-                if cnv is None:
-                    cnv = np.sqrt(_seq_fold(V * V))
-                Vm = V[mask]
-                dots = _seq_fold(Q[j][None, :] * Vm)
-                cos = dots / (qn[j] * cnv[mask])
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(int(mask.sum()), q_id, dtype=np.int64),
-                            "c_id": ids[mask],
-                            "cosine": cos,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return score
+def _probe_lists(C: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """nq × N_PROBE centroid ids per query row of ``Q`` (float64), nearest
+    first, ties → lowest cid: the `_centroid_sims` similarities sorted like
+    the Catalyst array_sort(struct(-sim, cid)) slice (equivalence test pins
+    parity). Queries and centroids are both driver-side constants, so this
+    is O(nq·K·dim) driver work — no reason to round-trip 5 rows through a
+    plan."""
+    sims = _centroid_sims(_quantize(Q), C)
+    return np.argsort(-sims, axis=1, kind="stable")[:, :N_PROBE]
 
 
 def _lloyd_partials(cents: list[list[float]]):
     """Fused assign + partial-sum pass for the Lloyd step: one mapInPandas
-    over the float64 `v` column (quantized in-kernel with the identical
-    IEEE floor — `_vq_col` docstring) that (a) assigns each vector to its
-    nearest centroid with the EXACT `_assign_udf` arithmetic — same int64
-    matmul, same float64 division, same first-max argmax — and (b)
-    scatter-adds the int64 component sums and member counts per cid,
-    emitting only K×dim rows PER PARTITION. Replaces a corpus-sized kernel
-    output + corpus×dim posexplode shuffle with dim-sized partials; int64
-    sums of floor(x·1e6) components are order-free (global sums bounded by
-    rows·1e6·max|x| ≪ 2^63), so the aggregated (cid, i, s, n) table is
-    bit-identical to the exploded-agg formulation at any parallelism.
-    Empty cids emit NO rows (callers fall back to the seed centroid), so a
-    zero count can never reach the mean's division."""
-    C = np.array(_quantize_cents(cents), dtype=np.int64)  # K × dim
-    cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))  # K
+    over the float64 `v` column (quantized in-kernel, `_quantize`) that (a)
+    assigns each vector to its nearest centroid (`_nearest_list`, the same
+    argmax the search's IVF rule runs) and (b) scatter-adds the int64
+    component sums and member counts per cid, emitting only K×dim rows PER
+    PARTITION. Replaces a corpus-sized kernel output + corpus×dim
+    posexplode shuffle with dim-sized partials; int64 sums of floor(x·1e6)
+    components are order-free (global sums bounded by rows·1e6·max|x| ≪
+    2^63), so the aggregated (cid, i, s, n) table is bit-identical to the
+    exploded-agg formulation at any parallelism. Empty cids emit NO rows
+    (callers fall back to the seed centroid), so a zero count can never
+    reach the mean's division."""
+    C = _quantize(cents)  # K × dim
     K, dim = C.shape
 
     def partials(it):
@@ -1101,11 +891,8 @@ def _lloyd_partials(cents: list[list[float]]):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            # in-kernel quantization (identical IEEE floor — `_vq_col`)
-            vq = np.floor(np.stack(pdf["v"].to_numpy()) * 1e6).astype(np.int64)
-            d = (vq @ C.T).astype(np.float64)
-            vn = np.sqrt((vq * vq).sum(axis=1).astype(np.float64))
-            cid = np.argmax(d / (vn[:, None] * cn[None, :]), axis=1)
+            vq = _quantize(np.stack(pdf["v"].to_numpy()))
+            cid = _nearest_list(vq, C)
             counts = np.bincount(cid, minlength=K)
             # K masked sums beat np.add.at (unbuffered per-element fallback)
             for k in np.flatnonzero(counts):
@@ -1125,30 +912,20 @@ def _lloyd_partials(cents: list[list[float]]):
     return partials
 
 
-def _with_vq(emb: DataFrame) -> DataFrame:
-    """Attach the quantized `vq` column once if absent — callers that persist
-    the corpus add it BEFORE the persist so the int32 arrays are cached and
-    every kernel pass reads them without recomputing the floor."""
-    return emb if "vq" in emb.columns else emb.withColumn("vq", _vq_col("v"))
-
-
-def build_ivf(
-    emb: DataFrame, dim: int | None = None
-) -> tuple[list[list[float]], DataFrame]:
-    """Returns (centroids as driver-side K×dim floats, index(vec_id, v, cid)).
-
-    Centroid collection is O(K×dim) driver data — the analogue of a trained
-    coarse quantizer, which IS driver/broadcast state in any IVF system.
-    Pass ``dim`` when ``emb`` sits behind a shuffle (see
-    embedding_near_dup_pairs).
+def build_ivf(emb: DataFrame) -> list[list[float]]:
+    """The trained coarse quantizer of ``emb(vec_id, v)``: K×dim centroids
+    as driver-side floats (cid = row index). Centroid collection is
+    O(K×dim) driver data, which IS driver/broadcast state in any IVF
+    system; the search assigns rows to lists in its own scoring pass, so no
+    index table is built.
 
     Seeding is a deterministic md5-min-K sample (the `kmv_distinct` trick):
     the K corpus vectors with the smallest md5(vec_id) hex strings, cid =
     rank in that order. No assumption about id range or density — any
     non-empty corpus seeds; md5 parity across Spark/DuckDB keeps the seed
     set (and therefore the whole index) oracle-checkable. The global
-    orderBy+limit plans as TakeOrdered (per-task top-K, K×dim driver data)."""
-    dim = dim if dim is not None else _emb_dim(emb)
+    orderBy+limit plans as TakeOrdered (per-task top-K, K×dim driver data).
+    The dim is read off the seeds."""
     seeds = (
         emb.filter(F.col("v").isNotNull())
         .select("vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("h"))
@@ -1164,22 +941,18 @@ def build_ivf(
             "centroids (contract queries short-circuit empty corpora before "
             "this point)"
         )
+    dim = len(c0[0])
     # one Lloyd step: per-dim mean of each cluster — K×dim tiny partial aggs.
     # Sums are over QUANTIZED floor(x·1e6) integers: order-free, so the
     # centroids (and therefore the whole index) are bit-identical at any
     # parallelism and across engines — IVF becomes oracle-checkable.
     # Shape: ONE fused mapInPandas pass per partition that assigns c0 AND
     # scatter-adds the integer partial sums in numpy, emitting only K×dim
-    # rows per partition (`_lloyd_partials`). This replaces the former
-    # c0-assignment kernel pass + corpus×dim posexplode shuffle (128M
-    # exploded rows at 2M×64) with the same exact arithmetic: per-row cid is
-    # the identical int64-matmul argmax as `_assign_udf`, and int64 sums of
-    # quantized components are order-free, so the final (cid, i) sums and
+    # rows per partition (`_lloyd_partials`) — no corpus×dim posexplode
+    # shuffle (128M exploded rows at 2M×64). The final (cid, i) sums and
     # counts match the exploded-agg formulation bit-for-bit (equivalence
     # test pins this). The per-(cid, i) `n` is the cluster size repeated per
-    # component, summed across partitions like `s`. Quantization happens
-    # IN-KERNEL from the float64 vectors (identical IEEE floor — `_vq_col`
-    # docstring), so no interpreted JVM floor runs and no extra column ships.
+    # component, summed across partitions like `s`.
     sums = (
         emb.select("v")
         .mapInPandas(_lloyd_partials(c0), schema="cid int, i int, s long, n long")
@@ -1194,13 +967,12 @@ def build_ivf(
     # cid is an INDEX into c0 (argmax position), so the centroid count is
     # len(c0) — a corpus with fewer than N_CENTROIDS seed rows (sparse ids,
     # null vectors among the seeds) simply trains a smaller quantizer
-    c1 = [
+    return [
         [comp[c][i] / 1e6 / n_by_cid[c] for i in range(dim)]
         if c in comp
         else c0[c]
         for c in range(len(c0))
     ]
-    return c1, _assign(_with_vq(emb), c1)
 
 
 _IVF_COS = (
@@ -1208,7 +980,7 @@ _IVF_COS = (
     "* sqrt(list_dot_product({b}, {b})))"
 )
 # quantized similarity for ASSIGNMENT and PROBE SELECTION (mirrors
-# _centroid_sims_q / _assign_udf exactly): floor(x·1e6) components, exact
+# _centroid_sims_q / _centroid_sims exactly): floor(x·1e6) components, exact
 # order-free integer dots (≤2^53 so double-typed sums are still exact), two
 # sqrts + multiply + divide as the only float ops. `scored` keeps the raw
 # 6dp-rounded cosine — that is the OUTPUT value, not a discrete decision.
@@ -1295,60 +1067,28 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k: probe the N_PROBE nearest centroids per query, exact cosine
     within those lists only. Approximate vs brute force (recall gated in
     tests) but fully DETERMINISTIC (seeded centroids, integer-quantized Lloyd
-    sums) — the query is DuckDB-oracle-verified end to end."""
-    raw = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        # NULL vectors cannot participate in any similarity math (cosine,
-        # signatures, centroids) — excluded here so neither the driver-side
-        # seed collect nor the Arrow kernels ever see None
-        .filter(F.col("v").isNotNull())
-    )
-    dim = _emb_dim(raw)
-    if dim is None:  # empty corpus → empty result, contract schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    # single-split testdata: the Arrow kernels otherwise run in ONE task —
-    # repartition ONLY when the source is under-split (fewer input splits
-    # than cores). No downstream op needs a particular partitioning anymore
-    # (the fused search pass replaced the cid join; the top-k window
-    # shuffles by q_id regardless), so a well-split corpus skips the full
-    # vector-payload shuffle entirely (~1.5 GB at 2M×64 — measured seconds
-    # of the cold wall). The corpus is tracked-persisted: the BUILD consumes
-    # it twice (seed collect + Lloyd pass) and the SEARCH pass reads it
-    # again (MEMORY_AND_DISK: spills, never OOMs). Quantization happens
-    # inside each kernel (numpy floor, identical IEEE — `_vq_col`), so the
-    # cache holds only (vec_id, v) and no interpreted JVM floor ever runs.
+    sums) — the query is DuckDB-oracle-verified end to end.
+
+    Candidate rule: a vector is a candidate of a query iff its nearest c1
+    list (`_nearest_list`, computed in the scoring pass) is one the query
+    probes (`_probe_lists`). The corpus is repartitioned only when
+    under-split (`widen`; nothing downstream needs a partitioning, so a
+    well-split corpus skips the vector-payload shuffle — ~1.5 GB at 2M×64)
+    and tracked-persisted: the query collect, the seed collect, the Lloyd
+    pass and the search pass all read it (MEMORY_AND_DISK: spills, never
+    OOMs). The cache holds only (vec_id, v); every kernel quantizes
+    in-kernel."""
     from log_anomaly_detector_spark.operators.caching import tracked_persist
 
-    par = spark.sparkContext.defaultParallelism
-    shaped = raw if raw.rdd.getNumPartitions() >= par else raw.repartition(par)
-    emb = tracked_persist("ivf_emb", shaped)
-    cents, _index = build_ivf(emb, dim=dim)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    qrows = {r["q_id"]: list(r["qv"]) for r in q.collect()}
-    if not qrows:  # corpus has no query-range ids → empty result, same schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    # the whole search tail is ONE fused corpus pass (`_probe_score_udf`):
-    # c1 assignment, probe-list membership (probe lists computed driver-side
-    # with the exact Catalyst arithmetic — `_probe_lists`, equivalence
-    # tested), and the sequential-fold exact cosine, emitting the skinny
-    # (q_id, c_id, cosine) candidate stream. The former tail re-ran the
-    # assignment kernel, materialized a cid join carrying full vector
-    # payloads (~1.3 GB at 2M×64), and re-shipped those vectors to a second
-    # kernel — measured 12.7 s at local[2]; the fused pass does it in ~4 s.
-    # Values are bit-identical throughout, so the DuckDB oracle (which still
-    # expresses probes/index relationally) passes untouched.
-    scored = emb.select("vec_id", "v").mapInPandas(
-        _probe_score_udf(cents, qrows), schema="q_id long, c_id long, cosine double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.select("q_id", "c_id", F.round(F.col("cosine"), 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    emb = tracked_persist("ivf_emb", widen(_embeddings(spark, sf_dir)))
+
+    def rule_for(Q: np.ndarray):
+        C = _quantize(build_ivf(emb))
+        probe = np.zeros((len(Q), len(C)), dtype=bool)
+        np.put_along_axis(probe, _probe_lists(C, Q), True, axis=1)
+        return lambda V: probe[:, _nearest_list(_quantize(V), C)]
+
+    return _topk_search(emb, rule_for)
 
 
 QUERIES = {

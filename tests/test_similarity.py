@@ -75,15 +75,44 @@ def test_ivf_recall_clustered_corpus(spark, tmp_path):
     assert len(exact & ivf) / len(exact) >= 0.8, (len(exact & ivf), len(exact))
 
 
+def test_topk_query_job_counts(spark):
+    """Built and collected on sf0.001 from cold caches, cosine_topk, ann_lsh
+    and ann_ivf run at most 4, 5 and 9 Spark jobs (counted by job group;
+    the UI is off). The three share one query collect, one scoring pass
+    and one top-k window, and the ANN queries read the dim off the query
+    rows; a separate dim probe per ANN query makes it 4, 6 and 10."""
+    from log_anomaly_detector_spark.operators.caching import release_all
+
+    sc = spark.sparkContext
+    for q, limit in ((q_cosine_topk, 4), (q_ann_lsh, 5), (q_ann_ivf, 9)):
+        release_all()
+        group = f"topk-jobs-{q.__name__}"
+        sc.setJobGroup(group, q.__name__)
+        try:
+            assert len(q(spark, SF).collect()) > 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= limit, q.__name__
+    release_all()
+
+
 def test_bucket_kernel_matches_catalyst_reference(spark):
-    """The Arrow signature kernel (_bucket_udf, numpy integer matmul) must be
+    """The signature kernel (_signer, numpy integer matmul) must be
     bit-identical to the pure-Catalyst reference formulation (_bucket_array)
-    — the equivalence guard the reference implementation exists for."""
+    — the equivalence guard the reference implementation exists for — both
+    as the _bucket_udf column over the JVM-quantized vq (near-dup buckets)
+    and on numpy-quantized rows (the ann_lsh query buckets and candidate
+    rule)."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from log_anomaly_detector_spark.operators.similarity import (
+        N_TABLES,
+        PLANES_PER_TABLE,
         _bucket_array,
         _bucket_udf,
+        _quantize,
+        _signer,
         _vq_col,
     )
 
@@ -92,7 +121,10 @@ def test_bucket_kernel_matches_catalyst_reference(spark):
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .limit(60)
     )
-    for n_tables, planes in ((24, 2), (8, 4)):
+    rows = sorted((r["vec_id"], list(r["v"])) for r in emb.collect())
+    ids = [i for i, _ in rows]
+    V = np.array([v for _, v in rows], dtype=np.float64)
+    for n_tables, planes in ((24, 2), (8, 4), (N_TABLES, PLANES_PER_TABLE)):
         ref = {
             r["vec_id"]: list(r["sig"])
             for r in emb.select(
@@ -107,20 +139,62 @@ def test_bucket_kernel_matches_catalyst_reference(spark):
             ).collect()
         }
         assert got == ref, (n_tables, planes)
+        sig = _signer(64, n_tables, planes)(_quantize(V))
+        assert dict(zip(ids, sig.tolist())) == ref, (n_tables, planes)
 
 
-def test_allpairs_score_kernel_matches_catalyst_fold_bitwise(spark):
-    """The fused brute-force scoring kernel (_allpairs_score_udf) must equal
-    the Catalyst _cos fold EXACTLY — not approximately: np.cumsum's
-    sequential accumulation reproduces aggregate(zip_with(...), 0.0, +)'s
-    per-step float64 rounding, so raw (unrounded) cosines are required to be
-    bit-identical. This is the guard that lets the similarity queries swap
-    the interpreted fold for kernels without touching the DuckDB oracles."""
+def test_query_buckets_match_lsh_buckets(spark):
+    """Driver-side query bucketing (`_signer` over numpy-`_quantize`d query
+    rows, as q_ann_lsh's candidate rule builds it) must equal the Spark-side
+    bucket column (`_bucket_udf` over the JVM-quantized vq) per (table,
+    bucket) — the guard for q_ann_lsh's fused search pass."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from log_anomaly_detector_spark.operators.similarity import (
-        _allpairs_score_udf,
+        N_TABLES,
+        PLANES_PER_TABLE,
+        _bucket_udf,
+        _quantize,
+        _signer,
+        _vq_col,
+    )
+
+    emb = (
+        spark.read.parquet(f"{SF}/embeddings.parquet")
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .filter(F.col("v").isNotNull())
+        .filter(F.col("vec_id") < 5)
+    )
+    ref = {
+        r["vec_id"]: list(r["sig"])
+        for r in emb.select(
+            "vec_id",
+            _bucket_udf(64, N_TABLES, PLANES_PER_TABLE)(_vq_col("v")).alias("sig"),
+        ).collect()
+    }
+    qrows = {r["vec_id"]: list(r["v"]) for r in emb.collect()}
+    qids = sorted(qrows)
+    Q = np.array([qrows[q] for q in qids], dtype=np.float64)
+    qb = _signer(64, N_TABLES, PLANES_PER_TABLE)(_quantize(Q))
+    assert qb.shape == (len(qids), N_TABLES)
+    assert dict(zip(qids, qb.tolist())) == ref
+
+
+def test_allpairs_score_kernel_matches_catalyst_fold_bitwise(spark):
+    """The shared top-k scoring kernel (_topk_scorer) under cosine_topk's
+    every-row rule must equal the Catalyst _cos fold EXACTLY — not
+    approximately: np.cumsum's sequential accumulation reproduces
+    aggregate(zip_with(...), 0.0, +)'s per-step float64 rounding, so raw
+    (unrounded) cosines are required to be bit-identical. This is the guard
+    that lets the similarity queries swap the interpreted fold for kernels
+    without touching the DuckDB oracles."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from log_anomaly_detector_spark.operators.similarity import (
         _cos,
+        _topk_scorer,
     )
 
     emb = (
@@ -133,6 +207,8 @@ def test_allpairs_score_kernel_matches_catalyst_fold_bitwise(spark):
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     qrows = {r["q_id"]: list(r["qv"]) for r in q.collect()}
+    qids = np.array(sorted(qrows), dtype=np.int64)
+    Q = np.array([qrows[i] for i in qids], dtype=np.float64)
     c = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     pairs = q.join(c, F.col("q_id") != F.col("c_id"))
     ref = {
@@ -144,52 +220,29 @@ def test_allpairs_score_kernel_matches_catalyst_fold_bitwise(spark):
     got = {
         (r["q_id"], r["c_id"]): r["cosine"]
         for r in emb.repartition(3)
-        .select("vec_id", "v")
         .mapInPandas(
-            _allpairs_score_udf(qrows), schema="q_id long, c_id long, cosine double"
+            _topk_scorer(qids, Q, lambda V: True),
+            schema="q_id long, c_id long, cosine double",
         )
         .collect()
     }
     assert got == ref  # exact float equality, no tolerance
 
 
-def test_query_buckets_match_lsh_buckets(spark):
-    """Driver-side query bucketing (_query_buckets, pure numpy) must equal
-    the _lsh_buckets plan (Arrow bucket kernel over the JVM-quantized vq)
-    per (table, bucket) — the guard for q_ann_lsh's fused search pass."""
-    from pyspark.sql import functions as F
-
-    from log_anomaly_detector_spark.operators.similarity import (
-        N_TABLES,
-        PLANES_PER_TABLE,
-        _lsh_buckets,
-        _query_buckets,
-    )
-
-    emb = (
-        spark.read.parquet(f"{SF}/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .filter(F.col("vec_id") < 5)
-    )
-    ref: dict[int, list[int]] = {}
-    for r in _lsh_buckets(emb, 64).collect():
-        ref.setdefault(r["vec_id"], [0] * N_TABLES)[r["tbl"]] = r["bucket"]
-    qrows = {r["vec_id"]: list(r["v"]) for r in emb.collect()}
-    assert _query_buckets(qrows, 64, N_TABLES, PLANES_PER_TABLE) == ref
-
-
 def test_probe_lists_match_catalyst_formulation(spark):
-    """Driver-side probe selection (_probe_lists, pure Python on exact
-    integer dots) must pick the SAME top-N_PROBE centroid ids in the SAME
+    """Driver-side probe selection (_probe_lists, numpy on exact integer
+    dots) must pick the SAME top-N_PROBE centroid ids in the SAME
     order as the Catalyst reference (_centroid_sims_q → array_sort(struct(
     -sim, cid)) → slice) — the guard for q_ann_ivf's fused search pass."""
     from pyspark.sql import functions as F
+
+    import numpy as np
 
     from log_anomaly_detector_spark.operators.similarity import (
         N_PROBE,
         _centroid_sims_q,
         _probe_lists,
+        _quantize,
     )
 
     emb = (
@@ -222,25 +275,39 @@ def test_probe_lists_match_catalyst_formulation(spark):
         )
         .collect()
     }
+    qids = sorted(ref)
     qrows = {r["q_id"]: list(r["qv"]) for r in q.collect()}
-    assert _probe_lists(cents, qrows) == ref
+    Q = np.array([qrows[i] for i in qids], dtype=np.float64)
+    got = _probe_lists(_quantize(cents), Q)
+    assert dict(zip(qids, got.tolist())) == ref
+
+
+def _catalyst_nearest(v, cents):
+    """Nearest-centroid index by the pure-Catalyst quantized similarity
+    (_centroid_sims_q + first-max argmax)."""
+    from pyspark.sql import functions as F
+
+    from log_anomaly_detector_spark.operators.similarity import _centroid_sims_q
+
+    sims = _centroid_sims_q(v, cents)
+    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
 def test_lloyd_partials_match_exploded_agg_bitwise(spark):
     """The fused mapInPandas Lloyd pass (_lloyd_partials: assign +
     scatter-add partials per partition) must produce the EXACT (cid, i, s, n)
-    table of the reference formulation (_assign kernel → posexplode →
-    groupBy agg) — int64 sums of quantized components are order-free, so
-    the equality is exact, not approximate."""
+    table of the reference formulation (Catalyst _centroid_sims_q argmax →
+    posexplode of the JVM-quantized vq → groupBy agg) — int64 sums of
+    quantized components are order-free, so the equality is exact, not
+    approximate."""
     from pyspark.sql import functions as F
 
     from log_anomaly_detector_spark.operators.similarity import (
-        _assign,
         _lloyd_partials,
-        _with_vq,
+        _vq_col,
     )
 
-    emb = _with_vq(
+    emb = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .filter(F.col("v").isNotNull())
@@ -250,8 +317,10 @@ def test_lloyd_partials_match_exploded_agg_bitwise(spark):
     cents = [list(r["v"]) for r in emb.orderBy("vec_id").limit(6).collect()]
     ref = {
         (r["cid"], r["i"]): (r["s"], r["n"])
-        for r in _assign(emb, cents)
-        .select("cid", F.posexplode("vq").alias("i", "x"))
+        for r in emb.select(
+            _catalyst_nearest(F.col("v"), cents).alias("cid"),
+            F.posexplode(_vq_col("v")).alias("i", "x"),
+        )
         .groupBy("cid", "i")
         .agg(
             F.sum(F.col("x").cast("long")).alias("s"),
@@ -271,45 +340,35 @@ def test_lloyd_partials_match_exploded_agg_bitwise(spark):
 
 
 def test_ivf_assign_kernel_matches_catalyst_reference(spark):
-    """The Arrow IVF assignment kernel (_assign_udf, numpy int64 matmul +
-    argmax) must be bit-identical to the pure-Catalyst quantized-sim
-    reference (_centroid_sims_q + first-max argmax) — the equivalence guard
-    the reference formulation exists for (same convention as the LSH bucket
-    kernel)."""
+    """The IVF assignment argmax (_nearest_list, numpy int64 matmul +
+    argmax on numpy-quantized rows — what the Lloyd pass and ann_ivf's
+    candidate rule run) must be bit-identical to the pure-Catalyst
+    quantized-sim reference (_centroid_sims_q + first-max argmax) — the
+    equivalence guard the reference formulation exists for (same
+    convention as the LSH signature kernel)."""
     from pyspark.sql import functions as F
 
     from log_anomaly_detector_spark.operators.similarity import (
-        _assign_udf,
-        _centroid_sims_q,
-        _vq_col,
+        _nearest_list,
+        _quantize,
     )
 
     emb = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .filter(F.col("v").isNotNull())
         .limit(80)
     )
     cents = [list(r["v"]) for r in emb.orderBy("vec_id").limit(16).collect()]
     ref = {
         r["vec_id"]: r["cid"]
         for r in emb.select(
-            "vec_id",
-            (
-                F.array_position(
-                    _centroid_sims_q(F.col("v"), cents),
-                    F.array_max(_centroid_sims_q(F.col("v"), cents)),
-                )
-                - 1
-            ).cast("int").alias("cid"),
+            "vec_id", _catalyst_nearest(F.col("v"), cents).alias("cid")
         ).collect()
     }
-    got = {
-        r["vec_id"]: r["cid"]
-        for r in emb.select(
-            "vec_id", _assign_udf(cents)(_vq_col("v")).alias("cid")
-        ).collect()
-    }
-    assert got == ref
+    rows = emb.collect()
+    got = _nearest_list(_quantize([list(r["v"]) for r in rows]), _quantize(cents))
+    assert dict(zip([r["vec_id"] for r in rows], got.tolist())) == ref
 
 
 def test_near_dup_high_threshold_regime(spark):
