@@ -38,11 +38,11 @@ def rep_fold(grams: Column) -> Column:
     """struct(prev, run, max_run, n_distinct) from ONE sequential fold over
     the sorted gram array — per-row multiset statistics (distinct count =
     number of runs; max multiplicity = max run length) with NO shuffle: the
-    row-local shape both the batch repetition query and the streaming
-    ingest gate compute their metrics from (the explode → two-hash-agg
-    alternative shuffles ~n_grams× the corpus row count). O(n) interpreted
-    steps per row, bounded by document length; equality with the multiset
-    view pinned by a property test (tests/test_quality_stream.py)."""
+    row-local shape the repetition query (operators.text.q_repetition_filter)
+    computes its metrics from (the explode → two-hash-agg alternative
+    shuffles ~n_grams× the corpus row count). O(n) interpreted steps per
+    row, bounded by document length; equality with the multiset view pinned
+    by a property test (tests/test_operators.py)."""
     init = F.struct(
         F.lit(None).cast("string").alias("prev"),
         F.lit(0).cast("long").alias("run"),

@@ -170,7 +170,7 @@ GROUP BY prefix_fp HAVING count(*) > 1
 
 
 # --- intra-document repetition filter (Gopher-style quality signal) ----------
-# pinned keep/drop thresholds (ppm) — the streaming ingest gate imports these
+# pinned keep/drop thresholds (ppm)
 REP_DUP_PPM_MAX = 300_000
 REP_TOP_PPM_MAX = 200_000
 
@@ -195,10 +195,10 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, max count = max run length) computes them row-locally; no
     explode, no aggregation, no join, no Python. (The explode → two-hash-agg
     formulation this replaces shuffled ~n_grams× the corpus row count —
-    value equality is pinned by the multiset property test and the stream
-    parity test, wall A/B recorded in BENCH/BASELINE.md.) Ratios are
-    emitted as exact INTEGER parts-per-million ((a*1e6) DIV b on longs) so
-    the oracle comparison never meets engine float rounding (CLAUDE.md:
+    value equality is pinned by the multiset property test, wall A/B
+    recorded in BENCH/BASELINE.md.) Ratios are emitted as exact INTEGER
+    parts-per-million ((a*1e6) DIV b on longs) so the oracle comparison
+    never meets engine float rounding (CLAUDE.md:
     round-half ties diverge between Spark and DuckDB); the keep flag is
     integer-exact cross-multiplication for the same reason. Docs with <3
     words have no 3-grams and are excluded by definition."""
@@ -217,9 +217,17 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.size("_ws") - 2).cast("long").alias("n_3grams"),
         rep_fold(word_ngrams(F.col("_ws"), 3)).alias("_rep"),
     )
-    return folded.select(
-        "doc_id",
-        "n_3grams",
+    return folded.select("doc_id", "n_3grams", *_rep_metric_cols())
+
+
+def _rep_metric_cols() -> list[F.Column]:
+    """q_repetition_filter's metric and keep projections over (n_3grams,
+    _rep), split out so the boundary test can drive them with synthetic fold
+    states. The keep flag is EXACT integer cross-multiplication, never a
+    test on the floored ppm columns: at n_3grams > ~100k a doc whose dup
+    share lies strictly between 300000/1e6 and its floor would pass
+    `ppm <= MAX` while the exact flag drops it."""
+    return [
         F.col("_rep.n_distinct").alias("n_distinct_3grams"),
         F.expr(
             "(n_3grams - _rep.n_distinct) * 1000000 DIV n_3grams"
@@ -230,7 +238,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" <= {REP_DUP_PPM_MAX} * n_3grams"
             f" AND _rep.max_run * 1000000 <= {REP_TOP_PPM_MAX} * n_3grams"
         ).alias("keep"),
-    )
+    ]
 
 
 _REPETITION_SQL = """
@@ -263,18 +271,42 @@ DECONTAM_SEED = 97
 DECONTAM_EVAL_PCT = 2
 
 
-def count_eval_hits(gram_rows: DataFrame, eval_grams: DataFrame) -> DataFrame:
-    """(doc_id, n_5grams, eval_hits, contaminated) from a pre-exploded
-    (doc_id, gram) table — gram NULL for zero-gram docs (explode_outer
-    upstream), so every doc keeps a row with counts 0. The ONE positional
-    hit-counting implementation shared by q_decontaminate, the curation CLI
-    and the streaming ingest gate (their parity is a contract, not a
-    convention to keep in lockstep by hand). The eval side must be a
-    distinct (gram) set; it is broadcast (benchmark-sized by contract —
-    corpus-derived eval slices that scale with the corpus belong in a
-    shuffle join instead)."""
+def build_eval_grams(eval_docs: DataFrame) -> DataFrame:
+    """Distinct 5-gram set (gram) of an eval table (doc_id, text) — the one
+    construction of the eval side of decontamination: q_decontaminate feeds
+    it the md5-coin eval slice, tools/curate_docs.py an external benchmark
+    table."""
+    # word_ngrams requires the token array PROJECTED to an alias — an
+    # inlined words(text) re-evaluates the split per element_at reference
+    # inside the interpreted transform lambda (measured 15.1s vs 0.51s on
+    # sf0.1); flag_contamination goes through the same projected form
     return (
-        gram_rows.join(
+        eval_docs.filter(F.col("text").isNotNull())
+        .select(words(F.col("text")).alias("_ws"))
+        .select(F.explode(word_ngrams(F.col("_ws"), 5)).alias("gram"))
+        .distinct()
+    )
+
+
+def flag_contamination(
+    train_docs: DataFrame, eval_grams: DataFrame
+) -> DataFrame:
+    """(doc_id, n_5grams, eval_hits, contaminated) for every train doc with
+    non-NULL text, against a distinct (gram) set from build_eval_grams — the
+    one positional hit count, shared by q_decontaminate and
+    tools/curate_docs.py. explode_outer keeps a NULL-gram row for zero-gram
+    docs, so every doc gets a row with counts 0. The eval side is broadcast
+    (benchmark-sized by contract — corpus-derived eval slices that scale
+    with the corpus belong in a shuffle join instead)."""
+    grams = (
+        train_docs.filter(F.col("text").isNotNull())
+        .select("doc_id", words(F.col("text")).alias("_ws"))
+        .select(
+            "doc_id", F.explode_outer(word_ngrams(F.col("_ws"), 5)).alias("gram")
+        )
+    )
+    return (
+        grams.join(
             F.broadcast(eval_grams.withColumn("_hit", F.lit(1))),
             "gram",
             "left",
@@ -285,24 +317,6 @@ def count_eval_hits(gram_rows: DataFrame, eval_grams: DataFrame) -> DataFrame:
             F.count("_hit").alias("eval_hits"),
         )
         .withColumn("contaminated", F.col("eval_hits") > 0)
-    )
-
-
-def flag_contamination(
-    train_docs: DataFrame, eval_grams: DataFrame
-) -> DataFrame:
-    """(doc_id, n_5grams, eval_hits, contaminated) for every train doc with
-    non-NULL text — the reusable face of count_eval_hits over a raw
-    documents table, also driven by tools/curate_docs.py against an
-    EXTERNAL benchmark table."""
-    base = (
-        train_docs.filter(F.col("text").isNotNull())
-        .select("doc_id", words(F.col("text")).alias("_ws"))
-        .select("doc_id", word_ngrams(F.col("_ws"), 5).alias("grams"))
-    )
-    return count_eval_hits(
-        base.select("doc_id", F.explode_outer("grams").alias("gram")),
-        eval_grams,
     )
 
 
@@ -327,18 +341,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull()),
         "doc_id",
     )
-    # note: word_ngrams requires the token array PROJECTED to an alias —
-    # an inlined words(text) re-evaluates the split per element_at reference
-    # inside the interpreted transform lambda (measured 15.1s vs 0.51s on
-    # sf0.1); both construction sites below go through the projected form
     is_eval = _hash_bucket(F.col("doc_id"), DECONTAM_SEED) < DECONTAM_EVAL_PCT
-    eval_grams = (
-        docs.filter(is_eval)
-        .select("doc_id", words(F.col("text")).alias("_ws"))
-        .select(F.explode(word_ngrams(F.col("_ws"), 5)).alias("gram"))
-        .distinct()
+    return flag_contamination(
+        docs.filter(~is_eval), build_eval_grams(docs.filter(is_eval))
     )
-    return flag_contamination(docs.filter(~is_eval), eval_grams)
 
 
 _DECONTAM_SQL = f"""

@@ -273,6 +273,73 @@ def test_repetition_filter_planted_metrics(spark, tmp_path):
     }
 
 
+def test_rep_fold_matches_multiset_stats_property(spark):
+    """Property: for ANY gram multiset, the row-local sorted fold's
+    (distinct, max run) equal the multiset's (distinct count, max
+    multiplicity) — the quantities the explode→groupBy oracle computes.
+    One Spark job over a batch of hypothesis-style random cases (drawn with
+    a fixed-seed RNG; a @given-per-example would pay a Spark job per case)."""
+    import random
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from log_anomaly_detector_spark.functions.text_funcs import rep_fold
+
+    rng = random.Random(20260818)
+    cases = []
+    for i in range(300):
+        vocab = [f"g{k}" for k in range(rng.randint(1, 6))]
+        grams = [rng.choice(vocab) for _ in range(rng.randint(0, 40))]
+        cases.append((i, grams))
+    df = spark.createDataFrame(cases, "case_id long, grams array<string>")
+    folded = df.select(
+        "case_id", rep_fold(F.col("grams")).alias("_rep")
+    ).select(
+        "case_id",
+        F.col("_rep.n_distinct").alias("n_distinct"),
+        F.col("_rep.max_run").alias("max_run"),
+    )
+    got = {r["case_id"]: (r["n_distinct"], r["max_run"]) for r in folded.collect()}
+    for cid, grams in cases:
+        c = Counter(grams)
+        want = (len(c), max(c.values()) if c else 0)
+        assert got[cid] == want, (cid, grams, got[cid], want)
+
+
+def test_rep_keep_flag_exact_at_floored_ppm_boundary(spark):
+    """The keep decision must use exact integer cross-multiplication, never
+    the floored ppm columns: n=100003 with 30001 excess-duplicate positions
+    floors to dup_3gram_ppm == 300000 (not > MAX), yet the exact flag drops
+    it (30001e6 > 300000*100003). Drive q_repetition_filter's own metric
+    projections with synthetic fold states on both sides of the boundary."""
+    from log_anomaly_detector_spark.operators.text import _rep_metric_cols
+
+    rows = [
+        # (case, n_3grams, n_distinct, max_run)
+        (1, 100003, 70002, 2),   # dup ppm floors to 300000 but exact > max
+        (2, 100003, 70003, 2),   # 30000e6 <= 300000*100003 → keep
+        (3, 10, 7, 2),           # dup 0.3 exactly → keep
+        (4, 10, 6, 2),           # dup 0.4 → drop
+    ]
+    df = spark.createDataFrame(
+        [
+            (c, n, {"prev": None, "run": 0, "max_run": m, "n_distinct": d})
+            for c, n, d, m in rows
+        ],
+        "case_id long, n_3grams long, _rep struct<prev:string,run:long,"
+        "max_run:long,n_distinct:long>",
+    )
+    got = {
+        r["case_id"]: (r["dup_3gram_ppm"], r["keep"])
+        for r in df.select("case_id", "n_3grams", *_rep_metric_cols()).collect()
+    }
+    assert got[1] == (300000, False)  # floored ppm alone would keep it
+    assert got[2] == (299991, True)
+    assert got[3] == (300000, True)
+    assert got[4] == (400000, False)
+
+
 def test_decontaminate_planted_overlap(spark, tmp_path):
     """Planted contamination: doc_id 11 hashes into the eval slice (md5 coin,
     seed 97, 2%); a train doc sharing one of its 5-grams is flagged with the
@@ -303,6 +370,27 @@ def test_decontaminate_planted_overlap(spark, tmp_path):
     assert got[3] == {
         "doc_id": 3, "n_5grams": 0, "eval_hits": 0, "contaminated": False,
     }
+
+
+def test_decontaminate_empty_eval_contaminates_nothing(spark):
+    """An EMPTY eval set marks no doc as contaminated: every doc, including
+    one with 5-grams and one with none, comes back with zero hits."""
+    from log_anomaly_detector_spark.operators.text import (
+        build_eval_grams,
+        flag_contamination,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (7, "alpha beta gamma delta epsilon w6 w7 w8 w9 w10 w11 w12"),
+            (8, "hi there"),
+        ],
+        "doc_id long, text string",
+    )
+    no_eval = build_eval_grams(spark.createDataFrame([], "doc_id long, text string"))
+    flagged = flag_contamination(docs, no_eval).collect()
+    assert sorted(r["doc_id"] for r in flagged) == [7, 8]
+    assert all(r["eval_hits"] == 0 and r["contaminated"] is False for r in flagged)
 
 
 def test_repetition_filter_plan_shape(spark):

@@ -13,14 +13,15 @@ both levels process identical rows, so the wall ratio is the throughput
 ratio, and both legs of one trial share a load window, so the headline is
 the median paired trial, with min and max beside it. A single level
 (``--pair 4``) records walls only — for queries, each query's cold wall
-(its own cache builds included) and warm wall in a fresh session.
+(its own cache builds included) and warm wall in a fresh session that one
+untimed query-shaped job has already warmed up.
 
 Usage: python tools/bench_pair.py --workload WORKLOAD --data-dir DIR \\
            --run-name NAME [--pair 1:4] [--trials 2] [--queries a,b]
 
-``engine`` reads a ``run_validation.py --materialize`` dir, ``curate`` and
-``stream_gate`` a ``tools/gen_scale_docs.py`` corpus, ``queries`` any dir
-its queries read (default: bench.py's BENCH_QUERIES). A trial's child is
+``engine`` reads a ``run_validation.py --materialize`` dir, ``curate`` a
+``tools/gen_scale_docs.py`` corpus, ``queries`` any dir its queries read
+(default: bench.py's BENCH_QUERIES). A trial's child is
 ``python tools/bench_pair.py --worker <plugin> --cores C --data-dir DIR``.
 """
 
@@ -87,6 +88,32 @@ def engine(args, master: str) -> dict:
     }
 
 
+def _warm_up(spark) -> None:
+    """One untimed job in the shape of a query — an identity ``mapInPandas``
+    over a partition per core (every core's Python worker up, pandas and
+    Arrow imported), a parquet write and scan, a top-k window, an aggregate
+    and a collect — so the first query's cold wall does not pay the
+    session's worker start and JVM warm-up for every query after it."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    n = spark.sparkContext.defaultParallelism
+    path = tempfile.mkdtemp(prefix="bench_pair_warm_")
+    try:
+        rows = spark.range(0, 10_000, 1, n).selectExpr(
+            "id % 97 AS k", "array(CAST(id AS float)) AS v"
+        )
+        rows.mapInPandas(
+            lambda batches: batches, "k long, v array<float>"
+        ).write.mode("overwrite").parquet(path)
+        top = Window.partitionBy("k").orderBy(F.desc(F.col("v")[0]))
+        spark.read.parquet(path).withColumn(
+            "r", F.row_number().over(top)
+        ).filter("r <= 3").groupBy("k").count().collect()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def queries(args, master: str) -> dict:
     """Per query: a cold pass, then the timed warm pass (noop sinks)."""
     from log_anomaly_detector_spark.operators import all_queries
@@ -105,6 +132,7 @@ def queries(args, master: str) -> dict:
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
     with _session(master) as spark:
+        _warm_up(spark)
         for name in names:
             release_all()  # the cold wall pays for this query's own caches
             spark.sparkContext.setJobDescription(f"bench_pair:{name}")
@@ -131,64 +159,7 @@ def curate(args, master: str) -> dict:
             "input": m["input_docs"]}
 
 
-def stream_gate(args, master: str) -> dict:
-    """A cold drain (fresh checkpoint and sinks) of the streaming quality gate.
-
-    The stream input (doc_id, ts, text) and the eval grams are built outside
-    the timed drain; the input is derived from the corpus's
-    documents.parquet and cached beside it as ``<data-dir>_stream_in``.
-    """
-    from pyspark.sql import functions as F
-
-    from log_anomaly_detector_spark.operators.relational import _hash_bucket
-    from log_anomaly_detector_spark.operators.text import DECONTAM_EVAL_PCT, DECONTAM_SEED
-    from log_anomaly_detector_spark.streaming.quality_stream import (
-        build_eval_grams,
-        run_quality_gate_once,
-    )
-
-    stream_in = args.data_dir.rstrip("/") + "_stream_in"
-    work = tempfile.mkdtemp(prefix="bench_pair_sgate_")
-    try:
-        with _session(master) as spark:
-            docs = spark.read.parquet(f"{args.data_dir}/documents.parquet")
-            n_docs = docs.count()
-            try:
-                cached_rows = spark.read.parquet(stream_in).count()
-            except Exception:  # absent, partial write, foreign files
-                cached_rows = -1
-            if cached_rows != n_docs:
-                # rebuild unless the cache mirrors the corpus exactly, or the
-                # record would describe data the drain never touched. FIXED
-                # 16-way layout regardless of cores: a micro-batch's
-                # parallelism follows the input file splits, so a layout
-                # written by the small leg would starve the large one.
-                docs.select(
-                    "doc_id",
-                    F.timestamp_seconds(
-                        F.lit(1_700_000_000) + F.col("doc_id") % 86_400
-                    ).alias("ts"),
-                    "text",
-                ).repartition(16, "doc_id").write.mode("overwrite").parquet(
-                    stream_in
-                )
-            in_eval = _hash_bucket(F.col("doc_id"), DECONTAM_SEED) < DECONTAM_EVAL_PCT
-            eval_grams = build_eval_grams(spark, docs.filter(in_eval)).persist()
-            eval_grams.count()
-            t0 = time.time()
-            kept = run_quality_gate_once(
-                spark, stream_in, eval_grams,
-                f"{work}/ckpt", f"{work}/kept", f"{work}/quarantine",
-            )
-            n_kept = kept.count()
-            wall = round(time.time() - t0, 3)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return {"walls": {"stream_quality_gate": wall}, "n_docs": n_docs,
-            "n_kept": n_kept, "docs_per_sec": round(n_docs / wall, 1)}
-
-
-PLUGINS = {f.__name__: f for f in (engine, queries, curate, stream_gate)}
+PLUGINS = {f.__name__: f for f in (engine, queries, curate)}
 
 
 # ----------------------------------------------------------- driver loop

@@ -27,7 +27,8 @@ at the driver gate), so the CLI adds composition, not new semantics:
 exact dedup keys on `functions.text_funcs.fingerprint`, near-dup on
 `operators.dedup_clusters.q_dedup_clusters`, the gates on
 `q_repetition_filter` / `q_quality_score` keep flags, decontamination on
-`operators.text.flag_contamination` against the external benchmark. Scale
+`operators.text.flag_contamination` against `build_eval_grams` of the
+external benchmark (the same pair q_decontaminate runs). Scale
 shape: each stage emits a (doc_id, stage) drop table — shuffles carry ids
 and hashes, never document text; the single text-bearing pass is the final
 anti-join writing the curated corpus.
@@ -63,12 +64,10 @@ def curate(spark, data_dir: str, out_dir: str, eval_dir: str | None = None) -> d
         q_dedup_clusters,
     )
     from log_anomaly_detector_spark.operators.text import (
+        build_eval_grams,
         flag_contamination,
         q_quality_score,
         q_repetition_filter,
-    )
-    from log_anomaly_detector_spark.streaming.quality_stream import (
-        build_eval_grams,
     )
 
     t0 = time.time()
@@ -111,7 +110,7 @@ def curate(spark, data_dir: str, out_dir: str, eval_dir: str | None = None) -> d
     if eval_dir:
         bench = spark.read.parquet(os.path.join(eval_dir, "documents.parquet"))
         drops.append(
-            flag_contamination(docs, build_eval_grams(spark, bench))
+            flag_contamination(docs, build_eval_grams(bench))
             .filter(F.col("contaminated"))
             .select("doc_id", F.lit("decontam").alias("stage"))
         )
