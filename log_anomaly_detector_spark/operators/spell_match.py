@@ -16,12 +16,13 @@ Reference semantics being reproduced (logparser/Spell.py):
   OPTIMIZATIONS of the same decision — the matcher below implements the
   authoritative LCS tier.
 
-Spark lift: templates are a dim-sized broadcast side; the set-overlap
-prefilter becomes a PREFIX-PRINCIPLE EQUI TOKEN JOIN (a line's first
-|distinct|−⌈len/2⌉+1 canonical-order distinct tokens must hit any
-qualifying template, so candidates come from a hash join on single tokens,
-never a per-line nested-loop scan of the dim — plan-asserted); the exact
-overlap check then runs on candidates only, and LCS itself
+Spark lift: the template dim is collected to the driver and travels to the
+lines as ONE broadcast row (``template_match._dim_row``): the templates
+sorted by (length, id), plus a map from each distinct template token to
+their ordinals. The set-overlap prefilter uses the PREFIX PRINCIPLE: a
+line's first |distinct|−⌈len/2⌉+1 canonical-order distinct tokens must hit
+any qualifying template, so each line looks up only those probe tokens in
+the map and runs the exact overlap check on what they return. LCS itself
 is a pure Catalyst fold: ``aggregate`` over the line's tokens with the DP row
 as the accumulator. One step of the classic recurrence
 
@@ -31,10 +32,12 @@ is computed as ``u[j] = eq ? row[j-1]+1 : row[j]`` followed by a prefix-max
 (valid because adjacent DP cells differ by ≤ 1); the prefix-max is an
 O(m²) ``transform`` + ``array_max`` — m is a log-template length (tens), so
 the whole score is a few hundred JVM-side integer ops per candidate, no
-Python anywhere. The per-line argmax is a window over the (small) candidate
-set, tie-break pinned (desc lcs_len, asc template length, asc template_id —
-the reference scans insertion order, which a distributed argmax cannot
-reproduce; the pinned order is deterministic at any parallelism).
+Python anywhere. The best template is ``array_max`` over the line's
+(lcs_len, -ordinal) structs, so the tie-break is pinned (desc lcs_len, asc
+template length, asc template_id — the reference scans insertion order,
+which a distributed argmax cannot reproduce; the pinned order is
+deterministic at any parallelism). The line side joins nothing but the
+one-row dim: no window, no shuffle of its own.
 
 The identical integer DP is expressible in DuckDB as a recursive CTE
 (one iteration per line token, same prefix-max trick), so the operator gets
@@ -43,8 +46,10 @@ a HARD value oracle — see ``_SPELL_SQL``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from log_anomaly_detector_spark.operators.template_match import _dim_row, _tmpl
 
 TAU = 0.5  # Spell's default tau (Spell.py:49) — accept iff lcs >= tau·|seq|
 
@@ -98,87 +103,57 @@ def spell_match(
     tokens, but the reference applies exactly this filter and so do we).
     Accept: lcs_len ≥ tau·|seq|. Tie-break: desc lcs_len, asc |template|,
     asc template_id (pinned; reference: insertion order, Spell.py:124-127).
+    Templates with NULL tokens never match.
     """
-    l = lines.select(
-        F.col("line_id").alias("_lid"),
-        F.col("tokens").alias("_ltok"),
-        F.size("tokens").alias("_n"),
+    # the dim in tie-break order, its distinct tokens mapped to ordinals
+    dim = _dim_row(
+        templates, len, lambda toks: {x for x in toks if x is not None}, "string"
     )
-    t = templates.select(
-        F.col("template_id").alias("_tid"),
-        F.col("template_tokens").alias("_ttok"),
-        F.size("template_tokens").alias("_m"),
+    n = F.size("tokens")
+    # ---- candidates via the prefix principle. The reference's prefilter is
+    # |distinct(A) ∩ B| ≥ 0.5·len(A) (raw length!). Any probe set of the
+    # first |distinct(A)| − ⌈len(A)/2⌉ + 1 canonical-order distinct tokens
+    # must hit a qualifying template: if it misses, the overlap is
+    # ≤ ⌈len(A)/2⌉ − 1 < 0.5·len(A). So each line looks up only its probe
+    # tokens in the dim's token map, then applies the exact filter. ---------
+    dset = F.array_sort(F.array_distinct("tokens"))
+    probe_len = F.size(dset) - F.ceil(n / 2).cast("int") + 1
+    probes = F.slice(dset, 1, F.greatest(probe_len, F.lit(0)))
+    hits = F.transform(
+        probes,
+        lambda p: F.coalesce(F.element_at("_cand", p), F.array().cast("array<int>")),
     )
-    # ---- candidate generation: EQUI token join via the prefix principle,
-    # never a per-line scan of the dim (a non-equi overlap predicate would
-    # plan a BroadcastNestedLoopJoin — linear in |dim| per line). The
-    # reference's prefilter is |distinct(A) ∩ B| ≥ 0.5·len(A) (raw length!).
-    # Any probe set of the first |distinct(A)| − ⌈len(A)/2⌉ + 1 canonical-
-    # order distinct tokens must hit a qualifying template: if it misses,
-    # the overlap is ≤ ⌈len(A)/2⌉ − 1 < 0.5·len(A). Lines whose probe
-    # length is ≤ 0 can match nothing and fall out naturally (re-attached
-    # as unmatched by the final left join). ----------------------------------
-    min_overlap = F.ceil(F.col("_n") / 2).cast("int")
-    dset = F.array_sort(F.array_distinct(F.col("_ltok")))
-    probe_len = F.size(dset) - min_overlap + 1
-    probes = l.select(
-        "_lid", F.explode(F.slice(dset, 1, F.greatest(probe_len, F.lit(0)))).alias("_tok")
+    cands = F.filter(
+        F.array_distinct(F.flatten(hits)),
+        lambda o: F.size(F.array_intersect("tokens", _tmpl(o)["tokens"])) >= 0.5 * n,
     )
-    t_toks = t.select(
-        "_tid", F.explode(F.array_distinct(F.col("_ttok"))).alias("_tok")
-    )
-    cand_ids = (
-        probes.join(F.broadcast(t_toks), "_tok")
-        .select("_lid", "_tid")
-        .dropDuplicates(["_lid", "_tid"])
-    )
-    cand = (
-        cand_ids.join(l, "_lid")
-        .join(F.broadcast(t), "_tid")
-        # the exact reference prefilter, now evaluated on candidates only
-        .filter(
-            F.size(F.array_intersect(F.col("_ltok"), F.col("_ttok")))
-            >= 0.5 * F.col("_n")
+
+    def score(o, lcs):
+        return F.struct(
+            lcs.alias("lcs"), (-o).alias("neg_ord"), _tmpl(o)["tid"].alias("tid")
         )
+
+    scored = F.transform(
+        cands, lambda o: score(o, lcs_length(F.col("tokens"), _tmpl(o)["tokens"]))
     )
-    lcs = lcs_length(F.col("_ltok"), F.col("_ttok"))
-    scored = cand.select("_lid", "_n", "_tid", lcs.alias("_lcs"), "_m")
-    w = Window.partitionBy("_lid").orderBy(
-        F.desc("_lcs"), F.asc("_m"), F.asc("_tid")
-    )
-    best = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("_lid", "_tid", "_lcs")
-    )
-    # zero-token lines: the reference's LCSMatch arithmetic matches them to
-    # the SHORTEST template (every lcs is 0, prefilter 0 < 0.5·0 never skips,
-    # accept 0 ≥ tau·0 holds; our pinned tie-break → min (len, id)). The
-    # probe join above can't generate them (empty probe set), so they take
-    # this dedicated path: constant-key equi join against the 1-row shortest
-    # template (dim-sized aggregate, no nested loop).
-    # constant-but-NON-FOLDABLE join key (pmod(col, 1) — a literal key would
-    # constant-fold and degenerate the equi join back into a nested loop,
-    # the shape the plan test forbids; same trick as relational.one_part)
-    shortest = (
-        t.orderBy("_m", "_tid")
-        .limit(1)
-        .select(F.pmod(F.col("_m"), F.lit(1)).alias("_k"), F.col("_tid"))
-    )
-    empty_best = (
-        l.filter(F.col("_n") == 0)
-        .select("_lid", F.pmod(F.col("_n"), F.lit(1)).alias("_k"))
-        .join(shortest, "_k")
-        .select("_lid", "_tid", F.lit(0).alias("_lcs"))
-    )
-    best = best.unionByName(empty_best)
-    # every line gets a row; candidate-less lines surface as NULL/NULL
-    return l.select("_lid", "_n").join(best, "_lid", "left").select(
-        F.col("_lid").alias("line_id"),
-        F.when(F.col("_lcs") >= tau * F.col("_n"), F.col("_tid")).alias(
-            "matched_template_id"
-        ),
-        F.col("_lcs").cast("int").alias("lcs_len"),
+    # zero-token lines: the probe finds nothing, but the reference's LCSMatch
+    # arithmetic matches them to the SHORTEST template (every lcs is 0,
+    # prefilter 0 < 0.5·0 never skips, accept 0 ≥ tau·0 holds; our pinned
+    # tie-break → min (len, id)) — ordinal 0 of the sorted dim
+    best = F.when(
+        (n == 0) & (F.size("_dim") > 0), score(F.lit(0), F.lit(0))
+    ).otherwise(F.array_max(scored))
+    return (
+        lines.select("line_id", "tokens")
+        .crossJoin(F.broadcast(dim))
+        .select("line_id", n.alias("_n"), best.alias("_b"))
+        .select(
+            "line_id",
+            F.when(F.col("_b.lcs") >= tau * F.col("_n"), F.col("_b.tid")).alias(
+                "matched_template_id"
+            ),
+            F.col("_b.lcs").cast("int").alias("lcs_len"),
+        )
     )
 
 
@@ -192,9 +167,11 @@ def q_spell_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_anomaly_detector_spark.operators.relational import t, widen
 
     docs = t(spark, sf_dir, "documents")
-    # the line side is consumed three times (probe explode, candidate
-    # re-join, final left join), each tokenizing off the single-split scan —
-    # widen it once (template side keeps the plain scan: doc_id<25 pushes)
+    # the line side is read once, but its per-line LCS fold is heavy enough
+    # that spreading the single-split scan pays as lines grow: warm walls
+    # widened vs plain were 0.92 vs 0.94 s on 5k docs and 1.35 vs 2.32 s on
+    # 50k docs (medians of 10 runs, local[4] on a 4-core host). The template
+    # side keeps the plain scan: doc_id<25 pushes down.
     lines = widen(docs.select("doc_id", "text"), "doc_id").select(
         F.col("doc_id").alias("line_id"),
         F.slice(words(F.col("text")), 1, 5).alias("tokens"),

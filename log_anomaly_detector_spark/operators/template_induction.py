@@ -48,14 +48,15 @@ from __future__ import annotations
 import hashlib
 from dataclasses import dataclass, field
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
 from pyspark.storagelevel import StorageLevel
 
-WILDCARD = "<*>"
+from log_anomaly_detector_spark.operators.template_match import (
+    WILDCARD,
+    _local,
+    _seq_sim,
+)
 
 _HAS_DIGIT = "[0-9]"
 
@@ -70,15 +71,6 @@ _TEMPLATES_DDL = (
     "occurrences long NOT NULL, is_new boolean NOT NULL"
 )
 _EVENT_IDS_DDL = "template_id long, event_id string"
-
-
-def _local(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
-    """Driver rows as a LocalRelation (the Arrow path; a list of tuples
-    would become an RDD scan): a projection over it folds on the driver, so
-    collecting one runs no Spark job."""
-    schema = DataType.fromDDL(ddl)
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
 
 
 def _dim_local(spark: SparkSession, dim: list) -> DataFrame:
@@ -154,15 +146,7 @@ def _match(lines: DataFrame, dim: list, st: float, depth: int) -> DataFrame:
         return fit
 
     def score(t):
-        # seqDist (Drain.py:151-165): equal position counts 1; template
-        # wildcard counts as a parameter, not similarity
-        eq = F.zip_with(
-            "tokens",
-            t["tokens"],
-            lambda a, b: ((a == b) & (b != WILDCARD)).cast("int"),
-        )
-        sim = F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.size("tokens")
-        npar = F.size(F.filter(t["tokens"], lambda x: x == WILDCARD))
+        sim, npar = _seq_sim(F.col("tokens"), t["tokens"])
         return F.struct(
             sim.alias("sim"), npar.alias("npar"), (-t["tid"]).alias("neg_tid")
         )

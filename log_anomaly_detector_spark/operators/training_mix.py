@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.functions.text_funcs import words
-from log_anomaly_detector_spark.operators.relational import t
+from log_anomaly_detector_spark.operators.relational import _hash_bucket, t
 
 PACK_BUCKETS = 8
 PACK_BUDGET = 256  # tokens per training bin
@@ -45,20 +45,6 @@ PACK_SEED = 31
 # per-language keep-rate (percent) — the mix recipe
 MIX_WEIGHTS = {"en": 90, "fr": 50, "es": 25, "de": 10}
 MIX_SEED = 37
-
-
-def _md5_bucket(key, seed: int):
-    """0-99 md5 coin (percent rates), identical construction to
-    relational._hash_bucket (kept local so this module's oracle strings stay
-    self-contained)."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(key.cast("string"), F.lit(f":{seed}"))), 1, 6),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
 
 
 def _md5_bucket_n(key, seed: int, n: int):
@@ -147,7 +133,7 @@ def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         F.lit(0),
     )
-    kept = (_md5_bucket(F.col("doc_id"), MIX_SEED) < rate).cast("int")
+    kept = (_hash_bucket(F.col("doc_id"), MIX_SEED) < rate).cast("int")
     return (
         docs.select("lang", kept.alias("_k"))
         .groupBy("lang")

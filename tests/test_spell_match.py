@@ -5,12 +5,18 @@ accept) on planted cases."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.operators.spell_match import (
     lcs_length,
+    q_spell_match,
     spell_match,
 )
+from log_anomaly_detector_spark.operators.text import q_template_match
+from log_anomaly_detector_spark.plans import formatted_plan
+
+SF = "/root/testdata/sf0.001"
 
 
 def _lcs_ref(a: list[str], b: list[str]) -> int:
@@ -66,6 +72,7 @@ def test_spell_match_reference_decisions(spark):
             ("T1", ["recv", "block", "<*>", "from", "<*>"]),
             ("T2", ["recv", "block", "<*>", "from"]),       # shorter: wins ties
             ("T3", ["delete", "block", "<*>"]),
+            ("T4", None),                                   # never matches
         ],
         "template_id string, template_tokens array<string>",
     )
@@ -80,7 +87,8 @@ def test_spell_match_reference_decisions(spark):
             # shares 'recv block' but 2 < 0.5·5 → below tau either way
             (3, ["recv", "block", "x", "y", "z"]),
             # zero tokens: reference arithmetic matches the SHORTEST template
-            # (all lcs 0, accept 0 >= tau·0) — T3 is the 3-token dim minimum
+            # (all lcs 0, accept 0 >= tau·0) — T3 is the 3-token dim minimum;
+            # T4's NULL tokens must not hide it
             (4, []),
         ],
         "line_id long, tokens array<string>",
@@ -96,12 +104,45 @@ def test_spell_match_reference_decisions(spark):
     assert got[4] == ("T3", 0)
 
 
-def test_spell_match_plans_equi_candidate_join(spark):
-    """Candidates come from the prefix-principle token hash join — the plan
-    must contain no nested-loop scan of the template dim per line."""
-    from log_anomaly_detector_spark.operators.spell_match import q_spell_match
-    from log_anomaly_detector_spark.plans import formatted_plan
+def _nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
 
-    plan = formatted_plan(q_spell_match(spark, "/root/testdata/sf0.001"))
-    assert "BroadcastNestedLoopJoin" not in plan
+
+@pytest.mark.parametrize(
+    "query", [q_spell_match, q_template_match], ids=["spell_match", "template_match"]
+)
+def test_match_plan_joins_lines_to_one_dim_row(spark, query):
+    """The line side joins nothing but the one-row template dim: no window,
+    no cartesian product, no shuffle but widen's repartition, and the one
+    nested-loop join builds from a one-row LocalTableScan."""
+    df = query(spark, SF)
+    plan = formatted_plan(df)
+    assert "Window" not in plan
     assert "CartesianProduct" not in plan
+    nodes = list(_nodes(df._jdf.queryExecution().executedPlan().executedPlan()))
+    exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+    assert [str(n.shuffleOrigin()) for n in exchanges] == ["REPARTITION_BY_NUM"]
+    (join,) = [n for n in nodes if n.nodeName() == "BroadcastNestedLoopJoin"]
+    build = join.right() if str(join.buildSide()) == "BuildRight" else join.left()
+    assert build.nodeName() == "BroadcastExchange"
+    assert build.child().nodeName() == "LocalTableScan"
+    assert build.child().rows().size() == 1
+
+
+def test_spell_match_job_count(spark):
+    """Built and collected on sf0.001 from cold caches, q_spell_match runs at
+    most 5 Spark jobs (counted by job group): the dim collect plus the line
+    pass. A token join, window argmax and zero-token join made it 10."""
+    from log_anomaly_detector_spark.operators.caching import release_all
+
+    sc = spark.sparkContext
+    release_all()
+    sc.setJobGroup("spell-match-jobs", "q_spell_match")
+    try:
+        assert len(q_spell_match(spark, SF).collect()) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("spell-match-jobs")) <= 5

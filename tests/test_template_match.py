@@ -10,6 +10,7 @@ TEMPLATES = [
     ("T2", ["Receiving", "block", "<*>", "dest:", "<*>"]),
     ("T3", ["PacketResponder", "<*>", "terminating"]),
     ("T4", ["<*>", "served", "request"]),
+    ("T6", None),
 ]
 
 
@@ -33,6 +34,7 @@ def test_exact_and_fuzzy_match(spark):
             ("l3", ["PacketResponder", "7", "terminating"]),            # T3 2/3
             ("l4", ["totally", "novel", "event", "shape", "here"]),     # no match
             ("l5", ["node9", "served", "request"]),                     # T4 wildcard first
+            ("l6", None),                                               # NULL tokens
         ],
     )
     assert got["l1"][0] == "T1"
@@ -40,6 +42,7 @@ def test_exact_and_fuzzy_match(spark):
     assert got["l3"] == ("T3", round(2 / 3, 6))
     assert got["l4"][0] is None  # new template → anomaly flag (Drain.py:367-377)
     assert got["l5"][0] == "T4"
+    assert got["l6"] == (None, None)
 
 
 def test_threshold_gate(spark):

@@ -21,7 +21,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
     )
     from log_anomaly_detector_spark.session import get_spark, quiesce
 
-    spark = get_spark("oracle-check", master="local[16]")
+    spark = get_spark("oracle-check")
     con = duck_connection(sf_dir)
     qs, oracles = e.queries(), e.oracle_sql()
     fails = []
