@@ -134,8 +134,8 @@ def test_match_plan_joins_lines_to_one_dim_row(spark, query):
 
 def test_spell_match_job_count(spark):
     """Built and collected on sf0.001 from cold caches, q_spell_match runs at
-    most 5 Spark jobs (counted by job group): the dim collect plus the line
-    pass. A token join, window argmax and zero-token join made it 10."""
+    most 5 Spark jobs (counted by job group): the dim collect plus the one
+    pass over the lines."""
     from log_anomaly_detector_spark.operators.caching import release_all
 
     sc = spark.sparkContext
