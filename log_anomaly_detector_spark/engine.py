@@ -63,10 +63,6 @@ VERDICT_SCHEMA = (
 VIOLATION_SCHEMA = (
     "part_id int, doc_id string, rule_id string, observed string, expected string"
 )
-RULE_VERDICT_SCHEMA = (
-    "part_id int, rule_id string, passed boolean, observed_stat double, "
-    "threshold double"
-)
 
 
 @dataclass

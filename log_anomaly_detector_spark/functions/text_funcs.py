@@ -29,9 +29,9 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized(text))
 
 
-def stopword_count(ws: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+def stopword_count(ws: Column) -> Column:
     """# of stopword tokens — array higher-order filter, JVM-side."""
-    return F.size(F.filter(ws, lambda w: w.isin(*stopwords)))
+    return F.size(F.filter(ws, lambda w: w.isin(*EN_STOPWORDS)))
 
 
 def rep_fold(grams: Column) -> Column:

@@ -31,15 +31,11 @@ from pyspark.storagelevel import StorageLevel
 _LIVE: dict[str, DataFrame] = {}
 
 
-def tracked_persist(
-    key: str,
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
+def tracked_persist(key: str, df: DataFrame) -> DataFrame:
     prev = _LIVE.pop(key, None)
     if prev is not None:
         try:
-            if prev.storageLevel == level and prev.sameSemantics(df):
+            if prev.sameSemantics(df):
                 # identical canonicalized plan (sameSemantics is exact, not a
                 # hash) — hand back the already-warm handle instead of paying
                 # a rebuild; queries that compose other queries (e.g. cluster
@@ -52,7 +48,7 @@ def tracked_persist(
             prev.unpersist(blocking=False)
         except Exception:  # session gone — nothing to release
             pass
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE[key] = out
     return out
 

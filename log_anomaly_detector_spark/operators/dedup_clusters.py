@@ -38,13 +38,11 @@ from log_anomaly_detector_spark.operators.text import _JACCARD_SQL
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_rounds: int = 20,
     collect_budget: int = 1_000_000,
 ) -> DataFrame:
-    """(node, component_id) for every node in ``pairs``; component_id = the
-    minimum node id reachable from it.
+    """(node, component_id) for every node of the (doc_a, doc_b) edges in
+    ``pairs``; component_id = the minimum node id reachable from it.
 
     SIZE-DISPATCHED (round 7): the pair graph of a near-dup pass is
     RESULT-sized (edges exist only between actual duplicates), and at bench
@@ -77,7 +75,7 @@ def connected_components(
     # the edge checkpoint; cache it for the one action that builds edges,
     # then drop it (rounds only ever touch the checkpointed edge table)
     pairs_c = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
         # a pair with a NULL endpoint is no edge: NULL is never a node
         .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
         .persist()

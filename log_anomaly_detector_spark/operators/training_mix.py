@@ -61,12 +61,7 @@ def _md5_bucket_n(key, seed: int, n: int):
     )
 
 
-def pack_documents(
-    docs: DataFrame,
-    n_buckets: int = PACK_BUCKETS,
-    budget: int = PACK_BUDGET,
-    seed: int = PACK_SEED,
-) -> DataFrame:
+def pack_documents(docs: DataFrame, n_buckets: int = PACK_BUCKETS) -> DataFrame:
     """(doc_id, pack_bucket, bin_id, tok_offset, n_tok): which training bin
     each document lands in and at what token offset, packing greedily in
     doc_id order within each of ``n_buckets`` md5-hash buckets (see module
@@ -74,7 +69,7 @@ def pack_documents(
     Reference analogue: fixed seq_len sample assembly,
     bert_pytorch/dataset/dataset.py:8-44."""
     n_tok = F.size(words(F.col("text")))
-    bucket = _md5_bucket_n(F.col("doc_id"), seed, n_buckets).cast("int")
+    bucket = _md5_bucket_n(F.col("doc_id"), PACK_SEED, n_buckets).cast("int")
     base = docs.select(
         "doc_id", bucket.alias("pack_bucket"), n_tok.alias("n_tok")
     )
@@ -83,8 +78,8 @@ def pack_documents(
     return base.select("doc_id", "pack_bucket", "n_tok", start).select(
         "doc_id",
         "pack_bucket",
-        F.floor(F.col("_start") / budget).cast("int").alias("bin_id"),
-        (F.col("_start") % budget).cast("int").alias("tok_offset"),
+        F.floor(F.col("_start") / PACK_BUDGET).cast("int").alias("bin_id"),
+        (F.col("_start") % PACK_BUDGET).cast("int").alias("tok_offset"),
         "n_tok",
     )
 

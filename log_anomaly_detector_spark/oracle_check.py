@@ -34,12 +34,6 @@ def duck_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
     return con
 
 
-def compare_one(spark, con, name: str, fn, sql: str | None, sf_dir: str) -> list[str]:
-    """Returns a list of problems ([] = pass)."""
-    problems, _ = compare_one_counted(spark, con, name, fn, sql, sf_dir)
-    return problems
-
-
 def compare_one_counted(
     spark, con, name: str, fn, sql: str | None, sf_dir: str
 ) -> tuple[list[str], int]:

@@ -1,131 +1,30 @@
 """The reference's detection lifecycle as ONE Spark dataflow.
 
-Mirrors ``run_pipeline_v2`` (``api/detect_anomaly_sequence_v2.py:197-306``)
-stage for stage — with the imperative per-line/per-block loops replaced by
-declarative plans, and the BERT scorer replaced by the line-level ratio that
-v2 itself uses to override the model score when anomalous lines exist
-(``detect_anomaly_sequence_v2.py:237-241``):
+``run_induction_pipeline`` mirrors ``run_pipeline_v2``
+(``api/detect_anomaly_sequence_v2.py:197-306``) with LEARNED templates:
+parse the raw text (`sources.read_structured_logs`, a codegen'd regex scan),
+induce the template dim with ``operators.template_induction`` as a
+driver-local table, flag every line whose template had to be founded this
+run, and score each block by its share of flagged lines — the line-level
+ratio v2 itself uses to override the BERT score
+(``detect_anomaly_sequence_v2.py:237-241``). The line flags are one
+broadcast join computed and cached once, and the verdicts aggregate that
+cached table. Every cached table has its own ``tracked_persist`` slot, so
+repeated calls in one session hold one copy each.
 
-| stage | reference | here |
-| --- | --- | --- |
-| parse          | Drain per-line loop (``logparser/Drain.py:329-423``) | `sources.read_structured_logs` (regex scan, codegen) |
-| line flags     | no-template-match ⇒ ``is_anomaly`` (``Drain.py:367-377``) | unparseable ⇒ flagged violation line |
-| template dim   | ``outputResult`` value_counts (``Drain.py:201-239``) | groupBy(EventTemplate).count + md5-8 id |
-| warm start     | ``load_previous_clusters`` (``Drain.py:260-279``) | union previous dim + dropDuplicates |
-| mapping        | rank by occurrences (``HDFS/data_process.py:33-40``) | row_number window, tie-break by EventId |
-| sequences      | per-block int lists (``HDFS/data_process.py:86-94``) | explode block ids → broadcast mapping join → ordered collect |
-| verdict        | score ≥ threshold ⇒ 'Anomaly' (``:245-246``), score = anomalous/total (``:237-241``), round 6dp (``upsert_log_block.py:32``) | same, as column expressions |
-
-Every stage returns a DataFrame, so any of them can be written to a table —
-the reference's upserts (S10-S12) become idempotent partition overwrites via
-``storage.overwrite_partitions``.
-
-``run_induction_pipeline`` is the v2 lifecycle with LEARNED templates: the
-dim comes from ``operators.template_induction`` as a driver-local table, the
-line flags are one broadcast join computed and cached once, and the verdicts
-aggregate that cached table. Every cached table has its own
-``tracked_persist`` slot, so repeated calls in one session hold one copy each.
+Every result is a DataFrame, so each can be written as a table — the
+reference's upserts (S10-S12) are ``tools/parse_logs.py``'s overwrites.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.operators.caching import tracked_persist
 from log_anomaly_detector_spark.sources.logtext import read_structured_logs
-
-UNMAPPED = -1  # the reference's sentinel for unknown events (data_process.py:84)
-
-
-@dataclass
-class PipelineResult:
-    structured: DataFrame   # per-line records + flags (log_line analogue)
-    templates: DataFrame    # EventId, EventTemplate, Occurrences (event dim)
-    mapping: DataFrame      # EventId → event_int rank (event_mapping dim)
-    sequences: DataFrame    # block_id, tokens, n_tok (log_block analogue)
-    verdicts: DataFrame     # block_id, anomaly_score, label (anomaly_sequence)
-
-
-def run_detection_pipeline(
-    spark: SparkSession,
-    raw_log_path: str,
-    previous_templates: DataFrame | None = None,
-    seq_threshold: float = 0.2,
-    logformat: str = "<Date> <Time> <Pid> <Level> <Component>: <Content>",
-) -> PipelineResult:
-    structured = tracked_persist(
-        "detection_structured", read_structured_logs(spark, raw_log_path, logformat)
-    )
-
-    # [1] template dimension (+ warm start)
-    templates = (
-        structured.filter("_parsed")
-        .groupBy("EventId", "EventTemplate")
-        .agg(F.count(F.lit(1)).alias("Occurrences"))
-    )
-    if previous_templates is not None:
-        templates = (
-            templates.unionByName(
-                previous_templates.select("EventId", "EventTemplate", "Occurrences")
-            )
-            .groupBy("EventId", "EventTemplate")
-            .agg(F.sum("Occurrences").alias("Occurrences"))
-        )
-
-    # [2] occurrence-ranked mapping; ties pinned by EventId (FIXTURES.md).
-    # Input is the post-aggregation template dim (dim-sized) — the constant
-    # non-foldable key keeps the bounded window off the warn-worthy
-    # unpartitioned path (see operators.relational.one_part)
-    from log_anomaly_detector_spark.operators.relational import one_part
-
-    w = Window.partitionBy(one_part(F.col("Occurrences"))).orderBy(
-        F.desc("Occurrences"), F.asc("EventId")
-    )
-    mapping = templates.withColumn("event_int", F.row_number().over(w))
-
-    # [3] block sequences: one row per (line, block) then ordered collect.
-    # The reference loops blocks and re-queries per block (N+1 queries,
-    # detect_anomaly_sequence_v2.py:159-167); here it is one explode + one
-    # broadcast join + one agg.
-    lines = (
-        structured.filter("_parsed")
-        .select(
-            "LineId",
-            "EventId",
-            F.explode("BlockIds").alias("block_id"),
-        )
-        .join(
-            F.broadcast(mapping.select("EventId", "event_int")), "EventId", "left"
-        )
-        .withColumn("event_int", F.coalesce("event_int", F.lit(UNMAPPED)))
-    )
-    sequences = (
-        lines.groupBy("block_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("LineId", "event_int"))),
-                lambda x: x["event_int"],
-            ).alias("tokens")
-        )
-        .withColumn("n_tok", F.size("tokens"))
-    )
-
-    # [4] verdicts: line-ratio score (anomalous = unmapped here), 6dp, >=
-    score = F.round(
-        F.size(F.filter(F.col("tokens"), lambda t: t == UNMAPPED)) / F.col("n_tok"), 6
-    )
-    verdicts = sequences.select(
-        "block_id",
-        "n_tok",
-        score.alias("anomaly_score"),
-        F.when(score >= F.lit(seq_threshold), F.lit("Anomaly"))
-        .otherwise(F.lit("Normal"))
-        .alias("label"),
-    )
-    return PipelineResult(structured, templates, mapping, sequences, verdicts)
 
 
 @dataclass

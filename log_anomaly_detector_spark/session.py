@@ -23,14 +23,12 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = "log_anomaly_detector_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``master`` default: ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
     cores this process may run on, ``os.sched_getaffinity``).
-    ``shuffle_partitions`` default: the local core count — the 200 default
+    ``spark.sql.shuffle.partitions``: the local core count — the 200 default
     over-parallelizes small local runs and under-parallelizes big ones.
     ``spark.driver.memory``: ``$SPARK_DRIVER_MEMORY``, else half of physical
     RAM (it only takes effect when this call starts the JVM).
@@ -47,12 +45,11 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] → N; local[*] or cluster → cpu hint
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cpus if inner in ("", "*") else int(inner)
+    # local[N] → N; local[*] or cluster → cpu hint
+    inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
+    shuffle_partitions = cpus if inner in ("", "*") else int(inner)
 
-    builder = (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -70,16 +67,14 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
         )
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def quiesce(spark: SparkSession, timeout_s: float = 30.0) -> None:
-    """Wait (bounded) for stray async jobs before ``spark.stop()``.
+def quiesce(spark: SparkSession) -> None:
+    """Wait (at most 30 s) for stray async jobs before ``spark.stop()``.
 
     AQE submits broadcast-stage futures speculatively during planning; when
     the final plan goes another way, the abandoned future keeps running for a
@@ -91,7 +86,7 @@ def quiesce(spark: SparkSession, timeout_s: float = 30.0) -> None:
     import time
 
     tracker = spark.sparkContext.statusTracker()
-    deadline = time.time() + timeout_s
+    deadline = time.time() + 30.0
     while time.time() < deadline:
         if not tracker.getActiveJobsIds():
             return

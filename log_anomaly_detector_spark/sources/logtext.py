@@ -15,8 +15,6 @@
   template (digits → ``<*>``, ``Drain.py:507-510`` preprocessing) and the
   md5-8 EventId (``Drain.py:209,236``), plus extracted block ids
   (``HDFS/data_process.py:88`` ``(blk_-?\\d+)``).
-* S7 ``read_sequence_file``: space-separated int sequences, one per line
-  (reference: ``bert_pytorch/predict_log.py:117-123``).
 
 Everything is whole-stage-codegen'd built-in expressions — at 100 TB of raw
 logs this is a single parallel scan with no Python in the loop.
@@ -52,14 +50,11 @@ def generate_logformat_regex(logformat: str) -> tuple[list[str], str]:
 
 
 DEFAULT_LOGFORMAT = "<Date> <Time> <Pid> <Level> <Component>: <Content>"
-DEFAULT_CONTENT_REXES = (r"(\d+\.){3}\d+(:\d+)?", r"\d+")
+# the reference's preprocessing: IPs (with port), then digit runs → <*>
+CONTENT_REXES = (r"(\d+\.){3}\d+(:\d+)?", r"\d+")
 
 
-def structure_lines(
-    raw: DataFrame,
-    logformat: str = DEFAULT_LOGFORMAT,
-    content_rexes: tuple[str, ...] = DEFAULT_CONTENT_REXES,
-) -> DataFrame:
+def structure_lines(raw: DataFrame, logformat: str = DEFAULT_LOGFORMAT) -> DataFrame:
     """Structure a DataFrame of raw lines (columns: LineId, value) — the
     core of ``read_structured_logs``, callable on lines from any source."""
     headers, pattern = generate_logformat_regex(logformat)
@@ -117,7 +112,7 @@ def structure_lines(
     ]
     df = staged.select("LineId", F.col("value"), *cols, "_parsed")
     template = F.col("Content")
-    for rex in content_rexes:
+    for rex in CONTENT_REXES:
         template = F.regexp_replace(template, rex, "<*>")
     return (
         df.withColumn("EventTemplate", template)
@@ -136,26 +131,10 @@ def read_structured_logs(
     spark: SparkSession,
     path: str,
     logformat: str = DEFAULT_LOGFORMAT,
-    content_rexes: tuple[str, ...] = DEFAULT_CONTENT_REXES,
 ) -> DataFrame:
     """Structured-log DataFrame from raw text: one column per format header
     + LineId, _parsed flag, EventTemplate, EventId (md5-8), BlockIds."""
     raw = spark.read.text(path).withColumn(
         "LineId", F.monotonically_increasing_id()
     )
-    return structure_lines(raw, logformat, content_rexes)
-
-
-def read_sequence_file(spark: SparkSession, path: str) -> DataFrame:
-    """(seq_id, tokens array<int>) from space-separated int lines (S7)."""
-    return (
-        spark.read.text(path)
-        .withColumn("seq_id", F.monotonically_increasing_id())
-        .filter(F.length(F.trim("value")) > 0)
-        .select(
-            "seq_id",
-            F.transform(
-                F.split(F.trim(F.col("value")), " +"), lambda x: x.cast("int")
-            ).alias("tokens"),
-        )
-    )
+    return structure_lines(raw, logformat)

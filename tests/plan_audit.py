@@ -1,8 +1,7 @@
-"""Audit helpers over Catalyst physical plans.
-
-Used by tests (and by hand during tuning) to assert the plans we *want*:
-filters pushed to the parquet scan, columns pruned, small sides broadcast,
-whole-stage codegen covering the hot path.
+"""Audit helpers over Catalyst physical plans — Catalyst IS the planner;
+these only *audit* the plans it produces, so tests can assert the plans we
+*want*: filters pushed to the parquet scan, columns pruned, small sides
+broadcast, whole-stage codegen covering the hot path.
 """
 
 from __future__ import annotations

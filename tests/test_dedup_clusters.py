@@ -71,8 +71,8 @@ def test_components_driver_fast_path_matches_iterative(spark):
 
 def test_components_driver_path_null_endpoint_and_mixed_types(spark):
     """A pair with a NULL endpoint is no edge on either path, and the driver
-    path types its output from the wider of the endpoint types (int src,
-    bigint dst → bigint), as the iterative path's union does."""
+    path types its output from the wider of the endpoint types (int doc_a,
+    bigint doc_b → bigint), as the iterative path's union does."""
     edges = [(1, 2), (2, 3), (10, 11), (20, None), (None, 21), (11, 3_000_000_000)]
     pairs = spark.createDataFrame(edges, "doc_a int, doc_b bigint")
     fast_df = connected_components(pairs)

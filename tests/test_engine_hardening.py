@@ -139,23 +139,20 @@ def test_cross_batch_duplicate_detected_on_resume(spark, world, tmp_path):
 
 
 @pytest.mark.parametrize("batch_parts", [None, 2], ids=["one_batch", "batch2"])
-def test_run_jobs_keep_callers_job_group(spark, world, tmp_path, batch_parts):
+def test_run_jobs_keep_callers_job_group(
+    spark, world, tmp_path, batch_parts, job_ids
+):
     """Every job a run starts belongs to the job group its caller set, so a
     caller can attribute (or cancel) the whole run."""
     seqs, snap, allowed, baseline, _ = world
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = f"validation-{batch_parts}"
+    tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))  # jobs without a group
-    sc.setJobGroup(group, "run_validation")
-    try:
+    with job_ids(f"validation-{batch_parts}") as ids:
         run_validation(
             spark, seqs, snap, allowed, baseline, str(tmp_path / "out"), CFG,
             input_digest="x", batch_parts=batch_parts,
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert tracker.getJobIdsForGroup(group)
+    assert ids
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
@@ -171,7 +168,7 @@ def test_violation_schema_is_the_fused_output(spark, world):
     )
 
 
-def test_fused_write_job_count(spark, tmp_path):
+def test_fused_write_job_count(spark, tmp_path, job_ids):
     """One batch's fused pass + violations write on the doc_id-bucketed
     layout runs 4 Spark jobs (counted by job group; the UI is off). A plan
     that persists the exploded rows, unions two branches of that cache and
@@ -195,19 +192,16 @@ def test_fused_write_job_count(spark, tmp_path):
     sources = [r["source"] for r in gen_allowed_sources(spark).collect()]
     dups = duplicate_keys(seqs, CFG).persist()
     dups.count()
-    sc = spark.sparkContext
-    group = "fused-write"
-    sc.setJobGroup(group, "fused pass + violations write")
     try:
-        sub = seqs.filter(F.col("part_id") == 0)
-        viol, _ = fused_row_violations(sub, snap, sources, dups)
-        storage.overwrite_partitions(
-            viol.repartition("part_id"), str(tmp_path / "viol"), [0]
-        )
+        with job_ids("fused-write") as ids:
+            sub = seqs.filter(F.col("part_id") == 0)
+            viol, _ = fused_row_violations(sub, snap, sources, dups)
+            storage.overwrite_partitions(
+                viol.repartition("part_id"), str(tmp_path / "viol"), [0]
+            )
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
         dups.unpersist()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert len(ids) == 4
     assert spark.read.parquet(str(tmp_path / "viol")).count() > 0
 
 

@@ -6,13 +6,13 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
-from log_anomaly_detector_spark.oracle_check import compare_one, duck_connection
+from log_anomaly_detector_spark.oracle_check import compare_one_counted, duck_connection
 from log_anomaly_detector_spark.operators.relational import (
     q_broadcast_join_revenue,
     q_filter_pack,
     q_pricing_summary,
 )
-from log_anomaly_detector_spark.plans import plan_facts, unpartitioned_windows
+from plan_audit import plan_facts, unpartitioned_windows
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,7 +34,7 @@ def duck():
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_vs_oracle(spark, duck, name):
-    problems = compare_one(
+    problems, _ = compare_one_counted(
         spark, duck, name, QUERIES[name], ORACLES.get(name), SF_DIR
     )
     assert problems == [], problems
@@ -84,7 +84,7 @@ def test_pagination_is_top_k_not_global_window(spark):
     """W4 fix: page N plans as TakeOrderedAndProject (parallel partial top-k)
     — never a full-table single-partition row_number."""
     from log_anomaly_detector_spark.operators.relational import q_pagination
-    from log_anomaly_detector_spark.plans import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(q_pagination(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
@@ -100,7 +100,7 @@ def test_embedding_pair_queries_never_theta_join(spark):
         q_ann_lsh,
         q_embedding_near_dup,
     )
-    from log_anomaly_detector_spark.plans import formatted_plan
+    from plan_audit import formatted_plan
 
     for q in (q_embedding_near_dup, q_ann_lsh, q_ann_ivf):
         plan = formatted_plan(q(spark, SF_DIR))
@@ -121,7 +121,7 @@ def test_no_forced_full_corpus_broadcast(spark):
         q_cosine_topk,
         q_embedding_near_dup,
     )
-    from log_anomaly_detector_spark.plans import forced_raw_broadcasts
+    from plan_audit import forced_raw_broadcasts
 
     for q in (q_embedding_near_dup, q_ann_lsh, q_ann_ivf, q_cosine_topk):
         n = forced_raw_broadcasts(q(spark, SF_DIR), "embedding")
@@ -132,7 +132,7 @@ def test_forced_raw_broadcast_detector_catches_bad_plan(spark):
     """The audit itself must fire on the known-bad shape (a hinted broadcast
     of the raw corpus) and stay quiet on a hinted bounded side."""
     from pyspark.sql import functions as F
-    from log_anomaly_detector_spark.plans import forced_raw_broadcasts
+    from plan_audit import forced_raw_broadcasts
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     pairs = emb.select(F.col("vec_id").alias("id_a"))
@@ -235,7 +235,7 @@ def test_kmv_topk_is_partial_window_group_limit(spark):
     tasks keep only their local k smallest per group before the shuffle, so
     the window never materializes a whole group."""
     from log_anomaly_detector_spark.operators.relational import q_kmv_distinct
-    from log_anomaly_detector_spark.plans import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(q_kmv_distinct(spark, SF_DIR))
     assert "WindowGroupLimit" in plan
@@ -400,7 +400,7 @@ def test_repetition_filter_plan_shape(spark):
     (doc_id, text) rows (single-row-group testdata parquet = one scan task
     otherwise); the fold itself must never induce a shuffle."""
     from log_anomaly_detector_spark.operators.text import q_repetition_filter
-    from log_anomaly_detector_spark.plans import formatted_plan, plan_facts
+    from plan_audit import formatted_plan, plan_facts
 
     df = q_repetition_filter(spark, SF_DIR)
     facts = plan_facts(df)
@@ -416,7 +416,7 @@ def test_decontaminate_plan_shape(spark):
     grams) and the only row shuffles are the eval distinct + the doc_id
     aggregation."""
     from log_anomaly_detector_spark.operators.text import q_decontaminate
-    from log_anomaly_detector_spark.plans import plan_facts
+    from plan_audit import plan_facts
 
     facts = plan_facts(q_decontaminate(spark, SF_DIR))
     assert facts["broadcast_join"]

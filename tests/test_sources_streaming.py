@@ -1,10 +1,9 @@
-"""Sources: raw-log regex scan, sequence file, pinned-schema CSV."""
+"""Sources: raw-log regex scan."""
 
 from __future__ import annotations
 
 from log_anomaly_detector_spark.sources import (
     generate_logformat_regex,
-    read_sequence_file,
     read_structured_logs,
 )
 
@@ -45,6 +44,20 @@ def test_read_structured_logs(spark, tmp_path):
     assert blocks == ["blk_-1608999687919862906", "blk_38865049064139660"]
     assert df.filter("NOT _parsed").count() == 1
 
+    # digits → <*> collapses the three PacketResponder lines to one template
+    q = tmp_path / "packet.log"
+    q.write_text(
+        "".join(
+            f"081109 20361{i} 14{i} INFO dfs.DataNode$PacketResponder: "
+            f"PacketResponder {n} for block blk_{b} terminating\n"
+            for i, (n, b) in enumerate(((1, 100), (2, 100), (1, 200)))
+        )
+    )
+    packet = read_structured_logs(spark, str(q)).collect()
+    assert [r["EventTemplate"] for r in packet] == [
+        "PacketResponder <*> for block blk_<*> terminating"
+    ] * 3
+
 
 def test_structure_lines_record_separator_slow_path(spark):
     """A line containing the ASCII record separator (the byte the fast
@@ -69,32 +82,3 @@ def test_structure_lines_record_separator_slow_path(spark):
     assert got[1]["_parsed"] and got[1]["Content"] == "clean payload"
     assert not got[2]["_parsed"] and got[2]["Content"] == ""
 
-
-def test_read_sequence_file(spark, tmp_path):
-    p = tmp_path / "seq.txt"
-    p.write_text("1 2 3\n10 20\n\n7\n")
-    df = read_sequence_file(spark, str(p))
-    toks = sorted(tuple(r["tokens"]) for r in df.collect())
-    assert toks == [(1, 2, 3), (7,), (10, 20)]
-
-
-def test_csv_pinned_and_sequence_sink_roundtrip(spark, tmp_path):
-    from log_anomaly_detector_spark.sources.tabular import (
-        read_csv_pinned,
-        write_sequence_text,
-    )
-
-    csv = tmp_path / "in.csv"
-    csv.write_text("id,name,score\n1,a,0.5\n2,b,\n")
-    df = read_csv_pinned(spark, str(csv), "id int, name string, score double")
-    rows = {r["id"]: r for r in df.collect()}
-    assert rows[1]["score"] == 0.5 and rows[2]["score"] is None
-    assert df.schema.simpleString() == "struct<id:int,name:string,score:double>"
-
-    seqs = spark.createDataFrame(
-        [("a", [1, 2, 3]), ("b", [9])], "doc_id string, tokens array<int>"
-    )
-    out = str(tmp_path / "seq_out")
-    write_sequence_text(seqs, out)
-    back = read_sequence_file(spark, out)
-    assert sorted(tuple(r["tokens"]) for r in back.collect()) == [(1, 2, 3), (9,)]

@@ -14,7 +14,7 @@ from log_anomaly_detector_spark.operators.spell_match import (
     spell_match,
 )
 from log_anomaly_detector_spark.operators.text import q_template_match
-from log_anomaly_detector_spark.plans import formatted_plan
+from plan_audit import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
@@ -132,17 +132,13 @@ def test_match_plan_joins_lines_to_one_dim_row(spark, query):
     assert build.child().rows().size() == 1
 
 
-def test_spell_match_job_count(spark):
+def test_spell_match_job_count(spark, job_ids):
     """Built and collected on sf0.001 from cold caches, q_spell_match runs at
     most 5 Spark jobs (counted by job group): the dim collect plus the one
     pass over the lines."""
     from log_anomaly_detector_spark.operators.caching import release_all
 
-    sc = spark.sparkContext
     release_all()
-    sc.setJobGroup("spell-match-jobs", "q_spell_match")
-    try:
+    with job_ids("spell-match-jobs") as ids:
         assert len(q_spell_match(spark, SF).collect()) > 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("spell-match-jobs")) <= 5
+    assert len(ids) <= 5

@@ -117,17 +117,12 @@ def test_local_partition_with_zero_rows_is_cleared(spark, tmp_path):
         storage.overwrite_local_partitions(VERDICTS, VERDICT_SCHEMA, path, [0, 1])
 
 
-def test_local_partition_write_runs_no_spark_job(spark, tmp_path):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("local-write", "overwrite_local_partitions")
-    try:
+def test_local_partition_write_runs_no_spark_job(tmp_path, job_ids):
+    with job_ids("local-write") as ids:
         storage.overwrite_local_partitions(
             VERDICTS, VERDICT_SCHEMA, str(tmp_path / "t"), [0, 1, 2]
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert tracker.getJobIdsForGroup("local-write") == []
+    assert ids == []
 
 
 def test_local_partition_crash_mid_write_leaves_nothing_readable(
@@ -175,7 +170,7 @@ def test_table_mixing_spark_and_local_partitions_reads_as_one(spark, tmp_path):
     assert _sorted(table.to_pylist()) == _sorted(VERDICTS)
 
 
-def test_read_table_with_schema_runs_no_job(spark, tmp_path):
+def test_read_table_with_schema_runs_no_job(spark, tmp_path, job_ids):
     """A known DDL skips the footer-inference job; the inferred read and
     the DDL read agree."""
     path = str(tmp_path / "t")
@@ -184,17 +179,13 @@ def test_read_table_with_schema_runs_no_job(spark, tmp_path):
         path,
         [0, 1, 2],
     )
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    jobs = {}
     for group, schema in (("inferred", None), ("declared", VERDICT_SCHEMA)):
-        sc.setJobGroup(group, "read_table")
-        try:
+        with job_ids(group) as jobs[group]:
             df = storage.read_table(spark, path, schema)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
         assert _sorted(df.collect()) == _sorted(VERDICTS)
-    assert tracker.getJobIdsForGroup("inferred")  # premise: inference is a job
-    assert tracker.getJobIdsForGroup("declared") == []
+    assert jobs["inferred"]  # premise: inference is a job
+    assert jobs["declared"] == []
     assert storage.read_table(spark, str(tmp_path / "none"), VERDICT_SCHEMA) is None
 
 

@@ -375,7 +375,7 @@ def test_match_argmax_equals_window_reference(spark, depth):
 
 
 def test_match_plan_has_no_window_or_shuffle(spark):
-    from log_anomaly_detector_spark.plans import formatted_plan, plan_facts
+    from plan_audit import formatted_plan, plan_facts
 
     m = _match(_lines_df(spark, _PLANTED_LINES), _PLANTED_DIM, 0.5, 5)
     assert "Window" not in formatted_plan(m)
@@ -383,7 +383,7 @@ def test_match_plan_has_no_window_or_shuffle(spark):
 
 
 def test_templates_plan_is_local_scan(spark):
-    from log_anomaly_detector_spark.plans import formatted_plan
+    from plan_audit import formatted_plan
 
     res = induce_templates(_lines_df(spark, _PLANTED_LINES), st=0.5, depth=4)
     plan = formatted_plan(res.templates)

@@ -44,7 +44,7 @@ def test_pack_parallelism_sized_buckets(spark):
 
     from log_anomaly_detector_spark.operators.relational import t
     from log_anomaly_detector_spark.operators.training_mix import pack_documents
-    from log_anomaly_detector_spark.plans import unpartitioned_windows
+    from plan_audit import unpartitioned_windows
 
     par = spark.sparkContext.defaultParallelism
     packed = pack_documents(t(spark, SF, "documents"), n_buckets=par)
