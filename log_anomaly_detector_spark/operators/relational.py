@@ -17,20 +17,20 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def widen(df: DataFrame, *keys) -> DataFrame:
-    """Repartition an under-split scan to session parallelism (round 7).
+    """Repartition an under-split scan to session parallelism.
 
-    Every testdata parquet is ONE row group, so a scan is one task no matter
-    what `maxPartitionBytes` says — and any query whose per-row scan-side
-    work is heavy (md5 per word, regex per event, n-gram folds) runs that
-    work on ONE core (sf1.0 profiling: simhash 31 s, param_extract ~5 s,
-    repetition_filter 5.3 s — all almost pure single-task compute). The
-    cheap keyed repartition of the RAW rows parallelizes the projection;
-    queries whose work is light relative to a shuffle of their input keep
-    the plain scan (this helper is opt-in per query, not blanket — guide
-    §2.4: don't add exchanges where the scan-side work is trivial). On a
-    well-split production table the guard makes it a no-op. Keys must be
-    deterministic columns (hash partitioning is stable under retries;
-    guide §2.5 warns off rand-derived keys)."""
+    Every testdata parquet is ONE row group, so its scan is one task, and a
+    query whose per-row work is heavy runs that work on one core. The keyed
+    repartition of the raw rows spreads it at the cost of one shuffle. What
+    decides is the work per row, not the scan's size, so each query opts in
+    by measurement. On a 4-core host (local[4], warm walls, sf0.1's 594 KB
+    `documents`) it made the heavy queries (`spell_match`, `param_extract`,
+    `simhash`, `repetition_filter`, `decontaminate`, the near-dup family)
+    17–140% faster and the light ones (`token_count`, `quality_score`,
+    `langid`, `vocab_build`) up to 16% slower, up to 54% on 2k docs;
+    widening every scan made 46 of 54 queries slower. A well-split table
+    passes through. Keys must be deterministic columns (hash partitioning is
+    stable under retries; guide §2.5 warns off rand-derived keys)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= par:
         return df
@@ -805,8 +805,7 @@ def _two_phase_rank(
 
 
 def q_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # word explode + counts off a single-split scan — widen first
-    docs = widen(t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = t(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word")).filter(
         F.length("word") > 0
     )

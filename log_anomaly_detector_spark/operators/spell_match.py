@@ -16,13 +16,14 @@ Reference semantics being reproduced (logparser/Spell.py):
   OPTIMIZATIONS of the same decision — the matcher below implements the
   authoritative LCS tier.
 
-Spark lift: the template dim is collected to the driver and travels to the
-lines as ONE broadcast row (``template_match._dim_row``): the templates
-sorted by (length, id), plus a map from each distinct template token to
-their ordinals. The set-overlap prefilter uses the PREFIX PRINCIPLE: a
-line's first |distinct|−⌈len/2⌉+1 canonical-order distinct tokens must hit
-any qualifying template, so each line looks up only those probe tokens in
-the map and runs the exact overlap check on what they return. LCS itself
+Spark lift: the step all three matchers share (``template_match._dim_row``
++ ``_best``). The dim is held on the driver and travels to the lines as ONE
+broadcast row: the templates sorted by (length, id), plus a map from each
+distinct template token to their ordinals. The set-overlap prefilter uses
+the PREFIX PRINCIPLE: a line's first |distinct|−⌈len/2⌉+1 canonical-order
+distinct tokens must hit any qualifying template, so each line looks up
+only those probe tokens in the map and runs the exact overlap check on
+what they return. LCS itself
 is a pure Catalyst fold: ``aggregate`` over the line's tokens with the DP row
 as the accumulator. One step of the classic recurrence
 
@@ -49,7 +50,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from log_anomaly_detector_spark.operators.template_match import _dim_row, _tmpl
+from log_anomaly_detector_spark.operators.template_match import (
+    _best,
+    _collect_dim,
+    _dim_row,
+    _pick,
+    _prefix_fixture,
+    _tmpl,
+)
 
 TAU = 0.5  # Spell's default tau (Spell.py:49) — accept iff lcs >= tau·|seq|
 
@@ -106,8 +114,9 @@ def spell_match(
     Templates with NULL tokens never match.
     """
     # the dim in tie-break order, its distinct tokens mapped to ordinals
-    dim = _dim_row(
-        templates, len, lambda toks: {x for x in toks if x is not None}, "string"
+    dim, tid_type = _collect_dim(templates)
+    row = _dim_row(
+        templates.sparkSession, dim, tid_type, len, lambda k: set(k) - {None}, "string"
     )
     n = F.size("tokens")
     # ---- candidates via the prefix principle. The reference's prefilter is
@@ -119,71 +128,42 @@ def spell_match(
     dset = F.array_sort(F.array_distinct("tokens"))
     probe_len = F.size(dset) - F.ceil(n / 2).cast("int") + 1
     probes = F.slice(dset, 1, F.greatest(probe_len, F.lit(0)))
-    hits = F.transform(
-        probes,
-        lambda p: F.coalesce(F.element_at("_cand", p), F.array().cast("array<int>")),
-    )
-    cands = F.filter(
-        F.array_distinct(F.flatten(hits)),
-        lambda o: F.size(F.array_intersect("tokens", _tmpl(o)["tokens"])) >= 0.5 * n,
-    )
 
     def score(o, lcs):
         return F.struct(
             lcs.alias("lcs"), (-o).alias("neg_ord"), _tmpl(o)["tid"].alias("tid")
         )
 
-    scored = F.transform(
-        cands, lambda o: score(o, lcs_length(F.col("tokens"), _tmpl(o)["tokens"]))
-    )
     # zero-token lines: the probe finds nothing, but the reference's LCSMatch
     # arithmetic matches them to the SHORTEST template (every lcs is 0,
     # prefilter 0 < 0.5·0 never skips, accept 0 ≥ tau·0 holds; our pinned
     # tie-break → min (len, id)) — ordinal 0 of the sorted dim
     best = F.when(
         (n == 0) & (F.size("_dim") > 0), score(F.lit(0), F.lit(0))
-    ).otherwise(F.array_max(scored))
-    return (
-        lines.select("line_id", "tokens")
-        .crossJoin(F.broadcast(dim))
-        .select("line_id", n.alias("_n"), best.alias("_b"))
-        .select(
-            "line_id",
-            F.when(F.col("_b.lcs") >= tau * F.col("_n"), F.col("_b.tid")).alias(
-                "matched_template_id"
+    ).otherwise(
+        _best(
+            probes,
+            lambda o: score(o, lcs_length(F.col("tokens"), _tmpl(o)["tokens"])),
+            keep=lambda o: (
+                F.size(F.array_intersect("tokens", _tmpl(o)["tokens"])) >= 0.5 * n
             ),
-            F.col("_b.lcs").cast("int").alias("lcs_len"),
         )
     )
+    return _pick(lines, row, best, n.alias("_n")).select(
+        "line_id",
+        F.when(F.col("_b.lcs") >= tau * F.col("_n"), F.col("_b.tid")).alias(
+            "matched_template_id"
+        ),
+        F.col("_b.lcs").cast("int").alias("lcs_len"),
+    )
 
 
-# --- driver-contract entry: same fixture shape as q_template_match (lines =
-# 5-word prefixes of every document; templates = wildcarded prefixes of the
-# first 25 docs), scored with Spell's LCS semantics instead of Drain's
-# positional similarity — the two parser families are directly comparable on
-# identical inputs. ------------------------------------------------------------
+# --- driver-contract entry: the same fixture as q_template_match
+# (template_match._prefix_fixture), scored with Spell's LCS semantics instead
+# of Drain's positional similarity — the two parser families are directly
+# comparable on identical inputs. ---------------------------------------------
 def q_spell_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from log_anomaly_detector_spark.functions.text_funcs import words
-    from log_anomaly_detector_spark.operators.relational import t, widen
-
-    docs = t(spark, sf_dir, "documents")
-    # the line side is read once, but its per-line LCS fold is heavy enough
-    # that spreading the single-split scan pays as lines grow: warm walls
-    # widened vs plain were 0.92 vs 0.94 s on 5k docs and 1.35 vs 2.32 s on
-    # 50k docs (medians of 10 runs, local[4] on a 4-core host). The template
-    # side keeps the plain scan: doc_id<25 pushes down.
-    lines = widen(docs.select("doc_id", "text"), "doc_id").select(
-        F.col("doc_id").alias("line_id"),
-        F.slice(words(F.col("text")), 1, 5).alias("tokens"),
-    )
-    templates = docs.filter(F.col("doc_id") < 25).select(
-        F.concat(F.lit("T"), F.col("doc_id").cast("string")).alias("template_id"),
-        F.expr(
-            "concat(slice(split(trim(text), ' +'), 1, 2), array('<*>'), "
-            "slice(split(trim(text), ' +'), 4, 2))"
-        ).alias("template_tokens"),
-    )
-    return spell_match(lines, templates, tau=TAU)
+    return spell_match(*_prefix_fixture(spark, sf_dir), tau=TAU)
 
 
 _SPELL_SQL = f"""

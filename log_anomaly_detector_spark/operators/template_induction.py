@@ -20,13 +20,16 @@ Reference semantics being reproduced (logparser/Drain.py):
 * output — template id = md5-8 of the template string, occurrences = member
   count (``outputResult``, Drain.py:201-239).
 
-Spark lift: the prefix tree becomes a per-row lookup. The dim travels as
-ONE broadcast row, a map from token count to that length's templates (with
-their routed key tokens); each line filters its own bucket by the tree-key
-test and takes the best template as ``array_max`` over (similarity,
-wildcards, -id) structs, so matching needs no join fan-out, window or
-shuffle. Similarity is a ``zip_with``+``aggregate`` column expression. The
-sequential one-line-at-a-time loop becomes a FIXPOINT: (a) founding rounds
+Spark lift: the prefix tree becomes a per-row lookup, through the step
+all three matchers share (``template_match._dim_row`` + ``_best``). The
+dim travels as ONE broadcast row whose map sends each tree path (token
+count, then the ``_route``d first ``depth-3`` tokens, computed on the
+driver) to its templates; a line probes its own token and the ``<*>``
+child per level and takes the best template as ``array_max`` over
+(similarity, wildcards, -ordinal) structs, so matching needs no join
+fan-out, window or shuffle. Similarity is a ``zip_with``+``aggregate``
+column expression. The sequential one-line-at-a-time loop becomes a
+FIXPOINT: (a) founding rounds
 — match all unmatched lines against the current dim, elect ONE founder per
 leaf among the still-unmatched (min line_id — deterministic at any
 parallelism), repeat until every line matches; (b) refinement passes —
@@ -46,6 +49,7 @@ Python in the loop; driver state is O(dim) per round.
 from __future__ import annotations
 
 import hashlib
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,18 +58,13 @@ from pyspark.storagelevel import StorageLevel
 
 from log_anomaly_detector_spark.operators.template_match import (
     WILDCARD,
+    _drain_pick,
     _local,
-    _seq_sim,
 )
 
 _HAS_DIGIT = "[0-9]"
 
 _DIM_DDL = "template_id long, tokens array<string>"
-# one row: token count → that length's templates with their routed key tokens
-_BUCKETS_DDL = (
-    "_dim map<int, array<struct<tid: long, tokens: array<string>, "
-    "keys: array<string>>>>"
-)
 _TEMPLATES_DDL = (
     "event_id string, template string, tokens array<string>, "
     "occurrences long NOT NULL, is_new boolean NOT NULL"
@@ -100,72 +99,30 @@ def _n_key_tokens(depth: int) -> int:
     return max(depth - 3, 0)
 
 
-def _dim_buckets(spark: SparkSession, dim: list, depth: int) -> DataFrame:
-    """The dim as ONE row: token count → [(tid, tokens, routed key tokens)].
-    The keys are ``_route`` evaluated over the local dim on the driver."""
-    nk = _n_key_tokens(depth)
-    keyed = (
-        _dim_local(spark, dim)
-        .select(
-            "template_id",
-            "tokens",
-            F.array(*[_route(F.get("tokens", i)) for i in range(nk)])
-            .cast("array<string>")
-            .alias("keys"),
-        )
-        .collect()
-    )
-    buckets: dict[int, list] = {}
-    for r in keyed:
-        buckets.setdefault(len(r["tokens"]), []).append(
-            {"tid": r["template_id"], "tokens": r["tokens"], "keys": r["keys"]}
-        )
-    return _local(spark, [{"_dim": list(buckets.items())}], _BUCKETS_DDL)
+def _route_key(tok):
+    """``_route`` on the driver, for one dim token: the same rule, with the
+    same ``[0-9]`` pattern (Java's ``rlike`` and Python's ``re.search`` both
+    find any ASCII digit)."""
+    if tok is None or tok == WILDCARD or re.search(_HAS_DIGIT, tok):
+        return WILDCARD
+    return tok
 
 
 def _match(lines: DataFrame, dim: list, st: float, depth: int) -> DataFrame:
     """(line_id, tokens, template_id nullable, similarity) — best template
     per line with sim >= st, else NULL template_id.
 
-    Candidates are the line's bucket (equal token count) filtered by the
-    tree key: per key level, the template's routed token equals the line's
+    Candidates are the templates on the line's tree paths: equal token
+    count, and per key level the template's routed token equals the line's
     token or is the wildcard child — exactly treeSearch's literal-then-'<*>'
     descent (Drain.py:79-84), except both branches are explored (a fixpoint
     can't depend on insertion order; strictly more candidates than the
-    reference's first-fit descent, never fewer). The best candidate is the
-    max (sim, npar, -tid) struct: sim desc, then more wildcards, then the
-    smaller id.
+    reference's first-fit descent, never fewer). The best candidate has the
+    highest raw similarity, then more wildcards, then the smaller id: the
+    dim row is sorted by id, so that is the smaller ordinal.
     """
-    nk = _n_key_tokens(depth)
-
-    def on_path(t):
-        fit = F.lit(True)
-        for i in range(nk):
-            k = t["keys"][i]
-            fit = fit & ((k == WILDCARD) | (k == F.get("tokens", i)))
-        return fit
-
-    def score(t):
-        sim, npar = _seq_sim(F.col("tokens"), t["tokens"])
-        return F.struct(
-            sim.alias("sim"), npar.alias("npar"), (-t["tid"]).alias("neg_tid")
-        )
-
-    bucket = F.element_at("_dim", F.size("tokens"))  # NULL: no such length
-    best = (
-        lines.select("line_id", "tokens")
-        .crossJoin(F.broadcast(_dim_buckets(lines.sparkSession, dim, depth)))
-        .select(
-            "line_id",
-            "tokens",
-            F.array_max(F.transform(F.filter(bucket, on_path), score)).alias("_b"),
-        )
-    )
-    return best.select(
-        "line_id",
-        "tokens",
-        F.when(F.col("_b.sim") >= st, -F.col("_b.neg_tid")).alias("template_id"),
-        F.col("_b.sim").alias("similarity"),
+    return _drain_pick(
+        lines, dim, "bigint", _n_key_tokens(depth), _route_key, False, st, "tokens"
     )
 
 

@@ -8,20 +8,24 @@ positions / length, wildcards ``<*>`` excluded from the numerator), accepted
 when similarity ≥ ``st`` (``fastMatch``, ``Drain.py:167-184``); otherwise the
 line founds a new template (→ flagged anomalous in v2, ``Drain.py:367-377``).
 
-Spark lift: the template dim is collected to the driver and travels to the
+Spark lift: one step serves all three matchers (this one, ``spell_match``
+and Drain induction). The dim is held on the driver and travels to the
 lines as ONE broadcast row (``_dim_row``): the templates in tie-break order
-plus a map from token count to their ordinals — the tree's length level.
-Each line looks up its own bucket, keeps the templates that pass the
-first-token rule (the tree's second level), and takes the best as
-``array_max`` over (similarity, wildcards, -ordinal) structs. No join of
-the line side beyond the one-row dim, no window, no shuffle; ``seqDist`` is
-a ``zip_with`` + ``aggregate`` column expression. No Python in the loop.
+plus ``_cand``, a map from candidate keys to their ordinals. Each line
+looks up its own probe keys and takes the best ordinal they hit as
+``array_max`` over its matcher's score structs (``_best``). Here the keys
+are tree paths (``_drain_pick``): token count, then the first token or
+``<*>``; the score is (similarity, wildcards, -ordinal). No join of the
+line side beyond the one-row dim, no window, no shuffle; ``seqDist`` is a
+``zip_with`` + ``aggregate`` column expression. No Python in the loop.
 
-This module also holds the pieces the Spell matcher and Drain induction
-share: ``WILDCARD``, ``_local`` and the seqDist scorer ``_seq_sim``.
+This module also holds ``WILDCARD``, ``_local``, the seqDist scorer
+``_seq_sim`` and ``_prefix_fixture``, both matcher queries' input.
 """
 
 from __future__ import annotations
+
+import itertools
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -53,24 +57,30 @@ def _seq_sim(line_toks, tmpl_toks):
     return n_eq / F.size(line_toks), n_par
 
 
-def _dim_row(templates: DataFrame, rank, keys, key_type: str) -> DataFrame:
-    """The (template_id, template_tokens) dim as ONE local row. ``_dim`` holds
-    the templates with non-NULL tokens sorted by ``rank(tokens)``, then by
-    template_id as Spark sorts it (NULL first), so the smaller ordinal wins a
-    tie; ``_cand`` maps each key in ``keys(tokens)`` to the ordinals of the
-    templates that have it."""
-    tid_type = templates.schema["template_id"].dataType.simpleString()
+def _collect_dim(templates: DataFrame) -> tuple[list, str]:
+    """The (template_id, template_tokens) dim on the driver as
+    [(tid, tokens)], NULL-token templates dropped, and the id's type."""
     rows = templates.select("template_id", "template_tokens").collect()
-    dim = sorted(
-        ((t, list(k)) for t, k in rows if k is not None),
-        key=lambda d: (rank(d[1]), d[0] is not None, d[0]),
+    return (
+        [(t, list(k)) for t, k in rows if k is not None],
+        templates.schema["template_id"].dataType.simpleString(),
     )
+
+
+def _dim_row(
+    spark: SparkSession, dim: list, tid_type: str, rank, keys, key_type: str
+) -> DataFrame:
+    """The driver dim [(tid, tokens)] as ONE local row. ``_dim`` holds the
+    templates sorted by ``rank(tokens)``, then by tid as Spark sorts it (NULL
+    first), so the smaller ordinal wins a tie; ``_cand`` maps each key in
+    ``keys(tokens)`` to the ordinals of the templates that have it."""
+    dim = sorted(dim, key=lambda d: (rank(d[1]), d[0] is not None, d[0]))
     cand: dict = {}
     for o, (_, toks) in enumerate(dim):
         for k in keys(toks):
             cand.setdefault(k, []).append(o)
     return _local(
-        templates.sparkSession,
+        spark,
         [
             {
                 "_dim": [{"tid": t, "tokens": toks} for t, toks in dim],
@@ -85,6 +95,93 @@ def _dim_row(templates: DataFrame, rank, keys, key_type: str) -> DataFrame:
 def _tmpl(o):
     """The dim template at ordinal ``o``: struct(tid, tokens)."""
     return F.get("_dim", o)
+
+
+def _best(probes, score, keep=None):
+    """The step every matcher shares: the ordinals a line's ``probes`` hit in
+    ``_cand``, those that pass ``keep``, and the best of them as
+    ``array_max`` over their ``score`` structs (NULL: no candidate)."""
+    hits = F.transform(
+        probes,
+        lambda p: F.coalesce(F.element_at("_cand", p), F.array().cast("array<int>")),
+    )
+    cands = F.array_distinct(F.flatten(hits))
+    if keep is not None:
+        cands = F.filter(cands, keep)
+    return F.array_max(F.transform(cands, score))
+
+
+def _pick(lines: DataFrame, dim: DataFrame, best, *cols) -> DataFrame:
+    """(line_id, *cols, _b): each line's ``best`` struct, computed against
+    the broadcast one-row ``dim`` — no join of the lines beyond it."""
+    return (
+        lines.select("line_id", "tokens")
+        .crossJoin(F.broadcast(dim))
+        .select("line_id", *cols, best.alias("_b"))
+    )
+
+
+def _drain_pick(lines, dim, tid_type, nk, key, rounded, st, *cols):
+    """(line_id, *cols, template_id, similarity): Drain's pick (fastMatch,
+    Drain.py:167-184) among the templates on the line's tree paths
+    (treeSearch, Drain.py:65-91). A template's path is its token count, then
+    ``key`` of each of its first ``nk`` tokens (None past its end; a NULL
+    level or an empty template has no path); a line probes its own token and
+    the ``<*>`` child per level, both explored. Best = max (sim, npar,
+    -ordinal): similarity (6dp when ``rounded``), then more wildcards, then
+    the smaller ordinal; matched iff sim ≥ st."""
+
+    def path(toks):
+        ks = [key(toks[i] if i < len(toks) else None) for i in range(nk)]
+        return [] if not toks or None in ks else [(str(len(toks)), *ks)]
+
+    row = _dim_row(
+        lines.sparkSession, dim, tid_type, lambda toks: 0, path, "array<string>"
+    )
+    n = F.size("tokens").cast("string")
+    levels = [(F.get("tokens", i), F.lit(WILDCARD)) for i in range(nk)]
+    probes = F.array(*[F.array(n, *p) for p in itertools.product(*levels)])
+
+    def score(o):
+        sim, npar = _seq_sim(F.col("tokens"), _tmpl(o)["tokens"])
+        return F.struct(
+            (F.round(sim, 6) if rounded else sim).alias("sim"),
+            npar.alias("npar"),
+            (-o).alias("neg_ord"),
+            _tmpl(o)["tid"].alias("tid"),
+        )
+
+    return _pick(lines, row, _best(probes, score), *cols).select(
+        "line_id",
+        *cols,
+        F.when(F.col("_b.sim") >= st, F.col("_b.tid")).alias("template_id"),
+        F.col("_b.sim").alias("similarity"),
+    )
+
+
+def _prefix_fixture(spark: SparkSession, sf_dir: str):
+    """(lines, templates) of the two matcher queries: every document's
+    5-word prefix is a line, and the first 25 documents' prefixes with
+    position 3 wildcarded are the templates."""
+    from log_anomaly_detector_spark.functions.text_funcs import words
+    from log_anomaly_detector_spark.operators.relational import t, widen
+
+    docs = t(spark, sf_dir, "documents")
+    # every line is scored against the dim, so the single-split line scan
+    # is widened; the 25-row template side keeps the plain scan (its
+    # doc_id<25 predicate pushes down)
+    lines = widen(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id").alias("line_id"),
+        F.slice(words(F.col("text")), 1, 5).alias("tokens"),
+    )
+    templates = docs.filter(F.col("doc_id") < 25).select(
+        F.concat(F.lit("T"), F.col("doc_id").cast("string")).alias("template_id"),
+        F.expr(
+            "concat(slice(split(trim(text), ' +'), 1, 2), array('<*>'), "
+            "slice(split(trim(text), ' +'), 4, 2))"
+        ).alias("template_tokens"),
+    )
+    return lines, templates
 
 
 def match_templates(
@@ -104,32 +201,7 @@ def match_templates(
     the template with more parameters on ties, Drain.py:176-181), then
     template_id asc (pinned).
     """
-    dim = _dim_row(templates, lambda toks: 0, lambda toks: [len(toks)], "int")
-
-    def on_path(o):
-        first = F.get(_tmpl(o)["tokens"], 0)
-        return (first == F.get("tokens", 0)) | (first == WILDCARD)
-
-    def score(o):
-        sim, npar = _seq_sim(F.col("tokens"), _tmpl(o)["tokens"])
-        return F.struct(
-            F.round(sim, 6).alias("sim"),
-            npar.alias("npar"),
-            (-o).alias("neg_ord"),
-            _tmpl(o)["tid"].alias("tid"),
-        )
-
-    bucket = F.element_at("_cand", F.size("tokens"))  # NULL: no such length
-    best = F.array_max(F.transform(F.filter(bucket, on_path), score))
-    return (
-        lines.select("line_id", "tokens")
-        .crossJoin(F.broadcast(dim))
-        .select("line_id", best.alias("_b"))
-        .select(
-            "line_id",
-            F.when(F.col("_b.sim") >= st, F.col("_b.tid")).alias(
-                "matched_template_id"
-            ),
-            F.col("_b.sim").alias("similarity"),
-        )
-    )
+    dim, tid_type = _collect_dim(templates)
+    return _drain_pick(
+        lines, dim, tid_type, 1, lambda tok: tok, True, st
+    ).withColumnRenamed("template_id", "matched_template_id")

@@ -29,11 +29,7 @@ _STOP_SQL = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
 
 # --- token counting: whitespace + a BPE-ish regex tokenizer ------------------
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # regex tokenizer per doc on a single-split scan — widen (guide §2.4
-    # note in relational.widen)
-    docs = widen(
-        t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars"), "doc_id"
-    )
+    docs = t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(words(F.col("text"))).alias("n_ws_tokens"),
@@ -55,10 +51,7 @@ FROM documents
 
 # --- quality scoring: length / stopword / word-length features --------------
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-word stopword filter on a single-split scan — widen
-    docs = widen(
-        t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars"), "doc_id"
-    )
+    docs = t(spark, sf_dir, "documents")
     ws = words(F.col("text"))
     n_words = F.size(ws)
     # quality is computed from the UNROUNDED ratio: rounding first can land
@@ -105,9 +98,7 @@ FROM documents
 
 # --- language-ID heuristic (n-gram/stopword hits) ----------------------------
 def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = widen(
-        t(spark, sf_dir, "documents").select("doc_id", "lang", "text"), "doc_id"
-    )
+    docs = t(spark, sf_dir, "documents")
     ws = words(F.col("text"))
     hits = stopword_count(ws)
     return docs.select(
@@ -722,7 +713,7 @@ MASK_PCT = 65  # mask_ratio=0.65, output/hdfs/bert/parameters.txt:38
 
 
 def q_mask_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
+    docs = widen(t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     ws = words(F.col("text"))
     toks = F.transform(ws, lambda w: F.length(w).cast("int"))  # word-length ids
 
@@ -788,27 +779,12 @@ FROM m GROUP BY doc_id
 # DuckDB oracle; semantics additionally golden-tested in
 # tests/test_template_match.py. ----------------------------------------------
 def q_template_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from log_anomaly_detector_spark.operators.template_match import match_templates
+    from log_anomaly_detector_spark.operators.template_match import (
+        _prefix_fixture,
+        match_templates,
+    )
 
-    docs = t(spark, sf_dir, "documents")
-    prefix = F.slice(words(F.col("text")), 1, 5)
-    # the line side scores every row against the broadcast template dim —
-    # widen it; the 25-row template side stays on the plain scan (its
-    # doc_id<25 predicate pushes down)
-    lines = widen(docs.select("doc_id", "text"), "doc_id").select(
-        F.col("doc_id").alias("line_id"), prefix.alias("tokens")
-    )
-    templates = (
-        docs.filter(F.col("doc_id") < 25)
-        .select(
-            F.concat(F.lit("T"), F.col("doc_id").cast("string")).alias("template_id"),
-            F.expr(
-                "concat(slice(split(trim(text), ' +'), 1, 2), array('<*>'), "
-                "slice(split(trim(text), ' +'), 4, 2))"
-            ).alias("template_tokens"),
-        )
-    )
-    return match_templates(lines, templates, st=0.6)
+    return match_templates(*_prefix_fixture(spark, sf_dir), st=0.6)
 
 
 _TMATCH_SQL = """

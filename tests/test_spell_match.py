@@ -13,6 +13,7 @@ from log_anomaly_detector_spark.operators.spell_match import (
     q_spell_match,
     spell_match,
 )
+from log_anomaly_detector_spark.operators.template_induction import _match
 from log_anomaly_detector_spark.operators.text import q_template_match
 from plan_audit import formatted_plan
 
@@ -111,20 +112,34 @@ def _nodes(plan):
         yield from _nodes(children.apply(i))
 
 
+def _induction_match(spark, sf_dir):
+    from test_template_induction import _PLANTED_DIM, _PLANTED_LINES, _lines_df
+
+    return _match(_lines_df(spark, _PLANTED_LINES), _PLANTED_DIM, 0.5, 5)
+
+
 @pytest.mark.parametrize(
-    "query", [q_spell_match, q_template_match], ids=["spell_match", "template_match"]
+    "query, shuffles",
+    [
+        (q_spell_match, ["REPARTITION_BY_NUM"]),
+        (q_template_match, ["REPARTITION_BY_NUM"]),
+        (_induction_match, []),
+    ],
+    ids=["spell_match", "template_match", "template_induction"],
 )
-def test_match_plan_joins_lines_to_one_dim_row(spark, query):
-    """The line side joins nothing but the one-row template dim: no window,
-    no cartesian product, no shuffle but widen's repartition, and the one
-    nested-loop join builds from a one-row LocalTableScan."""
+def test_match_plan_joins_lines_to_one_dim_row(spark, query, shuffles):
+    """All three matchers join the line side to nothing but the one-row
+    template dim: no window, no cartesian product, no shuffle but widen's
+    repartition (the two queries widen their line scan; induction's lines
+    are given), and the one nested-loop join builds from a one-row
+    LocalTableScan."""
     df = query(spark, SF)
     plan = formatted_plan(df)
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
     nodes = list(_nodes(df._jdf.queryExecution().executedPlan().executedPlan()))
     exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
-    assert [str(n.shuffleOrigin()) for n in exchanges] == ["REPARTITION_BY_NUM"]
+    assert [str(n.shuffleOrigin()) for n in exchanges] == shuffles
     (join,) = [n for n in nodes if n.nodeName() == "BroadcastNestedLoopJoin"]
     build = join.right() if str(join.buildSide()) == "BuildRight" else join.left()
     assert build.nodeName() == "BroadcastExchange"

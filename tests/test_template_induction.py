@@ -5,9 +5,9 @@
   NEW templates flagged ``is_new`` (the v2 anomaly path, Drain.py:367-377);
 * golden gate: the Spark fixpoint agrees with an independent SEQUENTIAL
   implementation of the published Drain semantics on deterministic fixtures;
-* per-line argmax: the bucket-filter ``array_max`` match agrees with the
-  join + ``Window`` formulation it replaced (kept here as the reference),
-  and its plan has no window and no shuffle;
+* per-line argmax: the tree-path ``array_max`` match agrees with the
+  join + ``Window`` formulation it replaced (kept here as the reference);
+  its plan is checked beside the other two matchers' in test_spell_match;
 * driver-local output dim: a local scan with NOT NULL occurrences/is_new,
   occurrences equal to the assignment counts, Spark-equal md5-8 ids;
 * HDFS-format fixture: lines synthesized from the reference's own 47-template
@@ -372,14 +372,6 @@ def test_match_argmax_equals_window_reference(spark, depth):
         assert got == want
     planted = _match(_lines_df(spark, _PLANTED_LINES), _PLANTED_DIM, 0.5, depth)
     assert _by_line(planted) == _PLANTED_EXPECTED[depth]
-
-
-def test_match_plan_has_no_window_or_shuffle(spark):
-    from plan_audit import formatted_plan, plan_facts
-
-    m = _match(_lines_df(spark, _PLANTED_LINES), _PLANTED_DIM, 0.5, 5)
-    assert "Window" not in formatted_plan(m)
-    assert plan_facts(m)["shuffle_exchanges"] == 0
 
 
 def test_templates_plan_is_local_scan(spark):
