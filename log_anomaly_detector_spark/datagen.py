@@ -28,8 +28,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.rules.column_stats import stats_pass
+
 VOCAB_SIZE = 48          # reference: 48 templates (HDFS.log_templates.csv)
 N_SOURCES = 12
+SOURCES = [f"source_{i:02d}" for i in range(N_SOURCES)]  # the clean dimension
 
 # prime moduli for planted violations (composable, low collision)
 DUP_MOD = 997            # id % DUP_MOD == 1  → exact duplicate of id-1
@@ -206,17 +209,21 @@ def gen_reference_snapshot(spark: SparkSession, spec: GenSpec) -> DataFrame:
 def gen_allowed_sources(spark: SparkSession) -> DataFrame:
     """Referential dimension (F2) — tiny; the engine collects it once into a
     driver set."""
-    rows = [(f"source_{i:02d}", f"synthetic component {i}") for i in range(N_SOURCES)]
+    rows = [(s, f"synthetic component {i}") for i, s in enumerate(SOURCES)]
     return spark.createDataFrame(rows, "source string, description string")
 
 
 def gen_baseline_profile(spark: SparkSession, spec: GenSpec, cfg) -> dict:
-    """Pinned drift baseline (F4): n_tok histogram + source frequencies from
-    a clean, drift-free generation at the same seed (the reference's analogue
-    is the warm-start template occurrence profile, Drain.py:233-239).
+    """Pinned drift baseline (F4): the engine's own drift inputs — the
+    ``stats_pass`` n_tok histogram and per-source counts — over a clean,
+    drift-free generation at the same seed, summed across partitions on the
+    driver (the reference's analogue is the warm-start template occurrence
+    profile, Drain.py:233-239). One aggregate, and no second copy of the
+    bucket rule.
 
     Returns {"hist": [counts per bucket], "source_counts": {source: n},
-    "n": total} — tiny, driver-held, JSON-serializable.
+    "n": total} — tiny, driver-held, JSON-serializable. Sources the clean
+    generation never draws are left out of ``source_counts``.
     """
     clean = GenSpec(
         n_docs=min(spec.n_docs, 200_000),
@@ -226,22 +233,11 @@ def gen_baseline_profile(spark: SparkSession, spec: GenSpec, cfg) -> dict:
         drift=False,
         heavy=False,
     )
-    df = gen_sequences(spark, clean)
-    width = (cfg.hist_hi - cfg.hist_lo) / cfg.hist_buckets
-    bucket = F.least(
-        F.greatest(
-            F.floor((F.col("n_tok") - F.lit(cfg.hist_lo)) / F.lit(width)).cast("int"),
-            F.lit(0),
-        ),
-        F.lit(cfg.hist_buckets - 1),
-    )
-    hist_rows = df.groupBy(bucket.alias("bucket")).count().collect()
-    hist = [0] * cfg.hist_buckets
-    for r in hist_rows:
-        hist[r["bucket"]] = r["count"]
-    src_rows = df.groupBy("source").count().collect()
+    rows = stats_pass(gen_sequences(spark, clean), cfg, SOURCES).collect()
+    hist = [sum(r[f"hist_{b}"] for r in rows) for b in range(cfg.hist_buckets)]
+    counts = {s: sum(r[f"src_{i}"] for r in rows) for i, s in enumerate(SOURCES)}
     return {
         "hist": hist,
-        "source_counts": {r["source"]: r["count"] for r in src_rows},
+        "source_counts": {s: n for s, n in counts.items() if n},
         "n": int(sum(hist)),
     }

@@ -8,6 +8,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# the template wildcard (logparser/Drain.py:116-142, 507-510): a masked
+# parameter position in every template this package writes or matches
+WILDCARD = "<*>"
+
 # tiny pinned stopword list (quality scoring + langid heuristic)
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 

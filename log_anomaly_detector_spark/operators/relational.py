@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.functions.text_funcs import WILDCARD
+
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -45,6 +47,14 @@ def one_part(col) -> "F.Column":
     planning the warn-worthy unpartitioned Window (a foldable ``lit(0)`` gets
     constant-folded away)."""
     return F.pmod(col, F.lit(1))
+
+
+def md5_int(s, digits: int) -> "F.Column":
+    """The first ``digits`` hex digits of ``md5(s)`` as a non-negative
+    bigint — the engine-portable key hash behind every coin and sketch here:
+    DuckDB's ``('0x' || substr(md5(s), 1, digits))::bigint`` is the same
+    number, so each oracle matches bit for bit."""
+    return F.conv(F.substring(F.md5(s), 1, digits), 16, 10).cast("bigint")
 
 
 # --------------------------------------------------------------------------
@@ -301,9 +311,7 @@ KMV_K = 32
 
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    h = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
+    h = md5_int(F.col("user_id").cast("string"), 15)
     hashes = ev.select("event_type", h.alias("h")).dropDuplicates(
         ["event_type", "h"]
     )
@@ -651,7 +659,7 @@ def q_regex_hash_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         F.regexp_extract(F.col("props"), r'"k": (\d+)', 1).cast("int").alias("k"),
-        F.regexp_replace(F.col("props"), r"\d+", "<*>").alias("props_template"),
+        F.regexp_replace(F.col("props"), r"\d+", WILDCARD).alias("props_template"),
         F.substring(F.md5(F.col("event_type")), 1, 8).alias("type_hash8"),
         F.upper(F.col("event_type")).alias("type_upper"),
     )
@@ -679,9 +687,6 @@ FROM events
 # Divergence (documented): ≥2 wildcards inside ONE token yield one combined
 # param (the reference yields one per wildcard); no such token exists in the
 # reference's own HDFS dim. --------------------------------------------------
-WILDCARD_TOKEN = "<*>"
-
-
 def parameter_list(content, template) -> "F.Column":
     """array<string> of parameters of ``content`` under ``template``."""
     # reference first normalizes short angle tokens ("<NUM>") to '<*>'
@@ -691,7 +696,7 @@ def parameter_list(content, template) -> "F.Column":
     # normalization keeps the intended effect without the cross-token merge
     tmpl_toks = F.transform(
         F.split(template, " "),
-        lambda tk: F.regexp_replace(tk, r"<.{1,5}>", "<*>"),
+        lambda tk: F.regexp_replace(tk, r"<.{1,5}>", WILDCARD),
     )
     pairs = F.zip_with(
         tmpl_toks,
@@ -699,15 +704,15 @@ def parameter_list(content, template) -> "F.Column":
         lambda tk, c: F.struct(tk.alias("tk"), c.alias("c")),
     )
     def strip(p):
-        prefix = F.substring_index(p["tk"], WILDCARD_TOKEN, 1)
-        suffix = F.substring_index(p["tk"], WILDCARD_TOKEN, -1)
+        prefix = F.substring_index(p["tk"], WILDCARD, 1)
+        suffix = F.substring_index(p["tk"], WILDCARD, -1)
         return F.substring(
             p["c"],
             F.length(prefix) + 1,
             F.length(p["c"]) - F.length(prefix) - F.length(suffix),
         )
     return F.transform(
-        F.filter(pairs, lambda p: p["tk"].contains(WILDCARD_TOKEN)), strip
+        F.filter(pairs, lambda p: p["tk"].contains(WILDCARD)), strip
     )
 
 
@@ -715,7 +720,7 @@ def q_param_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three regex passes per event — parallelize the single-split scan
     # (projected to the two columns the query reads)
     ev = widen(t(spark, sf_dir, "events").select("event_id", "props"), "event_id")
-    template = F.regexp_replace(F.col("props"), r"\d+", "<*>")
+    template = F.regexp_replace(F.col("props"), r"\d+", WILDCARD)
     params = parameter_list(F.col("props"), template)
     return ev.select(
         "event_id",
@@ -965,19 +970,11 @@ SAMPLE_SEED = 20
 SPLIT_SEED = 1234
 
 
-def _hash_bucket(key, seed: int) -> "F.Column":
-    """Deterministic 0-99 bucket from md5(key ':' seed) — same construction
-    as the mask_tokens coin (operators/text.py)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(key.cast("string"), F.lit(f":{seed}"))), 1, 6
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 100
-    )
+def _hash_bucket(key, seed: int, n: int = 100, digits: int = 6) -> "F.Column":
+    """Deterministic 0..n-1 bucket: ``md5_int(key ':' seed, digits) mod n``.
+    The defaults are the 0-99 seeded coin (sample, split, decontaminate,
+    source mix); pack's bucket takes more digits so any ``n`` is uniform."""
+    return md5_int(F.concat(key.cast("string"), F.lit(f":{seed}")), digits) % n
 
 
 def q_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

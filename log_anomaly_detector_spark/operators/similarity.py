@@ -306,18 +306,6 @@ def _bucket_udf(dim: int, n_tables: int, planes: int):
     return buckets
 
 
-def _emb_dim(emb: DataFrame) -> int | None:
-    # schema-level when available; otherwise one 1-row probe (driver-side,
-    # once per query build — never per row). Returns None when NO non-null
-    # vector exists: at scale an empty corpus slice is a legitimate input
-    # (a filter that matched nothing), so `embedding_near_dup_pairs` names
-    # the empty input instead of failing with a driver TypeError.
-    # The isNotNull filter matters: probing the RAW first row would read a
-    # NULL vector as d=None and silently empty a non-empty corpus.
-    row = emb.filter(F.col("v").isNotNull()).select(F.size("v").alias("d")).first()
-    return None if row is None else row["d"]
-
-
 _ANN_LSH_SQL = f"""
 WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
 planes AS (
@@ -594,7 +582,7 @@ def _flat_members(m: Column) -> list[Column]:
 
 
 def _bucket_groups(
-    emb: DataFrame, n_tables: int, planes: int, dim: int, n_rows: int | None = None
+    emb: DataFrame, n_tables: int, planes: int, dim: int, n_rows: int
 ) -> DataFrame:
     """(tbl, ids, vflat, sigflat, nleft) kernel groups for
     `_grouped_verify_udf`, each holding at most `_GROUPED_MAX_BUCKET_BYTES`
@@ -619,7 +607,7 @@ def _bucket_groups(
     cap = max(2, _GROUPED_MAX_BUCKET_BYTES // (dim * 8))  # rows per group
     block = cap // 2
     big = []
-    if n_rows is None or n_rows > cap:
+    if n_rows > cap:
         counts = memb.groupBy("tbl", "bucket").count()
         big = [
             (r["tbl"], r["bucket"], -(-r["count"] // block))
@@ -663,8 +651,9 @@ def embedding_near_dup_pairs(
     threshold: float = ND_THRESHOLD,
     n_tables: int = ND_TABLES,
     planes: int = ND_PLANES,
-    dim: int | None = None,
-    n_rows: int | None = None,
+    *,
+    dim: int,
+    n_rows: int,
 ) -> DataFrame:
     """All (id_a < id_b, cosine) pairs with cosine ≥ threshold over
     ``emb(vec_id, v array<double>)`` — LSH-bucket candidates + exact verify.
@@ -685,18 +674,9 @@ def embedding_near_dup_pairs(
     vectors (0.5 GB grouped), and took 111 s vs ~10 s for the contract
     regime at sf1.0.
 
-    Pass ``dim`` when ``emb`` sits behind a repartition/shuffle — the
-    fallback one-row probe would otherwise run the whole shuffle-map stage
-    just to read a vector length. Pass ``n_rows`` (the corpus row count, or
-    any upper bound) when it is known: a corpus within one group budget
-    skips the bucket sizing job."""
-    dim = dim if dim is not None else _emb_dim(emb)
-    if dim is None:
-        raise ValueError(
-            "embedding_near_dup_pairs: empty embeddings input — pass the "
-            "known dim, or short-circuit empty corpora upstream (the "
-            "contract query does)"
-        )
+    ``dim`` is the vector length and ``n_rows`` the corpus row count (or
+    any upper bound): a corpus within one group budget skips the bucket
+    sizing job. `_near_dup_corpus` reads both in one aggregate."""
     raw = _bucket_groups(emb, n_tables, planes, dim, n_rows).mapInPandas(
         _grouped_verify_udf(dim, n_tables, threshold),
         schema="id_a long, id_b long, cosine double",

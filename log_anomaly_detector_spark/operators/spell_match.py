@@ -94,11 +94,7 @@ def lcs_length(a: Column, b: Column) -> Column:
     )
 
 
-def spell_match(
-    lines: DataFrame,
-    templates: DataFrame,
-    tau: float = TAU,
-) -> DataFrame:
+def spell_match(lines: DataFrame, templates: DataFrame) -> DataFrame:
     """For each line, the best template by Spell's LCSMatch (Spell.py:112-133),
     else NULL (= the line would found a new cluster, Spell.py:252-255).
 
@@ -109,7 +105,7 @@ def spell_match(
     prefilter — templates outside it can never win anyway for tau ≥ 0.5,
     since lcs_len ≤ distinct-overlap is false in general with duplicate
     tokens, but the reference applies exactly this filter and so do we).
-    Accept: lcs_len ≥ tau·|seq|. Tie-break: desc lcs_len, asc |template|,
+    Accept: lcs_len ≥ TAU·|seq|. Tie-break: desc lcs_len, asc |template|,
     asc template_id (pinned; reference: insertion order, Spell.py:124-127).
     Templates with NULL tokens never match.
     """
@@ -151,7 +147,7 @@ def spell_match(
     )
     return _pick(lines, row, best, n.alias("_n")).select(
         "line_id",
-        F.when(F.col("_b.lcs") >= tau * F.col("_n"), F.col("_b.tid")).alias(
+        F.when(F.col("_b.lcs") >= TAU * F.col("_n"), F.col("_b.tid")).alias(
             "matched_template_id"
         ),
         F.col("_b.lcs").cast("int").alias("lcs_len"),
@@ -163,7 +159,7 @@ def spell_match(
 # of Drain's positional similarity — the two parser families are directly
 # comparable on identical inputs. ---------------------------------------------
 def q_spell_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spell_match(*_prefix_fixture(spark, sf_dir), tau=TAU)
+    return spell_match(*_prefix_fixture(spark, sf_dir))
 
 
 _SPELL_SQL = f"""

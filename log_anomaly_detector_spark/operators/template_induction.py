@@ -56,11 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from log_anomaly_detector_spark.operators.template_match import (
-    WILDCARD,
-    _drain_pick,
-    _local,
-)
+from log_anomaly_detector_spark.functions.text_funcs import WILDCARD
+from log_anomaly_detector_spark.operators.template_match import _drain_pick, _local
 
 _HAS_DIGIT = "[0-9]"
 

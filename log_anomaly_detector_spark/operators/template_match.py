@@ -19,8 +19,8 @@ are tree paths (``_drain_pick``): token count, then the first token or
 line side beyond the one-row dim, no window, no shuffle; ``seqDist`` is a
 ``zip_with`` + ``aggregate`` column expression. No Python in the loop.
 
-This module also holds ``WILDCARD``, ``_local``, the seqDist scorer
-``_seq_sim`` and ``_prefix_fixture``, both matcher queries' input.
+This module also holds ``_local``, the seqDist scorer ``_seq_sim`` and
+``_prefix_fixture``, both matcher queries' input.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
-WILDCARD = "<*>"
+from log_anomaly_detector_spark.functions.text_funcs import WILDCARD
 
 
 def _local(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:

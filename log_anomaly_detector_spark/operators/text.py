@@ -22,7 +22,12 @@ from log_anomaly_detector_spark.functions.text_funcs import (
     word_ngrams,
     words,
 )
-from log_anomaly_detector_spark.operators.relational import _hash_bucket, t, widen
+from log_anomaly_detector_spark.operators.relational import (
+    _hash_bucket,
+    md5_int,
+    t,
+    widen,
+)
 
 _STOP_SQL = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
 
@@ -498,12 +503,15 @@ def q_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JACCARD_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
+# one row per distinct word 3-gram of a doc — the oracles' `shingles`
+_SHINGLE_EXPR = """unnest(list_distinct(list_transform(
            range(1, greatest(len(string_split_regex(trim(text), ' +')) - 2, 1) + 1),
            i -> array_to_string(list_slice(string_split_regex(trim(text), ' +'), i, i + 2), ' ')
-         ))) AS sh
+         )))"""
+
+_JACCARD_SQL = f"""
+WITH toks AS (
+  SELECT doc_id, {_SHINGLE_EXPR} AS sh
   FROM documents
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id
@@ -533,7 +541,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     so the whole sketch evaluates identically in DuckDB → hard oracle."""
     toks = docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("w"))
     mins = [
-        F.min(_md5_int60(F.concat(F.col("w"), F.lit(f":{k}")))).alias(f"h{k}")
+        F.min(md5_int(F.concat(F.col("w"), F.lit(f":{k}")), 15)).alias(f"h{k}")
         for k in range(N_HASHES)
     ]
     sig = toks.groupBy("doc_id").agg(*mins)
@@ -621,10 +629,6 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLE_EXPR = """unnest(list_distinct(list_transform(
-           range(1, greatest(len(string_split_regex(trim(text), ' +')) - 2, 1) + 1),
-           i -> array_to_string(list_slice(string_split_regex(trim(text), ' +'), i, i + 2), ' ')
-         )))"""
 _RPB = N_HASHES // N_BANDS
 _MINHASH_SQL = f"""
 WITH toks AS (
@@ -655,13 +659,6 @@ WHERE ({" + ".join(f"CASE WHEN sa.h{k} = sb.h{k} THEN 1 ELSE 0 END" for k in ran
 
 
 # --- SimHash (16-bit) bucketing ------------------------------------------------
-def _md5_int60(col) -> "F.Column":
-    """Deterministic 60-bit non-negative int from md5 — engine-portable (the
-    same construction evaluates identically in DuckDB), which is what makes
-    the sketch queries oracle-checkable."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 16-bit SimHash per doc: per-word hash bit votes summed
     JVM-side (16 conditional aggregates), assembled into an int. md5-derived
@@ -670,7 +667,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, seconds once widened)."""
     docs = widen(t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     toks = docs.select("doc_id", F.explode(words(F.col("text"))).alias("w")).withColumn(
-        "h", _md5_int60(F.col("w"))
+        "h", md5_int(F.col("w"), 15)
     )
     votes = [
         F.sum(
@@ -718,22 +715,8 @@ def q_mask_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.transform(ws, lambda w: F.length(w).cast("int"))  # word-length ids
 
     def coin(i):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("doc_id").cast("string"), F.lit(":"), i.cast("string")
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("int")
-            % 100
-        ) < MASK_PCT
+        key = F.concat(F.col("doc_id").cast("string"), F.lit(":"), i.cast("string"))
+        return md5_int(key, 4) % 100 < MASK_PCT
 
     masked = F.transform(toks, lambda x, i: F.when(coin(i), F.lit(4)).otherwise(x))
     labels = F.transform(toks, lambda x, i: F.when(coin(i), x).otherwise(F.lit(0)))

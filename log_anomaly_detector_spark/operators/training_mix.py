@@ -47,20 +47,6 @@ MIX_WEIGHTS = {"en": 90, "fr": 50, "es": 25, "de": 10}
 MIX_SEED = 37
 
 
-def _md5_bucket_n(key, seed: int, n: int):
-    """Uniform 0..n-1 md5 bucket for ANY n: reduces a 48-bit hash directly
-    mod n (reducing the 0-99 coin mod n would leave buckets ≥ 100 empty and
-    skew the rest whenever n does not divide 100)."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(key.cast("string"), F.lit(f":{seed}"))), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        % n
-    )
-
-
 def pack_documents(docs: DataFrame, n_buckets: int = PACK_BUCKETS) -> DataFrame:
     """(doc_id, pack_bucket, bin_id, tok_offset, n_tok): which training bin
     each document lands in and at what token offset, packing greedily in
@@ -69,7 +55,9 @@ def pack_documents(docs: DataFrame, n_buckets: int = PACK_BUCKETS) -> DataFrame:
     Reference analogue: fixed seq_len sample assembly,
     bert_pytorch/dataset/dataset.py:8-44."""
     n_tok = F.size(words(F.col("text")))
-    bucket = _md5_bucket_n(F.col("doc_id"), PACK_SEED, n_buckets).cast("int")
+    # a 48-bit hash reduced mod n directly: the 0-99 coin reduced mod n would
+    # leave buckets ≥ 100 empty and skew the rest whenever n does not divide 100
+    bucket = _hash_bucket(F.col("doc_id"), PACK_SEED, n_buckets, digits=12).cast("int")
     base = docs.select(
         "doc_id", bucket.alias("pack_bucket"), n_tok.alias("n_tok")
     )

@@ -12,6 +12,8 @@ Computes, per partition, in a single ``groupBy(part_id).agg(...)``:
   ``uniq``), so this scan carries no distinct aggregate of any kind
 * the fixed-bucket ``n_tok`` histogram and per-source frequency counts that
   feed the drift pack (R8) — as conditional sums so NO second scan is needed.
+  Summed over a clean generation, the same columns are the drift baseline
+  (``datagen.gen_baseline_profile``), so the bucket rule is written once.
 
 Catalyst plans this as partial (map-side) + final hash aggregation: each task
 reduces its rows to one partial row per partition key, so the shuffle moves
@@ -27,24 +29,20 @@ from pyspark.sql import functions as F
 from log_anomaly_detector_spark.config import RuleConfig
 
 
-def _bucket_col(cfg: RuleConfig):
-    width = (cfg.hist_hi - cfg.hist_lo) / cfg.hist_buckets
-    return F.least(
-        F.greatest(
-            F.floor((F.col("n_tok") - F.lit(cfg.hist_lo)) / F.lit(width)).cast("int"),
-            F.lit(0),
-        ),
-        F.lit(cfg.hist_buckets - 1),
-    )
-
-
 def stats_pass(df: DataFrame, cfg: RuleConfig, sources: list[str]) -> DataFrame:
     """One aggregate over the table → one row per part_id with every stat.
 
     ``sources`` is the (tiny) allowed-sources dimension, used to pivot the
     per-source frequency counts into fixed columns driver-side.
     """
-    bucket = _bucket_col(cfg)
+    width = (cfg.hist_hi - cfg.hist_lo) / cfg.hist_buckets
+    bucket = F.least(
+        F.greatest(
+            F.floor((F.col("n_tok") - F.lit(cfg.hist_lo)) / F.lit(width)).cast("int"),
+            F.lit(0),
+        ),
+        F.lit(cfg.hist_buckets - 1),
+    )
     # NOTE: no aggregate here reads `tokens` — the fat column stays out of
     # this scan entirely (ReadSchema: doc_id, n_tok, source, part_id). The
     # tokens null count comes from the fused row-rule scan (rules/fused.py

@@ -45,9 +45,11 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
-    # local[N] → N; local[*] or cluster → cpu hint
+    # local[N] / local[N,F] / local-cluster[N,C,M] → N; local[*,F], bare
+    # local or a cluster URL → cpu hint
     inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-    shuffle_partitions = cpus if inner in ("", "*") else int(inner)
+    first = inner.split(",")[0]
+    shuffle_partitions = cpus if first in ("", "*") else int(first)
 
     spark = (
         SparkSession.builder.master(master)

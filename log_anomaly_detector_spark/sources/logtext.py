@@ -27,6 +27,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.functions.text_funcs import WILDCARD
+
 
 def generate_logformat_regex(logformat: str) -> tuple[list[str], str]:
     """Compile a log-format string to (headers, regex with one group per
@@ -113,7 +115,7 @@ def structure_lines(raw: DataFrame, logformat: str = DEFAULT_LOGFORMAT) -> DataF
     df = staged.select("LineId", F.col("value"), *cols, "_parsed")
     template = F.col("Content")
     for rex in CONTENT_REXES:
-        template = F.regexp_replace(template, rex, "<*>")
+        template = F.regexp_replace(template, rex, WILDCARD)
     return (
         df.withColumn("EventTemplate", template)
         .withColumn("EventId", F.substring(F.md5(F.col("EventTemplate")), 1, 8))

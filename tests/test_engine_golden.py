@@ -135,3 +135,29 @@ def test_verdict_table_written(spark, world):
     assert {r["part_id"]: r["label"] for r in verd.collect()} == {
         v["part_id"]: v["label"] for v in res.verdicts
     }
+
+
+def test_baseline_matches_reference_bucket_rule(spark):
+    """The engine's drift inputs and the baseline both come from
+    ``stats_pass``, so pin the baseline independently: its histogram is the
+    golden bucket rule (``floor((n_tok - lo) / width)`` clipped to the bucket
+    range) over the clean, drift-free generation's n_tok, and its source
+    counts are that generation's ``value_counts``."""
+    import numpy as np
+
+    spec = GenSpec(n_docs=3_000, n_parts=4, seed=11)
+    clean = GenSpec(
+        n_docs=spec.n_docs, n_parts=spec.n_parts, seed=spec.seed,
+        violations=False, drift=False, heavy=False,
+    )
+    pdf = gen_sequences(spark, clean).select("n_tok", "source").toPandas()
+    width = (CFG.hist_hi - CFG.hist_lo) / CFG.hist_buckets
+    b = np.clip(
+        np.floor((pdf["n_tok"].to_numpy() - CFG.hist_lo) / width).astype(int),
+        0,
+        CFG.hist_buckets - 1,
+    )
+    baseline = gen_baseline_profile(spark, spec, CFG)
+    assert baseline["hist"] == np.bincount(b, minlength=CFG.hist_buckets).tolist()
+    assert baseline["source_counts"] == pdf["source"].value_counts().to_dict()
+    assert baseline["n"] == len(pdf)

@@ -314,6 +314,43 @@ def test_default_master_uses_host_cores(monkeypatch):
     assert exc.value.args == (f"local[{len(os.sched_getaffinity(0))}]",)
 
 
+@pytest.mark.parametrize(
+    "master, partitions",
+    [
+        (None, 5),
+        ("local", 5),
+        ("local[3]", 3),
+        ("local[*]", 5),
+        ("local[4,2]", 4),
+        ("local[*,3]", 5),
+        ("local-cluster[2,1,1024]", 2),
+        ("spark://host:7077", 5),
+    ],
+)
+def test_master_forms_set_shuffle_partitions(monkeypatch, master, partitions):
+    """Every master form Spark accepts sizes the shuffle: the first bracket
+    field when it is a count, else the core hint (SPARK_GRAFT_CPUS=5 here)."""
+    from pyspark.sql import SparkSession
+
+    from log_anomaly_detector_spark.session import get_spark
+
+    class Captured(Exception):
+        pass
+
+    config = SparkSession.Builder.config
+
+    def capture_partitions(self, key=None, value=None, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            raise Captured(value)
+        return config(self, key, value, *args, **kwargs)
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.setattr(SparkSession.Builder, "config", capture_partitions)
+    with pytest.raises(Captured) as exc:
+        get_spark(master=master)
+    assert exc.value.args == (str(partitions),)
+
+
 def test_default_driver_memory_fits_the_host(monkeypatch):
     """With SPARK_DRIVER_MEMORY unset, the driver heap is half of physical
     RAM in whole GiB, floored at 1g — not a fixed size beyond a small host."""

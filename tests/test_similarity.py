@@ -403,7 +403,7 @@ def test_near_dup_high_threshold_regime(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(
-            df, threshold=0.9, n_tables=16, planes=6
+            df, threshold=0.9, n_tables=16, planes=6, dim=64, n_rows=len(vecs)
         ).collect()
     }
     assert truth == {(k, 100 + k) for k in range(5)}  # fixture sanity
@@ -420,26 +420,6 @@ def test_minhash_finds_jaccard_pairs(spark):
         assert len(truth & mh) / len(truth) >= 0.8
     else:
         pytest.skip("no planted near-dups at this sf")
-
-
-def test_emb_dim_skips_null_vectors(spark):
-    """A NULL embedding in the probe row must not read as 'empty corpus':
-    the dim probe skips null vectors (a raw first() would return d=None and
-    silently empty every dim-probing ANN query on a non-empty table)."""
-    from pyspark.sql import functions as F
-
-    from log_anomaly_detector_spark.operators.similarity import _emb_dim
-
-    df = spark.createDataFrame(
-        [(0, None), (1, [0.1, 0.2, 0.3, 0.4])],
-        "vec_id long, embedding array<double>",
-    ).select("vec_id", F.col("embedding").alias("v"))
-    assert _emb_dim(df.orderBy("vec_id")) == 4
-    # all-null table == no usable vectors == empty for the probe
-    nulls = spark.createDataFrame(
-        [(0, None)], "vec_id long, embedding array<double>"
-    ).select("vec_id", F.col("embedding").alias("v"))
-    assert _emb_dim(nulls) is None
 
 
 def test_tracked_persist_honors_storage_level(spark):
@@ -616,7 +596,9 @@ def test_grouped_verify_matches_brute_force_bitwise(spark):
 
     #          wide signature   low-τ, many pairs   many tables
     for nt, pl, tau in ((8, 12, 0.85), (4, 8, 0.15), (16, 9, 0.5)):
-        got = _sorted_pairs(embedding_near_dup_pairs(df, tau, nt, pl).collect())
+        got = _sorted_pairs(
+            embedding_near_dup_pairs(df, tau, nt, pl, dim=64, n_rows=len(vecs)).collect()
+        )
         ref = _near_dup_reference(df, tau, nt, pl)
         assert got == ref, (nt, pl, tau, got[:5], ref[:5])
         # the zero-norm pair collides in every table (all-zero buckets) and
@@ -653,13 +635,15 @@ def test_near_dup_skewed_bucket_is_split_bounded(spark, monkeypatch):
 
     cap = 12  # rows per kernel group; blocks are half of it
     monkeypatch.setattr(similarity, "_GROUPED_MAX_BUCKET_BYTES", cap * 64 * 8)
-    groups = _bucket_groups(df, 24, 2, 64).select(
+    groups = _bucket_groups(df, 24, 2, 64, n_rows=len(rows)).select(
         F.size("ids").alias("g"), "nleft"
     ).collect()
     assert max(r["g"] for r in groups) <= 2 * (cap // 2)
     assert any(r["nleft"] > 0 for r in groups)  # the bucket WAS split
 
-    got = _sorted_pairs(embedding_near_dup_pairs(df, 0.45, 24, 2).collect())
+    got = _sorted_pairs(
+        embedding_near_dup_pairs(df, 0.45, 24, 2, dim=64, n_rows=len(rows)).collect()
+    )
     assert got == _near_dup_reference(df, 0.45, 24, 2)
     ident = {(a, b) for a, b, _ in got if b < 40 or a >= 200}
     assert ident == {

@@ -96,7 +96,7 @@ def test_spell_match_reference_decisions(spark):
     )
     got = {
         r["line_id"]: (r["matched_template_id"], r["lcs_len"])
-        for r in spell_match(lines, templates, tau=0.5).collect()
+        for r in spell_match(lines, templates).collect()
     }
     assert got[0] == ("T2", 3)
     assert got[1] == ("T3", 2)
