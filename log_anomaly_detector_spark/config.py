@@ -31,12 +31,10 @@ class RuleConfig:
     min_distinct_ratio: float = 0.95
 
     # --- uniqueness (R4) ------------------------------------------------
-    # salt buckets for the two-phase (salted partial -> final) dup count.
-    uniqueness_salt_buckets: int = 16
-    # how the run-global duplicate-key job counts (rules/uniqueness.py):
-    # 'salted': two-phase agg, safe on any layout/skew; 'direct': single
-    # groupBy(doc_id) — zero-shuffle when the input is bucketed by doc_id.
-    uniqueness_mode: str = "salted"
+    # Read by nothing: rules/uniqueness.py has one plan. perfbench and
+    # bench.py still pass uniqueness_mode="direct"; direction 1's benchmark
+    # PR (ROADMAP) deletes the field.
+    uniqueness_mode: str = "direct"
 
     # --- drift (R8) -------------------------------------------------------
     # fixed n_tok histogram bucket edges (pinned; width 16 up to 512).

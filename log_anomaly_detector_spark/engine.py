@@ -70,7 +70,6 @@ class ValidationResult:
     verdicts: list[dict] = field(default_factory=list)       # one per partition
     rule_verdicts: list[dict] = field(default_factory=list)  # per (part, rule)
     metrics: dict = field(default_factory=dict)
-    out_dir: str = ""
 
 
 def run_validation(
@@ -117,7 +116,7 @@ def run_validation(
     if max_batches is not None:
         batches = batches[:max_batches]
 
-    result = ValidationResult(out_dir=out_dir)
+    result = ValidationResult()
     viol_path = os.path.join(out_dir, "violations")
     verd_path = os.path.join(out_dir, "verdicts")
     total_rows = 0
@@ -217,7 +216,6 @@ def run_validation(
                         }
                     )
 
-            batch_rule_rows = [r for r in rule_rows if r["part_id"] in set(batch)]
             wall = time.time() - t0
             batch_rows = sum(stats_by_part[p]["n_rows"] for p in batch if p in stats_by_part)
             total_rows += batch_rows
@@ -228,7 +226,7 @@ def run_validation(
                 score = round(vdocs / n, dp) if n else 0.0
                 failed = sorted(
                     r["rule_id"]
-                    for r in batch_rule_rows
+                    for r in rule_rows
                     if r["part_id"] == pid
                     and not r["passed"]
                     and r["rule_id"] in cfg.partition_rules
@@ -266,7 +264,7 @@ def run_validation(
                         "batch_rows_per_sec": round(batch_rows / wall, 1) if wall else None,
                     }
                 )
-            result.rule_verdicts.extend(batch_rule_rows)
+            result.rule_verdicts.extend(rule_rows)
 
             # persist verdicts (partitioned, idempotent like violations): a
             # few rows per batch, written from the driver with no Spark job

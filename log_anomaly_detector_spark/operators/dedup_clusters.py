@@ -33,14 +33,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.operators.relational import collect_capped
 from log_anomaly_detector_spark.operators.text import _JACCARD_SQL
 
+# total rounds of the iterative path (connected_components)
+_MAX_ROUNDS = 20
+# the most edges resolved driver-side by union-find
+_COLLECT_BUDGET = 1_000_000
 
-def connected_components(
-    pairs: DataFrame,
-    max_rounds: int = 20,
-    collect_budget: int = 1_000_000,
-) -> DataFrame:
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(node, component_id) for every node of the (doc_a, doc_b) edges in
     ``pairs``; component_id = the minimum node id reachable from it.
 
@@ -48,14 +50,15 @@ def connected_components(
     RESULT-sized (edges exist only between actual duplicates), and at bench
     scale it is a few thousand rows — but the iterative propagation still
     paid diameter+1 rounds of fixed job overhead (join + grouped min +
-    checkpoint ≈ 0.4 s/round) to resolve it. When the (persisted) edge count
-    is within ``collect_budget`` rows, the components are resolved DRIVER-
-    side with union-find over the collected edges — O(edges·α) work on a
-    dim-sized list, the same driver-state pattern as template_induction's
-    dim — and returned as one createDataFrame with byte-identical (node,
+    checkpoint ≈ 0.4 s/round) to resolve it. When ``collect_capped`` brings
+    back the (persisted) edges within ``_COLLECT_BUDGET`` rows — one job
+    that both measures and delivers them — the components are resolved
+    DRIVER-side with union-find over them, O(edges·α) work on a dim-sized
+    list, the same driver-state pattern as template_induction's dim, and
+    returned as one createDataFrame with byte-identical (node,
     min-reachable-id) semantics (pinned by the fast-vs-iterative parity
     test). Larger graphs (the 100 TB regime) keep the distributed iterative
-    path below; ``collect_budget=0`` forces it.
+    path below; tests force it with ``_COLLECT_BUDGET = 0``.
 
     Iterative path: ONE Spark action per round — each node's OLD label rides
     through the grouped min as a second aggregate (own rows are tagged, and
@@ -64,10 +67,10 @@ def connected_components(
     per-round checkpoint is LAZY — the convergence-probe aggregate
     materializes it.
 
-    ``max_rounds`` bounds TOTAL rounds of the iterative path, including the
+    ``_MAX_ROUNDS`` bounds TOTAL rounds of the iterative path, including the
     final quiet round that observes changed==0 — a component of diameter D
     needs up to D propagation rounds plus that confirmation, so the deepest
-    resolvable diameter is ``max_rounds - 1``. Exceeding it raises (a
+    resolvable diameter is ``_MAX_ROUNDS - 1``. Exceeding it raises (a
     duplicate graph with diameter ≥ 20 means the pair generator is linking
     non-duplicates — fail loudly, don't spin)."""
     # the symmetrizing union reads ``pairs`` twice — without a persist that
@@ -84,8 +87,8 @@ def connected_components(
     sym = pairs_c.unionByName(
         pairs_c.select(F.col("d").alias("s"), F.col("s").alias("d"))
     )
-    if collect_budget and pairs_c.count() <= collect_budget:
-        rows = pairs_c.collect()
+    rows = collect_capped(pairs_c, _COLLECT_BUDGET)
+    if rows is not None:
         pairs_c.unpersist(blocking=False)
         parent: dict = {}
 
@@ -118,7 +121,7 @@ def connected_components(
     labels = edges.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         nbr = edges.join(
             labels.withColumnRenamed("node", "d").select("d", "label"), "d"
         ).select(F.col("s").alias("node"), "label", F.lit(False).alias("_own"))
@@ -145,8 +148,8 @@ def connected_components(
         if changed == 0:
             return labels.select("node", F.col("label").alias("component_id"))
     raise ValueError(
-        f"connected_components did not converge within max_rounds={max_rounds} "
-        f"rounds (diameter cap {max_rounds - 1} plus one confirmation round) — "
+        f"connected_components did not converge within _MAX_ROUNDS={_MAX_ROUNDS} "
+        f"rounds (diameter cap {_MAX_ROUNDS - 1} plus one confirmation round) — "
         "the pair graph has a longer diameter than any plausible duplicate "
         "cluster; check the pair generator's threshold."
     )

@@ -39,6 +39,15 @@ def widen(df: DataFrame, *keys) -> DataFrame:
     return df.repartition(par, *keys) if keys else df.repartition(par)
 
 
+def collect_capped(df: DataFrame, cap: int) -> list | None:
+    """The rows of ``df`` if it has at most ``cap`` of them, else None.
+
+    The one "fits on the driver" decision: ``limit(cap + 1)`` bounds what
+    the driver receives, and the one collect both measures and delivers."""
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
+
+
 def one_part(col) -> "F.Column":
     """Constant-valued but NON-foldable window partition key (``pmod(col,1)``
     is 0 for every row). Used to number inputs that are KNOWN BOUNDED (post

@@ -446,9 +446,7 @@ _GROUPED_MAX_BUCKET_BYTES = 1 << 28
 _PAIR_BLOCK = 1 << 18
 
 
-def _grouped_verify_udf(
-    dim: int, n_tables: int, threshold: float, pair_block: int = _PAIR_BLOCK
-):
+def _grouped_verify_udf(dim: int, n_tables: int, threshold: float):
     """mapInPandas kernel over (tbl, ids, vflat, sigflat, nleft) kernel-group
     rows (`_bucket_groups`): emits every first-hit candidate pair of the
     group with its RAW cosine. ``nleft == 0`` marks a whole bucket (every
@@ -513,8 +511,8 @@ def _grouped_verify_udf(
                 # bucket pairs each row with every later row, a block pair
                 # pairs the left block's rows with the right block's rows
                 row_end = nleft if nleft else g - 1
-                # row blocks of b rows × ≤g cols bound scratch to ~pair_block
-                b = max(1, pair_block // g)
+                # row blocks of b rows × ≤g cols bound scratch to ~_PAIR_BLOCK
+                b = max(1, _PAIR_BLOCK // g)
                 for r0 in range(0, row_end, b):
                     r1 = min(r0 + b, row_end)
                     c0 = nleft if nleft else r0 + 1

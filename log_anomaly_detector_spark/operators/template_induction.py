@@ -50,13 +50,14 @@ from __future__ import annotations
 
 import hashlib
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from log_anomaly_detector_spark.functions.text_funcs import WILDCARD
+from log_anomaly_detector_spark.operators.relational import collect_capped
 from log_anomaly_detector_spark.operators.template_match import _drain_pick, _local
 
 _HAS_DIGIT = "[0-9]"
@@ -67,6 +68,8 @@ _TEMPLATES_DDL = (
     "occurrences long NOT NULL, is_new boolean NOT NULL"
 )
 _EVENT_IDS_DDL = "template_id long, event_id string"
+# the driver-side template dim's row cap (induce_templates)
+_MAX_DIM_ROWS = 50_000
 
 
 def _dim_local(spark: SparkSession, dim: list) -> DataFrame:
@@ -188,7 +191,6 @@ class InductionResult:
     assignments: DataFrame          # (line_id, event_id, similarity)
     founding_rounds: int = 0
     refine_passes: int = 0
-    metrics: dict = field(default_factory=dict)
 
 
 def induce_templates(
@@ -198,7 +200,6 @@ def induce_templates(
     warm_templates: DataFrame | None = None,
     max_founding_rounds: int = 8,
     max_refine_passes: int = 8,
-    max_dim_rows: int = 50_000,
 ) -> InductionResult:
     """Learn the template dim from ``lines`` (line_id long, tokens
     array<string>), optionally warm-started from a known dim
@@ -215,9 +216,10 @@ def induce_templates(
     since an iterative plan that re-references itself doubles its logical
     tree every round, and ``templates`` is one local relation too. On template-POOR input (natural text, high-entropy
     ids) bulk founding could make the dim row-count-sized; every collect that
-    grows the dim is therefore capped at ``max_dim_rows`` and overflow raises
-    a clear ``ValueError`` instead of silently OOMing the driver. Raise the
-    cap only if your template dim is genuinely that large.
+    grows the dim is therefore capped at ``_MAX_DIM_ROWS`` rows
+    (``relational.collect_capped``) and overflow raises a clear
+    ``ValueError`` instead of silently OOMing the driver. Raise the constant
+    only if your template dim is genuinely that large.
     """
     from log_anomaly_detector_spark.operators.caching import tracked_persist
 
@@ -230,14 +232,13 @@ def induce_templates(
     )
 
     def _collect_capped(df: DataFrame, have: int, what: str) -> list:
-        budget = max_dim_rows - have
-        rows = df.limit(budget + 1).collect() if budget >= 0 else []
-        if budget < 0 or len(rows) > budget:
+        rows = collect_capped(df, _MAX_DIM_ROWS - have)
+        if rows is None:
             raise ValueError(
-                f"template dim would exceed max_dim_rows={max_dim_rows} while "
+                f"template dim would exceed _MAX_DIM_ROWS={_MAX_DIM_ROWS} while "
                 f"collecting {what} (current dim: {have} templates). The input "
                 "looks template-poor (near-distinct token sequences) — Drain "
-                "induction is for templated log data; raise max_dim_rows only "
+                "induction is for templated log data; raise _MAX_DIM_ROWS only "
                 "if the dim is genuinely this large, or pre-mask high-entropy "
                 "tokens before induction."
             )

@@ -429,12 +429,9 @@ def shingles(text_col) -> "F.Column":
 def q_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_anomaly_detector_spark.operators.caching import tracked_persist
 
-    docs = t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = widen(t(spark, sf_dir, "documents"), "doc_id")
     # ^ testdata parquet arrives as ONE split; the cheap doc_id repartition
-    # parallelizes the shingle explosion (raw text rows are small) — width
-    # follows the session's parallelism, never a hardcoded constant. Persist
+    # parallelizes the shingle explosion (raw text rows are small). Persist
     # (tracked — one live handle per session): the set table is read by the
     # prefix side and by the verify side.
     sets_ = tracked_persist(
@@ -557,9 +554,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs."""
     from log_anomaly_detector_spark.operators.caching import tracked_persist
 
-    docs = t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = widen(t(spark, sf_dir, "documents"), "doc_id")
     # ^ single-split testdata: parallelize the shingle explosion. The
     # signature table (doc_id + 16 longs — vocabulary-free, dim-per-doc) is
     # read THREE times now (band explosion + the two candidate fetch joins),

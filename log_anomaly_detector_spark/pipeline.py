@@ -24,7 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.operators.caching import tracked_persist
-from log_anomaly_detector_spark.sources.logtext import read_structured_logs
+from log_anomaly_detector_spark.sources.logtext import (
+    DEFAULT_LOGFORMAT,
+    read_structured_logs,
+)
 
 
 @dataclass
@@ -42,7 +45,7 @@ def run_induction_pipeline(
     st: float = 0.5,
     depth: int = 4,
     seq_threshold: float = 0.2,
-    logformat: str = "<Date> <Time> <Pid> <Level> <Component>: <Content>",
+    logformat: str = DEFAULT_LOGFORMAT,
 ) -> InductionPipelineResult:
     """The reference's v2 lifecycle (``parse_and_store_log_lines``,
     Drain.py:329-423) with LEARNED templates: warm-start the dim from the DB

@@ -123,10 +123,6 @@ def main() -> int:
                 spark, "snapshot", storage.SNAP_DDL, os.path.join(d, snap_name),
                 n_buckets=args.n_buckets,
             )
-            # co-partitioned input → the zero-shuffle duplicate-key count
-            cfg = RuleConfig(
-                seq_threshold=cfg.seq_threshold, uniqueness_mode="direct"
-            )
         else:  # plain parquet layout
             seqs = spark.read.parquet(os.path.join(d, seq_name))
             snap = spark.read.parquet(os.path.join(d, snap_name))

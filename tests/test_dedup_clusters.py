@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import pytest
 
+from log_anomaly_detector_spark.operators import dedup_clusters
 from log_anomaly_detector_spark.operators.dedup_clusters import (
     connected_components,
 )
+
+SF = "/root/testdata/sf0.01"
 
 
 def test_components_on_hand_graph(spark):
@@ -36,17 +39,19 @@ def test_components_long_chain_converges(spark):
     assert len(got) == 13
 
 
-def test_components_round_cap_raises(spark):
+def test_components_round_cap_raises(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
     )
-    # collect_budget=0 forces the distributed iterative path (the driver
-    # fast path has no round cap to exercise)
-    with pytest.raises(ValueError, match="max_rounds"):
-        connected_components(pairs, max_rounds=2, collect_budget=0)
+    # a zero budget forces the distributed iterative path (the driver fast
+    # path has no round cap to exercise)
+    monkeypatch.setattr(dedup_clusters, "_COLLECT_BUDGET", 0)
+    monkeypatch.setattr(dedup_clusters, "_MAX_ROUNDS", 2)
+    with pytest.raises(ValueError, match="_MAX_ROUNDS"):
+        connected_components(pairs)
 
 
-def test_components_driver_fast_path_matches_iterative(spark):
+def test_components_driver_fast_path_matches_iterative(spark, monkeypatch):
     """The size-dispatched driver union-find and the iterative min-label
     propagation are two physical strategies for one operator: same rows,
     same types, on a graph mixing chains, cliques and singleton pairs."""
@@ -61,25 +66,40 @@ def test_components_driver_fast_path_matches_iterative(spark):
         (r["node"], r["component_id"])
         for r in connected_components(pairs).collect()
     }
+    monkeypatch.setattr(dedup_clusters, "_COLLECT_BUDGET", 0)
     iterative = {
         (r["node"], r["component_id"])
-        for r in connected_components(pairs, collect_budget=0).collect()
+        for r in connected_components(pairs).collect()
     }
     assert fast == iterative
     assert (300, 300) in fast and (302, 300) in fast
 
 
-def test_components_driver_path_null_endpoint_and_mixed_types(spark):
+def test_components_driver_path_null_endpoint_and_mixed_types(spark, monkeypatch):
     """A pair with a NULL endpoint is no edge on either path, and the driver
     path types its output from the wider of the endpoint types (int doc_a,
     bigint doc_b → bigint), as the iterative path's union does."""
     edges = [(1, 2), (2, 3), (10, 11), (20, None), (None, 21), (11, 3_000_000_000)]
     pairs = spark.createDataFrame(edges, "doc_a int, doc_b bigint")
     fast_df = connected_components(pairs)
-    iter_df = connected_components(pairs, collect_budget=0)
+    monkeypatch.setattr(dedup_clusters, "_COLLECT_BUDGET", 0)
+    iter_df = connected_components(pairs)
     assert fast_df.schema == iter_df.schema
     assert fast_df.schema["node"].dataType.simpleString() == "bigint"
     fast = {(r["node"], r["component_id"]) for r in fast_df.collect()}
     iterative = {(r["node"], r["component_id"]) for r in iter_df.collect()}
     assert fast == iterative
     assert fast == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (3_000_000_000, 10)}
+
+
+def test_dedup_clusters_job_count(spark, job_ids):
+    """Built and collected on sf0.01 from cold caches, q_dedup_clusters runs
+    at most 17 Spark jobs (counted by job group): one capped collect both
+    sizes the pair graph and hands it to the driver union-find, with no
+    separate count job."""
+    from log_anomaly_detector_spark.operators.caching import release_all
+
+    release_all()
+    with job_ids("dedup-clusters-jobs") as ids:
+        assert len(dedup_clusters.q_dedup_clusters(spark, SF).collect()) > 0
+    assert len(ids) <= 17

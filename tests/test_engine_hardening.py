@@ -24,7 +24,6 @@ from pyspark.sql.types import StructType
 
 from log_anomaly_detector_spark import storage
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
-from log_anomaly_detector_spark.config import RuleConfig
 from log_anomaly_detector_spark.datagen import (
     GenSpec,
     gen_allowed_sources,
@@ -63,17 +62,15 @@ def world(spark):
     return seqs, snap, allowed, baseline, victim_id
 
 
-@pytest.mark.parametrize("mode", ["salted", "direct"])
-def test_cross_batch_duplicate_detected(spark, world, tmp_path, mode):
+def test_cross_batch_duplicate_detected(spark, world, tmp_path):
     """batch_parts=1 → the two copies are validated in DIFFERENT batches;
     both must still be flagged by the uniqueness rule, and the whole
     violation set (the fused pass's duplicate-key-join branch) must equal the
     golden implementation's."""
     seqs, snap, allowed, baseline, victim_id = world
-    out = str(tmp_path / f"out_{mode}")
-    cfg = RuleConfig(uniqueness_mode=mode)
+    out = str(tmp_path / "out")
     res = run_validation(
-        spark, seqs, snap, allowed, baseline, out, cfg,
+        spark, seqs, snap, allowed, baseline, out, CFG,
         input_digest="x", batch_parts=1,
     )
     assert res.metrics["duplicate_keys_global"] >= 1

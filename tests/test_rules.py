@@ -3,10 +3,10 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
-from log_anomaly_detector_spark.config import RuleConfig
 from log_anomaly_detector_spark.rules.drift import chi2_norm, ks_d, psi
 from log_anomaly_detector_spark.rules.fused import first_mismatch, fused_row_violations
 from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
@@ -224,8 +224,9 @@ def test_uniqueness_ignores_null_doc_ids(spark):
 
 def test_uniqueness_pathological_skew(spark):
     """One doc_id duplicated 200k times must not break the uniqueness count
-    in either variant: the salted two-phase duplicate-key job collapses
-    copies before the key-shuffle, and the window variant streams the hot
+    in either variant: the one duplicate-key plan survives the hot key
+    because its map-side partial aggregate collapses the copies to one row
+    per task before the key shuffle, and the window variant streams the hot
     key's rows through one spillable window partition."""
     hot = spark.range(200_000).select(
         F.lit("blk_hot").alias("doc_id"),
@@ -255,12 +256,11 @@ def test_uniqueness_pathological_skew(spark):
         ], variant
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """The engine's key layout claim: on doc_id-bucketed tables the fused row
-    pass — snapshot join, uniqueness count and the duplicate-key job — has
-    ZERO shuffle Exchanges in every uniqueness variant, while the same plan
-    over the plain parquet copy does shuffle (so the count is not vacuous).
-    No row of it crosses into a Python worker."""
+@pytest.fixture(scope="module")
+def bucketed_copies(spark, tmp_path_factory):
+    """A small generated input written bucketed by doc_id (4 buckets), read
+    both through its bucketed table and as plain parquet: (seqs, snap,
+    plain_seqs, plain_snap, sources)."""
     from log_anomaly_detector_spark import storage
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
@@ -268,34 +268,52 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         gen_reference_snapshot,
         gen_sequences,
     )
-    from plan_audit import formatted_plan, plan_facts
 
+    d = tmp_path_factory.mktemp("bucketed")
     spec = GenSpec(n_docs=2_000, n_parts=2, seed=5)
     storage.write_bucketed(
-        gen_sequences(spark, spec), "t_seqb", str(tmp_path / "seqb"),
+        gen_sequences(spark, spec), "t_seqb", str(d / "seqb"),
         n_buckets=4, partition_col="part_id",
     )
     storage.write_bucketed(
-        gen_reference_snapshot(spark, spec), "t_snapb", str(tmp_path / "snapb"),
+        gen_reference_snapshot(spark, spec), "t_snapb", str(d / "snapb"),
         n_buckets=4,
     )
     seqs = storage.register_bucketed(
-        spark, "t_seqb_r", storage.SEQ_DDL, str(tmp_path / "seqb"),
+        spark, "t_seqb_r", storage.SEQ_DDL, str(d / "seqb"),
         n_buckets=4, partition_col="part_id",
     )
     snap = storage.register_bucketed(
-        spark, "t_snapb_r", storage.SNAP_DDL, str(tmp_path / "snapb"), n_buckets=4
+        spark, "t_snapb_r", storage.SNAP_DDL, str(d / "snapb"), n_buckets=4
     )
     sources = [r["source"] for r in gen_allowed_sources(spark).collect()]
-    plain_seqs = spark.read.parquet(str(tmp_path / "seqb"))
-    plain_snap = spark.read.parquet(str(tmp_path / "snapb"))
+    plain_seqs = spark.read.parquet(str(d / "seqb"))
+    plain_snap = spark.read.parquet(str(d / "snapb"))
+    return seqs, snap, plain_seqs, plain_snap, sources
+
+
+def test_duplicate_keys_is_one_grouped_count(bucketed_copies):
+    """The duplicate-key plan is one groupBy(doc_id) count: one shuffle
+    Exchange over plain parquet, none over the doc_id-bucketed table."""
+    from plan_audit import plan_facts
+
+    seqs, _, plain_seqs, _, _ = bucketed_copies
+    assert plan_facts(duplicate_keys(plain_seqs, CFG))["shuffle_exchanges"] == 1
+    assert plan_facts(duplicate_keys(seqs, CFG))["shuffle_exchanges"] == 0
+
+
+def test_bucketed_join_is_shuffle_free(spark, bucketed_copies):
+    """The engine's key layout claim: on doc_id-bucketed tables the fused row
+    pass — snapshot join, uniqueness count and the duplicate-key job — has
+    ZERO shuffle Exchanges with either uniqueness variant, while the same plan
+    over the plain parquet copy does shuffle (so the count is not vacuous).
+    No row of it crosses into a Python worker."""
+    from plan_audit import formatted_plan, plan_facts
+
+    seqs, snap, plain_seqs, plain_snap, sources = bucketed_copies
 
     def fused_facts(s, sn, variant):
-        dups = (
-            None if variant == "window"
-            else duplicate_keys(s, RuleConfig(uniqueness_mode=variant))
-        )
-        viol, rows = fused_row_violations(s, sn, sources, dups)
+        viol, rows = fused_row_violations(s, sn, sources, _dups(s, variant))
         facts = plan_facts(rows)
         assert facts["sort_merge_join"], "snapshot join must not broadcast here"
         assert "EvalPython" not in formatted_plan(viol), "a Python UDF ran"
@@ -307,8 +325,8 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # the window count, then the duplicate-key job in both count modes
-        for variant in ("window", "direct", "salted"):
+        # the window count, then the duplicate-key job
+        for variant in DUPS_VARIANTS:
             pass_x, viol_x, n_tok = fused_facts(seqs, snap, variant)
             assert (pass_x, viol_x) == (0, 0), f"{variant}: bucketed pass shuffles"
             assert n_tok > 0  # planted edits found

@@ -667,7 +667,7 @@ def test_vq_quantization_out_of_range_raises_named_error(spark):
         embedding_near_dup_pairs(df, dim=4, n_rows=len(rows)).collect()
 
 
-def test_grouped_verify_kernel_chunking_is_invariant():
+def test_grouped_verify_kernel_chunking_is_invariant(monkeypatch):
     """Pure-Python kernel unit test (no Spark): splitting the i<j pair
     enumeration into tiny blocks must not change a single emitted row —
     the block loop only bounds scratch memory. A block-pair group (nleft >
@@ -678,6 +678,7 @@ def test_grouped_verify_kernel_chunking_is_invariant():
     import numpy as np
     import pandas as pd
 
+    from log_anomaly_detector_spark.operators import similarity
     from log_anomaly_detector_spark.operators.similarity import (
         _grouped_verify_udf,
     )
@@ -698,7 +699,8 @@ def test_grouped_verify_kernel_chunking_is_invariant():
                 "nleft": [nleft],
             }
         )
-        k = _grouped_verify_udf(dim, n_tables, -2.0, pair_block=block)
+        monkeypatch.setattr(similarity, "_PAIR_BLOCK", block)
+        k = _grouped_verify_udf(dim, n_tables, -2.0)
         out = list(k(iter([pdf])))
         return (
             pd.concat(out).sort_values(["id_a", "id_b"]).reset_index(drop=True)

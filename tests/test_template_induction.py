@@ -22,6 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.operators import template_induction
 from log_anomaly_detector_spark.operators.template_induction import (
     WILDCARD,
     _event_id,
@@ -215,7 +216,7 @@ def test_hdfs_warm_start_half_dim(spark):
     assert {t for t, new in got.items() if new} == set(cold_set)
 
 
-def test_template_poor_input_caps_driver_state(spark):
+def test_template_poor_input_caps_driver_state(spark, monkeypatch):
     """Adversarial high-cardinality input (every line a distinct sequence —
     natural text, high-entropy ids): the driver-side dim would become
     row-count-sized, so the capped collects must fail with a CLEAR error,
@@ -224,8 +225,9 @@ def test_template_poor_input_caps_driver_state(spark):
         [(i, [f"u{i}a", f"u{i}b", f"u{i}c"]) for i in range(200)],
         "line_id long, tokens array<string>",
     )
-    with pytest.raises(ValueError, match="max_dim_rows"):
-        induce_templates(lines, max_founding_rounds=0, max_dim_rows=50)
+    monkeypatch.setattr(template_induction, "_MAX_DIM_ROWS", 50)
+    with pytest.raises(ValueError, match="_MAX_DIM_ROWS"):
+        induce_templates(lines, max_founding_rounds=0)
 
 
 def test_warm_template_internal_whitespace_not_flagged_new(spark):

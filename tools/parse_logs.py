@@ -30,6 +30,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from log_anomaly_detector_spark.sources.logtext import DEFAULT_LOGFORMAT  # noqa: E402
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -40,9 +42,7 @@ def main() -> int:
     ap.add_argument("--st", type=float, default=0.5)
     ap.add_argument("--depth", type=int, default=4)
     ap.add_argument("--seq-threshold", type=float, default=0.2)
-    ap.add_argument(
-        "--logformat", default="<Date> <Time> <Pid> <Level> <Component>: <Content>"
-    )
+    ap.add_argument("--logformat", default=DEFAULT_LOGFORMAT)
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
