@@ -219,22 +219,20 @@ def run_validation(
             wall = time.time() - t0
             batch_rows = sum(stats_by_part[p]["n_rows"] for p in batch if p in stats_by_part)
             total_rows += batch_rows
-            manifest_records = []
+            failed_by_part: dict[int, list[str]] = {}
+            for r in rule_rows:
+                if not r["passed"] and r["rule_id"] in cfg.partition_rules:
+                    failed_by_part.setdefault(r["part_id"], []).append(r["rule_id"])
+            batch_verdicts, manifest_records = [], []
             for pid in batch:
                 n = stats_by_part[pid]["n_rows"] if pid in stats_by_part else 0
                 vdocs = any_docs.get(pid, 0)
                 score = round(vdocs / n, dp) if n else 0.0
-                failed = sorted(
-                    r["rule_id"]
-                    for r in rule_rows
-                    if r["part_id"] == pid
-                    and not r["passed"]
-                    and r["rule_id"] in cfg.partition_rules
-                )
+                failed = sorted(failed_by_part.get(pid, []))
                 label = (
                     "Anomaly" if (score >= cfg.seq_threshold or failed) else "Normal"
                 )
-                result.verdicts.append(
+                batch_verdicts.append(
                     {
                         "part_id": pid,
                         "label": label,
@@ -265,14 +263,12 @@ def run_validation(
                     }
                 )
             result.rule_verdicts.extend(rule_rows)
+            result.verdicts.extend(batch_verdicts)
 
             # persist verdicts (partitioned, idempotent like violations): a
             # few rows per batch, written from the driver with no Spark job
             storage.overwrite_local_partitions(
-                [v for v in result.verdicts if v["part_id"] in set(batch)],
-                VERDICT_SCHEMA,
-                verd_path,
-                batch,
+                batch_verdicts, VERDICT_SCHEMA, verd_path, batch
             )
             storage.append_manifest(out_dir, manifest_records)
     finally:

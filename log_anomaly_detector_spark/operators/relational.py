@@ -776,9 +776,7 @@ FROM events
 VOCAB_RANK_PARTS = 32
 
 
-def _two_phase_rank(
-    df: DataFrame, order: list, rank_alias: str, n_parts: int = VOCAB_RANK_PARTS
-) -> DataFrame:
+def _two_phase_rank(df: DataFrame, order: list, rank_alias: str) -> DataFrame:
     """Exact global row_number() over ``order`` without a single-partition
     window: repartitionByRange + local rank + per-range offsets.
 
@@ -796,7 +794,7 @@ def _two_phase_rank(
     rank costs two jobs, not three — the eager variant paid one full extra
     pass per call (round-5 A/B: 1.0s → 0.8s at sf0.1)."""
     ranged = (
-        df.repartitionByRange(n_parts, *order)
+        df.repartitionByRange(VOCAB_RANK_PARTS, *order)
         .withColumn("_rpid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )

@@ -21,9 +21,9 @@ Scale shapes:
   LAYOUT PARAMETER of the output, not a runtime tuning knob: changing it
   changes every bin assignment, so it is fixed at pipeline-config time —
   set it ≈ the cluster's target parallelism so each window partition
-  (corpus/n_buckets rows) is executor-sized. The contract query pins
-  n_buckets=8 for the driver fixture; ``pack_documents`` takes it as a
-  parameter. A document whose start falls inside a bin is assigned to it
+  (corpus/n_buckets rows) is executor-sized. ``pack_documents`` reads it
+  from ``PACK_BUCKETS``, which the contract query's SQL oracle pins to 8
+  for the driver fixture. A document whose start falls inside a bin is assigned to it
   even if it overruns the budget (streaming-pack semantics: the consumer
   truncates/wraps at bin boundaries).
 * mixing — one scan, a per-row md5 coin against the stratum's rate; the
@@ -47,17 +47,17 @@ MIX_WEIGHTS = {"en": 90, "fr": 50, "es": 25, "de": 10}
 MIX_SEED = 37
 
 
-def pack_documents(docs: DataFrame, n_buckets: int = PACK_BUCKETS) -> DataFrame:
+def pack_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, pack_bucket, bin_id, tok_offset, n_tok): which training bin
     each document lands in and at what token offset, packing greedily in
-    doc_id order within each of ``n_buckets`` md5-hash buckets (see module
-    docstring for the layout-parameter semantics of ``n_buckets``).
+    doc_id order within each of ``PACK_BUCKETS`` md5-hash buckets (see
+    module docstring for the layout-parameter semantics of the count).
     Reference analogue: fixed seq_len sample assembly,
     bert_pytorch/dataset/dataset.py:8-44."""
     n_tok = F.size(words(F.col("text")))
     # a 48-bit hash reduced mod n directly: the 0-99 coin reduced mod n would
     # leave buckets ≥ 100 empty and skew the rest whenever n does not divide 100
-    bucket = _hash_bucket(F.col("doc_id"), PACK_SEED, n_buckets, digits=12).cast("int")
+    bucket = _hash_bucket(F.col("doc_id"), PACK_SEED, PACK_BUCKETS, digits=12).cast("int")
     base = docs.select(
         "doc_id", bucket.alias("pack_bucket"), n_tok.alias("n_tok")
     )

@@ -37,21 +37,31 @@ def overwrite_partitions(df: DataFrame, path: str, part_ids: list[int]) -> None:
     df.write.mode("append").partitionBy("part_id").parquet(path)
 
 
+def write_local_table(rows: list[dict], schema: StructType, path: str) -> None:
+    """Replace the unpartitioned table at ``path`` with one parquet file of
+    driver ``rows`` (written when empty too), with no Spark job. The file
+    is written under a dot-prefixed name and renamed into place; Spark and
+    pyarrow both skip dot-files, so a crash mid-write leaves nothing
+    readable behind."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    name = f"part-00000-{uuid.uuid4()}.snappy.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
 def overwrite_local_partitions(
     rows: list[dict], ddl: str, path: str, part_ids: list[int]
 ) -> None:
-    """``overwrite_partitions`` for driver rows, with no Spark job.
-
-    Same delete+insert contract: each listed partition directory is removed,
-    and one that has rows gets one parquet file whose schema is ``ddl``
-    minus ``part_id`` (which lives only in the directory name, as in Spark's
-    hive layout). ``rows`` must only contain listed partitions. Each file is
-    written under a dot-prefixed name and renamed into place; Spark and
-    pyarrow both skip dot-files, so a crash mid-write leaves nothing
-    readable behind.
-    """
-    schema = to_arrow_schema(
-        StructType([f for f in StructType.fromDDL(ddl).fields if f.name != "part_id"])
+    """``overwrite_partitions`` for driver rows, with no Spark job: each
+    listed partition directory is removed, and one that has rows is
+    rewritten by ``write_local_table`` with ``ddl`` minus ``part_id``
+    (which only names the directory, as in Spark's hive layout). ``rows``
+    must only contain listed partitions."""
+    schema = StructType(
+        [f for f in StructType.fromDDL(ddl).fields if f.name != "part_id"]
     )
     by_part: dict[int, list[dict]] = {pid: [] for pid in part_ids}
     for r in rows:
@@ -60,14 +70,10 @@ def overwrite_local_partitions(
         by_part[r["part_id"]].append(r)
     for pid, part_rows in by_part.items():
         pdir = os.path.join(path, f"part_id={pid}")
-        shutil.rmtree(pdir, ignore_errors=True)
-        if not part_rows:
-            continue
-        os.makedirs(pdir)
-        name = f"part-00000-{uuid.uuid4()}.snappy.parquet"
-        tmp = os.path.join(pdir, f".{name}.tmp")
-        pq.write_table(pa.Table.from_pylist(part_rows, schema=schema), tmp)
-        os.replace(tmp, os.path.join(pdir, name))
+        if part_rows:
+            write_local_table(part_rows, schema, pdir)
+        else:
+            shutil.rmtree(pdir, ignore_errors=True)
 
 
 def list_partitions(path: str) -> list[int] | None:

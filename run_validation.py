@@ -146,9 +146,11 @@ def main() -> int:
         import tempfile
 
         wdir = tempfile.mkdtemp(prefix="lad_warmup_")
+        # the measured run's arguments, so the warm-up pays the same jobs
         run_validation(
             spark, seqs, snap, allowed, baseline, wdir, cfg,
-            input_digest=input_digest,
+            input_digest=input_digest, batch_parts=args.batch_parts,
+            part_ids=part_ids,
         )
         shutil.rmtree(wdir, ignore_errors=True)
 

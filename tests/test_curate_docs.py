@@ -10,7 +10,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from curate_docs import curate  # noqa: E402
+from curate_docs import STAGES, curate  # noqa: E402
 
 
 def _good_body(i: int, n_triples: int = 30) -> str:
@@ -26,7 +26,9 @@ def _write_docs(spark, rows, d):
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
 
-def test_curate_planted_corpus(spark, tmp_path):
+def _planted(spark, tmp_path):
+    """The planted corpus and its benchmark; returns (corpus dir, benchmark
+    dir)."""
     rows = [
         (1, _good_body(1)),                       # kept (canonical exact dup)
         (21, _good_body(1)),                      # exact_dup of 1
@@ -44,13 +46,16 @@ def test_curate_planted_corpus(spark, tmp_path):
     ]
     _write_docs(spark, rows, tmp_path / "corpus")
     _write_docs(
-        spark,
-        [(100, "alpha beta gamma delta epsilon zeta")],
-        tmp_path / "bench",
+        spark, [(100, "alpha beta gamma delta epsilon zeta")], tmp_path / "bench"
     )
+    return str(tmp_path / "corpus"), str(tmp_path / "bench")
+
+
+def test_curate_planted_corpus(spark, tmp_path):
+    corpus, bench = _planted(spark, tmp_path)
 
     # without a benchmark: decontamination skipped, doc 6 survives
-    m1 = curate(spark, str(tmp_path / "corpus"), str(tmp_path / "out1"))
+    m1 = curate(spark, corpus, str(tmp_path / "out1"))
     assert m1["decontam_ran"] is False
     assert m1["dropped_by_stage"] == {
         "exact_dup": 1, "near_dup": 2, "repetition": 1, "quality": 1,
@@ -82,12 +87,7 @@ def test_curate_planted_corpus(spark, tmp_path):
 
     # with the benchmark: docs 6 and 8 share a 5-gram → decontam drops;
     # 88 is PROMOTED to its cluster's representative (canonical 8 fell)
-    m2 = curate(
-        spark,
-        str(tmp_path / "corpus"),
-        str(tmp_path / "out2"),
-        eval_dir=str(tmp_path / "bench"),
-    )
+    m2 = curate(spark, corpus, str(tmp_path / "out2"), eval_dir=bench)
     assert m2["decontam_ran"] is True
     assert m2["dropped_by_stage"]["decontam"] == 2
     assert m2["dropped_by_stage"]["near_dup"] == 1
@@ -98,3 +98,50 @@ def test_curate_planted_corpus(spark, tmp_path):
         ).collect()
     }
     assert kept2 == {1, 2, 5, 88}
+
+
+def test_curate_job_count(spark, tmp_path, job_ids):
+    """Every count rides the write that produces its rows, and the
+    quarantine is re-read with its known schema. Measured 37 in the
+    local[8] test session; re-reading and counting the written tables made
+    it 45."""
+    corpus, bench = _planted(spark, tmp_path)
+    with job_ids("curate-jobs") as ids:
+        m = curate(spark, corpus, str(tmp_path / "out"), eval_dir=bench)
+    assert m["kept_docs"] == 4
+    assert len(ids) <= 37, len(ids)
+
+
+def test_curate_observed_counts_equal_written_tables(spark, tmp_path):
+    """The manifest's observed counts equal the counts of the tables it
+    describes: on the planted corpus with and without the benchmark, and on
+    a clean corpus whose quarantine is empty. The clean corpus carries a
+    NULL doc_id, which no quarantine id matches, so it is kept."""
+    corpus, bench = _planted(spark, tmp_path)
+    clean = tmp_path / "clean"
+    _write_docs(spark, [(i, _good_body(i)) for i in (1, 2, 3)], clean)
+    spark.createDataFrame(
+        [(None, _good_body(4), len(_good_body(4)))],
+        "doc_id long, text string, n_chars int",
+    ).write.mode("append").parquet(f"{clean}/documents.parquet")
+
+    cases = {"plain": (corpus, None), "bench": (corpus, bench),
+             "clean": (str(clean), None)}
+    for name, (data, eval_dir) in cases.items():
+        out = tmp_path / f"out-{name}"
+        m = curate(spark, data, str(out), eval_dir=eval_dir)
+        stages = dict(
+            spark.read.parquet(str(out / "quarantine"))
+            .groupBy("stage").count().collect()
+        )
+        assert m["dropped_by_stage"] == {s: stages.get(s, 0) for s in STAGES}, name
+        assert m["input_docs"] == spark.read.parquet(
+            f"{data}/documents.parquet"
+        ).count(), name
+        kept = spark.read.parquet(str(out / "documents.parquet"))
+        assert m["kept_docs"] == kept.count(), name
+        assert m["dropped_docs"] == sum(stages.values()), name
+        if name == "clean":
+            assert stages == {}
+            assert m["kept_docs"] == m["input_docs"] == 4
+            assert kept.filter("doc_id IS NULL").count() == 1

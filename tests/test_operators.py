@@ -185,19 +185,20 @@ def test_jaccard_hot_shingle_pair_found(spark, tmp_path):
     assert got == {(1100, 1101): 1.0}
 
 
-def test_two_phase_rank_matches_local_sort(spark):
+def test_two_phase_rank_matches_local_sort(spark, monkeypatch):
     """_two_phase_rank (vocab's scalable global enumeration) must equal a
     driver-side sort at ANY partitioning — including heavy-tie inputs."""
+    from log_anomaly_detector_spark.operators import relational
     from log_anomaly_detector_spark.operators.relational import _two_phase_rank
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(relational, "VOCAB_RANK_PARTS", 8)
 
     rows = [(f"w{i:05d}", (i * 7919) % 97) for i in range(5_000)]
     df = spark.createDataFrame(rows, "word string, freq long").repartition(13)
     ranked = {
         r["word"]: r["rank"]
-        for r in _two_phase_rank(
-            df, [F.desc("freq"), F.asc("word")], "rank", n_parts=8
-        ).collect()
+        for r in _two_phase_rank(df, [F.desc("freq"), F.asc("word")], "rank").collect()
     }
     want = {
         w: i + 1
@@ -208,7 +209,7 @@ def test_two_phase_rank_matches_local_sort(spark):
     assert ranked == want
 
 
-def test_two_phase_rank_interleaved_builds_stay_consistent(spark):
+def test_two_phase_rank_interleaved_builds_stay_consistent(spark, monkeypatch):
     """Two _two_phase_rank builds followed by materializing the FIRST: the
     ranks must still be an exact permutation. (Regression: a shared cache
     key let the second build evict the first's ranged layout; recompute
@@ -216,16 +217,18 @@ def test_two_phase_rank_interleaved_builds_stay_consistent(spark):
     offsets with a new layout — duplicated/gapped ranks. localCheckpoint
     makes that recompute impossible.)"""
     from pyspark.sql import functions as F
+    from log_anomaly_detector_spark.operators import relational
     from log_anomaly_detector_spark.operators.relational import _two_phase_rank
 
+    monkeypatch.setattr(relational, "VOCAB_RANK_PARTS", 8)
     df1 = spark.createDataFrame(
         [(f"a{i:05d}", i % 13) for i in range(4_000)], "word string, freq long"
     ).repartition(11)
     df2 = spark.createDataFrame(
         [(f"b{i:05d}", i % 7) for i in range(4_000)], "word string, freq long"
     ).repartition(9)
-    r1 = _two_phase_rank(df1, [F.desc("freq"), F.asc("word")], "rank", n_parts=8)
-    _two_phase_rank(df2, [F.desc("freq"), F.asc("word")], "rank", n_parts=8)
+    r1 = _two_phase_rank(df1, [F.desc("freq"), F.asc("word")], "rank")
+    _two_phase_rank(df2, [F.desc("freq"), F.asc("word")], "rank")
     ranks = sorted(r["rank"] for r in r1.collect())
     assert ranks == list(range(1, 4_001))
 

@@ -60,20 +60,23 @@ def _cached(df) -> bool:
 
 
 def test_induction_dim_parquet_keeps_not_null(spark, tmp_path):
-    """The templates and new_templates tables as `tools/parse_logs.py`
-    writes them keep `occurrences` and `is_new` NOT NULL."""
+    """The templates and new_templates tables `tools/parse_logs.py` writes
+    keep `occurrences` and `is_new` NOT NULL."""
+    import sys
+    from pathlib import Path
+
     import pyarrow.parquet as pq
 
     from log_anomaly_detector_spark.pipeline import run_induction_pipeline
 
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from parse_logs import write_outputs
+
     log = tmp_path / "raw.log"
     log.write_text(RAW)
-    res = run_induction_pipeline(spark, str(log))
-    tables = {"templates": res.templates, "new_templates": res.new_templates}
-    for name, df in tables.items():
-        out = tmp_path / name
-        df.drop("tokens").write.parquet(str(out))
-        parts = list(out.glob("*.parquet"))
+    write_outputs(run_induction_pipeline(spark, str(log)), str(tmp_path))
+    for name in ("templates", "new_templates"):
+        parts = list((tmp_path / name).glob("*.parquet"))
         assert parts
         for part in parts:
             schema = pq.read_schema(part)

@@ -34,7 +34,7 @@ def test_pack_layout_invariants(spark):
             cum += r["n_tok"]
 
 
-def test_pack_parallelism_sized_buckets(spark):
+def test_pack_parallelism_sized_buckets(spark, monkeypatch):
     """The documented layout-parameter story, executably: packing with
     n_buckets = the cluster's parallelism keeps every window PARTITIONED
     (per-bucket, never the warn-worthy global shape) and actually spreads
@@ -42,12 +42,13 @@ def test_pack_parallelism_sized_buckets(spark):
     deployment would run, not just the 8-bucket contract pin."""
     from pyspark.sql import functions as F
 
+    from log_anomaly_detector_spark.operators import training_mix
     from log_anomaly_detector_spark.operators.relational import t
-    from log_anomaly_detector_spark.operators.training_mix import pack_documents
     from plan_audit import unpartitioned_windows
 
     par = spark.sparkContext.defaultParallelism
-    packed = pack_documents(t(spark, SF, "documents"), n_buckets=par)
+    monkeypatch.setattr(training_mix, "PACK_BUCKETS", par)
+    packed = training_mix.pack_documents(t(spark, SF, "documents"))
     assert unpartitioned_windows(packed) == 0
     buckets = packed.agg(
         F.countDistinct("pack_bucket").alias("n"),

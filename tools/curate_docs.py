@@ -31,7 +31,7 @@ exact dedup keys on `functions.text_funcs.fingerprint`, near-dup on
 external benchmark (the same pair q_decontaminate runs). Scale
 shape: each stage emits a (doc_id, stage) drop table — shuffles carry ids
 and hashes, never document text; the single text-bearing pass is the final
-anti-join writing the curated corpus.
+join writing the curated corpus.
 
 Reference parity: the reference's data prep dedupes blocks with an
 in-memory set and drops rows by content predicates in one pandas pass
@@ -57,6 +57,7 @@ def curate(spark, data_dir: str, out_dir: str, eval_dir: str | None = None) -> d
     ``out_dir/manifest.json``)."""
     from functools import reduce
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from log_anomaly_detector_spark.functions.text_funcs import fingerprint
@@ -150,29 +151,29 @@ def curate(spark, data_dir: str, out_dir: str, eval_dir: str | None = None) -> d
             F.element_at(F.lit(list(STAGES)), F.col("_rank")).alias("stage"),
         )
     )
-    quarantine.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "quarantine")
+    # each count rides the write of its rows, after the plan's last exchange
+    q_obs, kept_obs = Observation("quarantine"), Observation("kept")
+    q_path = os.path.join(out_dir, "quarantine")
+    quarantine.observe(
+        q_obs, *(F.count_if(F.col("stage") == s).alias(s) for s in STAGES)
+    ).write.mode("overwrite").parquet(q_path)
+    # a left join with a drop marker keeps exactly the rows left_anti keeps
+    # (NULL doc_ids too), and an observe above the filter sees the input
+    dropped = spark.read.schema(quarantine.schema).parquet(q_path).select(
+        "doc_id", F.lit(1).alias("_drop")
     )
-    q_saved = spark.read.parquet(os.path.join(out_dir, "quarantine"))
-    stage_counts = {
-        r["stage"]: r["n"]
-        for r in q_saved.groupBy("stage")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    docs.join(q_saved.select("doc_id"), "doc_id", "left_anti").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "documents.parquet"))
-    n_in = docs.count()
-    n_kept = spark.read.parquet(
+    kept = F.col("_drop").isNull()
+    docs.join(dropped, "doc_id", "left").observe(
+        kept_obs, F.count(F.lit(1)).alias("n_in"), F.count_if(kept).alias("n_kept")
+    ).filter(kept).drop("_drop").write.mode("overwrite").parquet(
         os.path.join(out_dir, "documents.parquet")
-    ).count()
+    )
 
     metrics = {
-        "input_docs": n_in,
-        "kept_docs": n_kept,
-        "dropped_docs": n_in - n_kept,
-        "dropped_by_stage": {s: stage_counts.get(s, 0) for s in STAGES},
+        "input_docs": kept_obs.get["n_in"],
+        "kept_docs": kept_obs.get["n_kept"],
+        "dropped_docs": kept_obs.get["n_in"] - kept_obs.get["n_kept"],
+        "dropped_by_stage": {s: q_obs.get[s] for s in STAGES},
         "decontam_ran": bool(eval_dir),
         "wall_sec": round(time.time() - t0, 3),
     }

@@ -30,7 +30,38 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation, functions as F  # noqa: E402
+
 from log_anomaly_detector_spark.sources.logtext import DEFAULT_LOGFORMAT  # noqa: E402
+from log_anomaly_detector_spark.storage import write_local_table  # noqa: E402
+
+
+def write_outputs(res, out: str) -> dict:
+    """Write an ``InductionPipelineResult``'s four tables under ``out`` and
+    return the printed counts, each observed on the write of its rows. The
+    template dim is driver-local: collecting it runs no job, and both dim
+    tables are written from the driver."""
+    lines, blocks = Observation("lines"), Observation("blocks")
+    res.structured.observe(
+        lines, F.count(F.lit(1)).alias("n"), F.count_if("is_anomaly").alias("bad")
+    ).write.mode("overwrite").parquet(f"{out}/structured")
+    dim = res.templates.drop("tokens")
+    rows = [r.asDict() for r in dim.collect()]
+    new = [r for r in rows if r["is_new"]]
+    for name, table in (("templates", rows), ("new_templates", new)):
+        write_local_table(table, dim.schema, f"{out}/{name}")
+    is_anomaly = F.col("label") == "Anomaly"
+    res.verdicts.observe(
+        blocks, F.count(F.lit(1)).alias("n"), F.count_if(is_anomaly).alias("bad")
+    ).write.mode("overwrite").parquet(f"{out}/verdicts")
+    return {
+        "lines": lines.get["n"],
+        "templates": len(rows),
+        "new_templates": len(new),
+        "anomalous_lines": lines.get["bad"],
+        "blocks": blocks.get["n"],
+        "anomalous_blocks": blocks.get["bad"],
+    }
 
 
 def main() -> int:
@@ -46,15 +77,11 @@ def main() -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from log_anomaly_detector_spark.pipeline import run_induction_pipeline
     from log_anomaly_detector_spark.session import get_spark, quiesce
 
     spark = get_spark("parse_logs", master=args.master)
-    warm = (
-        spark.read.parquet(args.warm_templates) if args.warm_templates else None
-    )
+    warm = spark.read.parquet(args.warm_templates) if args.warm_templates else None
     t0 = time.time()
     res = run_induction_pipeline(
         spark,
@@ -65,40 +92,11 @@ def main() -> int:
         seq_threshold=args.seq_threshold,
         logformat=args.logformat,
     )
-    res.structured.write.mode("overwrite").parquet(f"{args.out}/structured")
-    res.templates.drop("tokens").write.mode("overwrite").parquet(
-        f"{args.out}/templates"
-    )
-    res.new_templates.drop("tokens").write.mode("overwrite").parquet(
-        f"{args.out}/new_templates"
-    )
-    res.verdicts.write.mode("overwrite").parquet(f"{args.out}/verdicts")
-    # the flagged lines are cached and the dim is a driver-local table, so
-    # the counts cost one pass over that cache and one over the verdicts
-    lines = res.structured.agg(
-        F.count(F.lit(1)).alias("n"), F.count_if("is_anomaly").alias("anomalous")
-    ).first()
-    n_lines = lines["n"]
+    counts = write_outputs(res, args.out)
     wall = time.time() - t0
-    is_new = [r["is_new"] for r in res.templates.select("is_new").collect()]
-    blocks = res.verdicts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(F.col("label") == "Anomaly").alias("anomalous"),
-    ).first()
-    print(
-        json.dumps(
-            {
-                "lines": n_lines,
-                "templates": len(is_new),
-                "new_templates": sum(is_new),
-                "anomalous_lines": lines["anomalous"],
-                "blocks": blocks["n"],
-                "anomalous_blocks": blocks["anomalous"],
-                "wall_sec": round(wall, 3),
-                "lines_per_sec": round(n_lines / wall, 1) if wall else None,
-            }
-        )
-    )
+    counts["wall_sec"] = round(wall, 3)
+    counts["lines_per_sec"] = round(counts["lines"] / wall, 1) if wall else None
+    print(json.dumps(counts))
     quiesce(spark)
     spark.stop()
     return 0
